@@ -16,6 +16,7 @@ from ..kernels import (
     fnv1a_series,
     split_csv,
     strip_syslog_prefix_series,
+    tokenize_series,
 )
 
 # The three per-line Python kernels are SEPARATE nondeterministic pandas UDFs
@@ -115,39 +116,11 @@ def fnv1a_col(col, salt_bytes: bytes = b"") -> F.Column:
 
 
 def tokenize_col(col, prefix: str, field_salt: str, default_salt: str) -> F.Column:
-    """Deterministic anonymization token column (table.rs:28-44 semantics).
-    Null in -> null out. The salt pair collapses to a precomputed FNV seed, so
-    the UDF is a pure hash over the value bytes."""
-    seed = fnv1a_seed(
-        field_salt.encode("utf-8", errors="ignore")
-        + default_salt.encode("utf-8", errors="ignore")
-    )
+    """Deterministic anonymization token column (table.rs:28-44 semantics):
+    kernels.tokenize_series as a pandas UDF. Null in -> null out."""
 
     @F.pandas_udf(T.StringType())
     def _tok(s: pd.Series) -> pd.Series:
-        import numpy as np
-
-        isnull = s.isna()
-        hashes = fnv1a_series(s, seed=seed)
-        if len(s):
-            hexes = pd.Series(
-                pd.array(np.char.add(prefix, np.char.mod("%016x", hashes))),
-                index=s.index,
-            ).astype(object)
-        else:
-            hexes = pd.Series([], index=s.index, dtype=object)
-        hexes[isnull] = None
-        return hexes
+        return tokenize_series(s, prefix, field_salt, default_salt)
 
     return _tok(col)
-
-
-def exact_split_col(col) -> F.Column:
-    """Exact quote-aware CSV split as a standalone column (used outside the
-    main pipeline, e.g. to expose the reference's split_csv API surface)."""
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def _split(s: pd.Series) -> pd.Series:
-        return s.fillna("").map(split_csv)
-
-    return _split(col)

@@ -286,10 +286,9 @@ def tokenize_series(
         "utf-8", errors="ignore"
     )
     hashes = fnv1a_series(values, seed=fnv1a_seed(salt_bytes))
-    if len(values):
-        hexes = np.char.add(prefix, np.char.mod("%016x", hashes))
-    else:
-        hexes = np.array([], dtype=object)
+    # object (Python str) concatenation: NumPy fixed-width strings drop
+    # trailing NULs, so np.char.add would truncate a prefix like "A\x00"
+    hexes = [prefix + h for h in np.char.mod("%016x", hashes).tolist()]
     result = pd.Series(hexes, index=values.index, dtype=object)
     result[isnull] = None
     return result

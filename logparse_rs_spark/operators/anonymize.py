@@ -19,7 +19,7 @@ distinct aggregation over (pre, post) column pairs — see audit_table().
 
 from __future__ import annotations
 
-from typing import Dict, Iterable, List, Optional, Tuple
+from typing import Dict, Iterable, List, Optional
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -68,20 +68,6 @@ def anonymize_expr(col: Column, plan: FieldPlan, default_salt: str) -> Column:
     lookup = F.try_element_at(F.create_map(*entries), col)
     return F.when(col.isNull(), F.lit(None).cast("string")) \
             .otherwise(F.coalesce(lookup, miss))
-
-
-def anonymize_columns(df: DataFrame, anon: CompiledAnonymizer,
-                      columns: Iterable[str]) -> DataFrame:
-    """Wrap each named column of an already-projected DataFrame in its
-    anonymization expression (one withColumns pass -> one ArrowEvalPython
-    stage for all tokenized columns)."""
-    replacements: Dict[str, Column] = {}
-    for name in columns:
-        plan = anon.plan_for(name)
-        if plan.mode is None:
-            continue
-        replacements[name] = anonymize_expr(F.col(name), plan, anon.default_salt)
-    return df.withColumns(replacements) if replacements else df
 
 
 def anonymize_with_dict_join(df: DataFrame, spark: SparkSession, column: str,
@@ -141,11 +127,3 @@ def audit_table(pre: DataFrame, anon: CompiledAnonymizer,
         repl = (F.when(F.col("field") == name, e) if repl is None
                 else repl.when(F.col("field") == name, e))
     return distinct.select("field", "original", repl.alias("replacement"))
-
-
-def anonymizer_status(audit: DataFrame) -> Tuple[int, int]:
-    """{fields, pairs} counts (get_anonymizer_status, src/lib.rs:302-317)."""
-    row = audit.agg(
-        F.countDistinct("field").alias("fields"), F.count("*").alias("pairs")
-    ).collect()[0]
-    return row["fields"], row["pairs"]

@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..shared import SIMHASH_MAX_PAIRS, collect_if_fits, fits, shared
+
 # deterministic 64-bit mix constants (splitmix64)
 _MIX1 = np.uint64(0xBF58476D1CE4E5B9)
 _MIX2 = np.uint64(0x94D049BB133111EB)
@@ -94,7 +96,6 @@ def _pair_common(ea, eb) -> int:
     return int(np.intersect1d(ea[0], eb[0], assume_unique=True).size)
 
 
-_TEXT_BCAST_CACHE: dict = {}
 _PAIR_VEC_STATE: dict = {}
 _POP8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint16)
 
@@ -159,60 +160,43 @@ def _pair_counts_vec(st, ia: np.ndarray, ib: np.ndarray):
 
 def _bcast_norm_texts(docs: DataFrame, text_col: str, id_col: str):
     """Broadcast {id: normalized text} for the pair-verify kernels, or
-    None when the corpus exceeds the broadcast budget
-    (LPS_PAIRVERIFY_BCAST_MB, default 64 MB).
+    None when the ids are not integral or the corpus exceeds the
+    driver-collect budget (shared.collect_if_fits: one exact size job
+    before any text moves).
 
     The join form ships each doc's normalized text once PER CANDIDATE
     PAIR through two id-keyed joins — for a 12.6M-pair set over a 14 MB
     corpus that is ~7.5 GB of duplicated text through the exchanges
-    (guide §8: shuffle a lightweight proxy, keep the heavy bytes still).
-    Sizing probe: a 1k-row length sample plus a pruned count estimates
-    the total; oversized corpora return None and keep the join plan."""
-    import os
-
+    (guide §8: shuffle a lightweight proxy, keep the heavy bytes still)."""
     import hashlib
-    import os
 
-    budget = int(os.environ.get("LPS_PAIRVERIFY_BCAST_MB", "64")) << 20
+    if not isinstance(docs.schema[id_col].dataType, T.IntegralType):
+        return None
     norm = docs.select(F.col(id_col).cast("long").alias("_id"),
                        normalized_text(F.col(text_col)).alias("_nt"))
+    spark = docs.sparkSession
+
+    def build():
+        tbl = collect_if_fits(norm, "norm_texts")
+        if tbl is None:
+            return None
+        return spark.sparkContext.broadcast(
+            dict(zip(tbl.column("_id").to_pylist(),
+                     tbl.column("_nt").to_pylist())))
+
     # one broadcast per distinct input PLAN per session (canonicalized —
     # expression ids normalized): re-broadcasting the same corpus per
     # call would also rebuild every worker's gram state, because that
     # state is keyed by the broadcast value's identity. ONLY file-backed
-    # plans are cacheable: a LocalRelation/LogicalRDD/Range leaf prints
+    # plans are shared: a LocalRelation/LogicalRDD/Range leaf prints
     # without its data, so two different in-memory corpora with the same
     # schema would collide on the key (caught by a pytest corpus swap).
-    spark = docs.sparkSession
     plan_str = (norm._jdf.queryExecution().analyzed()
                 .canonicalized().toString())
-    cacheable = not any(m in plan_str for m in
-                        ("LocalRelation", "LogicalRDD", "Range "))
-    key = (spark.sparkContext.applicationId,
-           hashlib.md5(plan_str.encode()).hexdigest())
-    if cacheable and key in _TEXT_BCAST_CACHE:
-        return _TEXT_BCAST_CACHE[key]
-    sample = norm.select(F.length("_nt").alias("L")).limit(1000).collect()
-    if not sample:
-        bc = spark.sparkContext.broadcast({})
-        if cacheable:
-            _TEXT_BCAST_CACHE[key] = bc
-        return bc
-    avg = sum((r[0] or 0) for r in sample) / len(sample)
-    n_rows = docs.select(id_col).count()
-    if n_rows * (avg + 120) > budget:
-        if cacheable:
-            _TEXT_BCAST_CACHE[key] = None
-        return None
-    rows = norm.collect()
-    if sum(len(r[1] or "") for r in rows) + 120 * len(rows) > budget:
-        if cacheable:
-            _TEXT_BCAST_CACHE[key] = None
-        return None
-    bc = spark.sparkContext.broadcast({r[0]: r[1] for r in rows})
-    if cacheable:
-        _TEXT_BCAST_CACHE[key] = bc
-    return bc
+    if any(m in plan_str for m in ("LocalRelation", "LogicalRDD", "Range ")):
+        return build()
+    return shared(spark, "norm_texts",
+                  hashlib.md5(plan_str.encode()).hexdigest(), build)
 
 
 def _pairs_with_known_ids(pairs: DataFrame, docs: DataFrame,
@@ -558,23 +542,18 @@ def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
 
 def _simhash_candidates_broadcast(sim: DataFrame, id_col: str,
                                   chunks: int, max_bucket):
-    """Broadcast fast path for simhash_candidates (same gate discipline
-    as the neardup/verify kernels, env LPS_NEARDUP_BCAST_MB): when the
-    (id, simhash) table fits the budget, each chunk becomes one numpy
-    task over the broadcast arrays — bucket slicing, the max_bucket cap,
-    pair enumeration and the XOR popcount all happen in-task, and only
-    candidate pairs leave. The chunk self-join shuffles nothing. None
-    above the gate; identical pairs + hamming, same final dedup."""
-    import os
-
-    budget = int(os.environ.get("LPS_NEARDUP_BCAST_MB", "64")) << 20
-    max_rows = max(1, budget // 16)
-    if sim.schema[id_col].dataType.typeName() not in (
-            "long", "integer", "short", "byte"):
+    """Broadcast fast path for simhash_candidates: when the (id, simhash)
+    table fits the driver-collect budget (shared.collect_if_fits), each
+    chunk becomes one numpy task over the broadcast arrays — bucket
+    slicing, the max_bucket cap, pair enumeration and the XOR popcount
+    all happen in-task, and only candidate pairs leave. The chunk
+    self-join shuffles nothing. None above the gate; identical pairs +
+    hamming, same final dedup."""
+    if not isinstance(sim.schema[id_col].dataType, T.IntegralType):
         return None
-    head = sim.select(F.col(id_col).cast("long"),
-                      "simhash").limit(max_rows + 1).collect()
-    if len(head) > max_rows:
+    head = collect_if_fits(sim.select(F.col(id_col).cast("long"),
+                                      "simhash"), "simhash")
+    if head is None:
         return None
     spark = sim.sparkSession
     out_schema = T.StructType([
@@ -582,17 +561,15 @@ def _simhash_candidates_broadcast(sim: DataFrame, id_col: str,
         T.StructField("id_b", T.LongType()),
         T.StructField("hamming", T.IntegerType()),
     ])
-    if not head:
+    if not head.num_rows:
         return _distinct_pairs(spark.createDataFrame([], out_schema))
     width = 64 // chunks
     mask = np.uint64((1 << width) - 1)
-    ids = np.array([r[0] for r in head], dtype=np.int64)
-    sh = np.array([r[1] for r in head], dtype=np.int64).view(np.uint64)
+    ids = head.column(0).to_numpy()
+    sh = head.column(1).to_numpy().view(np.uint64)
     # exact cost gate, computed from the already-collected hashes: at
     # high candidate volume the Python->Arrow pair emission loses to the
     # JVM chunk join, so route big outputs back to the join plan
-    max_pairs = int(os.environ.get("LPS_SIMHASH_BCAST_MAX_PAIRS",
-                                   str(2_000_000)))
     est = 0
     for chunk in range(chunks):
         vals = np.sort((sh >> np.uint64(chunk * width)) & mask)
@@ -601,7 +578,7 @@ def _simhash_candidates_broadcast(sim: DataFrame, id_col: str,
         if max_bucket is not None:
             sizes = sizes[sizes <= max_bucket]
         est += int((sizes * (sizes - 1) // 2).sum())
-    if est > max_pairs:
+    if not fits("simhash_pairs", est, SIMHASH_MAX_PAIRS):
         # high candidate volume: Python-side pair emission loses to the
         # JVM chunk join — run the join over the ALREADY-COLLECTED
         # hashes (one UDF pass total; the self-join aliases of the lazy
@@ -783,68 +760,18 @@ def ngram_jaccard_pairs_fast(docs: DataFrame, pairs: DataFrame,
     shuffle, and array_intersect/array_union then run per pair — measured as
     53% of the whole 33-query bench at sf0.1 (30.5 s). This form instead
     ships the doc's NORMALIZED TEXT (~1-2 KB, the minimal sufficient datum)
-    onto the pairs, then computes the Jaccard in one Arrow-batched pandas
-    UDF: gram sets are built ONCE PER DISTINCT TEXT per batch (memoized) as
-    sorted uint64 arrays and intersected with np.intersect1d. Semantics are
+    onto the pairs (or broadcasts the corpus text once when it fits the
+    driver-collect budget), counts the shared grams with
+    ngram_overlap_pairs_fast's kernel, and divides JVM-side. Semantics are
     identical to ngram_jaccard (injective gram encoding for n <= 3, see
     _gram_hash_np); the null result for two empty gram sets matches the
     JVM form's 0/0 -> null.
-
-    Scale shape: two equi-joins on the id columns (broadcast when the docs
-    side is small; sort-merge at corpus scale) and one narrow pandas stage —
-    no gram arrays ever enter a shuffle.
     """
-    def jac_rows(text_pairs):
-        # worker-global gram memo + bitmask intersection (see
-        # _gram_entry): gram building and the per-pair set merges both
-        # collapse to hash lookups + one AND/popcount per pair. null text
-        # == empty gram set (matches ngram_jaccard, where a null
-        # normalized text yields an empty grams array)
-        out = []
-        for x, y in text_pairs:
-            ea, eb = _gram_entry(x or "", n), _gram_entry(y or "", n)
-            inter = _pair_common(ea, eb)
-            union = ea[1] + eb[1] - inter
-            out.append(float(inter) / union if union else None)
-        return out
-
-    bc = _bcast_norm_texts(docs, text_col, id_col)
-    if bc is not None:
-
-        @F.pandas_udf(T.DoubleType())
-        def _jac_bc(ia: pd.Series, ib: pd.Series) -> pd.Series:
-            st = _pair_vec_state(bc, n)
-            inter, na, nb = _pair_counts_vec(
-                st, ia.to_numpy(np.int64), ib.to_numpy(np.int64))
-            union = na + nb - inter
-            with np.errstate(divide="ignore", invalid="ignore"):
-                vals = inter / union
-            # 0/0 -> nan, which the Arrow conversion nulls — identical to
-            # the scalar form's None for an empty union
-            vals = np.where(union == 0, np.nan, vals)
-            return pd.Series(vals, index=ia.index, dtype="float64")
-
-        return (_pairs_with_known_ids(pairs, docs, id_col)
-                .select("id_a", "id_b",
-                        _jac_bc(F.col("id_a").cast("long"),
-                                F.col("id_b").cast("long"))
-                        .alias("jaccard")))
-
-    norm = docs.select(F.col(id_col),
-                       normalized_text(F.col(text_col)).alias("_nt"))
-    a, b = norm.alias("a"), norm.alias("b")
-
-    @F.pandas_udf(T.DoubleType())
-    def _jac(ta: pd.Series, tb: pd.Series) -> pd.Series:
-        return pd.Series(jac_rows(zip(ta, tb)), index=ta.index,
-                         dtype="float64")
-
-    return (
-        pairs.join(a, pairs["id_a"] == F.col(f"a.{id_col}"))
-        .join(b, pairs["id_b"] == F.col(f"b.{id_col}"))
-        .select("id_a", "id_b",
-                _jac(F.col("a._nt"), F.col("b._nt")).alias("jaccard"))
-    )
+    ov = ngram_overlap_pairs_fast(docs, pairs, text_col=text_col,
+                                  id_col=id_col, n=n)
+    union = F.col("n_a") + F.col("n_b") - F.col("n_common")
+    return ov.select("id_a", "id_b", F.when(union > 0, F.col("n_common")
+                                            / union).alias("jaccard"))
 
 
 def _ngram_array(col, n: int) -> F.Column:
@@ -1387,16 +1314,16 @@ def ngram_overlap_pairs_fast(docs: DataFrame, pairs: DataFrame,
     duplication (a quote, a syndicated excerpt, a page wrapping another)
     which symmetric Jaccard under-scores.
 
-    Same kernel discipline as ngram_jaccard_pairs_fast: the pairs join
-    ships each doc's NORMALIZED TEXT once per pair, gram sets are built
-    once per distinct text per Arrow batch (memoized sorted uint64
-    arrays, injective encoding for n <= 3 — see _gram_hash_np), and the
-    returned counts are exact integers so any engine reproduces them
-    bit-for-bit. No gram arrays ever enter a shuffle.
+    The pairs join ships each doc's NORMALIZED TEXT once per pair (or,
+    under the driver-collect budget, pairs look it up in one broadcast
+    {id: normalized text}), gram sets are built once per distinct text
+    per Arrow batch (memoized sorted uint64 arrays, injective encoding for
+    n <= 3 — see _gram_hash_np), and the returned counts are exact
+    integers so any engine reproduces them bit-for-bit. No gram arrays
+    ever enter a shuffle.
     """
     def ov_rows(text_pairs):
-        # worker-global gram memo + bitmask intersection, same kernel as
-        # ngram_jaccard_pairs_fast (see _gram_entry)
+        # worker-global gram memo + bitmask intersection (see _gram_entry)
         rows = []
         for x, y in text_pairs:
             ea, eb = _gram_entry(x or "", n), _gram_entry(y or "", n)

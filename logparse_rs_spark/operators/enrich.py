@@ -1,5 +1,5 @@
 """Broadcast-join enrichment against lookup dictionaries (SURVEY §2.5 J4,
-FIXTURES.md §5): dim_lang, dim_field_type, dim_salt, dim_user_map.
+FIXTURES.md §5): dim_lang.
 
 Every dim is tiny -> F.broadcast() left joins; the fact side never shuffles.
 Dim contents are deterministic module constants so the DuckDB oracle can
@@ -21,56 +21,13 @@ DIM_LANG: List[Tuple[str, str, str]] = [
     ("unknown", "Unknown", "unknown"),
 ]
 
-DIM_SALT: List[Tuple[str, str]] = [
-    (t, f"salt-{t.lower()}") for t in
-    ["TRAFFIC", "THREAT", "GLOBALPROTECT", "DECRYPTION", "SCTP",
-     "SYSTEM", "CONFIG", "HIPMATCH", "USERID", "IPTAG"]
-]
-
-DIM_USER_MAP: List[Tuple[str, str]] = [("alice", "user_001"), ("bob", "user_002")]
-
-_SEMANTIC_RULES = [
-    ("address", "ip"), ("_ip", "ip"), ("port", "port"), ("user", "user"),
-    ("time", "ts"), ("date", "ts"),
-]
-
 
 def dim_lang_df(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame(DIM_LANG, "lang string, lang_name string, "
                                            "lang_family string")
 
 
-def dim_salt_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(DIM_SALT, "log_type string, salt string")
-
-
-def dim_user_map_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(DIM_USER_MAP, "orig string, repl string")
-
-
-def dim_field_type_df(spark: SparkSession, schema) -> DataFrame:
-    """field_name -> semantic_type derived from schema field names (first
-    matching substring rule wins; 'other' otherwise)."""
-    names = sorted({n for fields in schema.type_to_fields.values()
-                    for n in fields})
-    rows = []
-    for n in names:
-        sem = "other"
-        for needle, tag in _SEMANTIC_RULES:
-            if needle in n:
-                sem = tag
-                break
-        rows.append((n, sem))
-    return spark.createDataFrame(rows, "field_name string, semantic_type string")
-
-
 def enrich_with_lang(parsed: DataFrame, spark: SparkSession) -> DataFrame:
     """Left broadcast join: page lang code -> language name/family."""
     dim = dim_lang_df(spark)
     return parsed.join(F.broadcast(dim), on="lang", how="left")
-
-
-def enrich_with_salt(parsed: DataFrame, spark: SparkSession) -> DataFrame:
-    """Left broadcast join: log type -> per-type salt string."""
-    dim = dim_salt_df(spark)
-    return parsed.join(F.broadcast(dim), on="log_type", how="left")

@@ -40,6 +40,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..shared import collect_if_fits
+
 
 def _truncate(df: DataFrame, eager: bool = True) -> DataFrame:
     """Cut lineage between rounds (iterative plans grow exponentially
@@ -65,13 +67,13 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
     needs only O(log n) rounds on ANY graph shape; ``"label"`` needs
     diameter rounds (cheaper per round on tiny-diameter dup cliques).
     """
+    if algorithm not in ("label", "star"):
+        raise ValueError(f"unknown algorithm {algorithm!r}")
     local = _components_local(pairs, src, dst)
     if local is not None:
         return local
     if algorithm == "star":
         return _components_star(pairs, src, dst, max_iter)
-    if algorithm != "label":
-        raise ValueError(f"unknown algorithm {algorithm!r}")
     edges = (pairs.select(F.col(src).cast("long").alias("a"),
                           F.col(dst).cast("long").alias("b"))
              .union(pairs.select(F.col(dst).cast("long").alias("a"),
@@ -113,29 +115,26 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
 
 
 def _components_local(pairs: DataFrame, src: str, dst: str):
-    """Size-gated local path: when the edge list fits a driver budget
-    (LPS_CC_LOCAL_EDGES, default 4M edges — the same order as a broadcast
-    join side), pull it once and run vectorized min-label propagation
-    with pointer jumping in numpy; None above the gate (the distributed
+    """Size-gated local path: when the edge list fits the driver-collect
+    budget (shared.collect_if_fits: 16 B per edge, so 4M edges at the
+    default), pull it once and run vectorized min-label propagation with
+    pointer jumping in numpy; None above the gate (the distributed
     star/label rounds run unchanged). The limit probe stops the scan at
     cap+1 rows on oversized graphs. Identical output: component = min
     node id reachable, nodes = pair endpoints, deterministic (depends
     only on the edge set). Replaces O(log n) rounds of 6-exchange Spark
     jobs with one collect for the small-graph regime."""
-    import os
-
-    cap = int(os.environ.get("LPS_CC_LOCAL_EDGES", str(4_000_000)))
-    pdf = (pairs.select(F.col(src).cast("long").alias("a"),
-                        F.col(dst).cast("long").alias("b"))
-           .limit(cap + 1).toPandas())
-    if len(pdf) > cap:
+    tbl = collect_if_fits(pairs.select(F.col(src).cast("long").alias("a"),
+                                       F.col(dst).cast("long").alias("b")),
+                          "components")
+    if tbl is None:
         return None
     spark = pairs.sparkSession
     schema = "id long, component long"
-    if len(pdf) == 0:
+    if not tbl.num_rows:
         return spark.createDataFrame([], schema)
-    ea = pdf["a"].to_numpy(np.int64)
-    eb = pdf["b"].to_numpy(np.int64)
+    ea = tbl.column("a").to_numpy()
+    eb = tbl.column("b").to_numpy()
     uniq, inv = np.unique(np.concatenate([ea, eb]), return_inverse=True)
     ia, ib = inv[:len(ea)], inv[len(ea):]
     n = len(uniq)
@@ -264,18 +263,15 @@ def dup_clusters(pairs: Optional[DataFrame] = None, src: str = "id_a",
 
 def _pagerank_local(pairs: DataFrame, iterations: int, scale: int,
                     src: str, dst: str):
-    """Size-gated local path for pagerank_integer (same gate discipline
-    as _components_local, env LPS_CC_LOCAL_EDGES): the exact-integer
+    """Size-gated local path for pagerank_integer (the same
+    shared.collect_if_fits gate as _components_local): the exact-integer
     rounds run as numpy int64 segment sums over the collected edge list.
     Bit-identical to the distributed rounds inside the documented
     overflow bound — every quantity is positive, so int64 // and sums
     match Spark's BIGINT DIV / SUM exactly. None above the gate."""
-    import os
-
-    cap = int(os.environ.get("LPS_CC_LOCAL_EDGES", str(4_000_000)))
-    pdf = pairs.select(F.col(src).alias("s"),
-                       F.col(dst).alias("t")).limit(cap + 1).toPandas()
-    if len(pdf) > cap:
+    tbl = collect_if_fits(pairs.select(F.col(src).alias("s"),
+                                       F.col(dst).alias("t")), "pagerank")
+    if tbl is None:
         return None
     spark = pairs.sparkSession
     node_field = pairs.schema[src]
@@ -283,10 +279,10 @@ def _pagerank_local(pairs: DataFrame, iterations: int, scale: int,
         T.StructField("node", node_field.dataType),
         T.StructField("pr", T.LongType()),
     ])
-    if len(pdf) == 0:
+    if not tbl.num_rows:
         return spark.createDataFrame([], out_schema)
-    sv = pdf["s"].to_numpy()
-    tv = pdf["t"].to_numpy()
+    sv = tbl.column("s").to_numpy()
+    tv = tbl.column("t").to_numpy()
     uniq, inv = np.unique(np.concatenate([sv, tv]), return_inverse=True)
     si = np.concatenate([inv[:len(sv)], inv[len(sv):]])
     ti = np.concatenate([inv[len(sv):], inv[:len(sv)]])

@@ -150,7 +150,7 @@ def project_type(parsed: DataFrame, schema: CompiledSchema, log_type: str,
     Physical-form note: the full-width TRAFFIC projection (117 F.get +
     anon expressions, whole-stage codegen) was measured against a single
     mapInPandas stage doing the same split+project+anonymize in Python
-    (tools/probe_wide_projection.py): JVM form 6.5-10s vs pandas form
+    (a one-off probe, commit 6277232): JVM form 6.5-10s vs pandas form
     21-25s at 1.23M rows / 8 cores — the codegen'd gets win ~3x, so wide
     projections stay JVM-side.
     """

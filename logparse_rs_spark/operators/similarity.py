@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..shared import collect_if_fits
+
 
 def _vec_matrix(vecs: "pd.Series") -> np.ndarray:
     """(rows, dim) float64 matrix from an Arrow list column. np.stack over
@@ -242,6 +244,13 @@ def ivf_topk(vectors: DataFrame, queries: DataFrame, k: int = 10,
             .withColumn("cos_sim", F.round("cos_sim", 6)))
 
 
+_PAIR_SCHEMA = T.StructType([
+    T.StructField("id_a", T.LongType()),
+    T.StructField("id_b", T.LongType()),
+    T.StructField("cos_sim", T.DoubleType()),
+])
+
+
 def _neardup_pairs_broadcast(vectors: DataFrame, dim: int, threshold: float,
                              n_planes: int, bands: int, seed: int,
                              id_col: str, vec_col: str):
@@ -252,44 +261,34 @@ def _neardup_pairs_broadcast(vectors: DataFrame, dim: int, threshold: float,
     the exchange carries the heavy payload `bands` times so a few bytes of
     bucket key can be grouped on), and applyInPandas re-inflates the
     vector column into numpy per group. When the whole (rows, dim) matrix
-    fits the broadcast budget (LPS_NEARDUP_BCAST_MB, default 64 MB — the
-    same order as an auto-broadcast join side), each band is instead an
-    independent numpy task over the broadcast matrix: zero embedding
-    shuffle, bucket slicing by signature bits, and only surviving pairs
-    leave the task. Identical output: same candidate set (pairs sharing
-    >= 1 band bucket), same exact-float64 cosine, same final min/round
-    dedup. A float32 coarse gate (margin 1e-3 >> the f32 matmul error
-    bound of ~dim*2^-20 on unit vectors) only PRE-SELECTS candidates;
-    every emitted score is exact float64, and the gate cannot drop a true
-    pair because the margin exceeds the rounding error."""
-    import os
-
-    budget = int(os.environ.get("LPS_NEARDUP_BCAST_MB", "64")) << 20
-    max_rows = max(1, budget // (dim * 8))
-    head = vectors.select(id_col, vec_col).limit(max_rows + 1).collect()
-    if len(head) > max_rows:
+    fits the driver-collect budget (shared.collect_if_fits, sized by the
+    broadcast row: 8 B id + 8 B signature + dim x (8 B float64 + 4 B
+    float32)), each band is instead an independent numpy task over the
+    broadcast matrix: zero embedding shuffle, bucket slicing by signature
+    bits, and only surviving pairs leave the task. Identical output: same
+    candidate set (pairs sharing >= 1 band bucket), same exact-float64
+    cosine, same final min/round dedup. A float32 coarse gate only
+    PRE-SELECTS candidates; every emitted score is exact float64, and the
+    gate cannot drop a true pair because its margin, max(1e-3, dim *
+    2^-20), covers the f32 matmul error bound of ~dim * 2^-20 on unit
+    vectors."""
+    head = collect_if_fits(vectors.select(id_col, vec_col), "neardup",
+                           row_bytes=16 + 12 * dim)
+    if head is None:
         return None
     spark = vectors.sparkSession
-    out_schema = T.StructType([
-        T.StructField("id_a", T.LongType()),
-        T.StructField("id_b", T.LongType()),
-        T.StructField("cos_sim", T.DoubleType()),
-    ])
-    if not head:
-        pairs = spark.createDataFrame([], out_schema)
-        return (pairs.groupBy("id_a", "id_b")
-                .agg(F.round(F.min("cos_sim"), 6).alias("cos_sim")))
     width = n_planes // bands
     mask = (1 << width) - 1
-    ids = np.array([r[0] for r in head], dtype=np.int64)
-    vm = np.array([list(r[1]) for r in head], dtype=np.float64)
+    ids = head.column(0).to_numpy().astype(np.int64, copy=False)
+    vm = (head.column(1).combine_chunks().flatten().to_numpy()
+          .astype(np.float64).reshape(head.num_rows, dim))
     sigs = hyperplane_sig_np(vm, hyperplane_planes(dim, n_planes, seed))
     norms = np.linalg.norm(vm, axis=1)
     norms[norms == 0] = 1.0
     vn = vm / norms[:, None]
     bc = spark.sparkContext.broadcast(
         (ids, vn, vn.astype(np.float32), sigs.view(np.uint64)))
-    coarse = threshold - 1e-3
+    coarse = threshold - max(1e-3, dim * 2**-20)
 
     def score_bands(pdfs):
         b_ids, b_vn, b_vn32, b_usigs = bc.value
@@ -315,7 +314,7 @@ def _neardup_pairs_broadcast(vectors: DataFrame, dim: int, threshold: float,
                     })
 
     pairs = (spark.range(0, bands, 1, numPartitions=bands)
-             .mapInPandas(score_bands, schema=out_schema))
+             .mapInPandas(score_bands, schema=_PAIR_SCHEMA))
     return (pairs.groupBy("id_a", "id_b")
             .agg(F.round(F.min("cos_sim"), 6).alias("cos_sim")))
 
@@ -358,12 +357,6 @@ def neardup_pairs(vectors: DataFrame, dim: int, threshold: float = 0.35,
     # folding per-pair: the >=threshold survivors are the only rows that
     # ever leave the bucket. Per-group memory is O(bucket_size * dim) — at
     # 10^12 rows pair this with a bucket-size cap (see dedup.max_bucket).
-    out_schema = T.StructType([
-        T.StructField("id_a", T.LongType()),
-        T.StructField("id_b", T.LongType()),
-        T.StructField("cos_sim", T.DoubleType()),
-    ])
-
     def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         n = len(pdf)
         if n < 2:
@@ -384,7 +377,7 @@ def neardup_pairs(vectors: DataFrame, dim: int, threshold: float = 0.35,
                              "cos_sim": sims[ia, ib]})
 
     pairs = (banded.groupBy("band", "bucket")
-             .applyInPandas(score_bucket, schema=out_schema))
+             .applyInPandas(score_bucket, schema=_PAIR_SCHEMA))
     # a pair can surface from several bands; cos_sim is identical each time
     return (pairs.groupBy("id_a", "id_b")
             .agg(F.round(F.min("cos_sim"), 6).alias("cos_sim")))

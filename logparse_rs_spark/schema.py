@@ -112,18 +112,3 @@ def load_schema(path: str) -> CompiledSchema:
     except OSError:
         mtime = None
     return compile_schema_dict(doc, path=path, mtime=mtime)
-
-
-def default_schema_path() -> str:
-    """Resolve the bundled full fixture schema, honoring the reference's env
-    overrides (docs/env.md:7-16: LOGPARSE_PRELOAD_SCHEMA / SCHEMA_JSON_PATH).
-    """
-    for env in ("LOGPARSE_PRELOAD_SCHEMA", "SCHEMA_JSON_PATH"):
-        p = os.environ.get(env)
-        if p:
-            return p
-    return os.path.join(os.path.dirname(__file__), "..", "schemas", "schema.json")
-
-
-def load_default_schema() -> CompiledSchema:
-    return load_schema(os.path.abspath(default_schema_path()))

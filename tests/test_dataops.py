@@ -6,6 +6,9 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from logparse_rs_spark import shared
+
+DEFAULT_BUDGET = shared.BUDGET
 SF = "/root/testdata/sf0.001"
 
 
@@ -607,7 +610,7 @@ class TestDupClusters:
 
     def test_nonconvergence_raises(self, spark, monkeypatch):
         # distributed-path property: disable the small-graph local gate
-        monkeypatch.setenv("LPS_CC_LOCAL_EDGES", "0")
+        monkeypatch.setattr(shared, "BUDGET", 0)
         import pandas as pd
         from logparse_rs_spark.operators.graph import connected_components
         chain = [(i, i + 1) for i in range(12)]
@@ -629,10 +632,10 @@ class TestDupClusters:
                 "id_a": rng.randint(0, n_nodes, n_edges),
                 "id_b": rng.randint(0, n_nodes, n_edges)})
             df = spark.createDataFrame(edges)
-            monkeypatch.setenv("LPS_CC_LOCAL_EDGES", "0")
+            monkeypatch.setattr(shared, "BUDGET", 0)
             star = sorted(map(tuple, connected_components(
                 df, algorithm="star").collect()))
-            monkeypatch.setenv("LPS_CC_LOCAL_EDGES", "4000000")
+            monkeypatch.setattr(shared, "BUDGET", DEFAULT_BUDGET)
             local = sorted(map(tuple, connected_components(
                 df, algorithm="star").collect()))
             assert star == local
@@ -663,7 +666,7 @@ class TestDupClusters:
         import pandas as pd
         import pytest
         from logparse_rs_spark.operators.graph import connected_components
-        monkeypatch.setenv("LPS_CC_LOCAL_EDGES", "0")
+        monkeypatch.setattr(shared, "BUDGET", 0)
         chain = [(i, i + 1) for i in range(40)]
         df = spark.createDataFrame(
             pd.DataFrame(chain, columns=["id_a", "id_b"]))
@@ -1365,9 +1368,9 @@ class TestPagerankInteger:
                                  rng.randint(0, 25, 60))]
         pairs += [(3, 3), (1, 2), (1, 2)]
         df = spark.createDataFrame(pairs, "id_a long, id_b long")
-        monkeypatch.setenv("LPS_CC_LOCAL_EDGES", "0")
+        monkeypatch.setattr(shared, "BUDGET", 0)
         dist = sorted(map(tuple, pagerank_integer(df, 3).collect()))
-        monkeypatch.setenv("LPS_CC_LOCAL_EDGES", "4000000")
+        monkeypatch.setattr(shared, "BUDGET", DEFAULT_BUDGET)
         local = sorted(map(tuple, pagerank_integer(df, 3).collect()))
         assert dist == local
 

@@ -79,12 +79,15 @@ class TestParsedCache:
     def test_cached_parse_identical_results(self, spark, entrymod):
         """_parsed memoizes per (session, fixture); the cached frame must be
         the same plan (one persist) and produce identical aggregates."""
+        from logparse_rs_spark import shared
         a = entrymod.queries()["log_status_counts"](spark, SF)
+        hits = shared.stats()["hits"]
         b = entrymod.queries()["log_status_counts"](spark, SF)
         assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-        from __spark_entry__ import _PARSED_CACHE
-        assert any(spark.sparkContext.applicationId == k[0]
-                   for k in _PARSED_CACHE)
+        st = shared.stats()
+        assert st["app"] == spark.sparkContext.applicationId
+        assert any(name == "parsed" for name, _ in st["entries"])
+        assert st["hits"] == hits + 1
 
 
 class TestRound3Plans:

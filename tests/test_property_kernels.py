@@ -10,7 +10,7 @@ quote-free fast path's equivalence claim, index alignment under nulls).
 
 import numpy as np
 import pandas as pd
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from logparse_rs_spark.kernels import (extract_field, fnv1a_hash64,
@@ -92,6 +92,10 @@ class TestTokenizeParity:
     @settings(max_examples=100, deadline=None)
     @given(st.lists(st.one_of(st.none(), _general), max_size=15),
            _general, _general, _general)
+    # NumPy fixed-width strings drop trailing NULs: a prefix ending in
+    # "\x00" must survive the vectorized concatenation
+    @example(vals=["a", None, ""], prefix="\x00", fsalt="", dsalt="")
+    @example(vals=["a", None, ""], prefix="A\x00", fsalt="", dsalt="")
     def test_series_matches_scalar(self, vals, prefix, fsalt, dsalt):
         s = pd.Series(vals, dtype=object)
         got = tokenize_series(s, prefix, fsalt, dsalt).tolist()
