@@ -13,9 +13,13 @@ Scale notes (the design constraints this file encodes):
   uniform even when a few domains are hot (hashing the full url, not the
   domain, is the skew defence — a hot domain's pages scatter across all
   buckets). n_buckets should be sized so one bucket ≈ 100-500 MB of input at
-  the target scale; buckets are the resume/lineage grain, while Spark's own
-  task parallelism *within* a run comes from the repartition below.
-- one cached parse pass feeds every sink + the metrics/report aggregates:
+  the target scale; buckets are the resume/lineage AND the file grain: the
+  parse stage is written partitioned by bucket, one stage task per bucket,
+  so every sink that scans it writes at most one file per row group of the
+  bucket's stage file (one file while the bucket stages under parquet's
+  128 MB row group) without a shuffle of its own. Spark's task parallelism
+  within a run comes from the one repartition below.
+- one staged parse pass feeds every sink + the metrics/report aggregates:
   the fan-out never re-reads or re-parses the input.
 - all per-sink aggregates are hash aggregates with map-side partials; the
   only wide shuffles are the repartition-by-bucket and the final groupBys
@@ -24,18 +28,19 @@ Scale notes (the design constraints this file encodes):
 
 from __future__ import annotations
 
-import os
 import time
 import uuid
 from dataclasses import dataclass, field
-from typing import Dict, List, Optional, Sequence
+from typing import Dict, List, Optional, Sequence, Tuple
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..anonymizer import CompiledAnonymizer, load_anonymizer
-from ..operators.anonymize import audit_table
-from ..operators.parse import STATUS_OK, parse_lines, explode_lines, project_type
+from ..operators.anonymize import anonymize_expr, audit_table
+from ..operators.parse import (STATUS_OK, explode_lines, fields_col,
+                               parse_lines, project_type)
 from ..schema import CompiledSchema, load_schema
 from ..sources.writers import ParquetWriter, make_writer
 
@@ -93,28 +98,86 @@ AUDIT_TABLE = "_audit"
 REJECTS_TABLE = "_rejects"
 
 
+# concurrent fan-out jobs: enough to hide per-job commit latency, FIXED
+# at 4 — r1 scaled this with defaultParallelism and the commit phase
+# anti-scaled (more cores -> more simultaneous partitionBy commits
+# contending on the store). Task-level parallelism inside each job
+# already uses every core; job-level concurrency only needs to cover
+# scheduling + commit gaps. Fixed (not core-derived) so an N-core and a
+# 4N-core run execute the IDENTICAL job schedule — the cluster-size
+# scaling comparison then varies exactly one thing.
+SINK_CONCURRENCY = 4
+
+# bookkeeping tables, built driver-side as one-partition Arrow tables: the
+# JVM reads the Arrow stream directly, where createDataFrame(list) would
+# parallelize pickled rows through a Python worker pool of its own
+METRICS_ARROW = pa.schema([
+    ("part_id", pa.int32()), ("bucket", pa.int32()), ("rows_in", pa.int64()),
+    ("rows_ok", pa.int64()), ("rows_rejected", pa.int64()),
+    ("bytes_in", pa.int64()), ("run_id", pa.string())])
+LEDGER_ARROW = pa.schema([
+    ("bucket", pa.int32()), ("rows_in", pa.int64()), ("rows_ok", pa.int64()),
+    ("docs", pa.int64()), ("status", pa.string()), ("run_id", pa.string())])
+
+
+def pick_by_type(positions: Sequence[Tuple[str, int]]) -> Column:
+    """The split field at each row's own log type's position: a when chain
+    over (log_type, position) pairs, null for every other type."""
+    expr = None
+    for t, pos in positions:
+        cond, val = F.col("log_type") == t, F.get(F.col("fields"), pos)
+        expr = F.when(cond, val) if expr is None else expr.when(cond, val)
+    return expr
+
+
+def field_by_type(name: str, positions: Dict[str, int],
+                  anon_by_type: Dict[str, Optional[CompiledAnonymizer]]
+                  ) -> Column:
+    """One column for field `name` across several log types, anonymized
+    ONCE per anonymizer (not once per type). A Python UDF inside a when
+    branch runs on every input row whichever branch the row takes, so a
+    per-type tokenize chain costs one UDF per (type, field); picking the
+    position first and anonymizing the picked value costs one per field."""
+    groups: Dict[int, tuple] = {}   # id(anonymizer) -> (anonymizer, positions)
+    for t, pos in positions.items():
+        a = anon_by_type[t]
+        groups.setdefault(id(a), (a, []))[1].append((t, pos))
+    out = None
+    for a, pairs in groups.values():
+        c = pick_by_type(pairs)
+        if a is not None:
+            c = anonymize_expr(c, a.plan_for(name), a.default_salt)
+        if len(groups) == 1:
+            return c
+        cond = F.col("log_type").isin([t for t, _ in pairs])
+        out = F.when(cond, c) if out is None else out.when(cond, c)
+    return out
+
+
 def build_map_payload(parsed: DataFrame, schema: CompiledSchema,
                       anon_by_type: Dict[str, Optional[CompiledAnonymizer]]
                       ) -> DataFrame:
     """Type-erased map<string,string> payload for the long-tail map sinks:
-    one when-chain over the configured types, each branch zipping the
-    type's schema names with the split fields (anonymized per its plan)."""
-    from ..operators.anonymize import anonymize_expr
-    from ..operators.parse import fields_col
-
+    each anonymized field name first becomes one column (field_by_type:
+    one tokenize per name over all types), then a when chain over the
+    configured types zips each type's schema names with its split fields,
+    reading the anonymized names from those columns."""
     types = list(anon_by_type)
     df = fields_col(parsed.filter(
         (F.col("status") == STATUS_OK) & F.col("log_type").isin(types)))
+    anon_pos: Dict[str, Dict[str, int]] = {}   # name -> {log_type: position}
+    for t in types:
+        a = anon_by_type[t]
+        for name, pos in schema.effective_positions(t):
+            if a is not None and a.plan_for(name).mode is not None:
+                anon_pos.setdefault(name, {})[t] = pos
+    df = df.withColumns({f"_anon_{n}": field_by_type(n, pos, anon_by_type)
+                         for n, pos in anon_pos.items()})
     payload = None
     for t in types:
         pairs = schema.effective_positions(t)
-        a = anon_by_type[t]
-        vals = []
-        for name, pos in pairs:
-            c = F.get(F.col("fields"), pos)
-            if a is not None:
-                c = anonymize_expr(c, a.plan_for(name), a.default_salt)
-            vals.append(c)
+        vals = [F.col(f"_anon_{n}") if t in anon_pos.get(n, ())
+                else F.get(F.col("fields"), pos) for n, pos in pairs]
         m = F.map_from_arrays(
             F.array(*[F.lit(n) for n, _ in pairs]), F.array(*vals))
         payload = (F.when(F.col("log_type") == t, m) if payload is None
@@ -178,9 +241,11 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig,
 
     n_parts = cfg.partitions_per_run or max(
         2 * int(spark.sparkContext.defaultParallelism), cfg.n_buckets // 4, 8)
-    # explicit repartition on the bucket key: lines of one url always land
-    # together, so per-bucket sink partitions are written by few tasks and
-    # the (url, line_ordinal) identity never crosses partitions
+    # explicit repartition on the bucket key: every row of a bucket lands
+    # in ONE task, so the stage writes one file per bucket directory and
+    # the (url, line_ordinal) identity never crosses partitions. This is
+    # the run's only repartition: the sinks inherit its bucket clustering
+    # from the stage files instead of re-shuffling for it.
     bucketed = bucketed.repartition(n_parts, "bucket")
 
     exploded = explode_lines(bucketed, keep_cols=("lang", "bucket"))
@@ -201,20 +266,12 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig,
         if anon is not None and anon.plan_for(d).mode is not None
     ]
     if audit_dims_active:
-        from ..operators.parse import fields_col
-
         sink_types = sorted({s.log_type for s in cfg.sinks})
         parsed_plan = fields_col(parsed_plan)
         for d in audit_dims_active:
-            expr = None
-            for t in sink_types:
-                pos = dict(schema.effective_positions(t)).get(d)
-                if pos is None:
-                    continue
-                cond = F.col("log_type") == t
-                val = F.get(F.col("fields"), pos)
-                expr = (F.when(cond, val) if expr is None
-                        else expr.when(cond, val))
+            expr = pick_by_type([
+                (t, pos) for t in sink_types
+                for name, pos in schema.effective_positions(t) if name == d])
             parsed_plan = parsed_plan.withColumn(
                 f"_adt_{d}",
                 expr if expr is not None else F.lit(None).cast("string"))
@@ -223,13 +280,19 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig,
     # ---- staging checkpoint: ONE parse pass materialized as parquet -------
     # Measured against .cache(): the in-memory columnar cache serializes the
     # fat line/array columns slower than parquet writes them, and every
-    # cached read deserializes full batches; the staged parquet gives all 13+
-    # downstream consumers real column pruning. Partitioning the stage by
-    # log_type means every sink job's scan is partition-PRUNED to its own
-    # rows (measured: the 8 small-type sinks each stop rescanning the full
-    # stage). The stage table doubles as the run's lineage artifact.
+    # cached read deserializes full batches; the staged parquet gives every
+    # downstream consumer real column pruning. The stage is partitioned by
+    # BUCKET, each bucket written by one task into one file sorted by
+    # (bucket, log_type): a scan split never divides a parquet row group,
+    # so each sink's partitionBy("bucket") writes at most one file per
+    # stage row group with no shuffle, and a sink filtering on
+    # log_type skips row groups by their min/max stats. (Partitioning by
+    # log_type would prune per-type scans, but every sink would then
+    # re-shuffle by bucket to write one file per bucket.) The stage table
+    # doubles as the run's lineage artifact.
     t_stage = time.perf_counter()
-    writer.write(parsed_plan, STAGE_TABLE, partition_by=["log_type"],
+    writer.write(parsed_plan.sortWithinPartitions("bucket", "log_type"),
+                 STAGE_TABLE, partition_by=["bucket"],
                  overwrite_mode="static")
     mark("stage_write", t_stage)
     parsed = writer.read(spark, STAGE_TABLE)
@@ -260,8 +323,15 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig,
             .collect())
 
     # ---- fan-out sinks (M1) + metrics + rejects + audit, as CONCURRENT
-    # Spark jobs over the one cached parse (driver threads only queue jobs;
-    # executors time-share tasks) --------------------------------------------
+    # Spark jobs over the one staged parse (driver threads only queue jobs;
+    # executors time-share tasks). Every sink writes partitionBy("bucket")
+    # straight from its stage scan, with no shuffle: a scan split never
+    # divides a parquet row group, so each row group of a bucket's stage
+    # file is written by one task -> 1 file per bucket dir below 128 MB of
+    # staged bucket, instead of (tasks x buckets) small files. At scale the
+    # 100-500MB bucket grain IS the file size you want; the file/commit
+    # count is what killed r1's sink phase (217s@8c vs 60s@2c, BENCH_r01).
+    # -------------------------------------------------------------------------
     from concurrent.futures import ThreadPoolExecutor
 
     per_sink_rows: Dict[str, int] = {}
@@ -272,37 +342,45 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig,
             anon=anon if sink.anonymize else None,
             extra_cols=("bucket",),   # idempotent partition overwrite key
         )
-        # cluster by the partition key BEFORE partitionBy: each bucket is
-        # written by exactly one task -> 1 file per bucket dir instead of
-        # (tasks x buckets) small files. The shuffle carries only this sink's
-        # projected columns, and at scale the 100-500MB bucket grain IS the
-        # file size you want; the file/commit count is what killed r1's
-        # sink phase (217s@8c vs 60s@2c, BENCH_r01).
-        projected = projected.repartition(cfg.n_buckets, "bucket")
         writer.write(projected, sink.table, partition_by=["bucket"])
 
+    def sink_positions(sink: SinkSpec) -> List[Tuple[str, int]]:
+        pairs = schema.effective_positions(sink.log_type)
+        if sink.columns is None:
+            return pairs
+        wanted = set(sink.columns)
+        return [(n, p) for n, p in pairs if n in wanted]
+
     def write_columnar_group(sinks_in_table: List[SinkSpec]) -> None:
-        """Columnar sinks that SHARE a table fold into ONE write job:
-        per-type projections unioned by name (a type missing a column
-        yields nulls there) and written partitioned by (log_type, bucket)
-        — readers of one type still get partition pruning, replay still
-        overwrites only the touched (type, bucket) partitions, and the
-        phase pays one job's scheduling + codegen + commit instead of one
-        per type. At 8 cores the per-job fixed cost (~2-4 s of planning +
-        Janino codegen + commit setup, BENCH/BASELINE.md) dominated two
-        nearly-empty write jobs — folding them is the N->4N efficiency
-        lever, since fixed cost is what does NOT shrink with cores."""
-        parts = []
+        """Columnar sinks that SHARE a table fold into ONE write job over
+        ONE stage scan: each column picks its field's position by log_type
+        and is anonymized once (field_by_type), a type missing a column
+        yields nulls there, and the table is written partitioned by
+        (log_type, bucket) — readers of one type still get partition
+        pruning, replay still overwrites only the touched (type, bucket)
+        partitions, and the phase pays one job's scheduling + codegen +
+        commit instead of one per type. At 8 cores the per-job fixed cost
+        (~2-4 s of planning + Janino codegen + commit setup,
+        BENCH/BASELINE.md) dominated two nearly-empty write jobs — folding
+        them is the N->4N efficiency lever, since fixed cost is what does
+        NOT shrink with cores."""
+        anon_by_type = {s.log_type: anon if s.anonymize else None
+                        for s in sinks_in_table}
+        positions: Dict[str, Dict[str, int]] = {}   # name -> {type: pos}
         for s in sinks_in_table:
-            parts.append(project_type(
-                parsed, schema, s.log_type, columns=s.columns,
-                anon=anon if s.anonymize else None,
-                extra_cols=("log_type", "bucket"),
-            ))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p, allowMissingColumns=True)
-        out = out.repartition(cfg.n_buckets, "bucket")
+            for name, pos in sink_positions(s):
+                positions.setdefault(name, {})[s.log_type] = pos
+        cols = [field_by_type(n, p, anon_by_type).alias(n)
+                for n, p in positions.items()]
+        # the column order of a by-name union of per-type projections: the
+        # first type's fields, the enrichment pair, then the fields only
+        # later types have
+        k = len(sink_positions(sinks_in_table[0]))
+        out = fields_col(parsed.filter(
+            (F.col("status") == STATUS_OK)
+            & F.col("log_type").isin(list(anon_by_type)))).select(
+            "url", "line_ordinal", *cols[:k], "raw_excerpt", "hash64",
+            *cols[k:], "log_type", "bucket")
         writer.write(out, sinks_in_table[0].table,
                      partition_by=["log_type", "bucket"])
 
@@ -318,14 +396,12 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig,
         out = build_map_payload(
             parsed, schema,
             {s.log_type: (anon if s.anonymize else None) for s in map_sinks})
-        out = (out.repartition(cfg.n_buckets, "bucket")
-               .sortWithinPartitions("log_type"))
-        writer.write(out, map_sinks[0].table, partition_by=["bucket"])
+        writer.write(out.sortWithinPartitions("bucket", "log_type"),
+                     map_sinks[0].table, partition_by=["bucket"])
 
     def write_rejects() -> None:
         rejects = parsed.filter(F.col("status") != STATUS_OK).select(
             "url", "line_ordinal", "bucket", "status", "log_type", "line")
-        rejects = rejects.repartition(cfg.n_buckets, "bucket")
         writer.write(rejects, REJECTS_TABLE, partition_by=["bucket"])
 
     def write_audit() -> None:
@@ -363,15 +439,7 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig,
     if audit_dims_active:
         jobs.append(("audit", write_audit))
     t_sinks = time.perf_counter()
-    # concurrent fan-out jobs: enough to hide per-job commit latency, FIXED
-    # at 4 — r1 scaled this with defaultParallelism and the commit phase
-    # anti-scaled (more cores -> more simultaneous partitionBy commits
-    # contending on the store). Task-level parallelism inside each job
-    # already uses every core; job-level concurrency only needs to cover
-    # scheduling + commit gaps. Fixed (not core-derived) so an N-core and a
-    # 4N-core run execute the IDENTICAL job schedule — the cluster-size
-    # scaling comparison then varies exactly one thing.
-    pool_width = int(os.environ.get("LOGPARSE_SINK_CONCURRENCY", "4"))
+
     def timed(label: str, job):
         def run():
             t = time.perf_counter()
@@ -379,7 +447,8 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig,
             timings[f"sink:{label}"] = round(time.perf_counter() - t, 3)
         return run
 
-    with ThreadPoolExecutor(max_workers=min(pool_width, len(jobs))) as pool:
+    pool_width = min(SINK_CONCURRENCY, len(jobs))
+    with ThreadPoolExecutor(max_workers=pool_width) as pool:
         futures = [pool.submit(timed(lbl, j)) for lbl, j in jobs]
         for f in futures:
             f.result()  # surface the first failure
@@ -418,22 +487,14 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig,
                else sink.table)
         per_sink_rows[key] = type_counts.get(sink.log_type, 0)
 
-    # ---- metrics + ledger writes (tiny local frames); ledger commit (M4)
+    # ---- metrics + ledger writes (tiny Arrow frames); ledger commit (M4)
     # stays ordered AFTER all sink writes ------------------------------------
     t_ledger = time.perf_counter()
-    writer.append(
-        spark.createDataFrame(
-            list(metric_rows.values()),
-            "part_id int, bucket int, rows_in long, rows_ok long, "
-            "rows_rejected long, bytes_in long, run_id string"),
-        METRICS_TABLE)
-    writer.append(
-        spark.createDataFrame(
-            list(bucket_rows.values()),
-            "bucket int, rows_in long, rows_ok long, docs long, "
-            "status string, run_id string").withColumn(
-                "committed_at", F.current_timestamp()),
-        LEDGER_TABLE)
+    writer.append(spark.createDataFrame(pa.Table.from_pylist(
+        list(metric_rows.values()), schema=METRICS_ARROW)), METRICS_TABLE)
+    writer.append(spark.createDataFrame(pa.Table.from_pylist(
+        list(bucket_rows.values()), schema=LEDGER_ARROW)).withColumn(
+            "committed_at", F.current_timestamp()), LEDGER_TABLE)
     mark("ledger", t_ledger)
     n_buckets_done = len(bucket_rows)
     docs_in = sum(b["docs"] for b in bucket_rows.values())
