@@ -225,9 +225,11 @@ def parse_many(lines: Iterable[str], *, anonymized: bool = False,
 def parse_file(path: str, *, anonymized: bool = False, include_all: bool = False,
                schema_path: Optional[str] = None, encoding: str = "utf-8",
                errors: str = "ignore") -> Iterator[Dict]:
+    # a blank line reads as "\n", which parse_many would not skip
     with open(path, "r", encoding=encoding, errors=errors) as f:
-        yield from parse_many(f, anonymized=anonymized,
-                              include_all=include_all, schema_path=schema_path)
+        yield from parse_many((line.rstrip("\n") for line in f),
+                              anonymized=anonymized, include_all=include_all,
+                              schema_path=schema_path)
 
 
 def parse_many_parallel(lines: Iterable[str], *, batch_size: int = 1024,

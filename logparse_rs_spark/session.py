@@ -96,17 +96,22 @@ def get_spark(app_name: str = "logparse_rs_spark", cores: int | None = None,
                 os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS",
                                "-XX:+UseG1GC"))
         .config("spark.ui.enabled", "false")
+        # Python workers fork from logparse_rs_spark.pydaemon: a task no
+        # longer re-reads pyspark.zip, and a new worker starts with pandas
+        # and pyarrow loaded (README "Python worker start-up"). The daemon
+        # and the UDFs import the package from the repo root on the
+        # workers' PYTHONPATH, whatever the driver's working directory.
+        .config("spark.python.daemon.module", "logparse_rs_spark.pydaemon")
+        .config("spark.executorEnv.PYTHONPATH",
+                os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     )
     if master.startswith("local-cluster"):
-        # executor JVMs need their own heap sizing + the repo on the Python
-        # path of the executor-side Python workers; the big single-JVM
+        # executor JVMs need their own heap sizing; the big single-JVM
         # driver heap would be wasted here (executors hold the data)
-        repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
         builder = (
             builder
             .config("spark.executor.memory",
                     os.environ.get("SPARK_GRAFT_EXECUTOR_MEM", "6g"))
-            .config("spark.executorEnv.PYTHONPATH", repo_root)
             .config("spark.driver.memory",
                     os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
             # same GC/heap discipline as the driver in local mode: G1 with

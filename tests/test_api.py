@@ -94,6 +94,45 @@ class TestParseSurface:
         assert st["mtime_epoch_ms"] > 0
 
 
+class TestReferenceParity:
+    """The facade's schema-path and file entry points against refimpl."""
+
+    def test_enriched_with_schema_matches_refimpl(self, api):
+        from logparse_rs_spark import refimpl
+        from logparse_rs_spark.schema import load_schema
+        got = api.parse_kv_enriched_with_schema(EXEMPLAR, SCHEMA)
+        assert got == refimpl.parse_kv_enriched(EXEMPLAR, load_schema(SCHEMA))
+        assert got["parsed"]["source_address"] == "192.168.0.2"
+
+    def test_enriched_with_schema_anon_matches_refimpl(self, api):
+        from logparse_rs_spark import refimpl
+        from logparse_rs_spark.anonymizer import load_anonymizer
+        from logparse_rs_spark.schema import load_schema
+        got = api.parse_kv_enriched_with_schema_anon(EXEMPLAR, SCHEMA)
+        assert got == refimpl.parse_kv_enriched_anon(
+            EXEMPLAR, load_schema(SCHEMA), load_anonymizer(ANON))
+        assert got["parsed"]["source_address"] == "SRC_707b7cbaa5e196f2"
+        assert got["_anonymized"] is True
+
+    @pytest.mark.parametrize("anonymized", [False, True])
+    def test_parse_file_matches_parse_many(self, api, tmp_path, anonymized):
+        from logparse_rs_spark import refimpl
+        from logparse_rs_spark.anonymizer import load_anonymizer
+        from logparse_rs_spark.schema import load_schema
+        # a blank line, trailing blanks that must survive, no final newline
+        text = "\n".join([EXEMPLAR, "", EXEMPLAR + " \t", "",
+                          "x,y,z,SYSTEM,s,t"])
+        src = tmp_path / "in.log"
+        src.write_text(text)
+        got = list(api.parse_file(str(src), anonymized=anonymized))
+        want = list(refimpl.parse_many(
+            text.split("\n"), load_schema(SCHEMA),
+            load_anonymizer(ANON) if anonymized else None))
+        assert got == want
+        assert len(got) == 3
+        assert got[1]["hash64"] == api.hash64_fnv1a(EXEMPLAR + " \t")
+
+
 class TestNdjson:
     def test_python_path_skip_semantics(self, api, tmp_path):
         src = tmp_path / "in.log"
