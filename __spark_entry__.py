@@ -57,6 +57,10 @@ FIXTURE_ROOT = _fixture_root()
 # pages-fixture size per driver scale factor (sf0.01 is the correctness gate)
 SF_PAGES = {"sf0.001": 120, "sf0.01": 1000, "sf0.1": 12000}
 ORACLE_SF = "sf0.01"
+# micro-batch files the streaming dedup queries feed through availableNow
+# triggers: each costs about a full trigger cycle, and 2 already prove
+# cross-batch suppression (state survives a trigger boundary)
+STREAM_BATCHES = 2
 
 DIMS = ["source_address", "destination_address", "rule_name", "source_user",
         "application", "action", "device_name"]
@@ -579,7 +583,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def doc_fingerprint_fnv(spark, sf_dir):
         from logparse_rs_spark.operators.text import fingerprint
-        return fingerprint(_docs(spark, sf_dir), exact_fnv=True)
+        return fingerprint(_docs(spark, sf_dir))
 
     def emb_bruteforce_topk(spark, sf_dir):
         from logparse_rs_spark.operators.similarity import brute_force_topk
@@ -678,9 +682,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # content sample, one integer row per stage
         from pyspark.sql import Window
 
-        from logparse_rs_spark.functions import fnv1a_col
         from logparse_rs_spark.operators.curate import gopher_quality
-        from logparse_rs_spark.operators.dedup import normalized_text
+        from logparse_rs_spark.operators.dedup import (content_fingerprint,
+                                                       normalized_text)
         from logparse_rs_spark.operators.text import _words
         # one-pass funnel: every stage predicate is a per-row column
         # (token band, gopher keep, fp sample) or a min-over-window on
@@ -691,12 +695,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # Values identical: attrition_funnel output shape reproduced
         # exactly (stage, stage_name, n_docs, total_chars).
         d = _docs(spark, sf_dir)
-        norm = normalized_text(F.col("text"))
         base = d.select(
             "doc_id", "text",
             F.size(_words(F.col("text"))).alias("_nw"),
-            F.xxhash64(norm).alias("_tk"),
-            F.pmod(fnv1a_col(norm), F.lit(4)).alias("_fp"))
+            F.xxhash64(normalized_text(F.col("text"))).alias("_tk"),
+            F.pmod(content_fingerprint(F.col("text")), F.lit(4)).alias("_fp"))
         gq = gopher_quality(base, keep_cols=("text", "_nw", "_tk", "_fp"))
         p1 = F.col("_nw").between(20, 200)
         p2 = p1 & (F.col("keep") == 1)
@@ -850,7 +853,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # stratified report per language
         from logparse_rs_spark.operators.text import fingerprint_sample
         sampled = fingerprint_sample(_docs(spark, sf_dir), modulus=20,
-                                     keep=0, exact_fnv=True)
+                                     keep=0)
         return (sampled.groupBy("lang")
                 .agg(F.count("*").alias("n_docs"),
                      F.sum("n_chars").alias("total_chars")))
@@ -900,7 +903,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # ranks by the refimpl FNV parquet
         from logparse_rs_spark.operators.text import rebalance_by_group
         kept = rebalance_by_group(_docs(spark, sf_dir), group_col="lang",
-                                  quota=30, exact_fnv=True)
+                                  quota=30)
         return (kept.groupBy("lang")
                 .agg(F.count("*").alias("kept_docs"),
                      F.sum("n_chars").alias("kept_chars")))
@@ -928,8 +931,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # at-scale path; the driver oracle therefore exercises it
         from logparse_rs_spark.operators.graph import connected_components
         return shared(spark, "doc_components", f"{sf_dir}/documents.parquet",
-                      lambda: connected_components(
-                          _doc_pairs(spark, sf_dir), algorithm="star"))
+                      lambda: connected_components(_doc_pairs(spark, sf_dir)))
 
     def doc_dup_clusters(spark, sf_dir):
         # pairs -> GROUPS: transitive closure of the LSH pair graph via
@@ -1048,7 +1050,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         rates = {f"src{i}": 0.1 for i in range(5)}
         rates.update({f"src{i}": 0.5 for i in range(5, 10)})
         kept = mixture_sample(_docs(spark, sf_dir), rates,
-                              default_rate=1.0, exact_fnv=True)
+                              default_rate=1.0)
         return (kept.groupBy("source")
                 .agg(F.count("*").alias("kept_docs"),
                      F.sum("n_chars").alias("kept_chars")))
@@ -1095,14 +1097,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return length_histogram(_docs(spark, sf_dir))
 
     def log_top_domains(spark, sf_dir):
-        # web-pipeline staple: per-host line volume + error rate over the
+        # web-pipeline staple: per-host line volume + error (= non-ok
+        # status, as in aggregates.count_rows_and_errors) count over the
         # parsed pages (host from the url via an RE2-and-Java-compatible
         # regex, identical string in the oracle)
         p = _parsed(spark, sf_dir)
         host = F.regexp_extract(F.col("url"), "^[a-z]+://([^/]+)", 1)
         return (p.groupBy(host.alias("host"))
                 .agg(F.count("*").alias("n_lines"),
-                     F.sum((F.col("status") == "error").cast("long"))
+                     F.sum((F.col("status") != "ok").cast("long"))
                      .alias("n_errors"))
                 .orderBy(F.desc("n_lines"), F.asc("host")).limit(20))
 
@@ -1115,7 +1118,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         emb = _emb(spark, sf_dir)
         pairs = neardup_pairs(emb, dim=_emb_dim(sf_dir), threshold=0.35,
                               bands=16).select("id_a", "id_b")
-        return dup_clusters(pairs, algorithm="star")
+        return dup_clusters(pairs)
 
     def doc_chunks(spark, sf_dir):
         # sliding-window chunking (64-word chunks, stride 48): one row per
@@ -1285,12 +1288,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     _stream_dedup_seq = [0]
 
-    def _staged_doc_batches(spark, sf_dir, n_b):
-        # documents split into ascending-doc_id micro-batch files so the
-        # first batch containing a text/band holds its global min id and
-        # streaming first-seen equals the batch min-id answer. Dir name
-        # embeds the batch count: switching LPS_STREAM_BATCHES must not
-        # silently reuse a differently-split staging dir.
+    def _staged_doc_batches(spark, sf_dir):
+        # documents split into STREAM_BATCHES ascending-doc_id micro-batch
+        # files so the first batch containing a text/band holds its global
+        # min id and streaming first-seen equals the batch min-id answer.
+        # Dir name embeds the batch count: a changed STREAM_BATCHES must
+        # not silently reuse a differently-split staging dir.
         import glob as _glob
         import shutil as _shutil
 
@@ -1300,6 +1303,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # sf0.01 staging hold 50k sf1.0 docs. Belt+braces: a row-count
         # staleness probe below rebuilds any staging whose total rows no
         # longer match the source documents table.
+        n_b = STREAM_BATCHES
         tag = os.path.basename(sf_dir.rstrip("/"))
         src = os.path.join(FIXTURE_ROOT, f"docstream_{tag}_b{n_b}")
         staged = sorted(_glob.glob(os.path.join(src, "b*.parquet")))
@@ -1340,17 +1344,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # its global min id and the streaming survivor set equals the
         # batch exact_dedup answer), fed through availableNow triggers,
         # survivors collected from the memory sink.
-        # Batch count is a fixed cost (~full trigger cycle each, the
-        # suite's single biggest fixed cost pre-r5): 2 batches already
-        # prove cross-batch suppression (state survives a trigger
-        # boundary); LPS_STREAM_BATCHES=4 reproduces the r4 protocol.
         import shutil as _shutil
 
         from logparse_rs_spark.streaming.stateful import (
             streaming_exact_dedup)
 
-        n_b = max(1, int(os.environ.get("LPS_STREAM_BATCHES", "2")))
-        src = _staged_doc_batches(spark, sf_dir, n_b)
+        src = _staged_doc_batches(spark, sf_dir)
         # each staged micro-batch is ONE file (= one scan task); the
         # stateless repartition spreads the per-batch hash work across
         # the state-partition width instead of one core (results are
@@ -1393,8 +1392,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from logparse_rs_spark.streaming.stateful import (
             streaming_band_registry)
 
-        n_b = max(1, int(os.environ.get("LPS_STREAM_BATCHES", "2")))
-        src = _staged_doc_batches(spark, sf_dir, n_b)
+        src = _staged_doc_batches(spark, sf_dir)
         # one file per trigger = one scan task; repartition so the
         # per-batch minhash-signature UDF runs at state-partition width
         # instead of serially (stateless; the band registry re-shuffles
@@ -1533,8 +1531,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from logparse_rs_spark.operators.curate import token_budget_cap
         budgets = {f"src{i}": 1200 for i in range(5)}
         budgets.update({f"src{i}": 600 for i in range(5, 10)})
-        kept = token_budget_cap(_docs(spark, sf_dir), budgets,
-                                exact_fnv=True)
+        kept = token_budget_cap(_docs(spark, sf_dir), budgets)
         return kept.groupBy("source").agg(
             F.count("*").alias("kept_docs"),
             F.sum("n_tokens").alias("kept_tokens"),
@@ -3397,7 +3394,7 @@ def oracle_sql() -> dict[str, str]:
     d["log_top_domains"] = f"""
         SELECT regexp_extract(url, '^[a-z]+://([^/]+)', 1) AS host,
                COUNT(*) AS n_lines,
-               SUM((status = 'error')::BIGINT) AS n_errors
+               SUM((status <> 'ok')::BIGINT) AS n_errors
         FROM {E}
         GROUP BY host ORDER BY n_lines DESC, host ASC LIMIT 20
     """

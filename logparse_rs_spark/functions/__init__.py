@@ -26,66 +26,52 @@ from ..kernels import (
 #   - asNondeterministic() is an optimizer barrier so neither predicate
 #     pushdown nor projection collapse re-evaluates a UDF per reference
 #     (observed: the status filter otherwise duplicates the whole stage).
-# Each re-does the (cheap, vectorized) prefix strip rather than chaining on a
+# Each re-does the (cheap, vectorized) line prep rather than chaining on a
 # previous UDF's output — chained Python UDFs would need two stages.
 
 
-@F.pandas_udf(T.StringType())
-def _line_of(raw: pd.Series) -> pd.Series:
-    """Stripped CSV line (syslog prefix removed, whitespace trimmed)."""
-    return strip_syslog_prefix_series(raw)
+def _parse_udfs(prep):
+    """The (line, hash64, qfields) UDF triple over ``prep(raw)``. The
+    Python function names are what plans and UDF profiles show."""
+
+    @F.pandas_udf(T.StringType())
+    def _line_of(raw: pd.Series) -> pd.Series:
+        """The prepared line."""
+        return prep(raw)
+
+    @F.pandas_udf(T.LongType())
+    def _hash64_of(raw: pd.Series) -> pd.Series:
+        """FNV-1a-64 of the prepared line, two's-complement int64."""
+        line = prep(raw)
+        return pd.Series(fnv1a_series(line).view("int64"), index=line.index)
+
+    @F.pandas_udf(T.ArrayType(T.StringType()))
+    def _qfields_of(raw: pd.Series) -> pd.Series:
+        """Exact quote-aware split for lines containing a double quote;
+        null for quote-free lines (the JVM built-in `split` is exactly
+        equivalent there)."""
+        line = prep(raw)
+        has_quote = line.str.contains('"', regex=False)
+        out = pd.Series([None] * len(line), index=line.index, dtype=object)
+        if has_quote.any():
+            out[has_quote] = line[has_quote].map(split_csv)
+        return out
+
+    return tuple(u.asNondeterministic()
+                 for u in (_line_of, _hash64_of, _qfields_of))
 
 
-@F.pandas_udf(T.LongType())
-def _hash64_of(raw: pd.Series) -> pd.Series:
-    """FNV-1a-64 of the stripped line, two's-complement int64."""
-    line = strip_syslog_prefix_series(raw)
-    return pd.Series(fnv1a_series(line).view("int64"), index=line.index)
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def _qfields_of(raw: pd.Series) -> pd.Series:
-    """Exact quote-aware split for lines containing a double quote; null for
-    quote-free lines (the JVM built-in `split` is exactly equivalent there)."""
-    line = strip_syslog_prefix_series(raw)
-    has_quote = line.str.contains('"', regex=False)
-    out = pd.Series([None] * len(line), index=line.index, dtype=object)
-    if has_quote.any():
-        out[has_quote] = line[has_quote].map(split_csv)
-    return out
-
-
-@F.pandas_udf(T.StringType())
-def _line_of_raw(raw: pd.Series) -> pd.Series:
-    """Raw-line variant (NDJSON path parity, bindings lib.rs:394-463: the
+def _strip_cr(raw: pd.Series) -> pd.Series:
+    """Raw-line prep (NDJSON path parity, bindings lib.rs:394-463: the
     reference parses the raw line — no syslog strip, no trim). Only a single
     trailing \\r is removed, replicating the Python path's universal-newline
     decoding of CRLF files (spark.read.text splits on \\n alone)."""
     return raw.str.replace(r"\r$", "", regex=True)
 
 
-@F.pandas_udf(T.LongType())
-def _hash64_of_raw(raw: pd.Series) -> pd.Series:
-    line = raw.str.replace(r"\r$", "", regex=True)
-    return pd.Series(fnv1a_series(line).view("int64"), index=line.index)
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def _qfields_of_raw(raw: pd.Series) -> pd.Series:
-    line = raw.str.replace(r"\r$", "", regex=True)
-    has_quote = line.str.contains('"', regex=False)
-    out = pd.Series([None] * len(line), index=line.index, dtype=object)
-    if has_quote.any():
-        out[has_quote] = line[has_quote].map(split_csv)
-    return out
-
-
-line_of = _line_of.asNondeterministic()
-hash64_of = _hash64_of.asNondeterministic()
-qfields_of = _qfields_of.asNondeterministic()
-line_of_raw = _line_of_raw.asNondeterministic()
-hash64_of_raw = _hash64_of_raw.asNondeterministic()
-qfields_of_raw = _qfields_of_raw.asNondeterministic()
+# syslog prefix removed and whitespace trimmed (the pipeline default)
+line_of, hash64_of, qfields_of = _parse_udfs(strip_syslog_prefix_series)
+line_of_raw, hash64_of_raw, qfields_of_raw = _parse_udfs(_strip_cr)
 
 
 def fnv1a_col(col, salt_bytes: bytes = b"") -> F.Column:

@@ -258,7 +258,6 @@ def token_budget_cap(docs: DataFrame, budgets: dict,
                      default_budget: int | None = None,
                      group_col: str = "source", text_col: str = "text",
                      id_col: str = "doc_id",
-                     exact_fnv: bool = False,
                      two_phase: bool = False) -> DataFrame:
     """Cap each group (source/domain/lang) at a TOKEN budget instead of a
     document quota — the unit corpus mixing is actually planned in. A doc
@@ -283,15 +282,9 @@ def token_budget_cap(docs: DataFrame, budgets: dict,
     rows from both strategies (property-tested)."""
     from pyspark.sql import Window
 
-    from .dedup import normalized_text
+    from .dedup import content_fingerprint
 
-    if exact_fnv:
-        # reference FNV-1a fingerprint (oracle-replicable via the refimpl
-        # aux table, same convention as rebalance_by_group)
-        from ..functions import fnv1a_col
-        fp = fnv1a_col(normalized_text(F.col(text_col)))
-    else:
-        fp = F.xxhash64(normalized_text(F.col(text_col)))
+    fp = content_fingerprint(F.col(text_col))
     n_tokens = F.size(_words(F.col(text_col))).cast("long")
     items = [F.lit(x) for kv in sorted(budgets.items()) for x in kv]
     budget = F.coalesce(

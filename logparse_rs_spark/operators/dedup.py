@@ -235,6 +235,16 @@ def normalized_text(col) -> F.Column:
     return F.trim(F.regexp_replace(F.lower(col), WORD_SPLIT_CLASS, " "))
 
 
+def content_fingerprint(col) -> F.Column:
+    """The reference's FNV-1a-64 (crates/logparse_core/src/lib.rs:18-25)
+    of normalized_text(col), two's-complement LongType: the one content
+    hash the sampling, quota and budget operators order and filter by, and
+    the one the DuckDB oracles reproduce from the refimpl aux table."""
+    from ..functions import fnv1a_col
+
+    return fnv1a_col(normalized_text(col))
+
+
 def exact_dedup(docs: DataFrame, text_col: str = "text",
                 id_col: str = "doc_id") -> DataFrame:
     """Keep one canonical doc (min id) per distinct normalized text.

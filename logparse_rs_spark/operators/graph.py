@@ -2,27 +2,18 @@
 near-duplicate dedup pipeline (LSH/verify emits PAIRS; keeping one canonical
 document per duplicate GROUP needs the transitive closure of those pairs).
 
-Two Spark-first algorithms, selectable per call:
-
-- ``algorithm="label"``: iterative min-label propagation as pure DataFrame
-  ops. Every node starts labeled with itself; each round every node takes
-  the min of its own label and its neighbors' labels; fixpoint = component
-  id is the min node id of the component. Rounds needed = graph diameter —
-  the right form for duplicate clusters, which are unions of small dense
-  cliques (docs duplicating each other; diameter 2-4).
-
-- ``algorithm="star"``: alternating large-star / small-star contraction
-  (Kiveris et al., "Connected Components in MapReduce and Beyond",
-  SoCC'14). Converges in O(log n) rounds regardless of diameter, so it is
-  the 10^12-node form — a path graph that label propagation cannot close
-  in bounded rounds contracts in ~log2(n) passes. Each pass is the same
-  per-round primitive class as a label round: groupBy-min on the node key
-  + one join — narrow (long, long) shuffles only.
+The distributed form is alternating large-star / small-star contraction
+(Kiveris et al., "Connected Components in MapReduce and Beyond", SoCC'14).
+It converges in O(log n) rounds regardless of diameter, so it is the
+10^12-node form: a path graph contracts in ~log2(n) passes. Each pass is a
+groupBy-min on the node key plus one join — narrow (long, long) shuffles
+only. Edge lists that fit the driver-collect budget skip the rounds and
+run locally in numpy (_components_local).
 
 Scale notes:
 - convergence is checked with one small agg action per round (iterative
   algorithms need a driver decision point; the frames aggregated are
-  label/edge-id-sized, not payload-sized).
+  edge-id-sized, not payload-sized).
 - lineage is truncated per round through ``_truncate``: a RELIABLE
   checkpoint (``df.checkpoint``) whenever the session has a checkpoint dir
   configured (``spark.sparkContext.setCheckpointDir`` — survives executor
@@ -56,62 +47,20 @@ def _truncate(df: DataFrame, eager: bool = True) -> DataFrame:
 
 
 def connected_components(pairs: DataFrame, src: str = "id_a",
-                         dst: str = "id_b", max_iter: int = 20,
-                         algorithm: str = "label") -> DataFrame:
+                         dst: str = "id_b", max_iter: int = 20) -> DataFrame:
     """Return (id, component) for every node appearing in `pairs`, where
     component = min node id reachable through the pair graph.
 
     Deterministic: depends only on the edge SET, not on partitioning or
-    input order. Raises if the graph has not converged after max_iter
-    rounds instead of returning a wrong clustering. ``algorithm="star"``
-    needs only O(log n) rounds on ANY graph shape; ``"label"`` needs
-    diameter rounds (cheaper per round on tiny-diameter dup cliques).
+    input order. Below the driver-collect gate the components are computed
+    locally (_components_local); above it, star contraction
+    (_components_star) raises if it has not converged after max_iter
+    rounds instead of returning a wrong clustering.
     """
-    if algorithm not in ("label", "star"):
-        raise ValueError(f"unknown algorithm {algorithm!r}")
     local = _components_local(pairs, src, dst)
     if local is not None:
         return local
-    if algorithm == "star":
-        return _components_star(pairs, src, dst, max_iter)
-    edges = (pairs.select(F.col(src).cast("long").alias("a"),
-                          F.col(dst).cast("long").alias("b"))
-             .union(pairs.select(F.col(dst).cast("long").alias("a"),
-                                 F.col(src).cast("long").alias("b")))
-             .distinct())
-    # truncate the edge set ONCE: every round's actions re-execute the
-    # edges lineage otherwise — for LSH pair graphs that lineage is the
-    # whole signature + banding computation, recomputed per round.
-    # (lazy: round 1's convergence count is the materializing action)
-    edges = _truncate(edges, eager=False)
-    labels = (edges.select(F.col("a").alias("id")).distinct()
-              .withColumn("label", F.col("id")))
-    labels = _truncate(labels, eager=False)
-
-    for _ in range(max_iter):
-        # neighbor-min pass: for each node, the min label among neighbors.
-        # ONE joined frame per round carries both the old and the new
-        # label; the convergence count then runs over the checkpointed
-        # result instead of re-joining new labels against old (which cost
-        # an extra shuffle per round).
-        neigh = (edges.join(labels.withColumnRenamed("id", "b"), on="b")
-                 .groupBy(F.col("a").alias("id"))
-                 .agg(F.min("label").alias("nlabel")))
-        step = (labels.join(neigh, on="id", how="left")
-                .select("id", "label",
-                        F.least("label", F.coalesce("nlabel", "label"))
-                        .alias("new_label")))
-        # truncate lineage each round or the plan grows exponentially
-        # (lazy: the convergence count below materializes it)
-        step = _truncate(step, eager=False)
-        changed = step.filter(F.col("new_label") != F.col("label")).count()
-        labels = step.select("id", F.col("new_label").alias("label"))
-        if changed == 0:
-            return labels.select("id", F.col("label").alias("component"))
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds "
-        "(graph diameter too large — raise max_iter or use "
-        'algorithm="star")')
+    return _components_star(pairs, src, dst, max_iter)
 
 
 def _components_local(pairs: DataFrame, src: str, dst: str):
@@ -119,7 +68,7 @@ def _components_local(pairs: DataFrame, src: str, dst: str):
     budget (shared.collect_if_fits: 16 B per edge, so 4M edges at the
     default), pull it once and run vectorized min-label propagation with
     pointer jumping in numpy; None above the gate (the distributed
-    star/label rounds run unchanged). The limit probe stops the scan at
+    star rounds run unchanged). The limit probe stops the scan at
     cap+1 rows on oversized graphs. Identical output: component = min
     node id reachable, nodes = pair endpoints, deterministic (depends
     only on the edge set). Replaces O(log n) rounds of 6-exchange Spark
@@ -242,8 +191,7 @@ def _components_star(pairs: DataFrame, src: str, dst: str,
 
 def dup_clusters(pairs: Optional[DataFrame] = None, src: str = "id_a",
                  dst: str = "id_b", max_iter: int = 20,
-                 components: Optional[DataFrame] = None,
-                 algorithm: str = "label") -> DataFrame:
+                 components: Optional[DataFrame] = None) -> DataFrame:
     """Per-node duplicate-cluster assignment + cluster size:
     (id, component, cluster_size). Pass `components` to reuse an
     already-computed (id, component) frame — the propagation result is a
@@ -253,8 +201,7 @@ def dup_clusters(pairs: Optional[DataFrame] = None, src: str = "id_a",
         if pairs is None:
             raise ValueError("need pairs or components")
         components = connected_components(pairs, src=src, dst=dst,
-                                          max_iter=max_iter,
-                                          algorithm=algorithm)
+                                          max_iter=max_iter)
     sizes = components.groupBy("component").agg(
         F.count("*").alias("cluster_size"))
     return components.join(sizes, on="component").select(

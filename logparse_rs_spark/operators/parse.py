@@ -4,9 +4,10 @@ Spark re-expression of the reference's parse path (SURVEY §3.1-3.3):
 
     pages (url, warc_ts, html, text, lang)
       -> posexplode(split(text, '\\n'))              [JVM, gives line_ordinal]
-      -> prep_lines pandas UDF                       [ONE Python crossing:
-                                                      strip + hash64 + rare
-                                                      quoted split]
+      -> line_of / hash64_of / qfields_of pandas     [ONE ArrowEvalPython
+         UDFs (functions._parse_udfs)                 stage: prepped line,
+                                                      hash64, rare quoted
+                                                      split]
       -> JVM split for quote-free lines, status classification,
          per-type positional projection via F.get    [whole-stage codegen]
 

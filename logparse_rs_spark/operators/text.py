@@ -2,9 +2,9 @@
 quality scoring, token counting, document fingerprinting.
 
 Design rule: everything SQL-expressible stays JVM-side (these four are, so
-their oracles are plain DuckDB SQL); only the rolling-hash fingerprint uses
-the FNV kernel via an Arrow-batched UDF when exact reference hashing is
-wanted — the default fingerprint is xxhash64 (built-in, zero Python).
+their oracles are plain DuckDB SQL); only the content fingerprint uses the
+reference's FNV kernel via an Arrow-batched UDF
+(dedup.content_fingerprint), the hash the oracles reproduce.
 """
 
 from __future__ import annotations
@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import WORD_SPLIT_CLASS, WS_CHARS
+from .dedup import WORD_SPLIT_CLASS, WS_CHARS, content_fingerprint
 
 # tiny fixed stopword list — deterministic and SQL-replicable
 STOPWORDS = ["the", "a", "an", "and", "or", "of", "to", "in", "is", "it"]
@@ -297,8 +297,7 @@ def repeated_ngrams(docs: DataFrame, n: int = 5, k: int = 20,
 
 def rebalance_by_group(docs: DataFrame, group_col: str = "lang",
                        quota: int = 1000, text_col: str = "text",
-                       id_col: str = "doc_id",
-                       exact_fnv: bool = False) -> DataFrame:
+                       id_col: str = "doc_id") -> DataFrame:
     """Per-group quota cap — the data-mixing step of corpus assembly
     (e.g. at most N documents per language/source so one stratum cannot
     dominate the training mix). Which documents survive is decided by
@@ -317,18 +316,8 @@ def rebalance_by_group(docs: DataFrame, group_col: str = "lang",
     hand-written two-phase (rank within (group, partition-id) cells, then
     merge) produced the identical candidate flow with one EXTRA shuffle,
     so the declarative form wins."""
-    from pyspark.sql import Window
-
-    from .dedup import normalized_text
-
-    norm = normalized_text(F.col(text_col))
-    if exact_fnv:
-        from ..functions import fnv1a_col
-        fp = fnv1a_col(norm)
-    else:
-        fp = F.xxhash64(norm)
     w = Window.partitionBy(group_col).orderBy(F.col("_ord"), F.col(id_col))
-    return (docs.withColumn("_ord", fp)
+    return (docs.withColumn("_ord", content_fingerprint(F.col(text_col)))
             .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") <= quota)
             .drop("_ord", "_rn"))
@@ -676,8 +665,8 @@ def contamination_check(docs: DataFrame, eval_docs: DataFrame, n: int = 5,
 
 
 def fingerprint_sample(docs: DataFrame, modulus: int = 20, keep: int = 0,
-                       text_col: str = "text", id_col: str = "doc_id",
-                       exact_fnv: bool = False) -> DataFrame:
+                       text_col: str = "text",
+                       id_col: str = "doc_id") -> DataFrame:
     """Deterministic content-hash sampling: keep the rows whose text
     fingerprint ≡ keep (mod modulus). The workhorse of reproducible corpus
     curation — the sample is a pure function of the CONTENT, so it is
@@ -687,14 +676,7 @@ def fingerprint_sample(docs: DataFrame, modulus: int = 20, keep: int = 0,
     one inline fingerprint + filter on the scan, no shuffle, no second
     pass over docs; composes with stratification by grouping the
     survivors."""
-    from .dedup import normalized_text
-
-    norm = normalized_text(F.col(text_col))
-    if exact_fnv:
-        from ..functions import fnv1a_col
-        fp = fnv1a_col(norm)
-    else:
-        fp = F.xxhash64(norm)
+    fp = content_fingerprint(F.col(text_col))
     return docs.filter(F.pmod(fp, F.lit(modulus)) == F.lit(keep))
 
 
@@ -726,8 +708,8 @@ def canonical_url(col) -> F.Column:
 
 def mixture_sample(docs: DataFrame, rates: dict, default_rate: float = 1.0,
                    group_col: str = "source", text_col: str = "text",
-                   id_col: str = "doc_id", resolution: int = 10_000,
-                   exact_fnv: bool = False) -> DataFrame:
+                   id_col: str = "doc_id",
+                   resolution: int = 10_000) -> DataFrame:
     """Deterministic weighted mixture sampling — the data-mixing step
     where each source/domain contributes at its own rate (e.g. books at
     1.0, web at 0.25). A doc of group g survives iff
@@ -739,14 +721,7 @@ def mixture_sample(docs: DataFrame, rates: dict, default_rate: float = 1.0,
 
     Narrow: one inline fingerprint + a when-chain threshold per group,
     filter on the scan — no shuffle, no per-group pass."""
-    from .dedup import normalized_text
-
-    norm = normalized_text(F.col(text_col))
-    if exact_fnv:
-        from ..functions import fnv1a_col
-        fp = fnv1a_col(norm)
-    else:
-        fp = F.xxhash64(norm)
+    fp = content_fingerprint(F.col(text_col))
     thr = F.lit(int(round(default_rate * resolution)))
     for g, r in sorted(rates.items()):
         thr = F.when(F.col(group_col) == g,
@@ -1076,20 +1051,12 @@ def quantile_bucket_stats(docs: DataFrame, q: int = 10,
 
 
 def fingerprint(docs: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id", exact_fnv: bool = False) -> DataFrame:
-    """64-bit document fingerprint over normalized text. Default: xxhash64
-    (pure JVM). exact_fnv=True uses the reference's FNV-1a kernel instead
-    (Arrow-batched) when cross-system reproducibility of the reference's
-    hash64 is required."""
-    from .dedup import normalized_text
-
-    norm = normalized_text(F.col(text_col))
-    if exact_fnv:
-        from ..functions import fnv1a_col
-        fp = fnv1a_col(norm)
-    else:
-        fp = F.xxhash64(norm)
-    return docs.select(F.col(id_col), fp.alias("fingerprint"))
+                id_col: str = "doc_id") -> DataFrame:
+    """64-bit document fingerprint over normalized text: the reference's
+    FNV-1a (dedup.content_fingerprint, Arrow-batched)."""
+    return docs.select(F.col(id_col),
+                       content_fingerprint(F.col(text_col))
+                       .alias("fingerprint"))
 
 
 def rank_fusion_topk(docs: DataFrame, terms: list, k: int = 20,

@@ -72,7 +72,7 @@ def get_spark(app_name: str = "logparse_rs_spark", cores: int | None = None,
         # location — the v1 job-commit pass over 13 sinks x hundreds of
         # bucket dirs is pure serial rename latency on this filesystem
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
-                os.environ.get("SPARK_GRAFT_COMMITTER", "2"))
+                "2")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
         # scan-split sizing: the fan-out sinks evaluate their (wide,
@@ -81,8 +81,7 @@ def get_spark(app_name: str = "logparse_rs_spark", cores: int | None = None,
         # tasks and the whole sink job runs serial no matter how many cores
         # exist. 16 MB splits keep scan stages at >= cores tasks at bench
         # scale; on a real cluster the same ratio holds against bigger files.
-        .config("spark.sql.files.maxPartitionBytes",
-                os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"))
+        .config("spark.sql.files.maxPartitionBytes", "16m")
         .config("spark.sql.files.openCostInBytes", "1m")
         # local mode = one JVM doing the work of every executor: size the
         # heap for cores * concurrent task memory (32 threads on 8g thrashes
@@ -125,8 +124,7 @@ def get_spark(app_name: str = "logparse_rs_spark", cores: int | None = None,
             # scheduling adds up to seconds of idle per stage on a
             # single-host "cluster" where every executor is equally close —
             # disable it (on a real multi-rack cluster you would keep it)
-            .config("spark.locality.wait",
-                    os.environ.get("SPARK_GRAFT_LOCALITY_WAIT", "0"))
+            .config("spark.locality.wait", "0")
         )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

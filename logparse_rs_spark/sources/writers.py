@@ -182,12 +182,7 @@ def make_writer(spark: SparkSession, root: str,
     use_iceberg=None  — parquet unless ALL Iceberg preconditions hold (the
                         r2 form auto-picked Iceberg on jar presence alone
                         and then used a path like /tmp/out as a namespace).
-    The LOGPARSE_WRITER env var (iceberg|parquet) overrides a None default.
     """
-    if use_iceberg is None:
-        env = os.environ.get("LOGPARSE_WRITER", "").lower()
-        if env in ("iceberg", "parquet"):
-            use_iceberg = env == "iceberg"
     if use_iceberg is False:
         return ParquetWriter(root)
     eligible = (_is_sql_namespace(root) and iceberg_available(spark)

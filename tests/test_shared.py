@@ -216,12 +216,6 @@ class TestGatedOperators:
                 for r in containment_pairs(docs, pairs).collect()}
         assert cont == {("d0", "d1"), ("d0", "d2"), ("d1", "d2")}
 
-    def test_bad_algorithm_raises_below_the_gate(self, spark):
-        from logparse_rs_spark.operators.graph import connected_components
-        pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-        with pytest.raises(ValueError, match="bogus"):
-            connected_components(pairs, algorithm="bogus")
-
     def test_neardup_1536_dims_broadcast_matches_banded(self, spark,
                                                         monkeypatch):
         from logparse_rs_spark.operators.similarity import neardup_pairs

@@ -142,9 +142,11 @@ class TestMakeWriter:
         assert isinstance(w, W.IcebergWriter)
 
     def test_env_override_forces_parquet(self, monkeypatch):
+        # the override is the explicit argument: use_iceberg=False wins
+        # over a fully configured Iceberg catalog
         monkeypatch.setattr(W, "iceberg_available", lambda spark: True)
-        monkeypatch.setenv("LOGPARSE_WRITER", "parquet")
-        w = W.make_writer(_StubSpark(conf=self.CAT), "lake")
+        w = W.make_writer(_StubSpark(conf=self.CAT), "lake",
+                          use_iceberg=False)
         assert isinstance(w, W.ParquetWriter)
 
 

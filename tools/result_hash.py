@@ -1,15 +1,14 @@
 #!/usr/bin/env python3
 """Order-insensitive result fingerprints for every queries() entry at any
 sf dir — the cross-revision equivalence proof for optimization work: run it
-on the old tree and the new tree and diff the JSON. Same normalization and
-hash as tools/check_oracle.py.
+on the old tree and the new tree and diff the JSON. The normalization and
+hash are tools/check_oracle.py's own (imported from it).
 
 Usage: python tools/result_hash.py [sf_dir] [out.json] [query ...]
 """
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import sys
@@ -18,29 +17,7 @@ import time
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-
-def norm_cell(v):
-    if v is None:
-        return ""
-    if isinstance(v, bool):
-        return str(int(v))
-    if isinstance(v, float):
-        return f"{v:.6g}"
-    if isinstance(v, bytes):
-        return v.hex()
-    return str(v)
-
-
-def value_hash(rows, colnames):
-    order = sorted(range(len(colnames)), key=lambda i: colnames[i])
-    lines = sorted(
-        "\x1f".join(norm_cell(r[i]) for i in order) for r in rows
-    )
-    h = hashlib.sha256()
-    for line in lines:
-        h.update(line.encode("utf-8", "replace"))
-        h.update(b"\n")
-    return h.hexdigest()[:16]
+from tools.check_oracle import value_hash  # noqa: E402
 
 
 def main():
