@@ -79,3 +79,37 @@ def test_spark_submit_pyfiles_local_cluster(tmp_path):
         spark, spark.read.parquet(pages_path), cfg, resume=False)
     assert local.per_sink_rows == report["per_sink_rows"]
     assert local.status_counts == report["status_counts"]
+
+
+FAMILIES = ("common", "log", "doc", "events", "emb", "tpch")
+
+
+def test_pyfiles_zip_carries_every_query_family(tmp_path):
+    """The --py-files zip holds the queries package, and each family
+    module imports from the zip alone: no repo checkout on sys.path and
+    no ``__spark_entry__`` (the zip does not carry it)."""
+    import zipfile
+
+    from logparse_rs_spark.plans.submit import build_pyfiles_zip
+
+    zip_path = build_pyfiles_zip(str(tmp_path / "lps.zip"))
+    names = set(zipfile.ZipFile(zip_path).namelist())
+    for family in ("__init__",) + FAMILIES:
+        assert f"logparse_rs_spark/queries/{family}.py" in names
+
+    probe = "\n".join([
+        "import os, sys",
+        f"root = {ROOT!r}",
+        "sys.path[:] = [p for p in sys.path",
+        "               if os.path.abspath(p or '.') != root]",
+        f"sys.path.insert(0, {zip_path!r})",
+        "import importlib",
+        f"for f in {FAMILIES!r}:",
+        "    m = importlib.import_module('logparse_rs_spark.queries.' + f)",
+        f"    assert m.__file__.startswith({zip_path!r}), m.__file__",
+        "assert '__spark_entry__' not in sys.modules",
+    ])
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    res = subprocess.run([sys.executable, "-c", probe], capture_output=True,
+                         text=True, timeout=300, cwd=str(tmp_path), env=env)
+    assert res.returncode == 0, res.stderr[-3000:]
