@@ -3,20 +3,237 @@
 Local mode is the sandbox stand-in for a multi-executor cluster; every knob
 here scales with cores so the same code runs under spark-submit on a real
 cluster (see plans/submit.py for the --py-files path).
+
+A session that starts the driver JVM also reuses the class loading of an
+earlier session on the same host through a class-data-sharing archive
+(README "Session start-up caches").
 """
 
 from __future__ import annotations
 
+import atexit
+import contextlib
+import glob
+import hashlib
+import logging
 import os
+import shlex
+import shutil
+import subprocess
+from dataclasses import dataclass
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
+
+from .pydaemon import cache_root
+
+log = logging.getLogger(__name__)
+
+JAVA_OPTS = "spark.driver.extraJavaOptions"
+# with an archive in play the JVM logs to stderr only: its default log
+# output and crash banner go to stdout, whose last line perfbench, bench.py
+# and spark-submit callers read as the JSON result
+JVM_OUTPUT_TO_STDERR = ("-Xlog:disable -Xlog:all=warning:stderr "
+                        "-XX:+DisplayVMOutputToStderr")
+# the JVM writes the archive at exit, 10-15 s for a Spark driver
+PUBLISH_WAIT_S = 120
+# the launcher puts these on the driver class path beside the Spark jars
+# (AbstractCommandBuilder.buildClassPath); CDS cannot key on what they hold
+CLASS_PATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH",
+                  "SPARK_PREPEND_CLASSES", "SPARK_TESTING")
 
 
 def default_parallelism() -> int:
     env = os.environ.get("SPARK_GRAFT_CPUS")
     if env:
         return int(env)
-    return os.cpu_count() or 8
+    # the CPUs this process may run on, not the host's: under a cpuset
+    # local[os.cpu_count()] oversubscribes the cores it has
+    return len(os.sched_getaffinity(0))
+
+
+@dataclass
+class ClassSharing:
+    """How one driver JVM uses the class-data-sharing (AppCDS) archive.
+
+    ``mode`` is ``mapped`` (the published archive is mapped), ``recording``
+    (the JVM writes a per-process archive at exit, published when it has
+    exited) or ``off`` (the JVM starts as it would without this, ``reason``
+    says why).
+    """
+    mode: str
+    reason: str | None = None
+    key: str | None = None
+    archive: str | None = None
+    conf_dir: str | None = None
+
+    @property
+    def part(self) -> str:
+        return f"{self.archive[:-len('.jsa')]}.{os.getpid()}.part"
+
+    @property
+    def size_file(self) -> str:
+        return f"{self.archive[:-len('.jsa')]}.size"
+
+    def java_options(self, base: str) -> str:
+        if self.mode == "mapped":
+            opt = "-XX:SharedArchiveFile=" + shlex.quote(self.archive)
+        elif self.mode == "recording":
+            opt = "-XX:ArchiveClassesAtExit=" + shlex.quote(self.part)
+        else:
+            return base
+        return f"{JVM_OUTPUT_TO_STDERR} {base} {opt}"
+
+    @contextlib.contextmanager
+    def launch_env(self):
+        """SPARK_CONF_DIR points at the empty conf dir while the gateway
+        starts: CDS refuses a class path holding a non-empty directory, and
+        the launcher puts the conf dir on it."""
+        if self.mode == "off":
+            yield
+            return
+        old = os.environ.get("SPARK_CONF_DIR")
+        os.environ["SPARK_CONF_DIR"] = self.conf_dir
+        try:
+            yield
+        finally:
+            if old is None:
+                del os.environ["SPARK_CONF_DIR"]
+            else:
+                os.environ["SPARK_CONF_DIR"] = old
+
+    def publish_at_exit(self, proc: subprocess.Popen) -> None:
+        """When this process exits, end the gateway JVM, wait for it to
+        write its archive, and move the archive into place."""
+        pid = os.getpid()
+
+        def publish() -> None:
+            if os.getpid() != pid:
+                return
+            sc = SparkContext._active_spark_context
+            if sc is not None:
+                # stopped first, so that no Python thread of the context
+                # reads from the JVM when it goes
+                try:
+                    sc.stop()
+                except Exception:
+                    log.debug("cds stop before publishing failed",
+                              exc_info=True)
+            try:
+                proc.stdin.close()  # the gateway exits at EOF on its stdin
+                proc.wait(timeout=PUBLISH_WAIT_S)
+            except (OSError, subprocess.TimeoutExpired):
+                return
+            try:
+                size = os.path.getsize(self.part)
+                if proc.returncode != 0 or not size:
+                    os.unlink(self.part)
+                    return
+                # the size first: an archive is mapped only when its size
+                # matches, so a crossing publisher costs a re-recording
+                tmp = f"{self.part}.size"
+                with open(tmp, "w") as fh:
+                    fh.write(str(size))
+                os.replace(tmp, self.size_file)
+                os.replace(self.part, self.archive)
+            except OSError:
+                pass
+
+        atexit.register(publish)
+
+
+def _java_binary() -> str | None:
+    """The java the Spark launcher runs (bin/spark-class)."""
+    home = os.environ.get("JAVA_HOME")
+    java = os.path.join(home, "bin", "java") if home else shutil.which("java")
+    return os.path.realpath(java) if java and os.path.exists(java) else None
+
+
+def _archive_key(java: str, conf_dir: str, spark_home: str,
+                 heap: str) -> str:
+    vm = os.path.join(os.path.dirname(os.path.dirname(java)), "lib", "server")
+    parts = [java, conf_dir, heap]
+    for path in (sorted(glob.glob(os.path.join(vm, "*")))
+                 + sorted(glob.glob(os.path.join(spark_home, "jars", "*")))):
+        st = os.stat(path)
+        parts.append(f"{path}:{st.st_size}:{st.st_mtime_ns}")
+    return hashlib.sha256("\n".join(parts).encode()).hexdigest()[:16]
+
+
+def class_sharing(conf: dict, overridden: bool) -> ClassSharing:
+    """Plan class-data sharing for a driver JVM launched with ``conf``.
+
+    The archive is keyed on what a JDK 17 dynamic archive must match: the
+    class path (the empty conf dir and every Spark jar with its size and
+    mtime), the java binary with its VM libraries, and the heap size, since
+    above 32 GB the JVM turns off compressed oops and maps the other base
+    archive. An archive is mapped only when its size is the one recorded
+    when it was published: the JVM maps a truncated archive and dies.
+    """
+    if overridden:
+        return ClassSharing("off", f"{JAVA_OPTS} was overridden")
+    if conf.get("spark.driver.extraClassPath") or any(
+            os.environ.get(k) for k in CLASS_PATH_ENV):
+        return ClassSharing("off", "the class path holds more than the "
+                            "Spark jars")
+    spark_home = _find_spark_home()
+    spark_conf = (os.environ.get("SPARK_CONF_DIR")
+                  or os.path.join(spark_home, "conf"))
+    try:
+        names = os.listdir(spark_conf)
+    except FileNotFoundError:
+        names = []
+    except OSError as e:
+        return ClassSharing("off", f"the conf dir is unreadable: {e}")
+    if any(not n.endswith(".template") for n in names):
+        return ClassSharing("off", f"the conf dir {spark_conf} holds real "
+                            "files")
+    java = _java_binary()
+    if java is None:
+        return ClassSharing("off", "no java binary")
+    root = cache_root()
+    conf_dir = os.path.join(root, "conf")
+    cds_dir = os.path.join(root, "cds")
+    try:
+        os.makedirs(conf_dir, exist_ok=True)
+        os.makedirs(cds_dir, exist_ok=True)
+        stray = os.listdir(conf_dir)
+    except OSError as e:
+        return ClassSharing("off", f"the cache is not writable: {e}")
+    if not os.access(cds_dir, os.W_OK):
+        return ClassSharing("off", f"the cache {cds_dir} is not writable")
+    if stray:
+        return ClassSharing("off", f"the empty conf dir {conf_dir} is not "
+                            "empty")
+    try:
+        key = _archive_key(java, conf_dir, spark_home,
+                           conf["spark.driver.memory"])
+    except OSError as e:
+        return ClassSharing("off", f"the class path changed: {e}")
+    plan = ClassSharing("recording", key=key, conf_dir=conf_dir,
+                        archive=os.path.join(cds_dir, f"{key}.jsa"))
+    try:
+        with open(plan.size_file) as fh:
+            if int(fh.read()) == os.path.getsize(plan.archive):
+                plan.mode = "mapped"
+    except (OSError, ValueError):
+        pass
+    if plan.mode == "recording":
+        _drop_orphans(cds_dir)
+    return plan
+
+
+def _drop_orphans(cds_dir: str) -> None:
+    """Delete the recordings of processes that ended before publishing."""
+    for part in glob.glob(os.path.join(cds_dir, "*.part")):
+        try:
+            os.kill(int(part.rsplit(".", 2)[1]), 0)
+        except ProcessLookupError:
+            with contextlib.suppress(OSError):
+                os.unlink(part)
+        except (ValueError, OSError):
+            pass
 
 
 def get_spark(app_name: str = "logparse_rs_spark", cores: int | None = None,
@@ -59,75 +276,84 @@ def get_spark(app_name: str = "logparse_rs_spark", cores: int | None = None,
                                    exec_cores=exec_cores)
     else:
         master = f"local[{cores}]"
-    builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    conf = {
+        "spark.master": master,
+        "spark.app.name": app_name,
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.sources.partitionOverwriteMode": "dynamic",
         # commit algorithm 2: task output renames directly to the final
         # location — the v1 job-commit pass over 13 sinks x hundreds of
         # bucket dirs is pure serial rename latency on this filesystem
-        .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
-                "2")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
+        "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version": "2",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "20000",
         # scan-split sizing: the fan-out sinks evaluate their (wide,
         # expression-heavy) projections in the parquet READ stage; at the
         # default 128 MB a partition-pruned per-type read collapses to 1-2
         # tasks and the whole sink job runs serial no matter how many cores
         # exist. 16 MB splits keep scan stages at >= cores tasks at bench
         # scale; on a real cluster the same ratio holds against bigger files.
-        .config("spark.sql.files.maxPartitionBytes", "16m")
-        .config("spark.sql.files.openCostInBytes", "1m")
+        "spark.sql.files.maxPartitionBytes": "16m",
+        "spark.sql.files.openCostInBytes": "1m",
         # local mode = one JVM doing the work of every executor: size the
         # heap for cores * concurrent task memory (32 threads on 8g thrashes
-        # GC and anti-scales; this box has 128 GiB)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        # G1 with a preallocated region pool: -Xms=-Xmx avoids heap-resize
-        # page churn, which is expensive under this virtualized kernel.
-        # (ParallelGC measured 6x faster on a codegen-only probe but 2-4x
-        # SLOWER on the real pipeline — G1 + fixed heap is the net winner.)
-        .config("spark.driver.extraJavaOptions",
-                os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS",
-                               "-XX:+UseG1GC"))
-        .config("spark.ui.enabled", "false")
+        # GC and anti-scales). This sets -Xmx only, a ceiling the heap grows
+        # into, so the 48g default also starts on a 16 GB host; above 32g
+        # the JVM turns compressed oops off.
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+        # G1, and nothing else: no -Xms is set, so the heap starts small and
+        # resizes. (ParallelGC measured 6x faster on a codegen-only probe
+        # but 2-4x SLOWER on the real pipeline — G1 is the net winner.)
+        JAVA_OPTS: os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS",
+                                  "-XX:+UseG1GC"),
+        "spark.ui.enabled": "false",
         # Python workers fork from logparse_rs_spark.pydaemon: a task no
-        # longer re-reads pyspark.zip, and a new worker starts with pandas
-        # and pyarrow loaded (README "Python worker start-up"). The daemon
-        # and the UDFs import the package from the repo root on the
-        # workers' PYTHONPATH, whatever the driver's working directory.
-        .config("spark.python.daemon.module", "logparse_rs_spark.pydaemon")
-        .config("spark.executorEnv.PYTHONPATH",
-                os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    )
+        # longer re-reads pyspark.zip, a new worker starts with pandas and
+        # pyarrow loaded, and pyspark's bytecode comes from the per-user
+        # cache (README "Python worker start-up"). The daemon and the UDFs
+        # import the package from the repo root on the workers' PYTHONPATH,
+        # whatever the driver's working directory.
+        "spark.python.daemon.module": "logparse_rs_spark.pydaemon",
+        "spark.executorEnv.PYTHONPATH":
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    }
     if master.startswith("local-cluster"):
         # executor JVMs need their own heap sizing; the big single-JVM
         # driver heap would be wasted here (executors hold the data)
-        builder = (
-            builder
-            .config("spark.executor.memory",
-                    os.environ.get("SPARK_GRAFT_EXECUTOR_MEM", "6g"))
-            .config("spark.driver.memory",
-                    os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-            # same GC/heap discipline as the driver in local mode: G1 with
-            # a pinned heap (heap-resize page churn is expensive under this
-            # virtualized kernel, BENCH/NOTES.md §6)
-            .config("spark.executor.extraJavaOptions",
-                    os.environ.get("SPARK_GRAFT_EXECUTOR_JAVA_OPTS",
-                                   "-XX:+UseG1GC"))
+        conf.update({
+            "spark.executor.memory":
+                os.environ.get("SPARK_GRAFT_EXECUTOR_MEM", "6g"),
+            "spark.driver.memory":
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+            # G1 in the executors as in the driver (-Xmx only, as there)
+            "spark.executor.extraJavaOptions":
+                os.environ.get("SPARK_GRAFT_EXECUTOR_JAVA_OPTS",
+                               "-XX:+UseG1GC"),
             # local[] runs everything PROCESS_LOCAL so locality wait never
             # fires; with separate executor JVMs the default 3 s delay
             # scheduling adds up to seconds of idle per stage on a
             # single-host "cluster" where every executor is equally close —
             # disable it (on a real multi-rack cluster you would keep it)
-            .config("spark.locality.wait", "0")
-        )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+            "spark.locality.wait": "0",
+        })
+    extra_conf = extra_conf or {}
+    conf.update(extra_conf)
+    launches_jvm = (SparkContext._gateway is None
+                    and "PYSPARK_GATEWAY_PORT" not in os.environ)
+    if launches_jvm:
+        sharing = class_sharing(conf, JAVA_OPTS in extra_conf)
+        conf[JAVA_OPTS] = sharing.java_options(conf[JAVA_OPTS])
+    else:
+        sharing = ClassSharing("off", "the driver JVM is already running")
+    log.debug("cds key=%s archive=%s mode=%s reason=%s", sharing.key,
+              sharing.archive, sharing.mode, sharing.reason)
+    with sharing.launch_env():
+        spark = SparkSession.builder.config(map=conf).getOrCreate()
+    if sharing.mode == "recording":
+        sharing.publish_at_exit(spark.sparkContext._gateway.proc)
     spark.sparkContext.setLogLevel("WARN")
     return spark
