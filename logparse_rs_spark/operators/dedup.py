@@ -4,19 +4,22 @@ components; no reference counterpart — designed Spark-first for 100 TB).
 Strategies:
 - exact_dedup          : hash-groupBy on a normalized-text digest. One shuffle
                          on a 64-bit key; min_by keeps the canonical survivor.
-- minhash_lsh_dedup    : shingle -> minhash (k permutations, vectorized numpy)
+- minhash_near_dup     : shingle -> minhash (k permutations, vectorized numpy)
                          -> band buckets -> self-join within buckets ->
                          connected pairs. Candidate generation is a
                          groupBy(band_key) instead of an O(n^2) cross join;
                          at scale each band bucket is tiny, and the band key
                          is uniform by construction (it's a hash).
-- simhash_dedup        : 64-bit simhash + Hamming-ball banding (4 x 16-bit
+- simhash_candidates   : 64-bit simhash + Hamming-ball banding (4 x 16-bit
                          chunks -> near-dup candidates must share a chunk).
-- ngram_jaccard_pairs  : exact Jaccard on character n-gram sets for a
-                         candidate pair list (verification stage after LSH).
+- ngram_overlap_pairs  : exact char-n-gram overlap counts for a candidate
+                         pair list (the verify stage after LSH), scored by
+                         one vectorized bitmask kernel; ngram_jaccard and
+                         containment_pairs divide its counts JVM-side.
 
 All heavy per-doc math is Arrow-batched numpy; joins are equi-joins on
-hash-uniform keys (no skew); nothing collects to the driver.
+hash-uniform keys (no skew); the driver collects only what passes
+shared.collect_if_fits' exact size gate.
 """
 
 from __future__ import annotations
@@ -35,7 +38,7 @@ from ..shared import SIMHASH_MAX_PAIRS, collect_if_fits, fits, shared
 _MIX1 = np.uint64(0xBF58476D1CE4E5B9)
 _MIX2 = np.uint64(0x94D049BB133111EB)
 
-# ---- worker-global gram memo for the pair-verify kernels ------------------
+# ---- worker-global gram memo for the pair-verify kernel --------------------
 #
 # The verify UDFs live in this importable module, so a reused Python worker
 # (spark.python.worker.reuse, the default) resolves these globals ONCE per
@@ -43,15 +46,16 @@ _MIX2 = np.uint64(0x94D049BB133111EB)
 # in candidate pairs across many tasks/batches has its gram set built once
 # per worker, not once per batch. Two representations per (n, text):
 #
-# - a sorted uint64 hash array (the universal form), and
+# - a sorted uint64 code array (the universal form), and
 # - when the worker's observed gram universe is small (< _GRAM_BITS_CAP
 #   distinct grams so far), an arbitrary-precision int BITMASK over a
-#   worker-local gram->bit index: |A ∩ B| = (ma & mb).bit_count() — one AND
-#   + popcount per pair instead of an O((|A|+|B|) log) numpy set merge.
-#   Bit indices are append-only, so masks built earlier remain valid as the
-#   index grows; a text seen after the cap, or containing past-cap grams,
-#   simply has no mask and the pair falls back to the array merge. Both
-#   paths are exact (same hash set); parity is property-tested.
+#   worker-local gram->bit index. The masks of a batch's texts pack into
+#   one uint8 matrix, so |A ∩ B| for a whole batch of pairs is one numpy
+#   AND + LUT popcount (_pair_counts). Bit indices are append-only, so
+#   masks built earlier remain valid as the index grows; a text seen after
+#   the cap, or containing past-cap grams, simply has no mask and its
+#   pairs fall back to the sorted-array merge. Both paths are exact (same
+#   code set); parity is property-tested.
 #
 # Memory: the memo is cleared past _GRAM_CACHE_MAX entries (~2.5 KB/array +
 # mask bytes <= cap/8 per entry); the bit index is bounded by the cap.
@@ -87,82 +91,62 @@ def _gram_entry(t: str, n: int):
     return e
 
 
-def _pair_common(ea, eb) -> int:
-    """|A ∩ B| from two _gram_entry results — popcount when both sides
-    have masks, exact sorted-merge otherwise."""
-    ma, mb = ea[2], eb[2]
-    if ma is not None and mb is not None:
-        return (ma & mb).bit_count()
-    return int(np.intersect1d(ea[0], eb[0], assume_unique=True).size)
-
-
-_PAIR_VEC_STATE: dict = {}
 _POP8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint16)
 
 
-def _pair_vec_state(bc, n: int):
-    """Per-(worker, broadcast, n) vectorized gram state: the broadcast
-    texts' masks packed into one (docs, ceil(bits/8)) uint8 matrix plus a
-    sorted id index, so a batch of candidate pairs intersects via one
-    numpy AND + LUT-popcount instead of a Python loop (measured ~10x on
-    the verify stage). Rows whose text fell past the bitmask cap keep
-    their exact _gram_entry and are merged per pair on the fallback path
-    — both paths are exact, same guarantee as _pair_common."""
-    # keyed by the VALUE dict's object identity: the worker's broadcast
-    # registry caches one deserialized value per broadcast, and the state
-    # holds a strong reference so the address cannot be reused while the
-    # entry lives
-    texts = bc.value
-    key = (id(texts), n)
-    st = _PAIR_VEC_STATE.get(key)
-    if st is None:
-        items = list(texts.items())
-        ids = np.array([i for i, _ in items], dtype=np.int64)
-        order = np.argsort(ids, kind="stable")
-        ids_sorted = ids[order]
-        entries = [_gram_entry(items[j][1] or "", n)
-                   for j in order.tolist()]
-        nbits = len(_GRAM_BITS.get(n, {}))
-        nbytes = max(1, (nbits + 7) // 8)
-        m = np.zeros((len(entries), nbytes), dtype=np.uint8)
-        sizes = np.zeros(len(entries), dtype=np.int64)
-        have = np.zeros(len(entries), dtype=bool)
-        for row, e in enumerate(entries):
-            sizes[row] = e[1]
-            if e[2] is not None:
-                m[row] = np.frombuffer(e[2].to_bytes(nbytes, "little"),
-                                       dtype=np.uint8)
-                have[row] = True
-        st = (ids_sorted, m, sizes, have, entries, texts)
-        if len(_PAIR_VEC_STATE) > 8:
-            _PAIR_VEC_STATE.clear()
-        _PAIR_VEC_STATE[key] = st
-    return st
+def _gram_rows(texts, n: int):
+    """The vectorized gram state of a sequence of normalized texts, row i
+    for texts[i]: their masks packed into one (rows, ceil(bits/8)) uint8
+    matrix, the gram-set sizes, which rows have a mask, and each row's
+    _gram_entry (the exact form of a row whose text fell past the cap)."""
+    entries = [_gram_entry(t or "", n) for t in texts]
+    nbytes = max(1, (len(_GRAM_BITS.get(n, {})) + 7) // 8)
+    m = np.zeros((len(entries), nbytes), dtype=np.uint8)
+    sizes = np.zeros(len(entries), dtype=np.int64)
+    have = np.zeros(len(entries), dtype=bool)
+    for row, e in enumerate(entries):
+        sizes[row] = e[1]
+        if e[2] is not None:
+            m[row] = np.frombuffer(e[2].to_bytes(nbytes, "little"),
+                                   dtype=np.uint8)
+            have[row] = True
+    return m, sizes, have, entries
 
 
-def _pair_counts_vec(st, ia: np.ndarray, ib: np.ndarray):
-    """(n_common, n_a, n_b) int64 arrays for pair id arrays whose ids are
-    all present in the broadcast state (enforced: raises on a miss rather
-    than silently mis-rowing)."""
-    ids_sorted, m, sizes, have, entries, _ = st
-    ra = np.searchsorted(ids_sorted, ia).clip(0, len(ids_sorted) - 1)
-    rb = np.searchsorted(ids_sorted, ib).clip(0, len(ids_sorted) - 1)
-    if not (np.array_equal(ids_sorted[ra], ia)
-            and np.array_equal(ids_sorted[rb], ib)):
-        raise ValueError("pair id missing from broadcast text state")
+def _pair_counts(rows, ra: np.ndarray, rb: np.ndarray):
+    """(n_common, n_a, n_b) int64 arrays for the row pairs (ra[k], rb[k])
+    of one _gram_rows state: one numpy AND + LUT popcount over the packed
+    masks for the whole batch instead of a Python loop per pair (measured
+    ~10x on the verify stage), and the exact sorted-array merge for a
+    pair with a side past the bitmask cap."""
+    m, sizes, have, entries = rows
     inter = _POP8[m[ra] & m[rb]].sum(axis=1, dtype=np.int64)
-    ok = have[ra] & have[rb]
-    if not ok.all():
-        for k in np.nonzero(~ok)[0].tolist():
-            inter[k] = _pair_common(entries[ra[k]], entries[rb[k]])
+    for k in np.nonzero(~(have[ra] & have[rb]))[0].tolist():
+        inter[k] = np.intersect1d(entries[ra[k]][0], entries[rb[k]][0],
+                                  assume_unique=True).size
     return inter, sizes[ra], sizes[rb]
 
 
+def _batch_counts(keys_a: pd.Series, keys_b: pd.Series, text_of, n: int):
+    """(n_common, n_a, n_b) frame for one Arrow batch of pairs keyed by
+    ids or texts: the batch's distinct keys become the rows of one
+    _gram_rows state, so each doc costs one memo lookup per batch however
+    many of its pairs the batch holds. ``text_of`` maps a key to its
+    normalized text."""
+    codes, keys = pd.factorize(pd.concat([keys_a, keys_b], ignore_index=True))
+    k = len(keys_a)
+    inter, na, nb = _pair_counts(_gram_rows([text_of(x) for x in keys], n),
+                                 codes[:k], codes[k:])
+    return pd.DataFrame({"n_common": inter, "n_a": na, "n_b": nb},
+                        index=keys_a.index)
+
+
 def _bcast_norm_texts(docs: DataFrame, text_col: str, id_col: str):
-    """Broadcast {id: normalized text} for the pair-verify kernels, or
-    None when the ids are not integral or the corpus exceeds the
+    """Broadcast {id: normalized text} for the pair-verify kernel, or
+    None when the ids are not integral, the corpus exceeds the
     driver-collect budget (shared.collect_if_fits: one exact size job
-    before any text moves).
+    before any text moves) or an id repeats (the join form scores each
+    row of a repeated id against its own text; one dict slot cannot).
 
     The join form ships each doc's normalized text once PER CANDIDATE
     PAIR through two id-keyed joins — for a 12.6M-pair set over a 14 MB
@@ -180,9 +164,11 @@ def _bcast_norm_texts(docs: DataFrame, text_col: str, id_col: str):
         tbl = collect_if_fits(norm, "norm_texts")
         if tbl is None:
             return None
-        return spark.sparkContext.broadcast(
-            dict(zip(tbl.column("_id").to_pylist(),
-                     tbl.column("_nt").to_pylist())))
+        texts = dict(zip(tbl.column("_id").to_pylist(),
+                         tbl.column("_nt").to_pylist()))
+        if len(texts) < tbl.num_rows:
+            return None
+        return spark.sparkContext.broadcast(texts)
 
     # one broadcast per distinct input PLAN per session (canonicalized —
     # expression ids normalized): re-broadcasting the same corpus per
@@ -325,11 +311,8 @@ def minhash_lsh_pairs(signatures: DataFrame, id_col: str = "doc_id",
     first (see minhash_near_dup) so identical docs collapse to one member
     and a capped bucket only ever drops genuinely-distinct long tails.
     Use lsh_bucket_stats for the dropped-membership accounting."""
-    banded = _banded(signatures, id_col, bands, num_perm)
-    if max_bucket is not None:
-        w = Window.partitionBy("band", "bucket")
-        banded = (banded.withColumn("_bsz", F.count("*").over(w))
-                  .filter(F.col("_bsz") <= max_bucket).drop("_bsz"))
+    banded = _cap_buckets(_banded(signatures, id_col, bands, num_perm),
+                          ("band", "bucket"), max_bucket)
     left = banded.alias("l")
     right = banded.alias("r")
     pairs = (
@@ -340,6 +323,17 @@ def minhash_lsh_pairs(signatures: DataFrame, id_col: str = "doc_id",
                 F.col(f"r.{id_col}").alias("id_b"))
     )
     return _distinct_pairs(pairs)
+
+
+def _cap_buckets(rows: DataFrame, bucket_cols, max_bucket) -> DataFrame:
+    """The rows whose bucket (the ``bucket_cols`` value) has at most
+    ``max_bucket`` members, counted by one window over the bucket; all
+    rows when ``max_bucket`` is None."""
+    if max_bucket is None:
+        return rows
+    w = Window.partitionBy(*bucket_cols)
+    return (rows.withColumn("_bsz", F.count("*").over(w))
+            .filter(F.col("_bsz") <= max_bucket).drop("_bsz"))
 
 
 def _distinct_pairs(pairs: DataFrame, cols=("id_a", "id_b")) -> DataFrame:
@@ -689,10 +683,7 @@ def _simhash_chunk_join(sim: DataFrame, id_col: str, chunks: int,
             for i in range(chunks)
         ])).alias("chunk_idx", "chunk_val"),
     )
-    if max_bucket is not None:
-        w = Window.partitionBy("chunk_idx", "chunk_val")
-        chunked = (chunked.withColumn("_bsz", F.count("*").over(w))
-                   .filter(F.col("_bsz") <= max_bucket).drop("_bsz"))
+    chunked = _cap_buckets(chunked, ("chunk_idx", "chunk_val"), max_bucket)
     l, r = chunked.alias("l"), chunked.alias("r")
     # exact Hamming distance JVM-side (popcount via bit_count) computed on
     # the RAW join output, so the cross-chunk dedup shuffles (id_a, id_b,
@@ -712,88 +703,38 @@ def _simhash_chunk_join(sim: DataFrame, id_col: str, chunks: int,
     return _distinct_pairs(pairs)
 
 
-def ngram_jaccard(docs: DataFrame, pairs: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id", n: int = 3) -> DataFrame:
-    """Exact char-n-gram Jaccard for candidate pairs (the verify stage after
-    LSH). Shingle sets are computed once per doc and joined to the pairs —
-    two broadcast-able joins, set math JVM-side via array functions."""
-    grams = docs.select(
-        F.col(id_col),
-        F.array_distinct(_ngram_array(F.col(text_col), n)).alias("grams"),
-    )
-    a = grams.alias("a")
-    b = grams.alias("b")
-    union = F.size(F.array_union("a.grams", "b.grams"))
-    return (
-        pairs.join(a, pairs["id_a"] == F.col(f"a.{id_col}"))
-        .join(b, pairs["id_b"] == F.col(f"b.{id_col}"))
-        .select(
-            "id_a", "id_b",
-            # two empty gram sets -> null, not an ANSI divide-by-zero error
-            F.when(union > 0,
-                   F.size(F.array_intersect("a.grams", "b.grams")) / union)
-            .alias("jaccard"),
-        )
-    )
-
-
 def _gram_hash_np(t: str, n: int) -> np.ndarray:
-    """Sorted unique uint64 codes of the char-n-grams of an (already
-    normalized) string. For n <= 3 the encoding packs the code points into
-    21-bit lanes (Unicode max 0x10FFFF < 2^21), so it is INJECTIVE — two
-    grams collide iff they are equal, making hash-set Jaccard EXACTLY equal
-    to string-set Jaccard. For n > 3 the code falls back to a splitmix64
-    polynomial mix (collisions ~m^2/2^64 per doc pair, negligible but not
-    zero)."""
+    """Sorted unique uint64 codes of the char-n-grams (n <= 3) of an
+    (already normalized) string. The code points pack into 21-bit lanes
+    (Unicode max 0x10FFFF < 2^21), so the encoding is INJECTIVE — two
+    grams collide iff they are equal, making code-set Jaccard EXACTLY
+    equal to string-set Jaccard."""
     cp = np.frombuffer(t.encode("utf-32-le"), dtype=np.uint32)
     if len(cp) < n:
         return np.zeros(0, dtype=np.uint64)
     win = np.lib.stride_tricks.sliding_window_view(cp, n).astype(np.uint64)
-    if n <= 3:
-        h = win[:, 0]
-        for i in range(1, n):
-            h = (h << np.uint64(21)) | win[:, i]
-    else:
-        powers = np.power(np.uint64(1099511628211),
-                          np.arange(n, dtype=np.uint64))
-        h = _splitmix64((win * powers).sum(axis=1))
+    h = win[:, 0]
+    for i in range(1, n):
+        h = (h << np.uint64(21)) | win[:, i]
     return np.unique(h)
 
 
-def ngram_jaccard_pairs_fast(docs: DataFrame, pairs: DataFrame,
-                             text_col: str = "text", id_col: str = "doc_id",
-                             n: int = 3) -> DataFrame:
-    """Exact char-n-gram Jaccard verify for LARGE candidate-pair sets.
+def ngram_jaccard(docs: DataFrame, pairs: DataFrame, text_col: str = "text",
+                  id_col: str = "doc_id", n: int = 3) -> DataFrame:
+    """Exact char-n-gram Jaccard (1 <= n <= 3) for candidate pairs — the
+    verify stage after LSH: ngram_overlap_pairs' exact counts divided
+    JVM-side, n_common / (n_a + n_b - n_common), null for two empty gram
+    sets.
 
-    ngram_jaccard joins each doc's full gram ARRAY onto every pair: a doc in
-    k candidate pairs ships its ~20-40 KB gram array k times through the
-    shuffle, and array_intersect/array_union then run per pair — measured as
-    53% of the whole 33-query bench at sf0.1 (30.5 s). This form instead
-    ships the doc's NORMALIZED TEXT (~1-2 KB, the minimal sufficient datum)
-    onto the pairs (or broadcasts the corpus text once when it fits the
-    driver-collect budget), counts the shared grams with
-    ngram_overlap_pairs_fast's kernel, and divides JVM-side. Semantics are
-    identical to ngram_jaccard (injective gram encoding for n <= 3, see
-    _gram_hash_np); the null result for two empty gram sets matches the
-    JVM form's 0/0 -> null.
-    """
-    ov = ngram_overlap_pairs_fast(docs, pairs, text_col=text_col,
-                                  id_col=id_col, n=n)
+    No gram array ever enters a join: joining each doc's gram ARRAY onto
+    every pair and running array_intersect/array_union per pair measured
+    53% of the whole 33-query bench at sf0.1 (30.5 s); the pairs carry
+    ids (or the ~1-2 KB normalized text) instead."""
+    ov = ngram_overlap_pairs(docs, pairs, text_col=text_col,
+                             id_col=id_col, n=n)
     union = F.col("n_a") + F.col("n_b") - F.col("n_common")
     return ov.select("id_a", "id_b", F.when(union > 0, F.col("n_common")
                                             / union).alias("jaccard"))
-
-
-def _ngram_array(col, n: int) -> F.Column:
-    """Char n-grams as an array column, JVM-side: substr over a sequence."""
-    norm = normalized_text(col)
-    return F.when(
-        F.length(norm) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.length(norm) - (n - 1)),
-            lambda i: F.substring(norm, 1, 0x7FFFFFFF).substr(i, F.lit(n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
 
 
 def incremental_dedup(new_docs: DataFrame, corpus: DataFrame,
@@ -924,21 +865,12 @@ def duplicate_span_stats(docs: DataFrame, n: int = 8,
     on the doc id for the final rollup. Span frequency is Zipfian, so
     map-side partial counts collapse the hot template spans before the
     wire."""
-    from .text import _words
+    from .text import _words, word_ngrams
 
-    # materialize words first: an inline split() inside the transform
-    # lambda re-tokenizes once PER SPAN on the interpreted path
     base = docs.select(F.col(id_col),
                        (F.col(words_col) if words_col
                         else _words(F.col(text_col))).alias("_ws"))
-    ws = F.col("_ws")
-    spans = F.when(
-        F.size(ws) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(ws) - (n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(ws, i, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    spans = word_ngrams(F.col("_ws"), n)
     per = base.select(F.col(id_col),
                       F.explode(F.array_distinct(spans)).alias("span"))
     n_docs = F.count("*").over(Window.partitionBy("span"))
@@ -965,12 +897,9 @@ def minhash_cross_candidates(sig_new: DataFrame, sig_corpus: DataFrame,
     lsh_bucket_stats on the corpus signatures."""
     a = (_banded(sig_new, id_col, bands, num_perm)
          .withColumnRenamed(id_col, "id_a"))
-    b = (_banded(sig_corpus, id_col, bands, num_perm)
-         .withColumnRenamed(id_col, "id_b"))
-    if max_bucket is not None:
-        w = Window.partitionBy("band", "bucket")
-        b = (b.withColumn("_bsz", F.count("*").over(w))
-             .filter(F.col("_bsz") <= max_bucket).drop("_bsz"))
+    b = _cap_buckets(_banded(sig_corpus, id_col, bands, num_perm)
+                     .withColumnRenamed(id_col, "id_b"),
+                     ("band", "bucket"), max_bucket)
     return _distinct_pairs(
         a.join(b, ["band", "bucket"]).select("id_a", "id_b"))
 
@@ -1007,7 +936,7 @@ def minhash_cross_dedup(new_docs: DataFrame, corpus: DataFrame,
                                      num_perm, max_bucket)
     both = (new_docs.select(id_col, text_col)
             .unionByName(corpus.select(id_col, text_col)))
-    verified = ngram_jaccard_pairs_fast(both, cands, text_col, id_col, n=3)
+    verified = ngram_jaccard(both, cands, text_col, id_col, n=3)
     dup_ids = (verified.filter(F.col("jaccard") >= threshold)
                .select(F.col("id_a").alias(id_col)).distinct())
     return new_docs.join(dup_ids, id_col, "left_anti")
@@ -1059,19 +988,13 @@ def _span_frames(docs: DataFrame, n: int, text_col: str, id_col: str,
                  words_col: Optional[str]):
     """(base, per): the tokenized doc frame and its positioned n-word
     spans — shared by the duplicate-span and contamination scrubbers."""
-    from .text import _words
+    from .text import _words, word_ngrams
 
     words = (F.col(words_col) if words_col
              else _words(F.col(text_col)))
     base = docs.select(F.col(id_col), F.col(text_col),
                        words.alias("_ws"))
-    spans = F.when(
-        F.size("_ws") >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size("_ws") - (n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(F.col("_ws"), i, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    spans = word_ngrams(F.col("_ws"), n)
     # (id, start0, span): posexplode's index IS the 0-based start word
     per = base.select(id_col, F.posexplode(spans).alias("_start", "_span"))
     return base, per
@@ -1235,19 +1158,12 @@ def span_novelty(docs: DataFrame, n: int = 8, text_col: str = "text",
     id-keyed rollup. At production scale hash the span through xxhash64
     first so the shuffle carries 8-byte keys (identical answer absent a
     2^-64 collision)."""
-    from .text import _words
+    from .text import _words, word_ngrams
 
     wbase = docs.select(F.col(id_col),
                         (F.col(words_col) if words_col
                          else _words(F.col(text_col))).alias("_ws"))
-    ws = F.col("_ws")
-    spans = F.when(
-        F.size(ws) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(ws) - (n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(ws, i, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    spans = word_ngrams(F.col("_ws"), n)
     # per-doc span dedup happens SCAN-SIDE (array_distinct before the
     # explode, the duplicate_span_stats discipline) and the first-owner
     # attribution is a min-over-window on the span key — the r5 plan
@@ -1313,66 +1229,56 @@ def source_overlap(pairs: DataFrame, docs: DataFrame,
                  F.count_distinct("id").alias("n_docs")))
 
 
-def ngram_overlap_pairs_fast(docs: DataFrame, pairs: DataFrame,
-                             text_col: str = "text",
-                             id_col: str = "doc_id",
-                             n: int = 3) -> DataFrame:
-    """Exact char-n-gram overlap STATS for candidate pairs: (id_a, id_b,
-    n_common, n_a, n_b) as integers — the primitive under both Jaccard
-    (n_common / (n_a + n_b - n_common)) and the asymmetric CONTAINMENT
-    scores (n_common / n_a, n_common / n_b) that catch subset-shaped
-    duplication (a quote, a syndicated excerpt, a page wrapping another)
-    which symmetric Jaccard under-scores.
+def ngram_overlap_pairs(docs: DataFrame, pairs: DataFrame,
+                        text_col: str = "text", id_col: str = "doc_id",
+                        n: int = 3) -> DataFrame:
+    """Exact char-n-gram overlap STATS (1 <= n <= 3) for candidate pairs:
+    (id_a, id_b, n_common, n_a, n_b) as integers — the primitive under
+    both Jaccard (n_common / (n_a + n_b - n_common)) and the asymmetric
+    CONTAINMENT scores (n_common / n_a, n_common / n_b) that catch
+    subset-shaped duplication (a quote, a syndicated excerpt, a page
+    wrapping another) which symmetric Jaccard under-scores.
 
-    The pairs join ships each doc's NORMALIZED TEXT once per pair (or,
-    under the driver-collect budget, pairs look it up in one broadcast
-    {id: normalized text}), gram sets are built once per distinct text
-    per Arrow batch (memoized sorted uint64 arrays, injective encoding for
-    n <= 3 — see _gram_hash_np), and the returned counts are exact
-    integers so any engine reproduces them bit-for-bit. No gram arrays
-    ever enter a shuffle.
+    Under the driver-collect budget, pairs look their texts up in one
+    broadcast {id: normalized text} (_bcast_norm_texts); otherwise two
+    id-keyed joins ship each doc's NORMALIZED TEXT once per pair. Either
+    way one kernel scores a whole Arrow batch of pairs (_gram_rows +
+    _pair_counts) over the worker-memoized gram sets (injective encoding,
+    see _gram_hash_np), and the returned counts are exact integers so any
+    engine reproduces them bit-for-bit. No gram arrays ever enter a
+    shuffle.
     """
-    def ov_rows(text_pairs):
-        # worker-global gram memo + bitmask intersection (see _gram_entry)
-        rows = []
-        for x, y in text_pairs:
-            ea, eb = _gram_entry(x or "", n), _gram_entry(y or "", n)
-            rows.append((_pair_common(ea, eb), ea[1], eb[1]))
-        return rows
+    if not 1 <= n <= 3:
+        raise ValueError(f"n={n}: exact char-gram sets need 1 <= n <= 3 "
+                         "(three 21-bit code points per 64-bit code)")
 
     bc = _bcast_norm_texts(docs, text_col, id_col)
     if bc is not None:
 
         @F.pandas_udf("n_common long, n_a long, n_b long")
         def _ov_bc(ia: pd.Series, ib: pd.Series) -> pd.DataFrame:
-            st = _pair_vec_state(bc, n)
-            inter, na, nb = _pair_counts_vec(
-                st, ia.to_numpy(np.int64), ib.to_numpy(np.int64))
-            return pd.DataFrame({"n_common": inter, "n_a": na,
-                                 "n_b": nb}, index=ia.index)
+            # a pair id missing from the broadcast raises KeyError rather
+            # than scoring against the wrong text
+            return _batch_counts(ia, ib, bc.value.__getitem__, n)
 
-        return (_pairs_with_known_ids(pairs, docs, id_col)
-                .select("id_a", "id_b",
-                        _ov_bc(F.col("id_a").cast("long"),
-                               F.col("id_b").cast("long")).alias("_o"))
-                .select("id_a", "id_b", "_o.n_common", "_o.n_a", "_o.n_b"))
+        scored = (_pairs_with_known_ids(pairs, docs, id_col)
+                  .select("id_a", "id_b",
+                          _ov_bc(F.col("id_a").cast("long"),
+                                 F.col("id_b").cast("long")).alias("_o")))
+    else:
+        norm = docs.select(F.col(id_col),
+                           normalized_text(F.col(text_col)).alias("_nt"))
+        a, b = norm.alias("a"), norm.alias("b")
 
-    norm = docs.select(F.col(id_col),
-                       normalized_text(F.col(text_col)).alias("_nt"))
-    a, b = norm.alias("a"), norm.alias("b")
+        @F.pandas_udf("n_common long, n_a long, n_b long")
+        def _ov(ta: pd.Series, tb: pd.Series) -> pd.DataFrame:
+            return _batch_counts(ta.fillna(""), tb.fillna(""), str, n)
 
-    @F.pandas_udf("n_common long, n_a long, n_b long")
-    def _ov(ta: pd.Series, tb: pd.Series) -> pd.DataFrame:
-        return pd.DataFrame(ov_rows(zip(ta, tb)),
-                            columns=["n_common", "n_a", "n_b"],
-                            index=ta.index)
-
-    return (
-        pairs.join(a, pairs["id_a"] == F.col(f"a.{id_col}"))
-        .join(b, pairs["id_b"] == F.col(f"b.{id_col}"))
-        .select("id_a", "id_b", _ov(F.col("a._nt"), F.col("b._nt"))
-                .alias("_o"))
-        .select("id_a", "id_b", "_o.n_common", "_o.n_a", "_o.n_b"))
+        scored = (pairs.join(a, pairs["id_a"] == F.col(f"a.{id_col}"))
+                  .join(b, pairs["id_b"] == F.col(f"b.{id_col}"))
+                  .select("id_a", "id_b",
+                          _ov(F.col("a._nt"), F.col("b._nt")).alias("_o")))
+    return scored.select("id_a", "id_b", "_o.n_common", "_o.n_a", "_o.n_b")
 
 
 def containment_pairs(docs: DataFrame, pairs: DataFrame,
@@ -1386,8 +1292,8 @@ def containment_pairs(docs: DataFrame, pairs: DataFrame,
     side). Scores are exact integer ppm (``n_common * 1e6 DIV n_side``,
     NULL when a side has no grams), so both engines agree bit-for-bit.
     """
-    ov = ngram_overlap_pairs_fast(docs, pairs, text_col=text_col,
-                                  id_col=id_col, n=n)
+    ov = ngram_overlap_pairs(docs, pairs, text_col=text_col,
+                             id_col=id_col, n=n)
     cont_a = F.when(F.col("n_a") > 0,
                     F.expr("CAST(n_common * 1000000 DIV n_a AS BIGINT)"))
     cont_b = F.when(F.col("n_b") > 0,

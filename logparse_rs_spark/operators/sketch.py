@@ -111,17 +111,3 @@ def heavy_hitters_exact(items: DataFrame, item_col: str,
         # the exact pass re-reads `items`, not `summary`; unpersist lazily
         # after the plan is built (the collected total is already final)
         summary.unpersist(blocking=False)
-
-
-def word_bigrams(text_col, words=None) -> F.Column:
-    """Adjacent lowercased word bigrams of a text column (JVM-side
-    transform over an index sequence, no UDF). Pass ``words`` (a
-    pre-tokenized array column) to skip re-tokenizing."""
-    from .text import _words
-
-    words = words if words is not None else _words(text_col)
-    return F.when(
-        F.size(words) >= 2,
-        F.transform(F.sequence(F.lit(1), F.size(words) - 1),
-                    lambda i: F.concat_ws(" ", F.slice(words, i, 2))),
-    ).otherwise(F.array().cast("array<string>"))

@@ -247,6 +247,26 @@ def _words(text_col) -> F.Column:
                     lambda x: x != "")
 
 
+def word_ngrams(words, n: int) -> F.Column:
+    """The word n-grams of an array-of-words column in text order, each
+    the space-joined words of one window of ``n`` adjacent words; an empty
+    array for fewer than ``n`` words or a null array (JVM-side transform
+    over an index sequence, no UDF).
+
+    Pass a MATERIALIZED words column (an attribute such as
+    ``F.col("_ws")`` or a pre-tokenized column), not an inline
+    ``_words(...)`` expression: the lambda references ``words`` once per
+    element, and on the interpreted higher-order path an inline split
+    there re-tokenizes the text once per n-gram."""
+    return F.when(
+        F.size(words) >= n,
+        F.transform(
+            F.sequence(F.lit(1), F.size(words) - (n - 1)),
+            lambda i: F.concat_ws(" ", F.slice(words, i, n)),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
 def vocab_top(docs: DataFrame, k: int = 25,
               text_col: str = "text",
               words_col: str | None = None) -> DataFrame:
@@ -282,14 +302,7 @@ def repeated_ngrams(docs: DataFrame, n: int = 5, k: int = 20,
     sequence (no UDF) -> explode -> hash count -> TakeOrdered.
     ``words_col``: optional pre-tokenized array column to reuse."""
     words = F.col(words_col) if words_col else _words(F.col(text_col))
-    shingles = F.when(
-        F.size(words) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(words) - (n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(words, i, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return (docs.select(F.explode(shingles).alias("ngram"))
+    return (docs.select(F.explode(word_ngrams(words, n)).alias("ngram"))
             .groupBy("ngram").agg(F.count("*").alias("n"))
             .filter(F.col("n") >= min_count)
             .orderBy(F.desc("n"), F.asc("ngram")).limit(k))
@@ -376,19 +389,12 @@ def _doc_bigrams(docs: DataFrame, text_col: str, id_col: str,
                  words_col: str | None = None) -> DataFrame:
     """(id, bigram) pairs — the shared scan of both lm_score passes.
     ``words_col``: optional pre-tokenized array column to reuse."""
-    # words materialized as a column first: an inline split() inside the
-    # transform lambda re-tokenizes once per bigram (interpreted
-    # higher-order path); an attribute reference is a per-row lookup
     base = docs.select(F.col(id_col),
                        (F.col(words_col) if words_col
                         else _words(F.col(text_col))).alias("_ws"))
-    ws = F.col("_ws")
-    bigrams = F.when(
-        F.size(ws) >= 2,
-        F.transform(F.sequence(F.lit(1), F.size(ws) - 1),
-                    lambda i: F.concat_ws(" ", F.slice(ws, i, 2))),
-    ).otherwise(F.array().cast("array<string>"))
-    return base.select(F.col(id_col), F.explode(bigrams).alias("bigram"))
+    return base.select(F.col(id_col),
+                       F.explode(word_ngrams(F.col("_ws"), 2))
+                       .alias("bigram"))
 
 
 def lm_bigram_model(docs: DataFrame, text_col: str = "text",
@@ -641,19 +647,13 @@ def contamination_check(docs: DataFrame, eval_docs: DataFrame, n: int = 5,
     the corpus. The train side dedups shingles per doc BEFORE the join so
     a doc repeating one leaked phrase k times produces one row, not k."""
     def shingle_hashes(df, out_id):
-        # materialize the word array BEFORE the transform: an inline
-        # split() referenced inside the lambda is re-evaluated per
-        # element by the interpreted higher-order path (one re-tokenize
-        # per shingle — measured ~5x the whole operator)
+        # words materialized first (an inline split re-tokenizes once per
+        # shingle: measured ~5x the whole operator); hashed BEFORE the
+        # per-doc distinct, so colliding shingles count once, as they join
         base = df.select(F.col(id_col).alias(out_id),
                          _words(F.col(text_col)).alias("_ws"))
-        ws = F.col("_ws")
-        shingles = F.when(
-            F.size(ws) >= n,
-            F.transform(F.sequence(F.lit(1), F.size(ws) - (n - 1)),
-                        lambda i: F.xxhash64(F.concat_ws(
-                            " ", F.slice(ws, i, n)))),
-        ).otherwise(F.array().cast("array<bigint>"))
+        shingles = F.transform(word_ngrams(F.col("_ws"), n),
+                               lambda g: F.xxhash64(g))
         return base.select(out_id,
                            F.explode(F.array_distinct(shingles)).alias("gh"))
 
@@ -762,7 +762,7 @@ def collocations(docs: DataFrame, k: int = 20, min_count: int = 5,
     Returns (w1, w2, n_xy, n_x, n_y, score_ppb), k rows.
     ``words_col``: optional pre-tokenized array column to reuse.
     """
-    # words materialized first (see _doc_bigrams: inline split in the
+    # words materialized first (see word_ngrams: inline split in the
     # lambda re-tokenizes per pair on the interpreted path)
     wbase = docs.select((F.col(words_col) if words_col
                          else _words(F.col(text_col))).alias("_ws"))
@@ -880,22 +880,11 @@ def _posting_ids(docs: DataFrame, min_df: int, max_df: int, min_len: int,
     ``words_col`` names a PRE-TOKENIZED array column to reuse (the
     tokenize-once-share-everywhere pattern for a session running several
     retrieval queries); when absent, tokenization happens scan-side."""
-    # words materialized first (see _doc_bigrams: inline split in the
-    # lambda re-tokenizes per n-gram on the interpreted path)
     docs = docs.select(
         "*", (F.col(words_col) if words_col
               else _words(F.col(text_col))).alias("_pws"))
     words = F.col("_pws")
-    if ngram > 1:
-        terms = F.when(
-            F.size(words) >= ngram,
-            F.transform(
-                F.sequence(F.lit(1), F.size(words) - (ngram - 1)),
-                lambda i: F.concat_ws(" ", F.slice(words, i, ngram)),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-    else:
-        terms = words
+    terms = word_ngrams(words, ngram) if ngram > 1 else words
     toks = F.array_distinct(
         F.filter(terms, lambda x: F.length(x) >= min_len))
     return (docs.select(F.col(id_col), F.explode(toks).alias("token"))

@@ -1,7 +1,8 @@
 """What the query families share: the fixture root and per-sf fixture
 paths, the session-shared frames (parsed pages, documents, their
 signatures, candidate pairs and components, embeddings), the bounded
-availableNow stream run, and the tables the DuckDB oracles read.
+availableNow stream run (``streaming.stream.run_available_now``), and the
+tables the DuckDB oracles read.
 
 Nothing here imports ``__spark_entry__``: the ``--py-files`` zip carries
 this package alone.
@@ -10,12 +11,8 @@ this package alone.
 from __future__ import annotations
 
 import functools
-import glob
 import os
-import shutil
 import tempfile
-import time
-from itertools import count
 from typing import NamedTuple
 
 import pyarrow.parquet as pq
@@ -34,6 +31,7 @@ from logparse_rs_spark.operators.parse import parse_pages, project_type
 from logparse_rs_spark.operators.text import _words
 from logparse_rs_spark.schema import load_schema
 from logparse_rs_spark.shared import shared
+from logparse_rs_spark.streaming.stream import run_available_now
 
 # the repo checkout holding schemas/, configs/ and .fixtures/
 ROOT = os.path.dirname(os.path.dirname(os.path.dirname(
@@ -246,67 +244,6 @@ def _vector_dim(path: str) -> int:
 
 def _emb_dim(sf_dir) -> int:
     return _vector_dim(f"{sf_dir}/embeddings.parquet")
-
-
-# ---- bounded streaming runs ------------------------------------------------
-
-def _stream_checkpoint() -> str:
-    # explicit checkpoint dir on tmpfs when available: the implicit
-    # temp checkpoint goes to local disk, whose writeback queue can
-    # dominate state-store commit time (BENCH/NOTES §6). On a real
-    # cluster this is an HDFS/object-store path.
-    # tmpfs must not leak: dirs embed the owning pid; dead-owner dirs
-    # are reaped here, and each query removes its own on completion.
-    # A recycled pid can make an orphan look alive forever (ADVICE.md),
-    # so dirs older than 6 h are reaped regardless of apparent
-    # liveness — no legitimate checkpoint in this repo lives that long.
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    if base:
-        for stale in glob.glob(os.path.join(base, "lps_ckpt_*_p*")):
-            try:
-                aged = (time.time() - os.stat(stale).st_mtime) > 6 * 3600
-            except OSError:
-                continue  # raced with its owner's cleanup
-            try:
-                os.kill(int(stale.rsplit("_p", 1)[1]), 0)
-                alive = True
-            except (ValueError, ProcessLookupError):
-                alive = False
-            except PermissionError:
-                alive = True  # alive under another user
-            if aged or not alive:
-                shutil.rmtree(stale, ignore_errors=True)
-    return tempfile.mkdtemp(prefix="lps_ckpt_", dir=base,
-                            suffix=f"_p{os.getpid()}")
-
-
-# memory-sink names must be unique per session
-_sink_seq = count(1)
-
-
-def run_available_now(spark, stream: DataFrame, name: str,
-                      output_mode: str) -> DataFrame:
-    """Drive ``stream`` to completion with an availableNow trigger into a
-    fresh memory sink and return the sink table. The checkpoint is
-    removed afterwards: a memory sink cannot resume from one."""
-    table = f"{name}_{next(_sink_seq)}"
-    ckpt = _stream_checkpoint()
-    # state-store instances = shuffle partitions at stream start; a
-    # stream-stream join runs FOUR stores per partition, so a bounded
-    # fixture stream wants few fat partitions, not the batch default.
-    # (At cluster scale the right number tracks executor count — this
-    # is per-run tuning, not semantics.)
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        (stream.writeStream.outputMode(output_mode).format("memory")
-         .option("checkpointLocation", ckpt)
-         .queryName(table).trigger(availableNow=True).start()
-         .awaitTermination())
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(table)
 
 
 # ---- oracle inputs ---------------------------------------------------------

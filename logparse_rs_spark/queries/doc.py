@@ -38,7 +38,6 @@ from logparse_rs_spark.operators.dedup import (WS_CHARS, _banded,
                                                exact_dedup, incremental_dedup,
                                                minhash_cross_dedup,
                                                ngram_jaccard,
-                                               ngram_jaccard_pairs_fast,
                                                normalized_text,
                                                remove_contaminated_spans,
                                                remove_duplicate_spans, simhash,
@@ -47,8 +46,7 @@ from logparse_rs_spark.operators.dedup import (WS_CHARS, _banded,
                                                source_overlap, span_novelty,
                                                winnow_fingerprints)
 from logparse_rs_spark.operators.graph import dup_clusters, pagerank_integer
-from logparse_rs_spark.operators.sketch import (heavy_hitters_exact,
-                                                word_bigrams)
+from logparse_rs_spark.operators.sketch import heavy_hitters_exact
 from logparse_rs_spark.operators.text import (LENGTH_BANDS, STOPWORDS,
                                               _doc_bigrams, _words,
                                               bpe_pair_counts, chunk_documents,
@@ -67,7 +65,8 @@ from logparse_rs_spark.operators.text import (LENGTH_BANDS, STOPWORDS,
                                               rebalance_by_group,
                                               related_doc_pairs,
                                               repeated_ngrams, tfidf_topk,
-                                              token_counts, vocab_top)
+                                              token_counts, vocab_top,
+                                              word_ngrams)
 from logparse_rs_spark.shared import shared
 from logparse_rs_spark.streaming.stateful import (streaming_band_registry,
                                                   streaming_exact_dedup)
@@ -167,12 +166,12 @@ def doc_text_neardup_verified(spark, sf_dir):
     # the canonical two-stage TEXT near-dup: capped minhash-LSH band
     # candidates -> exact char-3-gram Jaccard verify >= 0.5 (the text
     # counterpart of emb_neardup_pairs' candidates->verify composition).
-    # The verify stage ships normalized TEXT per pair and memoizes
-    # uint64 gram sets per Arrow batch (ngram_jaccard_pairs_fast), so
-    # no gram array ever crosses a join
+    # The verify stage (ngram_jaccard) looks each pair's texts up by id
+    # and scores an Arrow batch of pairs at once over worker-memoized
+    # gram sets, so no gram array ever crosses a join
     docs = _docs(spark, sf_dir)
     pairs = _canon_pairs(spark, sf_dir)
-    return (ngram_jaccard_pairs_fast(docs, pairs, n=3)
+    return (ngram_jaccard(docs, pairs, n=3)
             .filter(F.col("jaccard") >= 0.5)
             .withColumn("jaccard", F.round("jaccard", 6)))
 
@@ -628,7 +627,7 @@ def doc_heavy_bigrams(spark, sf_dir):
     # plan returns the identical answer.
     d = _tok_docs(spark, sf_dir)
     grams = d.select(F.explode(
-        word_bigrams(F.col("text"), words=F.col("words"))).alias("gram"))
+        word_ngrams(F.col("words"), 2)).alias("gram"))
     return heavy_hitters_exact(grams, "gram", support_den=1000)
 
 

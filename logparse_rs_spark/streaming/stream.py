@@ -14,7 +14,12 @@ of the reference's mtime-guarded reload.
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
+import tempfile
+import time
+from itertools import count
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -23,14 +28,7 @@ from pyspark.sql import types as T
 
 from ..operators.parse import parse_pages
 from ..schema import CompiledSchema, load_schema
-
-PAGES_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType()),
-    T.StructField("warc_ts", T.TimestampType()),
-    T.StructField("html", T.BinaryType()),
-    T.StructField("text", T.StringType()),
-    T.StructField("lang", T.StringType()),
-])
+from ..sources.warc import PAGES_SCHEMA
 
 
 def read_pages_stream(spark: SparkSession, path: str,
@@ -201,18 +199,76 @@ def run_stream_to_memory(spark: SparkSession, src_dir: str,
                          schema_path: str, query_name: str = "stream_counts"
                          ) -> DataFrame:
     """Drive a bounded stream to completion (availableNow) aggregating routed
-    counts into an in-memory sink — the smoke-test surface for streaming."""
+    counts into an in-memory sink — the smoke-test surface for streaming.
+    The sink table is ``query_name`` plus run_available_now's per-session
+    sequence suffix."""
     schema = load_schema(schema_path)
     stream = read_pages_stream(spark, src_dir)
     agg = streaming_type_counts(stream, schema)
     # complete mode: append would hold back windows the watermark hasn't
     # closed, which on a bounded smoke stream means zero emitted rows
-    q = (agg.writeStream.outputMode("complete")
-         .format("memory").queryName(query_name)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {query_name}")
+    return run_available_now(spark, agg, query_name, "complete")
+
+
+# ---- bounded availableNow runs --------------------------------------------
+
+def _stream_checkpoint() -> str:
+    # explicit checkpoint dir on tmpfs when available: the implicit
+    # temp checkpoint goes to local disk, whose writeback queue can
+    # dominate state-store commit time (BENCH/NOTES §6). On a real
+    # cluster this is an HDFS/object-store path.
+    # tmpfs must not leak: dirs embed the owning pid; dead-owner dirs
+    # are reaped here, and each query removes its own on completion.
+    # A recycled pid can make an orphan look alive forever (ADVICE.md),
+    # so dirs older than 6 h are reaped regardless of apparent
+    # liveness — no legitimate checkpoint in this repo lives that long.
+    base = "/dev/shm" if os.path.isdir("/dev/shm") else None
+    if base:
+        for stale in glob.glob(os.path.join(base, "lps_ckpt_*_p*")):
+            try:
+                aged = (time.time() - os.stat(stale).st_mtime) > 6 * 3600
+            except OSError:
+                continue  # raced with its owner's cleanup
+            try:
+                os.kill(int(stale.rsplit("_p", 1)[1]), 0)
+                alive = True
+            except (ValueError, ProcessLookupError):
+                alive = False
+            except PermissionError:
+                alive = True  # alive under another user
+            if aged or not alive:
+                shutil.rmtree(stale, ignore_errors=True)
+    return tempfile.mkdtemp(prefix="lps_ckpt_", dir=base,
+                            suffix=f"_p{os.getpid()}")
+
+
+# memory-sink names must be unique per session
+_sink_seq = count(1)
+
+
+def run_available_now(spark, stream: DataFrame, name: str,
+                      output_mode: str) -> DataFrame:
+    """Drive ``stream`` to completion with an availableNow trigger into a
+    fresh memory sink and return the sink table. The checkpoint is
+    removed afterwards: a memory sink cannot resume from one."""
+    table = f"{name}_{next(_sink_seq)}"
+    ckpt = _stream_checkpoint()
+    # state-store instances = shuffle partitions at stream start; a
+    # stream-stream join runs FOUR stores per partition, so a bounded
+    # fixture stream wants few fat partitions, not the batch default.
+    # (At cluster scale the right number tracks executor count — this
+    # is per-run tuning, not semantics.)
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        (stream.writeStream.outputMode(output_mode).format("memory")
+         .option("checkpointLocation", ckpt)
+         .queryName(table).trigger(availableNow=True).start()
+         .awaitTermination())
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+        shutil.rmtree(ckpt, ignore_errors=True)
+    return spark.table(table)
 
 
 def streaming_interval_join(points_stream: DataFrame,

@@ -374,8 +374,9 @@ class TestDuplicateHeavy:
 
 
 class TestFastJaccardVerify:
-    """ngram_jaccard_pairs_fast must be value-identical to the JVM array
-    form (injective 21-bit gram packing for n=3, null/empty/unicode edges)."""
+    """ngram_jaccard on both kernel forms (broadcast ids and the text join)
+    must equal brute-force Python set Jaccard (injective 21-bit gram
+    packing for n=3, null/empty/unicode edges)."""
 
     EDGE_ROWS = [(1, "Hello  World, this is a test"),
                  (2, "hello world, this is a test"),
@@ -389,29 +390,74 @@ class TestFastJaccardVerify:
             [(a, b) for a in range(1, n + 1) for b in range(a + 1, n + 1)],
             "id_a long, id_b long")
 
-    def test_matches_array_form_on_edges(self, spark):
-        from logparse_rs_spark.operators.dedup import (
-            ngram_jaccard, ngram_jaccard_pairs_fast)
+    @staticmethod
+    def python_jaccard(texts, pairs, n=3):
+        import re
+
+        def grams(t):
+            t = re.sub("[ \t\n\r\f\x0b]+", " ", (t or "").lower()).strip(" ")
+            return {t[i:i + n] for i in range(len(t) - n + 1)}
+        out = {}
+        for a, b in pairs:
+            ga, gb = grams(texts[a]), grams(texts[b])
+            union = len(ga | gb)
+            out[(a, b)] = round(len(ga & gb) / union, 9) if union else None
+        return out
+
+    @staticmethod
+    def both_paths(monkeypatch, d, p):
+        """{(id_a, id_b): jaccard} at the default budget and at BUDGET = 0,
+        each with an empty shared-frame registry."""
+        from collections import OrderedDict
+
+        from logparse_rs_spark.operators.dedup import ngram_jaccard
+        out = []
+        for budget in (DEFAULT_BUDGET, 0):
+            monkeypatch.setattr(shared, "BUDGET", budget)
+            monkeypatch.setattr(shared, "_entries", OrderedDict())
+            out.append({(r["id_a"], r["id_b"]):
+                        None if r["jaccard"] is None
+                        else round(r["jaccard"], 9)
+                        for r in ngram_jaccard(d, p, n=3).collect()})
+        return out
+
+    def test_matches_python_sets_on_edges(self, spark, monkeypatch):
         d = spark.createDataFrame(self.EDGE_ROWS, "doc_id long, text string")
         p = self._all_pairs(spark, 8)
-        old = ngram_jaccard(d, p, n=3).withColumn(
-            "jaccard", F.round("jaccard", 9))
-        new = ngram_jaccard_pairs_fast(d, p, n=3).withColumn(
-            "jaccard", F.round("jaccard", 9))
-        assert old.count() == new.count() == 28
-        assert old.exceptAll(new).count() == 0
-        assert new.exceptAll(old).count() == 0
+        want = self.python_jaccard(dict(self.EDGE_ROWS),
+                                   [tuple(r) for r in p.collect()])
+        assert len(want) == 28 and want[(3, 4)] is None
+        for got in self.both_paths(monkeypatch, d, p):
+            assert got == want
 
-    def test_matches_array_form_on_corpus(self, spark, docs):
-        from logparse_rs_spark.operators.dedup import (
-            minhash_near_dup, ngram_jaccard, ngram_jaccard_pairs_fast)
+    def test_matches_python_sets_on_corpus(self, spark, docs, monkeypatch):
+        from logparse_rs_spark.operators.dedup import minhash_near_dup
         pairs = minhash_near_dup(docs, max_bucket=1000)
-        old = ngram_jaccard(docs, pairs, n=3).withColumn(
-            "jaccard", F.round("jaccard", 9))
-        new = ngram_jaccard_pairs_fast(docs, pairs, n=3).withColumn(
-            "jaccard", F.round("jaccard", 9))
-        assert old.count() == new.count() > 0
-        assert old.exceptAll(new).count() == 0
+        extra = [(9_000_001, "ümlaut \U0001F600\U0001F600 test row"),
+                 (9_000_002, "ümlaut \U0001F600\U0001F600 test rows"),
+                 (9_000_003, ""), (9_000_004, "   ")]
+        d = docs.select("doc_id", "text").unionByName(
+            spark.createDataFrame(extra, "doc_id long, text string"))
+        p = pairs.unionByName(spark.createDataFrame(
+            [(9_000_001, 9_000_002), (9_000_003, 9_000_004),
+             (9_000_001, 9_000_003)], "id_a long, id_b long"))
+        texts = {r["doc_id"]: r["text"] for r in d.collect()}
+        want = self.python_jaccard(texts, [tuple(r) for r in p.collect()])
+        assert len(want) > 3 and want[(9_000_003, 9_000_004)] is None
+        assert 0 < want[(9_000_001, 9_000_002)] < 1
+        for got in self.both_paths(monkeypatch, d, p):
+            assert got == want
+
+    def test_n_outside_exact_range_raises(self, spark):
+        from logparse_rs_spark.operators.dedup import (containment_pairs,
+                                                       ngram_jaccard)
+        d = spark.createDataFrame(self.EDGE_ROWS, "doc_id long, text string")
+        p = self._all_pairs(spark, 8)
+        for bad in (0, 4):
+            with pytest.raises(ValueError, match="1 <= n <= 3"):
+                ngram_jaccard(d, p, n=bad)
+        with pytest.raises(ValueError, match="1 <= n <= 3"):
+            containment_pairs(d, p, n=4)
 
     def test_gram_hash_injective_matches_strings(self):
         from logparse_rs_spark.operators.dedup import _gram_hash_np
@@ -1508,7 +1554,7 @@ class TestSpanNoveltyAndSourceOverlap:
 
 
 class TestContainmentPairs:
-    """ngram_overlap_pairs_fast / containment_pairs: the asymmetric
+    """ngram_overlap_pairs / containment_pairs: the asymmetric
     subset-duplication scores, cross-checked against python gram sets."""
 
     def _grams(self, t):
@@ -1517,7 +1563,7 @@ class TestContainmentPairs:
         return {t[i:i + 3] for i in range(max(len(t) - 2, 0))}
 
     def test_overlap_counts_vs_python(self, spark):
-        from logparse_rs_spark.operators.dedup import ngram_overlap_pairs_fast
+        from logparse_rs_spark.operators.dedup import ngram_overlap_pairs
         rows = [(1, "the quick brown fox jumps over the lazy dog"),
                 (2, "quick brown fox"),          # contained in 1
                 (3, "completely different words here"),
@@ -1526,7 +1572,7 @@ class TestContainmentPairs:
         p = spark.createDataFrame(
             [(1, 2), (1, 3), (1, 4)], "id_a long, id_b long")
         got = {(r["id_a"], r["id_b"]): (r["n_common"], r["n_a"], r["n_b"])
-               for r in ngram_overlap_pairs_fast(d, p, n=3).collect()}
+               for r in ngram_overlap_pairs(d, p, n=3).collect()}
         texts = dict(rows)
         for (ia, ib), (nc, na, nb) in got.items():
             ga, gb = self._grams(texts[ia]), self._grams(texts[ib])

@@ -22,6 +22,22 @@ def registry(monkeypatch):
     return shared
 
 
+def _python_jaccard(texts, pairs, n=3):
+    """{pair: exact char-n-gram set Jaccard (9 places)} of normalized
+    texts, None for two empty gram sets."""
+    import re
+
+    def grams(t):
+        t = re.sub("[ \t\n\r\f\x0b]+", " ", (t or "").lower()).strip(" ")
+        return {t[i:i + n] for i in range(len(t) - n + 1)}
+    out = {}
+    for a, b in pairs:
+        ga, gb = grams(texts[a]), grams(texts[b])
+        union = len(ga | gb)
+        out[(a, b)] = round(len(ga & gb) / union, 9) if union else None
+    return out
+
+
 def _app(app_id):
     return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
 
@@ -196,25 +212,46 @@ class TestCollectIfFits:
 
 class TestGatedOperators:
     def test_string_ids_take_the_join_plan(self, spark):
-        from logparse_rs_spark.operators.dedup import (
-            containment_pairs, ngram_jaccard, ngram_jaccard_pairs_fast)
+        from logparse_rs_spark.operators.dedup import (containment_pairs,
+                                                       ngram_jaccard)
         texts = ["the quick brown fox", "the quick brown fox jumps",
-                 "quick brown", "nothing alike here"]
-        ids = ["d0", "d1", "d2", "d3"]
+                 "quick brown", "nothing alike here",
+                 "quick \U0001F600\U0001F600 fox", "", "   "]
+        ids = ["d0", "d1", "d2", "d3", "d4", "d5", "d6"]
         docs = spark.createDataFrame(list(zip(ids, texts)),
                                      "doc_id string, text string")
         pairs = spark.createDataFrame(
             [(a, b) for i, a in enumerate(ids) for b in ids[i + 1:]],
             "id_a string, id_b string")
-        want = ngram_jaccard(docs, pairs).withColumn(
-            "jaccard", F.round("jaccard", 9))
-        got = ngram_jaccard_pairs_fast(docs, pairs).withColumn(
-            "jaccard", F.round("jaccard", 9))
-        assert sorted(got.collect()) == sorted(want.collect())
-        assert got.count() == 6
+        want = _python_jaccard(dict(zip(ids, texts)),
+                               [tuple(r) for r in pairs.collect()])
+        got = {(r["id_a"], r["id_b"]):
+               None if r["jaccard"] is None else round(r["jaccard"], 9)
+               for r in ngram_jaccard(docs, pairs).collect()}
+        assert got == want and len(got) == 21
+        assert want[("d5", "d6")] is None
         cont = {(r["id_a"], r["id_b"])
                 for r in containment_pairs(docs, pairs).collect()}
         assert cont == {("d0", "d1"), ("d0", "d2"), ("d1", "d2")}
+
+    def test_repeated_ids_score_each_row_against_its_own_text(
+            self, spark, monkeypatch):
+        # a doc id on two rows: the broadcast {id: text} would keep one
+        # text for both; each row must be scored against its own text,
+        # as the distributed join plan does
+        from logparse_rs_spark.operators.dedup import containment_pairs
+        docs = spark.createDataFrame(
+            [(1, "spark fast row engine"), (2, "spark slow row engine"),
+             (2, "completely different words here")],
+            "doc_id long, text string")
+        pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+        runs = []
+        for budget in (shared.BUDGET, 0):
+            monkeypatch.setattr(shared, "BUDGET", budget)
+            runs.append(sorted(map(tuple, containment_pairs(
+                docs, pairs, min_ppm=0).collect())))
+        assert runs[0] == runs[1]
+        assert sorted(r[2] for r in runs[0]) == [0, 13]
 
     def test_neardup_1536_dims_broadcast_matches_banded(self, spark,
                                                         monkeypatch):

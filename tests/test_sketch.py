@@ -1,5 +1,5 @@
 """Misra-Gries heavy hitters: superset guarantee, exactness vs the naive
-plan, candidate-plan shape."""
+plan, candidate-plan shape; and the word n-grams they count."""
 
 import random
 
@@ -7,8 +7,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from logparse_rs_spark.operators.sketch import (_mg_shrink,
-                                                heavy_hitters_exact,
-                                                word_bigrams)
+                                                heavy_hitters_exact)
+from logparse_rs_spark.operators.text import _words, word_ngrams
 
 
 class TestMgShrink:
@@ -79,7 +79,27 @@ class TestWordBigrams:
     def test_bigrams_and_short_texts(self, spark):
         df = spark.createDataFrame(
             [("The quick  brown fox",), ("one",), ("",)], "text string")
-        out = df.select(F.explode(word_bigrams(F.col("text")))
-                        .alias("g")).collect()
+        out = df.select(_words(F.col("text")).alias("ws")).select(
+            F.explode(word_ngrams(F.col("ws"), 2)).alias("g")).collect()
         assert sorted(r["g"] for r in out) == [
             "brown fox", "quick brown", "the quick"]
+
+
+class TestWordNgrams:
+    def _grams(self, spark, n):
+        df = spark.createDataFrame(
+            [(1, "The quick  brown fox"), (2, "one two"), (3, ""),
+             (4, None)], "id int, text string")
+        out = (df.select("id", _words(F.col("text")).alias("ws"))
+               .select("id", word_ngrams(F.col("ws"), n).alias("g"))
+               .collect())
+        return {r["id"]: r["g"] for r in out}
+
+    def test_fewer_than_n_words_give_empty(self, spark):
+        assert self._grams(spark, 3) == {
+            1: ["the quick brown", "quick brown fox"], 2: [], 3: [], 4: []}
+
+    def test_n_one_gives_the_words(self, spark):
+        assert self._grams(spark, 1) == {
+            1: ["the", "quick", "brown", "fox"], 2: ["one", "two"],
+            3: [], 4: []}
