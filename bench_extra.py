@@ -6,7 +6,9 @@ plan-captured without touching the official record (guide §1.4/§1.5).
 Per query: an optional warm pass (materializes fixtures + codegen), then N
 timed passes. Timing uses .collect() by default — the same methodology as
 bench.py's time_queries so numbers are comparable — or the noop sink with
---noop to time the computation without driver collection.
+--noop to time the computation without driver collection. With
+--explain-dir, each query's formatted plan is written before any pass runs;
+--no-warm --repeats 0 makes that a plan-only run.
 
 Usage:
   python bench_extra.py --sf /root/testdata/sf1.0 \
@@ -80,8 +82,11 @@ def main() -> None:
                 t0 = time.perf_counter()
                 run(fn(spark, args.sf))
                 samples.append(round(time.perf_counter() - t0, 3))
-            results[name] = {"min_s": min(samples), "samples": samples}
-            print(f"{name}: {min(samples)} {samples}", flush=True)
+            if samples:
+                results[name] = {"min_s": min(samples), "samples": samples}
+                print(f"{name}: {min(samples)} {samples}", flush=True)
+            else:
+                results[name] = {"samples": []}
         except Exception as e:
             results[name] = {"error": f"{e.__class__.__name__}: {e}"[:500]}
             print(f"{name}: ERROR {e.__class__.__name__}: {str(e)[:200]}",

@@ -8,9 +8,12 @@
         [--buckets 4096] [--no-resume] [--max-buckets K]
 
 On a cluster the SparkSession comes from spark-submit's conf (master,
-executors); locally it falls back to the tuned local session. The job prints
-one JSON line with routed-row counts and wall time, and exits non-zero on
-failure — the shape a workflow scheduler (airflow/cron) expects.
+executors); locally it falls back to the tuned local session. The job writes
+`default_sinks`' layout (the `sink_fact` TRAFFIC/THREAT table, the
+`sink_other` map table, `_rejects`) plus the stage, metrics, audit and
+ledger tables under --out. It prints one JSON line with routed-row counts
+and wall time, and exits non-zero on failure — the shape a workflow
+scheduler (airflow/cron) expects.
 """
 
 from __future__ import annotations
@@ -39,7 +42,6 @@ def main() -> int:
     ap.add_argument("--buckets", type=int, default=4096)
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--max-buckets", type=int, default=None)
-    ap.add_argument("--narrow-sinks", action="store_true")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -65,7 +67,7 @@ def main() -> int:
         schema_path=args.schema,
         anonymizer_path=args.anon,
         out_root=args.out,
-        sinks=default_sinks(schema, narrow=args.narrow_sinks),
+        sinks=default_sinks(schema),
         n_buckets=args.buckets,
     )
     if args.format == "warc":

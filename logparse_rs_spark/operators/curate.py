@@ -458,10 +458,11 @@ def shard_assign_balanced(docs: DataFrame, n_shards: int = 8,
     engines."""
     hist = (docs.groupBy(F.col(size_col).cast("long").alias("_sz"))
             .agg(F.count("*").alias("_cnt")))
-    # cumulative count of STRICTLY larger sizes; histogram-sized input
-    # (constant partition key: intent-explicit, see exact_quantile_bins)
+    # cumulative count of STRICTLY larger sizes in one single-partition
+    # window: its input is the size histogram, never the corpus, so
+    # WindowExec's "No Partition Defined" warning is expected here
     from pyspark.sql import Window
-    wh = (Window.partitionBy(F.lit(0)).orderBy(F.desc("_sz"))
+    wh = (Window.orderBy(F.desc("_sz"))
           .rowsBetween(Window.unboundedPreceding, -1))
     off = hist.select(
         "_sz", F.coalesce(F.sum("_cnt").over(wh), F.lit(0)).alias("_off"))
@@ -534,9 +535,10 @@ def sequential_ids(df: DataFrame, key_cols: Sequence[str],
                      eager=True)
     stats = part.groupBy("_pid").agg(F.count("*").alias("_cnt"),
                                      F.min("_mid").alias("_mn"))
-    # prefix offsets over the partition-stat frame (bounded: one row per
-    # shuffle partition; constant partition key = intent-explicit)
-    wh = (Window.partitionBy(F.lit(0)).orderBy("_pid")
+    # prefix offsets in one single-partition window: its input is the
+    # per-partition stat frame (one row per shuffle partition), never the
+    # corpus, so WindowExec's "No Partition Defined" warning is expected
+    wh = (Window.orderBy("_pid")
           .rowsBetween(Window.unboundedPreceding, -1))
     off = stats.select(
         "_pid", "_mn",

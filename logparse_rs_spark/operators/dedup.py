@@ -839,9 +839,7 @@ def bloom_anti_join(batch: DataFrame, corpus: DataFrame, key_col: str,
 
 
 def duplicate_span_stats(docs: DataFrame, n: int = 8,
-                         text_col: str = "text",
-                         id_col: str = "doc_id",
-                         words_col: Optional[str] = None) -> DataFrame:
+                         id_col: str = "doc_id") -> DataFrame:
     """Per-document duplicated-span exposure — the document-level signal
     behind substring-level training-data dedup (Lee et al. 2022,
     "Deduplicating Training Data Makes Language Models Better"): for each
@@ -856,20 +854,18 @@ def duplicate_span_stats(docs: DataFrame, n: int = 8,
     exact integer (n_shared <= n_spans so the product stays < 2^63 for
     any doc under ~9.2e12 spans).
 
-    Scale shape: spans materialize scan-side (split -> transform over an
-    index sequence, no UDF), de-duped PER DOC before leaving the scan
-    (array_distinct), then exactly two hash shuffles — one on the span
-    key (the inverted-index shuffle every substring-dedup job pays; at
-    production scale map the span through xxhash64 first so the shuffle
-    carries 8-byte keys, identical answer absent a 2^-64 collision), one
-    on the doc id for the final rollup. Span frequency is Zipfian, so
+    Scale shape: spans materialize scan-side (transform over an index
+    sequence of the ``words`` array, no UDF), de-duped PER DOC before
+    leaving the scan (array_distinct), then exactly two hash shuffles —
+    one on the span key (the inverted-index shuffle every substring-dedup
+    job pays; at production scale map the span through xxhash64 first so
+    the shuffle carries 8-byte keys, identical answer absent a 2^-64
+    collision), one on the doc id for the final rollup. Span frequency is Zipfian, so
     map-side partial counts collapse the hot template spans before the
     wire."""
-    from .text import _words, word_ngrams
+    from .text import word_ngrams
 
-    base = docs.select(F.col(id_col),
-                       (F.col(words_col) if words_col
-                        else _words(F.col(text_col))).alias("_ws"))
+    base = docs.select(F.col(id_col), F.col("words").alias("_ws"))
     spans = word_ngrams(F.col("_ws"), n)
     per = base.select(F.col(id_col),
                       F.explode(F.array_distinct(spans)).alias("span"))
@@ -944,8 +940,7 @@ def minhash_cross_dedup(new_docs: DataFrame, corpus: DataFrame,
 
 def remove_duplicate_spans(docs: DataFrame, n: int = 8, min_docs: int = 2,
                            text_col: str = "text",
-                           id_col: str = "doc_id",
-                           words_col: Optional[str] = None) -> DataFrame:
+                           id_col: str = "doc_id") -> DataFrame:
     """Substring-level dedup REMOVAL (the endgame of Lee et al. 2022):
     rewrite every document dropping each word that is covered by any
     n-word span occurring in >= ``min_docs`` documents. The flagging
@@ -965,7 +960,7 @@ def remove_duplicate_spans(docs: DataFrame, n: int = 8, min_docs: int = 2,
     rebuild is one id-keyed aggregate whose per-group state is bounded
     by the document's own length. Untouched docs never leave the scan —
     they join the edited set by id with a coalesce."""
-    base, per = _span_frames(docs, n, text_col, id_col, words_col)
+    base, per = _span_frames(docs, n, text_col, id_col)
     if min_docs == 2:
         # ">= 2 distinct owner docs" is exactly min(id) != max(id) over
         # the span window — one exchange marks the banned occurrences
@@ -984,16 +979,13 @@ def remove_duplicate_spans(docs: DataFrame, n: int = 8, min_docs: int = 2,
     return _scrub_spans(base, per, shared, n, text_col, id_col)
 
 
-def _span_frames(docs: DataFrame, n: int, text_col: str, id_col: str,
-                 words_col: Optional[str]):
+def _span_frames(docs: DataFrame, n: int, text_col: str, id_col: str):
     """(base, per): the tokenized doc frame and its positioned n-word
     spans — shared by the duplicate-span and contamination scrubbers."""
-    from .text import _words, word_ngrams
+    from .text import word_ngrams
 
-    words = (F.col(words_col) if words_col
-             else _words(F.col(text_col)))
     base = docs.select(F.col(id_col), F.col(text_col),
-                       words.alias("_ws"))
+                       F.col("words").alias("_ws"))
     spans = word_ngrams(F.col("_ws"), n)
     # (id, start0, span): posexplode's index IS the 0-based start word
     per = base.select(id_col, F.posexplode(spans).alias("_start", "_span"))
@@ -1042,15 +1034,14 @@ def _scrub_from_hits(base: DataFrame, hits: DataFrame, n: int,
 
 def remove_contaminated_spans(docs: DataFrame, eval_docs: DataFrame,
                               n: int = 8, text_col: str = "text",
-                              id_col: str = "doc_id",
-                              eval_text_col: str = "text",
-                              words_col: Optional[str] = None) -> DataFrame:
+                              id_col: str = "doc_id") -> DataFrame:
     """Benchmark DECONTAMINATION by span scrubbing: drop every corpus word
     covered by an n-word span that appears anywhere in the eval set — the
     editing counterpart of the contamination CHECK (which only flags).
-    Output contract matches remove_duplicate_spans: (id, text, n_removed),
-    untouched docs byte-identical, edited docs rebuilt from surviving
-    lowercased tokens.
+    ``eval_docs`` is raw (id, text) and is tokenized here; ``docs``
+    carries its ``words`` column. Output contract matches
+    remove_duplicate_spans: (id, text, n_removed), untouched docs
+    byte-identical, edited docs rebuilt from surviving lowercased tokens.
 
     Scale shape: the banned-span set is EVAL-SIZED (benchmarks are
     thousands of docs, not billions) and broadcast, so the corpus-side
@@ -1058,8 +1049,12 @@ def remove_contaminated_spans(docs: DataFrame, eval_docs: DataFrame,
     never shuffles to discover contamination; only the docs that
     actually hit an eval span pay the covered-index explode and the
     id-keyed rebuild."""
-    base, per = _span_frames(docs, n, text_col, id_col, words_col)
-    _, eval_per = _span_frames(eval_docs, n, eval_text_col, id_col, None)
+    from .text import _words
+
+    base, per = _span_frames(docs, n, text_col, id_col)
+    _, eval_per = _span_frames(
+        eval_docs.withColumn("words", _words(F.col(text_col))),
+        n, text_col, id_col)
     banned = F.broadcast(eval_per.select("_span").distinct())
     return _scrub_spans(base, per, banned, n, text_col, id_col)
 
@@ -1134,9 +1129,8 @@ def cluster_representatives(clusters: DataFrame, quality: DataFrame,
                  .alias("cluster_size")))
 
 
-def span_novelty(docs: DataFrame, n: int = 8, text_col: str = "text",
-                 id_col: str = "doc_id",
-                 words_col: Optional[str] = None) -> DataFrame:
+def span_novelty(docs: DataFrame, n: int = 8,
+                 id_col: str = "doc_id") -> DataFrame:
     """First-occurrence attribution — per document, how much of its
     content is NEW relative to everything with a smaller id (ids are the
     ingest order in this corpus): the fraction of its distinct word
@@ -1158,11 +1152,9 @@ def span_novelty(docs: DataFrame, n: int = 8, text_col: str = "text",
     id-keyed rollup. At production scale hash the span through xxhash64
     first so the shuffle carries 8-byte keys (identical answer absent a
     2^-64 collision)."""
-    from .text import _words, word_ngrams
+    from .text import word_ngrams
 
-    wbase = docs.select(F.col(id_col),
-                        (F.col(words_col) if words_col
-                         else _words(F.col(text_col))).alias("_ws"))
+    wbase = docs.select(F.col(id_col), F.col("words").alias("_ws"))
     spans = word_ngrams(F.col("_ws"), n)
     # per-doc span dedup happens SCAN-SIDE (array_distinct before the
     # explode, the duplicate_span_stats discipline) and the first-owner

@@ -5,6 +5,12 @@ Design rule: everything SQL-expressible stays JVM-side (these four are, so
 their oracles are plain DuckDB SQL); only the content fingerprint uses the
 reference's FNV kernel via an Arrow-batched UDF
 (dedup.content_fingerprint), the hash the oracles reproduce.
+
+The word-level operators (vocabulary, n-grams, the bigram LM, collocations,
+posting lists, tf-idf and rank fusion, and dedup's span operators) read a
+``words`` array column: the text tokenized once by ``_words``, as
+``queries.common._tok_docs`` builds it (persisted, session-shared), so
+none of them tokenizes the corpus a second time.
 """
 
 from __future__ import annotations
@@ -267,9 +273,7 @@ def word_ngrams(words, n: int) -> F.Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def vocab_top(docs: DataFrame, k: int = 25,
-              text_col: str = "text",
-              words_col: str | None = None) -> DataFrame:
+def vocab_top(docs: DataFrame, k: int = 25) -> DataFrame:
     """Corpus vocabulary build (the token-frequency pass a BPE/tokenizer
     training job starts from): explode whitespace tokens, hash-aggregate
     counts, top-k with a full deterministic order (count desc, token asc).
@@ -278,31 +282,24 @@ def vocab_top(docs: DataFrame, k: int = 25,
     -> TakeOrdered. Token frequency is Zipfian — the hottest tokens are
     exactly where map-side partial aggregation does its work (each
     partition emits one row per distinct token, so the shuffle carries
-    vocab-sized, not corpus-sized, data).
-
-    ``words_col`` names a pre-tokenized array column to reuse (the
-    tokenize-once-share-everywhere pattern); when absent, tokenization
-    happens scan-side."""
-    words = F.col(words_col) if words_col else _words(F.col(text_col))
-    return (docs.select(F.explode(words).alias("token"))
+    vocab-sized, not corpus-sized, data)."""
+    return (docs.select(F.explode("words").alias("token"))
             .groupBy("token").agg(F.count("*").alias("n"))
             .orderBy(F.desc("n"), F.asc("token")).limit(k))
 
 
 def repeated_ngrams(docs: DataFrame, n: int = 5, k: int = 20,
-                    min_count: int = 2, text_col: str = "text",
-                    words_col: str | None = None) -> DataFrame:
+                    min_count: int = 2) -> DataFrame:
     """Most-repeated word n-grams across the corpus (the repetition /
     boilerplate detector — C4-style cleaning drops documents dominated by
     duplicated lines; at corpus level the top repeated n-grams ARE the
     boilerplate inventory). Every occurrence counts, so duplicated
     documents surface their shingles immediately.
 
-    JVM-side throughout: split -> higher-order transform over an index
-    sequence (no UDF) -> explode -> hash count -> TakeOrdered.
-    ``words_col``: optional pre-tokenized array column to reuse."""
-    words = F.col(words_col) if words_col else _words(F.col(text_col))
-    return (docs.select(F.explode(word_ngrams(words, n)).alias("ngram"))
+    JVM-side throughout: higher-order transform over an index sequence
+    (no UDF) -> explode -> hash count -> TakeOrdered."""
+    return (docs.select(F.explode(word_ngrams(F.col("words"), n))
+                        .alias("ngram"))
             .groupBy("ngram").agg(F.count("*").alias("n"))
             .filter(F.col("n") >= min_count)
             .orderBy(F.desc("n"), F.asc("ngram")).limit(k))
@@ -385,21 +382,15 @@ def chunk_documents(docs: DataFrame, chunk_words: int = 64,
     )
 
 
-def _doc_bigrams(docs: DataFrame, text_col: str, id_col: str,
-                 words_col: str | None = None) -> DataFrame:
-    """(id, bigram) pairs — the shared scan of both lm_score passes.
-    ``words_col``: optional pre-tokenized array column to reuse."""
-    base = docs.select(F.col(id_col),
-                       (F.col(words_col) if words_col
-                        else _words(F.col(text_col))).alias("_ws"))
+def _doc_bigrams(docs: DataFrame, id_col: str) -> DataFrame:
+    """(id, bigram) pairs — the shared scan of both lm_score passes."""
+    base = docs.select(F.col(id_col), F.col("words").alias("_ws"))
     return base.select(F.col(id_col),
                        F.explode(word_ngrams(F.col("_ws"), 2))
                        .alias("bigram"))
 
 
-def lm_bigram_model(docs: DataFrame, text_col: str = "text",
-                    id_col: str = "doc_id",
-                    words_col: str | None = None,
+def lm_bigram_model(docs: DataFrame, id_col: str = "doc_id",
                     doc_bg: DataFrame | None = None) -> tuple:
     """PASS 1 of the at-scale lm_score deployment: build the corpus bigram
     count model as two vocab-sized DataFrames plus the vocabulary size —
@@ -409,7 +400,7 @@ def lm_bigram_model(docs: DataFrame, text_col: str = "text",
     persisted (e.g. parquet) and broadcast at apply time, so the scoring
     pass over a 10^12-doc corpus never rebuilds or shuffles the model."""
     if doc_bg is None:
-        doc_bg = _doc_bigrams(docs, text_col, id_col, words_col)
+        doc_bg = _doc_bigrams(docs, id_col)
     bg_counts = doc_bg.groupBy("bigram").agg(F.count("*").alias("bg_n"))
     un_counts = (doc_bg
                  .select(F.split(F.col("bigram"), " ").getItem(0).alias("w1"))
@@ -417,15 +408,13 @@ def lm_bigram_model(docs: DataFrame, text_col: str = "text",
     # per-doc array_distinct BEFORE the explode: the distinct-count is
     # unchanged, the exploded row volume drops to the per-doc distinct
     # vocabulary (guide §2.3, aggregate before you shuffle)
-    wcol = F.col(words_col) if words_col else _words(F.col(text_col))
-    vocab = (docs.select(F.explode(F.array_distinct(wcol)).alias("t"))
+    vocab = (docs.select(F.explode(F.array_distinct("words")).alias("t"))
              .agg(F.count_distinct("t")).first()[0])
     return bg_counts, un_counts, int(vocab)
 
 
-def lm_score(docs: DataFrame, text_col: str = "text",
-             id_col: str = "doc_id", model: tuple | None = None,
-             words_col: str | None = None,
+def lm_score(docs: DataFrame, id_col: str = "doc_id",
+             model: tuple | None = None,
              doc_bg: DataFrame | None = None) -> DataFrame:
     """Statistical language-model quality score (the perplexity-filter
     step of C4/CCNet-style curation, with EXACT corpus counts instead of
@@ -440,8 +429,10 @@ def lm_score(docs: DataFrame, text_col: str = "text",
     - ``model=None`` (single-pass): corpus counts as windows over the
       distinct keys of the SAME (doc, bigram) frame — two vocab-sized
       aggregates (map-side partial agg) joined back on the bigram key,
-      then one per-doc mean. This is the oracle-checked form.
-    - ``model=lm_bigram_model(...)`` (two-pass, the at-scale path): the
+      then one per-doc mean. This is the reference the two-pass form
+      is tested against (tests/test_plans.py).
+    - ``model=lm_bigram_model(...)`` (two-pass, the at-scale path and
+      the form ``doc_lm_score`` runs, so the oracle-checked one): the
       persisted count model is BROADCAST onto the corpus's (doc, bigram)
       pairs — the corpus scan reaches the per-doc aggregate without a
       single corpus-sized shuffle (the only Exchange left is the doc-keyed
@@ -451,14 +442,12 @@ def lm_score(docs: DataFrame, text_col: str = "text",
     from pyspark.sql import Window
 
     if doc_bg is None:
-        doc_bg = _doc_bigrams(docs, text_col, id_col, words_col)
+        doc_bg = _doc_bigrams(docs, id_col)
     w1 = F.split(F.col("bigram"), " ").getItem(0)
     if model is None:
         bg_n = F.count("*").over(Window.partitionBy("bigram"))
         un_n = F.count("*").over(Window.partitionBy(w1))
-        words = (F.col(words_col) if words_col
-                 else _words(F.col(text_col)))
-        vocab = docs.select(F.explode(F.array_distinct(words)).alias("t")) \
+        vocab = docs.select(F.explode(F.array_distinct("words")).alias("t")) \
             .agg(F.count_distinct("t")).first()[0]
         scored = doc_bg.select(
             F.col(id_col),
@@ -729,9 +718,8 @@ def mixture_sample(docs: DataFrame, rates: dict, default_rate: float = 1.0,
     return docs.filter(F.pmod(fp, F.lit(resolution)) < thr)
 
 
-def collocations(docs: DataFrame, k: int = 20, min_count: int = 5,
-                 text_col: str = "text",
-                 words_col: str | None = None) -> DataFrame:
+def collocations(docs: DataFrame, k: int = 20,
+                 min_count: int = 5) -> DataFrame:
     """Top-k collocations (PMI-style lift): word bigrams that co-occur far
     more often than their unigram frequencies predict — the phrase-mining
     pass (new-terminology discovery, tokenizer merge candidates, boilerplate
@@ -760,12 +748,8 @@ def collocations(docs: DataFrame, k: int = 20, min_count: int = 5,
     denominator.
 
     Returns (w1, w2, n_xy, n_x, n_y, score_ppb), k rows.
-    ``words_col``: optional pre-tokenized array column to reuse.
     """
-    # words materialized first (see word_ngrams: inline split in the
-    # lambda re-tokenizes per pair on the interpreted path)
-    wbase = docs.select((F.col(words_col) if words_col
-                         else _words(F.col(text_col))).alias("_ws"))
+    wbase = docs.select(F.col("words").alias("_ws"))
     words = F.col("_ws")
     pairs = F.when(
         F.size(words) >= 2,
@@ -816,13 +800,11 @@ def exact_quantile_bins(docs: DataFrame, q: int = 10,
     """
     hist = (docs.groupBy(F.col(value_col).cast("long").alias("v"))
             .agg(F.count("*").alias("cnt")))
-    # single-partition window BY CONSTRUCTION: its input is the histogram
-    # aggregate above (distinct-value-sized, never corpus-sized — pinned in
-    # tests/test_plans.py). The constant partition key makes that intent
-    # explicit and silences WindowExec's no-partition warning, which would
-    # otherwise read as an at-scale defect; execution is identical (one
-    # partition either way).
-    w = (Window.partitionBy(F.lit(0)).orderBy("v")
+    # a single-partition window: its input is the value histogram above
+    # (distinct-value-sized, never the corpus — pinned in
+    # tests/test_plans.py), so WindowExec's "No Partition Defined" warning
+    # is expected here
+    w = (Window.orderBy("v")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     cum = hist.select("v", F.sum("cnt").over(w).alias("cum"))
     n_total = docs.groupBy().agg(F.count("*").alias("n"))
@@ -841,9 +823,7 @@ def exact_quantile_bins(docs: DataFrame, q: int = 10,
 
 def inverted_index(docs: DataFrame, min_df: int = 2, max_df: int = 8,
                    min_len: int = 8, ngram: int = 1,
-                   text_col: str = "text",
-                   id_col: str = "doc_id",
-                   words_col: str | None = None) -> DataFrame:
+                   id_col: str = "doc_id") -> DataFrame:
     """Posting-list build for mid-rarity terms — the retrieval-index /
     concordance pass (which documents mention this term/phrase?), df-banded
     so the output is the interesting tail, not the stopword head. With
@@ -863,8 +843,7 @@ def inverted_index(docs: DataFrame, min_df: int = 2, max_df: int = 8,
 
     Returns (token, df BIGINT, postings STRING).
     """
-    posts = _posting_ids(docs, min_df, max_df, min_len, ngram,
-                         text_col, id_col, words_col=words_col)
+    posts = _posting_ids(docs, min_df, max_df, min_len, ngram, id_col)
     return posts.select(
         "token", "df",
         F.array_join(
@@ -873,16 +852,10 @@ def inverted_index(docs: DataFrame, min_df: int = 2, max_df: int = 8,
 
 
 def _posting_ids(docs: DataFrame, min_df: int, max_df: int, min_len: int,
-                 ngram: int, text_col: str, id_col: str,
-                 words_col: str | None = None) -> DataFrame:
+                 ngram: int, id_col: str) -> DataFrame:
     """Shared posting-list core: (token, df BIGINT, ids array) with df in
-    [min_df, max_df] — so every ids array is bounded by max_df.
-    ``words_col`` names a PRE-TOKENIZED array column to reuse (the
-    tokenize-once-share-everywhere pattern for a session running several
-    retrieval queries); when absent, tokenization happens scan-side."""
-    docs = docs.select(
-        "*", (F.col(words_col) if words_col
-              else _words(F.col(text_col))).alias("_pws"))
+    [min_df, max_df] — so every ids array is bounded by max_df."""
+    docs = docs.select("*", F.col("words").alias("_pws"))
     words = F.col("_pws")
     terms = word_ngrams(words, ngram) if ngram > 1 else words
     toks = F.array_distinct(
@@ -896,9 +869,7 @@ def _posting_ids(docs: DataFrame, min_df: int, max_df: int, min_len: int,
 
 def related_doc_pairs(docs: DataFrame, min_shared: int = 2,
                       min_df: int = 2, max_df: int = 8, min_len: int = 1,
-                      ngram: int = 3, text_col: str = "text",
-                      id_col: str = "doc_id",
-                      words_col: str | None = None) -> DataFrame:
+                      ngram: int = 3, id_col: str = "doc_id") -> DataFrame:
     """Related-document candidate pairs via shared MID-RARITY phrases: two
     docs are related when they co-occur on >= min_shared posting lists of
     df-banded terms (the "more like this" retrieval pass, and a third
@@ -914,8 +885,7 @@ def related_doc_pairs(docs: DataFrame, min_shared: int = 2,
 
     Returns (id_a, id_b, shared_terms BIGINT), id_a < id_b, unordered set.
     """
-    posts = _posting_ids(docs, min_df, max_df, min_len, ngram,
-                         text_col, id_col, words_col=words_col)
+    posts = _posting_ids(docs, min_df, max_df, min_len, ngram, id_col)
     pairs = (posts.select(F.explode("ids").alias("id_a"), "ids")
              .select("id_a", F.explode("ids").alias("id_b"))
              .filter(F.col("id_a") < F.col("id_b")))
@@ -961,8 +931,7 @@ def bpe_pair_counts(docs: DataFrame, k: int = 20,
 
 
 def tfidf_topk(docs: DataFrame, terms: list, k: int = 20,
-               text_col: str = "text", id_col: str = "doc_id",
-               words_col: str | None = None) -> DataFrame:
+               id_col: str = "doc_id") -> DataFrame:
     """Ranked retrieval: top-k documents for a bag-of-terms query under
     tf-idf scoring with an exact-integer idf (idf_ppb = N * 1e9 DIV df) —
     float-free on purpose so the ranking is bit-identical on any engine
@@ -986,8 +955,7 @@ def tfidf_topk(docs: DataFrame, terms: list, k: int = 20,
 
     Returns (doc_id, score_ppb BIGINT), k rows, ties pinned by doc_id.
     """
-    words = F.col(words_col) if words_col else _words(F.col(text_col))
-    hits = F.filter(words, lambda x: x.isin(*terms))
+    hits = F.filter(F.col("words"), lambda x: x.isin(*terms))
     tf = (docs.select(F.col(id_col), F.explode(hits).alias("term"))
           .groupBy(id_col, "term").agg(F.count("*").alias("tf")))
     df_t = tf.groupBy("term").agg(
@@ -1051,8 +1019,7 @@ def fingerprint(docs: DataFrame, text_col: str = "text",
 def rank_fusion_topk(docs: DataFrame, terms: list, k: int = 20,
                      pool: int = 100, rrf_k: int = 60,
                      text_col: str = "text",
-                     id_col: str = "doc_id",
-                     words_col: str | None = None) -> DataFrame:
+                     id_col: str = "doc_id") -> DataFrame:
     """Reciprocal-rank fusion of two retrieval rankings — the standard way
     to merge heterogeneous scorers (here: tf-idf relevance for a term
     query x a length prior; in production: BM25 x embedding-ANN) without
@@ -1068,21 +1035,18 @@ def rank_fusion_topk(docs: DataFrame, terms: list, k: int = 20,
 
     Returns (doc_id, fused_ppb BIGINT), k rows, ties pinned by doc_id.
     """
-    # both ranking windows run single-partition BY CONSTRUCTION: their
-    # inputs are top-`pool` frames (tfidf_topk's limit / the TakeOrdered
-    # length prior — pinned in tests/test_plans.py), never the corpus. The
-    # constant partition key documents that and silences WindowExec's
-    # no-partition warning; execution is identical (one partition each way).
-    w_pool = Window.partitionBy(F.lit(0))
-    r1 = (tfidf_topk(docs, terms, k=pool, text_col=text_col,
-                     id_col=id_col, words_col=words_col)
+    # both ranking windows run single-partition: their inputs are
+    # top-`pool` frames (tfidf_topk's limit / the TakeOrdered length prior
+    # — pinned in tests/test_plans.py), never the corpus, so WindowExec's
+    # "No Partition Defined" warning is expected here
+    r1 = (tfidf_topk(docs, terms, k=pool, id_col=id_col)
           .withColumn("rank", F.row_number().over(
-              w_pool.orderBy(F.desc("score_ppb"), F.asc(id_col))))
+              Window.orderBy(F.desc("score_ppb"), F.asc(id_col))))
           .select(id_col, "rank"))
     r2 = (docs.select(id_col, F.length(text_col).cast("long").alias("len"))
           .orderBy(F.desc("len"), F.asc(id_col)).limit(pool)
           .withColumn("rank", F.row_number().over(
-              w_pool.orderBy(F.desc("len"), F.asc(id_col))))
+              Window.orderBy(F.desc("len"), F.asc(id_col))))
           .select(id_col, "rank"))
     contrib = F.expr(f"CAST(1000000000 DIV ({rrf_k} + rank) AS BIGINT)")
     fused = (r1.select(id_col, contrib.alias("c"))

@@ -60,7 +60,6 @@ class SinkSpec:
     log_type: str
     table: str
     columns: Optional[Sequence[str]] = None   # None = full schema width
-    anonymize: bool = True
     payload: str = "columns"
 
 
@@ -71,11 +70,7 @@ class PipelineConfig:
     out_root: str
     sinks: List[SinkSpec]
     n_buckets: int = 64
-    audit_dims: Sequence[str] = ("source_address", "destination_address",
-                                 "device_name")
-    write_rejects: bool = True
     partitions_per_run: Optional[int] = None   # task parallelism; default 2x cores
-    writer: Optional[object] = None   # injected sink writer; default make_writer
 
 
 @dataclass
@@ -96,6 +91,12 @@ STAGE_TABLE = "_parsed_stage"
 METRICS_TABLE = "_metrics"
 AUDIT_TABLE = "_audit"
 REJECTS_TABLE = "_rejects"
+
+# the analytic dimensions the fact table keeps (default_sinks), and the
+# ones whose originals the audit sink records beside their tokens
+DIMS = ("source_address", "destination_address", "rule_name", "source_user",
+        "application", "action", "device_name")
+AUDIT_DIMS = ("source_address", "destination_address", "device_name")
 
 
 # concurrent fan-out jobs: enough to hide per-job commit latency, FIXED
@@ -131,47 +132,34 @@ def pick_by_type(positions: Sequence[Tuple[str, int]]) -> Column:
 
 
 def field_by_type(name: str, positions: Dict[str, int],
-                  anon_by_type: Dict[str, Optional[CompiledAnonymizer]]
-                  ) -> Column:
+                  anon: Optional[CompiledAnonymizer]) -> Column:
     """One column for field `name` across several log types, anonymized
-    ONCE per anonymizer (not once per type). A Python UDF inside a when
-    branch runs on every input row whichever branch the row takes, so a
-    per-type tokenize chain costs one UDF per (type, field); picking the
-    position first and anonymizing the picked value costs one per field."""
-    groups: Dict[int, tuple] = {}   # id(anonymizer) -> (anonymizer, positions)
-    for t, pos in positions.items():
-        a = anon_by_type[t]
-        groups.setdefault(id(a), (a, []))[1].append((t, pos))
-    out = None
-    for a, pairs in groups.values():
-        c = pick_by_type(pairs)
-        if a is not None:
-            c = anonymize_expr(c, a.plan_for(name), a.default_salt)
-        if len(groups) == 1:
-            return c
-        cond = F.col("log_type").isin([t for t, _ in pairs])
-        out = F.when(cond, c) if out is None else out.when(cond, c)
-    return out
+    ONCE (not once per type). A Python UDF inside a when branch runs on
+    every input row whichever branch the row takes, so a per-type tokenize
+    chain costs one UDF per (type, field); picking the position first and
+    anonymizing the picked value costs one per field."""
+    c = pick_by_type(list(positions.items()))
+    if anon is not None:
+        c = anonymize_expr(c, anon.plan_for(name), anon.default_salt)
+    return c
 
 
 def build_map_payload(parsed: DataFrame, schema: CompiledSchema,
-                      anon_by_type: Dict[str, Optional[CompiledAnonymizer]]
-                      ) -> DataFrame:
+                      types: Sequence[str],
+                      anon: Optional[CompiledAnonymizer]) -> DataFrame:
     """Type-erased map<string,string> payload for the long-tail map sinks:
     each anonymized field name first becomes one column (field_by_type:
     one tokenize per name over all types), then a when chain over the
     configured types zips each type's schema names with its split fields,
     reading the anonymized names from those columns."""
-    types = list(anon_by_type)
     df = fields_col(parsed.filter(
         (F.col("status") == STATUS_OK) & F.col("log_type").isin(types)))
     anon_pos: Dict[str, Dict[str, int]] = {}   # name -> {log_type: position}
     for t in types:
-        a = anon_by_type[t]
         for name, pos in schema.effective_positions(t):
-            if a is not None and a.plan_for(name).mode is not None:
+            if anon is not None and anon.plan_for(name).mode is not None:
                 anon_pos.setdefault(name, {})[t] = pos
-    df = df.withColumns({f"_anon_{n}": field_by_type(n, pos, anon_by_type)
+    df = df.withColumns({f"_anon_{n}": field_by_type(n, pos, anon)
                          for n, pos in anon_pos.items()})
     payload = None
     for t in types:
@@ -223,8 +211,7 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig,
     # Iceberg when the runtime has it (north rule: Iceberg sinks; out_root is
     # then a catalog namespace), parquet-dirs otherwise — same idempotent
     # replace-only-touched-partitions semantics either way
-    writer = (make_writer(spark, cfg.out_root) if cfg.writer is None
-              else cfg.writer)
+    writer = make_writer(spark, cfg.out_root)
 
     bucketed = with_bucket(pages, cfg.n_buckets)
 
@@ -262,7 +249,7 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig,
     # split is the expensive kernel; paying it once in the stage pass keeps
     # the fan-out phase pure column reads)
     audit_dims_active = [
-        d for d in cfg.audit_dims
+        d for d in AUDIT_DIMS
         if anon is not None and anon.plan_for(d).mode is not None
     ]
     if audit_dims_active:
@@ -339,7 +326,7 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig,
     def write_sink(sink: SinkSpec) -> None:
         projected = project_type(
             parsed, schema, sink.log_type, columns=sink.columns,
-            anon=anon if sink.anonymize else None,
+            anon=anon,
             extra_cols=("bucket",),   # idempotent partition overwrite key
         )
         writer.write(projected, sink.table, partition_by=["bucket"])
@@ -364,13 +351,12 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig,
         BENCH/BASELINE.md) dominated two nearly-empty write jobs — folding
         them is the N->4N efficiency lever, since fixed cost is what does
         NOT shrink with cores."""
-        anon_by_type = {s.log_type: anon if s.anonymize else None
-                        for s in sinks_in_table}
+        types = [s.log_type for s in sinks_in_table]
         positions: Dict[str, Dict[str, int]] = {}   # name -> {type: pos}
         for s in sinks_in_table:
             for name, pos in sink_positions(s):
                 positions.setdefault(name, {})[s.log_type] = pos
-        cols = [field_by_type(n, p, anon_by_type).alias(n)
+        cols = [field_by_type(n, p, anon).alias(n)
                 for n, p in positions.items()]
         # the column order of a by-name union of per-type projections: the
         # first type's fields, the enrichment pair, then the fields only
@@ -378,7 +364,7 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig,
         k = len(sink_positions(sinks_in_table[0]))
         out = fields_col(parsed.filter(
             (F.col("status") == STATUS_OK)
-            & F.col("log_type").isin(list(anon_by_type)))).select(
+            & F.col("log_type").isin(types))).select(
             "url", "line_ordinal", *cols[:k], "raw_excerpt", "hash64",
             *cols[k:], "log_type", "bucket")
         writer.write(out, sinks_in_table[0].table,
@@ -394,8 +380,7 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig,
         x T types the dir count would pressure catalog metadata for a
         long-tail table that is rarely read per-type."""
         out = build_map_payload(
-            parsed, schema,
-            {s.log_type: (anon if s.anonymize else None) for s in map_sinks})
+            parsed, schema, [s.log_type for s in map_sinks], anon)
         writer.write(out.sortWithinPartitions("bucket", "log_type"),
                      map_sinks[0].table, partition_by=["bucket"])
 
@@ -433,8 +418,7 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig,
             jobs.append((table, lambda s=group[0]: write_sink(s)))
         else:
             jobs.append((table, lambda g=group: write_columnar_group(g)))
-    if cfg.write_rejects:
-        jobs.append(("rejects", write_rejects))
+    jobs.append(("rejects", write_rejects))
     jobs.append(("fine_stats", collect_fine_stats))
     if audit_dims_active:
         jobs.append(("audit", write_audit))
@@ -512,30 +496,21 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig,
     )
 
 
-def default_sinks(schema: CompiledSchema,
-                  narrow: bool = True) -> List[SinkSpec]:
-    """One sink per log type. With `narrow` (the at-scale shape):
-    TRAFFIC/THREAT — the high-volume types — get columnar projections
-    pruned to the analytic dimensions, folded into ONE shared table
-    partitioned by (log_type, bucket) and written by ONE job; the long
-    tail of low-volume types shares one map-payload table (also a single
-    write job, partitioned per type). Three write jobs total (fact table,
-    map table, rejects) regardless of how many log types the schema has.
-    narrow=False gives every type its own full-width columnar table (the
-    reference-NDJSON-parity shape)."""
-    dims = ["source_address", "destination_address", "rule_name",
-            "source_user", "application", "action", "device_name"]
+def default_sinks(schema: CompiledSchema) -> List[SinkSpec]:
+    """One sink per log type, in three write jobs however many log types
+    the schema has (fact table, map table, rejects): TRAFFIC/THREAT, the
+    high-volume types, get columnar projections pruned to the analytic
+    DIMS, folded into ONE `sink_fact` table partitioned by (log_type,
+    bucket) and written by ONE job; the long tail of low-volume types
+    shares the `sink_other` map-payload table (also one write job). A
+    full-width table per type is an explicit
+    ``SinkSpec(t, f"sink_{t.lower()}")`` in the config's sink list."""
     sinks = []
     for t in sorted(schema.type_to_fields):
-        if narrow and t == "TRAFFIC":
-            sinks.append(SinkSpec(t, "sink_fact", columns=dims))
-        elif narrow and t == "THREAT":
+        if t in ("TRAFFIC", "THREAT"):
             names = set(schema.type_to_fields[t])
-            sinks.append(SinkSpec(
-                t, "sink_fact",
-                columns=[d for d in dims if d in names]))
-        elif narrow:
-            sinks.append(SinkSpec(t, "sink_other", payload="map"))
+            sinks.append(SinkSpec(t, "sink_fact",
+                                  columns=[d for d in DIMS if d in names]))
         else:
-            sinks.append(SinkSpec(t, f"sink_{t.lower()}", columns=None))
+            sinks.append(SinkSpec(t, "sink_other", payload="map"))
     return sinks

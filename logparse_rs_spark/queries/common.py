@@ -29,6 +29,7 @@ from logparse_rs_spark.operators.dedup import (canonical_signatures,
 from logparse_rs_spark.operators.graph import connected_components
 from logparse_rs_spark.operators.parse import parse_pages, project_type
 from logparse_rs_spark.operators.text import _words
+from logparse_rs_spark.plans.pipeline import DIMS
 from logparse_rs_spark.schema import load_schema
 from logparse_rs_spark.shared import shared
 from logparse_rs_spark.streaming.stream import run_available_now
@@ -44,9 +45,6 @@ ORACLE_SF = "sf0.01"
 # triggers: each costs about a full trigger cycle, and 2 already prove
 # cross-batch suppression (state survives a trigger boundary)
 STREAM_BATCHES = 2
-
-DIMS = ["source_address", "destination_address", "rule_name", "source_user",
-        "application", "action", "device_name"]
 
 
 @functools.cache
@@ -224,7 +222,9 @@ def _doc_components(spark, sf_dir):
     # the propagation result is a checkpointed frame — compute once
     # per (session, sf) and share between the cluster-derived queries.
     # Star contraction (O(log n) rounds on any graph shape) is the
-    # at-scale path; the oracle gate therefore exercises it
+    # at-scale path; at sf0.01 the edge list fits the `components`
+    # collect gate, so the oracle gate runs the local numpy path and
+    # only a `shared.BUDGET = 0` run reaches the star rounds
     return shared(spark, "doc_components", f"{sf_dir}/documents.parquet",
                   lambda: connected_components(_doc_pairs(spark, sf_dir)))
 

@@ -271,12 +271,12 @@ def doc_stratified_sample(spark, sf_dir):
 
 
 def doc_vocab_top25(spark, sf_dir):
-    return vocab_top(_tok_docs(spark, sf_dir), k=25, words_col="words")
+    return vocab_top(_tok_docs(spark, sf_dir), k=25)
 
 
 def doc_repeated_5grams(spark, sf_dir):
     return repeated_ngrams(_tok_docs(spark, sf_dir), n=5, k=20,
-                           min_count=2, words_col="words")
+                           min_count=2)
 
 
 def doc_lang_rebalance(spark, sf_dir):
@@ -324,8 +324,7 @@ def doc_span_novelty(spark, sf_dir):
     # first-occurrence attribution: per doc, the fraction of its
     # distinct 8-word spans FIRST seen in this doc (min owning id) —
     # the inverse of doc_duplicate_spans, same inverted-index shape
-    return span_novelty(_tok_docs(spark, sf_dir), n=8,
-                        words_col="words")
+    return span_novelty(_tok_docs(spark, sf_dir), n=8)
 
 
 def doc_source_overlap(spark, sf_dir):
@@ -394,10 +393,9 @@ def doc_lm_score(spark, sf_dir):
     # materializes once per call instead of three times
     docs = _tok_docs(spark, sf_dir)
     bg = shared(spark, "lm_bigrams", f"{sf_dir}/documents.parquet",
-                lambda: _doc_bigrams(docs, "text", "doc_id",
-                                     words_col="words").persist())
-    model = lm_bigram_model(docs, words_col="words", doc_bg=bg)
-    return lm_score(docs, model=model, words_col="words", doc_bg=bg)
+                lambda: _doc_bigrams(docs, "doc_id").persist())
+    model = lm_bigram_model(docs, doc_bg=bg)
+    return lm_score(docs, model=model, doc_bg=bg)
 
 
 def doc_rare_terms(spark, sf_dir):
@@ -635,8 +633,7 @@ def doc_collocations(spark, sf_dir):
     # PMI-style collocation mining, ranked by exact integer lift
     # (n_xy * 1e9 DIV (n_x * n_y)) — no float division anywhere on
     # either engine; corpus never shuffles, only vocab-sized frames.
-    return collocations(_tok_docs(spark, sf_dir), k=20, min_count=5,
-                        words_col="words")
+    return collocations(_tok_docs(spark, sf_dir), k=20, min_count=5)
 
 
 def doc_length_deciles(spark, sf_dir):
@@ -653,7 +650,7 @@ def doc_inverted_index(spark, sf_dir):
     # before the explode, postings as a comma-joined ascending id
     # string (engine-neutral render).
     return inverted_index(_tok_docs(spark, sf_dir), min_df=2, max_df=8,
-                          min_len=1, ngram=3, words_col="words")
+                          min_len=1, ngram=3)
 
 
 def doc_related_pairs(spark, sf_dir):
@@ -661,8 +658,7 @@ def doc_related_pairs(spark, sf_dir):
     # trigram posting lists — pair explosion bounded by max_df per
     # term, never by corpus size.
     return related_doc_pairs(_tok_docs(spark, sf_dir), min_shared=2,
-                             min_df=2, max_df=8, min_len=1, ngram=3,
-                             words_col="words")
+                             min_df=2, max_df=8, min_len=1, ngram=3)
 
 
 def doc_bpe_pairs(spark, sf_dir):
@@ -677,8 +673,7 @@ def doc_tfidf_topk(spark, sf_dir):
     # tf-idf (idf_ppb = N * 1e9 DIV df) — scan keeps only query-term
     # hits, df/N computed in-plan and broadcast (no driver collect).
     return tfidf_topk(_tok_docs(spark, sf_dir),
-                      terms=["vector", "window", "customer"], k=20,
-                      words_col="words")
+                      terms=["vector", "window", "customer"], k=20)
 
 
 def doc_decile_stats(spark, sf_dir):
@@ -703,7 +698,7 @@ def doc_rank_fusion(spark, sf_dir):
     # pool — no global sort, pool-sized windows and join only.
     return rank_fusion_topk(_tok_docs(spark, sf_dir),
                             terms=["vector", "window", "customer"],
-                            k=20, pool=100, words_col="words")
+                            k=20, pool=100)
 
 
 def doc_sequential_ids(spark, sf_dir):
@@ -747,8 +742,7 @@ def doc_duplicate_spans(spark, sf_dir):
     # its distinct 8-word spans occur in >=1 other doc (the
     # document-level signal behind substring-level dedup). Exact
     # integer ppm output.
-    return duplicate_span_stats(_tok_docs(spark, sf_dir), n=8,
-                                words_col="words")
+    return duplicate_span_stats(_tok_docs(spark, sf_dir), n=8)
 
 
 def doc_span_scrubbed(spark, sf_dir):
@@ -756,8 +750,7 @@ def doc_span_scrubbed(spark, sf_dir):
     # span shared across >=2 docs; untouched docs keep their original
     # bytes, edited docs rebuild from surviving (lowercased) tokens.
     # Content pinned via portable md5 of the output text.
-    out = remove_duplicate_spans(_tok_docs(spark, sf_dir), n=8,
-                                 words_col="words")
+    out = remove_duplicate_spans(_tok_docs(spark, sf_dir), n=8)
     return out.select("doc_id", F.md5("text").alias("text_md5"),
                       "n_removed")
 
@@ -770,8 +763,7 @@ def doc_decontaminated(spark, sf_dir):
     ev = (_docs(spark, sf_dir)
           .filter(F.pmod(F.col("doc_id"), F.lit(17)) == 0)
           .select("doc_id", "text"))
-    out = remove_contaminated_spans(_tok_docs(spark, sf_dir), ev,
-                                    n=8, words_col="words")
+    out = remove_contaminated_spans(_tok_docs(spark, sf_dir), ev, n=8)
     return out.select("doc_id", F.md5("text").alias("text_md5"),
                       "n_removed")
 

@@ -27,8 +27,7 @@ def _query_vectors(emb):
 
 def emb_bruteforce_topk(spark, sf_dir):
     emb = _emb(spark, sf_dir)
-    return brute_force_topk(emb, _query_vectors(emb), k=5) \
-        .withColumn("cos_sim", F.round("cos_sim", 6))
+    return brute_force_topk(emb, _query_vectors(emb), k=5)
 
 
 def emb_lsh_topk(spark, sf_dir):

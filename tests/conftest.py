@@ -28,3 +28,14 @@ def sample_anon():
     from logparse_rs_spark.anonymizer import load_anonymizer
 
     return load_anonymizer(os.path.join(ROOT, "configs", "anonymizer.sample.json"))
+
+
+def with_words(docs):
+    """``docs`` plus the ``words`` array column the word-level text
+    operators read, tokenized from ``text`` as the query layer's
+    ``_tok_docs`` does."""
+    from pyspark.sql import functions as F
+
+    from logparse_rs_spark.operators.text import _words
+
+    return docs.withColumn("words", _words(F.col("text")))

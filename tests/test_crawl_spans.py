@@ -11,6 +11,7 @@ shape of the policy operator, and span de-duplication within a doc.
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import with_words
 from logparse_rs_spark.operators.crawl import (apply_url_policy,
                                                frontier_schedule)
 from logparse_rs_spark.operators.dedup import duplicate_span_stats
@@ -89,7 +90,7 @@ class TestDuplicateSpanStats:
             [(1, shared), (2, shared), (3, "five six seven eight")],
             "doc_id long, text string")
         out = {r.doc_id: r for r in
-               duplicate_span_stats(docs, n=4).collect()}
+               duplicate_span_stats(with_words(docs), n=4).collect()}
         assert out[1].n_spans == 1 and out[1].n_shared == 1
         assert out[1].shared_ppm == 1_000_000
         assert out[3].n_shared == 0 and out[3].shared_ppm == 0
@@ -97,7 +98,7 @@ class TestDuplicateSpanStats:
     def test_short_docs_have_no_spans(self, spark):
         docs = spark.createDataFrame([(1, "too short")],
                                      "doc_id long, text string")
-        assert duplicate_span_stats(docs, n=4).count() == 0
+        assert duplicate_span_stats(with_words(docs), n=4).count() == 0
 
     def test_within_doc_repeats_count_once(self, spark):
         """array_distinct: a span repeated inside ONE doc is not 'shared'."""
@@ -105,7 +106,7 @@ class TestDuplicateSpanStats:
             [(1, "a b c d a b c d"), (2, "x y z w")],
             "doc_id long, text string")
         out = {r.doc_id: r for r in
-               duplicate_span_stats(docs, n=4).collect()}
+               duplicate_span_stats(with_words(docs), n=4).collect()}
         # doc 1 has 5 raw spans but 'a b c d' appears twice -> 4 distinct;
         # none occur in doc 2
         assert out[1].n_spans == 4
@@ -316,7 +317,7 @@ class TestRemoveDuplicateSpans:
         from logparse_rs_spark.operators.dedup import remove_duplicate_spans
         docs = spark.createDataFrame(rows, "doc_id long, text string")
         return {r.doc_id: r for r in
-                remove_duplicate_spans(docs, n=n).collect()}
+                remove_duplicate_spans(with_words(docs), n=n).collect()}
 
     def test_shared_span_removed_unique_tail_kept(self, spark):
         shared = "alpha beta gamma delta"
@@ -373,7 +374,7 @@ class TestRemoveContaminatedSpans:
         ev = spark.createDataFrame([(100, bench)],
                                    "doc_id long, text string")
         out = {r.doc_id: r for r in
-               remove_contaminated_spans(docs, ev, n=4).collect()}
+               remove_contaminated_spans(with_words(docs), ev, n=4).collect()}
         assert out[1].text == "intro words outro"
         assert out[1].n_removed == 8
         assert out[2].text == "totally clean document here today"
@@ -386,7 +387,7 @@ class TestRemoveContaminatedSpans:
                                      "doc_id long, text string")
         ev = spark.createDataFrame([(9, "a b c d")],
                                    "doc_id long, text string")
-        plan = (remove_contaminated_spans(docs, ev, n=4)
+        plan = (remove_contaminated_spans(with_words(docs), ev, n=4)
                 ._jdf.queryExecution().executedPlan().toString())
         assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
 

@@ -6,6 +6,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import with_words
 from logparse_rs_spark import shared
 
 DEFAULT_BUDGET = shared.BUDGET
@@ -566,7 +567,8 @@ class TestVocabAndNgrams:
         rows = docs.select("text").collect()
         c = Counter(w for r in rows for w in r["text"].lower().split())
         want = sorted(c.items(), key=lambda kv: (-kv[1], kv[0]))[:25]
-        got = [(r["token"], r["n"]) for r in vocab_top(docs, k=25).collect()]
+        got = [(r["token"], r["n"])
+               for r in vocab_top(with_words(docs), k=25).collect()]
         assert got == want
 
     def test_repeated_ngrams_match_python(self, spark, docs):
@@ -581,7 +583,8 @@ class TestVocabAndNgrams:
         want = sorted(((g, n) for g, n in c.items() if n >= 2),
                       key=lambda kv: (-kv[1], kv[0]))[:20]
         got = [(r["ngram"], r["n"])
-               for r in repeated_ngrams(docs, n=5, k=20, min_count=2).collect()]
+               for r in repeated_ngrams(with_words(docs), n=5, k=20,
+                                        min_count=2).collect()]
         assert got == want
 
     def test_short_doc_yields_no_ngrams(self, spark):
@@ -589,7 +592,7 @@ class TestVocabAndNgrams:
         from logparse_rs_spark.operators.text import repeated_ngrams
         df = spark.createDataFrame(pd.DataFrame(
             {"doc_id": [1, 2], "text": ["a b c d", "a b c d"]}))
-        assert repeated_ngrams(df, n=5, min_count=1).count() == 0
+        assert repeated_ngrams(with_words(df), n=5, min_count=1).count() == 0
 
 
 class TestFingerprintSample:
@@ -875,16 +878,18 @@ class TestLmScore:
         rows.append((99, "zxq vpw qqj mnb xkcd wvut plok"))
         df = spark.createDataFrame(
             pd.DataFrame(rows, columns=["doc_id", "text"]))
-        got = {r["doc_id"]: r["lm_score"] for r in lm_score(df).collect()}
+        got = {r["doc_id"]: r["lm_score"]
+               for r in lm_score(with_words(df)).collect()}
         assert got[99] == min(got.values())
         assert all(got[i] == got[0] for i in range(20))
 
     def test_partitioning_invariant_counts(self, spark, docs):
         from logparse_rs_spark.operators.text import lm_score
         a = {r["doc_id"]: r["n_bigrams"]
-             for r in lm_score(docs.limit(50)).collect()}
+             for r in lm_score(with_words(docs.limit(50))).collect()}
         b = {r["doc_id"]: r["n_bigrams"]
-             for r in lm_score(docs.limit(50).repartition(7)).collect()}
+             for r in lm_score(
+                 with_words(docs.limit(50).repartition(7))).collect()}
         assert a == b
 
 
@@ -1143,7 +1148,7 @@ class TestCollocations:
         rows += [(100 + i, "the cat") for i in range(5)]
         rows += [(200 + i, "the dog") for i in range(5)]
         df = spark.createDataFrame(rows, "doc_id long, text string")
-        out = collocations(df, k=10, min_count=5).collect()
+        out = collocations(with_words(df), k=10, min_count=5).collect()
         assert out[0]["w1"] == "new" and out[0]["w2"] == "york"
         ny = out[0]
         # exact integer lift: 5 * 1e9 // (5 * 5) = 200_000_000
@@ -1156,7 +1161,7 @@ class TestCollocations:
         from logparse_rs_spark.operators.text import collocations
         df = spark.createDataFrame([(1, "rare pair"), (2, "rare pair")],
                                    "doc_id long, text string")
-        assert collocations(df, k=10, min_count=5).count() == 0
+        assert collocations(with_words(df), k=10, min_count=5).count() == 0
 
 
 class TestExactQuantileBins:
@@ -1211,7 +1216,7 @@ class TestInvertedIndex:
             (4, "singleton_token_here"),
         ], "doc_id long, text string")
         out = {r["token"]: (r["df"], r["postings"])
-               for r in inverted_index(df, min_df=2, max_df=8,
+               for r in inverted_index(with_words(df), min_df=2, max_df=8,
                                        min_len=8).collect()}
         # within-doc repeats collapse; ids ascend; df band drops the
         # singleton; short tokens (potato, extra) drop scan-side
@@ -1222,7 +1227,7 @@ class TestInvertedIndex:
         df = spark.createDataFrame(
             [(i, "everywhere_token") for i in range(20)],
             "doc_id long, text string")
-        assert inverted_index(df, min_df=2, max_df=8,
+        assert inverted_index(with_words(df), min_df=2, max_df=8,
                               min_len=8).count() == 0
 
     def test_ngram_phrase_postings(self, spark):
@@ -1235,7 +1240,7 @@ class TestInvertedIndex:
             (3, "quick brown"),
         ], "doc_id long, text string")
         out = {r["token"]: (r["df"], r["postings"])
-               for r in inverted_index(df, min_df=2, max_df=8,
+               for r in inverted_index(with_words(df), min_df=2, max_df=8,
                                        min_len=1, ngram=3).collect()}
         assert out == {"quick brown fox": (2, "1,2")}
 
@@ -1254,8 +1259,9 @@ class TestRelatedDocPairs:
             (6, "common run here"),
         ], "doc_id long, text string")
         out = {(r["id_a"], r["id_b"]): r["shared_terms"]
-               for r in related_doc_pairs(df, min_shared=2, min_df=2,
-                                          max_df=2, ngram=3).collect()}
+               for r in related_doc_pairs(with_words(df), min_shared=2,
+                                          min_df=2, max_df=2,
+                                          ngram=3).collect()}
         # "alpha beta gamma" + "beta gamma delta" -> (1,2) shared 2;
         # (1,3) shares only "gamma delta epsilon" -> below min_shared
         assert out == {(1, 2): 2}
@@ -1267,8 +1273,8 @@ class TestRelatedDocPairs:
         df = spark.createDataFrame(
             [(i, "one two three four five") for i in range(20)],
             "doc_id long, text string")
-        assert related_doc_pairs(df, min_shared=1, min_df=2, max_df=8,
-                                 ngram=3).count() == 0
+        assert related_doc_pairs(with_words(df), min_shared=1, min_df=2,
+                                 max_df=8, ngram=3).count() == 0
 
 
 class TestBpePairCounts:
@@ -1302,7 +1308,7 @@ class TestTfidfTopk:
             (3, "other words"), (4, "more other"),
         ], "doc_id long, text string")
         got = {r["doc_id"]: r["score_ppb"]
-               for r in tfidf_topk(df, terms=["rare", "both"],
+               for r in tfidf_topk(with_words(df), terms=["rare", "both"],
                                    k=10).collect()}
         assert got == {1: 4_000_000_000 + 2_000_000_000,
                        2: 2 * 2_000_000_000}
@@ -1313,7 +1319,8 @@ class TestTfidfTopk:
             [(9, "term"), (3, "term"), (7, "term")],
             "doc_id long, text string")
         ids = [r["doc_id"]
-               for r in tfidf_topk(df, terms=["term"], k=2).collect()]
+               for r in tfidf_topk(with_words(df), terms=["term"],
+                                   k=2).collect()]
         assert ids == [3, 7]
 
 
@@ -1411,7 +1418,7 @@ class TestRankFusion:
             (1, "query"), (2, "x" * 50), (3, "y" * 40),
         ], "doc_id long, text string")
         got = {r["doc_id"]: r["fused_ppb"]
-               for r in rank_fusion_topk(df, terms=["query"], k=10,
+               for r in rank_fusion_topk(with_words(df), terms=["query"], k=10,
                                          pool=2).collect()}
         c = lambda r: 1000000000 // (60 + r)
         # len ranking pool=2 keeps docs 2,3; tfidf pool keeps doc 1 only
@@ -1424,7 +1431,7 @@ class TestRankFusion:
             (5, "query " + "z" * 60), (6, "w" * 30),
         ], "doc_id long, text string")
         got = {r["doc_id"]: r["fused_ppb"]
-               for r in rank_fusion_topk(df, terms=["query"], k=10,
+               for r in rank_fusion_topk(with_words(df), terms=["query"], k=10,
                                          pool=5).collect()}
         c = lambda r: 1000000000 // (60 + r)
         assert got[5] == c(1) + c(1) and got[6] == c(2)
@@ -1449,8 +1456,8 @@ class TestNewOpPlanShapes:
         from logparse_rs_spark.operators.text import related_doc_pairs
         df = spark.createDataFrame([(1, "a b c d"), (2, "a b c e")],
                                    "doc_id long, text string")
-        plan = (related_doc_pairs(df, min_shared=1, min_df=2, max_df=8,
-                                  ngram=3)
+        plan = (related_doc_pairs(with_words(df), min_shared=1, min_df=2,
+                                  max_df=8, ngram=3)
                 ._jdf.queryExecution().executedPlan().toString())
         # pair fan-out is a bounded double-explode of posting arrays —
         # never a self-join of the (token, doc) frame
@@ -1462,7 +1469,7 @@ class TestNewOpPlanShapes:
         from logparse_rs_spark.operators.text import tfidf_topk
         df = spark.createDataFrame([(1, "x y"), (2, "x")],
                                    "doc_id long, text string")
-        plan = (tfidf_topk(df, terms=["x", "y"], k=5)
+        plan = (tfidf_topk(with_words(df), terms=["x", "y"], k=5)
                 ._jdf.queryExecution().executedPlan().toString())
         # df/N ride back onto the hit frame via broadcast — the hit frame
         # must never sort-merge against the (tiny) idf side
@@ -1528,7 +1535,8 @@ class TestSpanNoveltyAndSourceOverlap:
         docs = spark.createDataFrame(
             [(0, "a b c d"), (1, "a b c d"), (2, "a b c x y")],
             "doc_id long, text string")
-        got = {r["doc_id"]: r for r in span_novelty(docs, n=3).collect()}
+        got = {r["doc_id"]: r
+               for r in span_novelty(with_words(docs), n=3).collect()}
         assert (got[0]["n_spans"], got[0]["n_novel"]) == (2, 2)
         assert got[0]["novel_ppm"] == 1000000
         assert (got[1]["n_spans"], got[1]["n_novel"]) == (2, 0)

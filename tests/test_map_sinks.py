@@ -1,6 +1,6 @@
-"""Narrow-sink tests (the default_sinks(narrow=True) shape): the long-tail
-types share one map-payload table partitioned by bucket, TRAFFIC/THREAT
-share one columnar fact table; the type-erased parsed map and the fact
+"""Narrow-sink tests (the default_sinks shape): the long-tail types
+share one map-payload table partitioned by bucket, TRAFFIC/THREAT share
+one columnar fact table; the type-erased parsed map and the fact
 columns must equal the reference implementation's parsed dict
 (anonymized), per-type routed counts stay exact, every bucket directory
 holds one file, rejects keep the reference's dispatch value, and a resumed
@@ -69,7 +69,7 @@ def narrow_cfg(full_schema, out: str) -> PipelineConfig:
         schema_path=os.path.join(ROOT, "schemas", "schema.json"),
         anonymizer_path=os.path.join(ROOT, "configs", "anonymizer.sample.json"),
         out_root=out,
-        sinks=default_sinks(full_schema, narrow=True),
+        sinks=default_sinks(full_schema),
         n_buckets=N_BUCKETS,
     )
 
@@ -190,8 +190,7 @@ class TestMapSinks:
         stage = ParquetWriter(out).read(spark, STAGE_TABLE)
         types = [s.log_type for s in default_sinks(full_schema)
                  if s.payload == "map"]
-        payload = build_map_payload(stage, full_schema,
-                                    {t: sample_anon for t in types})
+        payload = build_map_payload(stage, full_schema, types, sample_anon)
         plan = payload._jdf.queryExecution().executedPlan().toString()
         evals = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
         assert sum(len(re.findall(r"\b_tok\(", ln)) for ln in evals) == 5

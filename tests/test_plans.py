@@ -10,6 +10,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import with_words
+
 ROOT = os.path.abspath(os.path.join(os.path.dirname(__file__), ".."))
 SF = "/root/testdata/sf0.01"
 
@@ -128,8 +130,8 @@ class TestRound5Plans:
         broadcast, the only shuffle Exchange is the doc-keyed mean."""
         from logparse_rs_spark.operators.text import (lm_bigram_model,
                                                       lm_score)
-        docs = spark.read.parquet(f"{SF}/documents.parquet") \
-            .select("doc_id", "text")
+        docs = with_words(spark.read.parquet(f"{SF}/documents.parquet")
+                          .select("doc_id", "text"))
         bg, un, vocab = lm_bigram_model(docs)
         # deploy shape: the model is a persisted vocab-sized table
         bg.write.parquet(str(tmp_path / "bg"))

@@ -44,7 +44,7 @@ def test_spark_submit_pyfiles_local_cluster(tmp_path):
         "--out", out_root,
         "--schema", os.path.join(ROOT, "schemas", "schema.json"),
         "--anon", os.path.join(ROOT, "configs", "anonymizer.sample.json"),
-        "--buckets", "8", "--narrow-sinks",
+        "--buckets", "8",
     ]
     # run from OUTSIDE the repo so executors genuinely depend on --py-files
     res = subprocess.run(cmd, capture_output=True, text=True, timeout=600,
