@@ -6,9 +6,9 @@ unnecessary — each mode compiles to a column expression:
 
 - fixed     -> F.lit(const)                         (table.rs:58)
 - tokenize  -> Arrow-batched keyed-FNV pandas UDF   (table.rs:28-44)
-- map       -> small dict: F.when chain; large dict: broadcast hash join
-              (J1 in SURVEY §2.5); miss -> fallback expr; reject-miss keeps
-              the ORIGINAL value (src/lib.rs:354-359)
+- map       -> small dict: F.when chain; large dict: map-literal lookup;
+              miss -> fallback expr; reject-miss keeps the ORIGINAL value
+              (src/lib.rs:354-359)
 
 Null values are never anonymized (src/lib.rs:353) — every expression is
 null-preserving.
@@ -19,16 +19,16 @@ distinct aggregation over (pre, post) column pairs — see audit_table().
 
 from __future__ import annotations
 
-from typing import Dict, Iterable, List, Optional
+from typing import Iterable, List, Optional
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..anonymizer import CompiledAnonymizer, FieldPlan
 from ..functions import tokenize_col
 
-# above this, a map-mode dictionary becomes a broadcast join instead of a
-# when-chain (whole-stage codegen degrades on very long case chains)
+# above this, a map-mode dictionary becomes a map-literal lookup instead of
+# a when-chain (whole-stage codegen degrades on very long case chains)
 WHEN_CHAIN_MAX = 32
 
 
@@ -59,34 +59,14 @@ def anonymize_expr(col: Column, plan: FieldPlan, default_salt: str) -> Column:
                     else expr.when(col == F.lit(k), F.lit(v)))
         hit = expr.otherwise(miss) if expr is not None else miss
         return F.when(col.isNull(), F.lit(None).cast("string")).otherwise(hit)
-    # large dictionary: try_element_at on a map literal keeps it JVM-side and
-    # broadcast once per task via the literal; for very large dicts use
-    # anonymize_with_dict_join instead.
+    # large dictionary: try_element_at on a map literal keeps it JVM-side,
+    # shipped once per task with the plan
     entries: List[Column] = []
     for k, v in plan.map.items():
         entries.extend([F.lit(k), F.lit(v)])
     lookup = F.try_element_at(F.create_map(*entries), col)
     return F.when(col.isNull(), F.lit(None).cast("string")) \
             .otherwise(F.coalesce(lookup, miss))
-
-
-def anonymize_with_dict_join(df: DataFrame, spark: SparkSession, column: str,
-                             mapping: Dict[str, str], miss: Column) -> DataFrame:
-    """Broadcast-hash-join strategy for genuinely large map-mode dictionaries
-    (SURVEY §2.5 J1): build a 2-column dim table, broadcast it, left-join on
-    the value, coalesce(mapped, miss). At 100 TB the fact side never shuffles
-    — only the dict moves."""
-    dim = spark.createDataFrame(
-        [(k, v) for k, v in mapping.items()], schema=f"__orig string, __repl string"
-    )
-    joined = df.join(F.broadcast(dim), df[column] == dim["__orig"], "left")
-    return (
-        joined
-        .withColumn(column, F.when(F.col(column).isNull(),
-                                   F.lit(None).cast("string"))
-                    .otherwise(F.coalesce(F.col("__repl"), miss)))
-        .drop("__orig", "__repl")
-    )
 
 
 def audit_table(pre: DataFrame, anon: CompiledAnonymizer,

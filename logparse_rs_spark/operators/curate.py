@@ -68,8 +68,8 @@ def _reassemble(docs: DataFrame, kept: DataFrame, text_col: str,
 
 
 def remove_frequent_lines(docs: DataFrame, min_docs: int = 50,
-                          text_col: str = "text", id_col: str = "doc_id",
-                          broadcast_boiler: bool = True) -> DataFrame:
+                          text_col: str = "text", id_col: str = "doc_id"
+                          ) -> DataFrame:
     """C4/CCNet-style boilerplate removal: drop every line that occurs in
     >= min_docs DISTINCT documents (nav menus, cookie banners, copyright
     footers), keep everything else in original order. Empty lines are
@@ -80,20 +80,16 @@ def remove_frequent_lines(docs: DataFrame, min_docs: int = 50,
     two-level agg (groupBy(line, id) partial-dedups map-side before the
     distinct count, so hot boilerplate lines don't funnel raw row streams
     into one reducer). The boilerplate table itself is bounded by
-    total_lines/min_docs and is usually tiny relative to the corpus —
-    broadcast_boiler=True (default) makes the removal a BROADCAST left-anti
-    join, so the full corpus never shuffles for the filter step; set it
-    False to fall back to a shuffle anti-join when min_docs is small enough
-    that the frequent-line table could be large."""
+    total_lines/min_docs and is usually tiny relative to the corpus, so
+    the removal is a BROADCAST left-anti join and the full corpus never
+    shuffles for the filter step."""
     lines = _exploded_lines(docs, text_col, id_col)
     # two-level distinct: (line, id) dedup first => partial agg both levels
     freq = (lines.filter(F.col("line") != "")
             .groupBy("line", id_col).agg(F.lit(1))
             .groupBy("line").agg(F.count("*").alias("df")))
     boiler = freq.filter(F.col("df") >= min_docs).select("line")
-    if broadcast_boiler:
-        boiler = F.broadcast(boiler)
-    kept = lines.join(boiler, "line", "left_anti")
+    kept = lines.join(F.broadcast(boiler), "line", "left_anti")
     return _reassemble(docs, kept, text_col, id_col)
 
 
@@ -257,8 +253,7 @@ def gopher_repetition(docs: DataFrame, text_col: str = "text",
 def token_budget_cap(docs: DataFrame, budgets: dict,
                      default_budget: int | None = None,
                      group_col: str = "source", text_col: str = "text",
-                     id_col: str = "doc_id",
-                     two_phase: bool = False) -> DataFrame:
+                     id_col: str = "doc_id") -> DataFrame:
     """Cap each group (source/domain/lang) at a TOKEN budget instead of a
     document quota — the unit corpus mixing is actually planned in. A doc
     survives iff the cumulative token count of the group's docs up to and
@@ -268,18 +263,10 @@ def token_budget_cap(docs: DataFrame, budgets: dict,
     budget pass through (default_budget=None) or get default_budget.
 
     Scale shape: unlike the rank-limit in rebalance_by_group, a running
-    SUM has no WindowGroupLimit pushdown, so the default single window
-    sorts each group on one reducer — fine until one group outgrows a
-    partition. two_phase=True is the 10^12-row form: the signed
-    fingerprint's top byte is an ORDER-PRESERVING range bucket (same fp
-    -> same bucket, lower fp -> lower-or-equal bucket), so the global
-    running sum decomposes exactly into (sum of all lower buckets'
-    subtotals) + (running sum within the bucket). Subtotals are one tiny
-    hash agg (<= 256 rows per group) broadcast back, and the within-
-    bucket windows run 256-way parallel per group — no single-reducer
-    sort anywhere, at the cost of scanning the input twice. Emits the
-    surviving docs plus their token count and running total, identical
-    rows from both strategies (property-tested)."""
+    SUM has no WindowGroupLimit pushdown, so the window sorts each group
+    on one reducer; a bucketed two-pass form that avoids that sort was
+    slower at sf0.1 and sf1.0 (BENCH/dual_path_audit.md). Emits the
+    surviving docs plus their token count and running total."""
     from pyspark.sql import Window
 
     from .dedup import content_fingerprint
@@ -290,32 +277,11 @@ def token_budget_cap(docs: DataFrame, budgets: dict,
     budget = F.coalesce(
         F.element_at(F.create_map(*items), F.col(group_col)).cast("long"),
         F.lit(default_budget).cast("long"))
-    base = docs.withColumn("fp", fp).withColumn("n_tokens", n_tokens)
-    if two_phase:
-        # arithmetic shift keeps signed order: bucket ascends with fp
-        bucket = F.shiftright(F.col("fp"), 56).cast("int")
-        base = base.withColumn("bucket", bucket)
-        sub = base.groupBy(group_col, "bucket").agg(
-            F.sum("n_tokens").alias("bsum"))
-        woff = (Window.partitionBy(group_col).orderBy("bucket")
-                .rowsBetween(Window.unboundedPreceding, -1))
-        off = (sub.withColumn(
-            "offset", F.coalesce(F.sum("bsum").over(woff),
-                                 F.lit(0).cast("long")))
-            .drop("bsum"))
-        wloc = (Window.partitionBy(group_col, "bucket")
-                .orderBy("fp", id_col)
-                .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        t = (base.join(F.broadcast(off), [group_col, "bucket"])
-             .withColumn("running_tokens",
-                         F.col("offset") + F.sum("n_tokens").over(wloc))
-             .withColumn("budget", budget)
-             .drop("bucket", "offset"))
-    else:
-        w = (Window.partitionBy(group_col).orderBy("fp", id_col)
-             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        t = (base.withColumn("running_tokens", F.sum("n_tokens").over(w))
-             .withColumn("budget", budget))
+    w = (Window.partitionBy(group_col).orderBy("fp", id_col)
+         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    t = (docs.withColumn("fp", fp).withColumn("n_tokens", n_tokens)
+         .withColumn("running_tokens", F.sum("n_tokens").over(w))
+         .withColumn("budget", budget))
     return (t.filter(F.col("budget").isNull()
                      | (F.col("running_tokens") <= F.col("budget")))
             .drop("fp"))

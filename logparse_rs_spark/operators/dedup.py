@@ -1038,10 +1038,10 @@ def remove_contaminated_spans(docs: DataFrame, eval_docs: DataFrame,
     """Benchmark DECONTAMINATION by span scrubbing: drop every corpus word
     covered by an n-word span that appears anywhere in the eval set — the
     editing counterpart of the contamination CHECK (which only flags).
-    ``eval_docs`` is raw (id, text) and is tokenized here; ``docs``
-    carries its ``words`` column. Output contract matches
-    remove_duplicate_spans: (id, text, n_removed), untouched docs
-    byte-identical, edited docs rebuilt from surviving lowercased tokens.
+    ``docs`` and ``eval_docs`` both carry their ``words`` column. Output
+    contract matches remove_duplicate_spans: (id, text, n_removed),
+    untouched docs byte-identical, edited docs rebuilt from surviving
+    lowercased tokens.
 
     Scale shape: the banned-span set is EVAL-SIZED (benchmarks are
     thousands of docs, not billions) and broadcast, so the corpus-side
@@ -1049,12 +1049,8 @@ def remove_contaminated_spans(docs: DataFrame, eval_docs: DataFrame,
     never shuffles to discover contamination; only the docs that
     actually hit an eval span pay the covered-index explode and the
     id-keyed rebuild."""
-    from .text import _words
-
     base, per = _span_frames(docs, n, text_col, id_col)
-    _, eval_per = _span_frames(
-        eval_docs.withColumn("words", _words(F.col(text_col))),
-        n, text_col, id_col)
+    _, eval_per = _span_frames(eval_docs, n, text_col, id_col)
     banned = F.broadcast(eval_per.select("_span").distinct())
     return _scrub_spans(base, per, banned, n, text_col, id_col)
 

@@ -760,10 +760,9 @@ def doc_decontaminated(spark, sf_dir):
     # by an 8-word span that appears in the eval set (doc_id % 17 ==
     # 0) is scrubbed; eval docs themselves scrub to empty, docs
     # sharing only their own template spans stay byte-identical.
-    ev = (_docs(spark, sf_dir)
-          .filter(F.pmod(F.col("doc_id"), F.lit(17)) == 0)
-          .select("doc_id", "text"))
-    out = remove_contaminated_spans(_tok_docs(spark, sf_dir), ev, n=8)
+    docs = _tok_docs(spark, sf_dir)
+    ev = docs.filter(F.pmod(F.col("doc_id"), F.lit(17)) == 0)
+    out = remove_contaminated_spans(docs, ev, n=8)
     return out.select("doc_id", F.md5("text").alias("text_md5"),
                       "n_removed")
 

@@ -284,7 +284,6 @@ def get_spark(app_name: str = "logparse_rs_spark", cores: int | None = None,
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.session.timeZone": "UTC",
-        "spark.sql.sources.partitionOverwriteMode": "dynamic",
         # commit algorithm 2: task output renames directly to the final
         # location — the v1 job-commit pass over 13 sinks x hundreds of
         # bucket dirs is pure serial rename latency on this filesystem

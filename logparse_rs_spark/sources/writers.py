@@ -29,9 +29,11 @@ def iceberg_available(spark: SparkSession) -> bool:
 class ParquetWriter:
     """Parquet-directory sink with dynamic partition overwrite.
 
-    Relies on spark.sql.sources.partitionOverwriteMode=dynamic (set by
-    session.get_spark) so mode="overwrite" replaces ONLY the partitions
-    present in `df` — replaying a bucket is idempotent.
+    Every write states its partitionOverwriteMode as a write option, so
+    mode="overwrite" replaces ONLY the partitions present in `df` whatever
+    the session's spark.sql.sources.partitionOverwriteMode (a spark-submit
+    session keeps Spark's default, static) — replaying a bucket is
+    idempotent and a resumed run keeps the buckets it skips.
     """
 
     def __init__(self, root: str):
@@ -43,14 +45,13 @@ class ParquetWriter:
     def write(self, df: DataFrame, table: str,
               partition_by: Optional[Iterable[str]] = None,
               mode: str = "overwrite",
-              overwrite_mode: Optional[str] = None) -> str:
-        """overwrite_mode: None inherits the session's (dynamic — replace
-        only the partitions present in df); "static" truncates the whole
-        table first (for per-run scratch like the parse stage, where stale
-        partitions from a previous run must not survive)."""
-        w = df.write.mode(mode)
-        if overwrite_mode:
-            w = w.option("partitionOverwriteMode", overwrite_mode)
+              overwrite_mode: str = "dynamic") -> str:
+        """overwrite_mode: "dynamic" replaces only the partitions present in
+        df; "static" truncates the whole table first (for per-run scratch
+        like the parse stage, where stale partitions from a previous run
+        must not survive)."""
+        w = df.write.mode(mode).option("partitionOverwriteMode",
+                                       overwrite_mode)
         if partition_by:
             w = w.partitionBy(*list(partition_by))
         out = self.path(table)
@@ -103,10 +104,12 @@ class IcebergWriter:
     def write(self, df: DataFrame, table: str,
               partition_by: Optional[Iterable[str]] = None,
               mode: str = "overwrite",
-              overwrite_mode: Optional[str] = None) -> str:
+              overwrite_mode: str = "dynamic") -> str:
         """overwrite_mode="static" maps to truncate-and-replace
         (createOrReplace); the default is overwritePartitions — replace only
-        the partitions present in df, Iceberg's idempotent-replay form."""
+        the partitions present in df, Iceberg's idempotent-replay form.
+        overwritePartitions is a dynamic overwrite by definition, so it
+        does not read the session's partitionOverwriteMode."""
         fq = f"{self.namespace}.{table}"
         writer = df.writeTo(fq)
         if partition_by:

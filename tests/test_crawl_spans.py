@@ -374,7 +374,8 @@ class TestRemoveContaminatedSpans:
         ev = spark.createDataFrame([(100, bench)],
                                    "doc_id long, text string")
         out = {r.doc_id: r for r in
-               remove_contaminated_spans(with_words(docs), ev, n=4).collect()}
+               remove_contaminated_spans(with_words(docs), with_words(ev),
+                                         n=4).collect()}
         assert out[1].text == "intro words outro"
         assert out[1].n_removed == 8
         assert out[2].text == "totally clean document here today"
@@ -387,7 +388,8 @@ class TestRemoveContaminatedSpans:
                                      "doc_id long, text string")
         ev = spark.createDataFrame([(9, "a b c d")],
                                    "doc_id long, text string")
-        plan = (remove_contaminated_spans(with_words(docs), ev, n=4)
+        plan = (remove_contaminated_spans(with_words(docs), with_words(ev),
+                                          n=4)
                 ._jdf.queryExecution().executedPlan().toString())
         assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
 

@@ -164,30 +164,6 @@ class TestTokenBudgetCap:
              token_budget_cap(df.repartition(7), {"s": 40}).collect()}
         assert a == b and len(a) == 8
 
-    def test_two_phase_equals_single_window(self, spark):
-        from logparse_rs_spark.operators.curate import token_budget_cap
-
-        # skewed: one giant group, two small ones, varying doc lengths
-        rows = [(i, " ".join(f"g{i}w{j}" for j in range(1 + i % 7)), "big")
-                for i in range(300)]
-        rows += [(1000 + i, f"s one two three{i}", "sm1") for i in range(5)]
-        rows += [(2000 + i, f"t4 five{i}", "sm2") for i in range(4)]
-        df = spark.createDataFrame(
-            rows, "doc_id long, text string, source string")
-        budgets = {"big": 400, "sm1": 12}
-        one = sorted((r.doc_id, r.running_tokens) for r in
-                     token_budget_cap(df, budgets).collect())
-        two = sorted((r.doc_id, r.running_tokens) for r in
-                     token_budget_cap(df, budgets, two_phase=True)
-                     .collect())
-        assert one == two and len(one) > 0
-        # the two-phase plan must not contain a whole-group sort: its
-        # windows are keyed by (group, bucket), never by group alone
-        plan = (token_budget_cap(df, budgets, two_phase=True)
-                ._jdf.queryExecution().executedPlan().toString())
-        import re
-        assert re.search(r"Window .*bucket", plan)
-
 
 class TestLatestByKey:
     def test_newest_wins_with_tiebreak(self, spark):

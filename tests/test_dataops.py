@@ -373,6 +373,46 @@ class TestDuplicateHeavy:
         assert {(r["id_a"], r["id_b"]) for r in capped} == {(1000, 1001)}
         assert capped[0]["hamming"] == 1
 
+    def test_simhash_pair_cost_gate(self, spark, monkeypatch, caplog):
+        # above SIMHASH_MAX_PAIRS estimated pairs the broadcast emission
+        # steps aside and the chunk join runs: the same pairs and hammings
+        # as the broadcast path and as BUDGET = 0
+        import logging
+        import random
+        import re
+
+        from logparse_rs_spark.operators import dedup
+        rng = random.Random(7)
+        rows, i = [], 0
+        for _ in range(8):
+            base = rng.getrandbits(64)
+            for _ in range(12):
+                v = base ^ (1 << rng.randrange(64))
+                rows.append((i, v - (1 << 64) if v >= 1 << 63 else v))
+                i += 1
+        rows += [(1000 + k, 0x0123_4567_89AB_CDEF) for k in range(30)]
+        sims = spark.createDataFrame(rows, "doc_id long, simhash long")
+
+        def pairs():
+            return sorted(tuple(r) for r in dedup.simhash_candidates(
+                sims, max_bucket=20).collect())
+
+        limit = dedup.SIMHASH_MAX_PAIRS
+        default = pairs()
+        monkeypatch.setattr(dedup, "SIMHASH_MAX_PAIRS", 0)
+        with caplog.at_level(logging.DEBUG, "logparse_rs_spark.shared"):
+            over = pairs()
+        assert re.search(r"gate name=simhash_pairs size=[1-9]\d* budget=0 "
+                         r"path=distributed", caplog.text)
+        monkeypatch.setattr(dedup, "SIMHASH_MAX_PAIRS", limit)
+        monkeypatch.setattr(shared, "BUDGET", 0)
+        distributed = pairs()
+        assert default == over == distributed
+        # each 12-member cluster is within 2 bits: all 66 pairs collide;
+        # the 30 clones exceed max_bucket and pair with nothing
+        assert len(default) >= 8 * 66
+        assert all(a < 1000 and b < 1000 for a, b, _ in default)
+
 
 class TestFastJaccardVerify:
     """ngram_jaccard on both kernel forms (broadcast ids and the text join)
