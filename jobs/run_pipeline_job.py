@@ -29,6 +29,31 @@ if _REPO_ROOT not in sys.path:
     sys.path.insert(0, _REPO_ROOT)
 
 
+def job_session():
+    """The session the job runs in.
+
+    Under spark-submit the JVM gateway already exists (PYSPARK_GATEWAY_PORT
+    set) and carries the submitted master/executor conf — building through
+    get_spark() there would OVERRIDE --master with local[N]. The job takes
+    that session, sets the confs its results depend on, and starts its
+    Python workers as get_spark does. Only direct `python
+    jobs/run_pipeline_job.py` runs fall back to the tuned local session.
+    """
+    from pyspark.sql import SparkSession
+
+    from logparse_rs_spark.session import (RESULT_CONFS, get_spark,
+                                           warm_python_workers)
+
+    active = SparkSession.getActiveSession()
+    if active is None and not os.environ.get("PYSPARK_GATEWAY_PORT"):
+        return get_spark("logparse-pipeline")
+    spark = active or SparkSession.builder.getOrCreate()
+    for key, value in RESULT_CONFS.items():
+        spark.conf.set(key, value)
+    warm_python_workers(spark)
+    return spark
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--pages", required=True,
@@ -43,20 +68,7 @@ def main() -> int:
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--max-buckets", type=int, default=None)
     args = ap.parse_args()
-
-    from pyspark.sql import SparkSession
-
-    active = SparkSession.getActiveSession()
-    # under spark-submit the JVM gateway already exists (PYSPARK_GATEWAY_PORT
-    # set) and carries the submitted master/executor conf — building through
-    # get_spark() there would OVERRIDE --master with local[N]; only direct
-    # `python jobs/run_pipeline_job.py` runs fall back to the tuned local
-    # session
-    if active is not None or os.environ.get("PYSPARK_GATEWAY_PORT"):
-        spark = active or SparkSession.builder.getOrCreate()
-    else:
-        from logparse_rs_spark.session import get_spark
-        spark = get_spark("logparse-pipeline")
+    spark = job_session()
 
     from logparse_rs_spark.plans.pipeline import (
         PipelineConfig, default_sinks, run_pipeline)

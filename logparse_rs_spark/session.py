@@ -6,7 +6,8 @@ cluster (see plans/submit.py for the --py-files path).
 
 A session that starts the driver JVM also reuses the class loading of an
 earlier session on the same host through a class-data-sharing archive
-(README "Session start-up caches").
+(README "Session start-up caches"), and every new SparkContext starts its
+Python worker daemon in the background (README "Python worker start-up").
 """
 
 from __future__ import annotations
@@ -20,15 +21,22 @@ import os
 import shlex
 import shutil
 import subprocess
+import threading
+import weakref
 from dataclasses import dataclass
 
+import pandas as pd  # module scope: pandas_udf resolves 'pd.Series' hints here
 from pyspark import SparkContext
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .pydaemon import cache_root
 
 log = logging.getLogger(__name__)
+# not a child of this module's logger, whose records are the cds plan alone
+warmup_log = logging.getLogger("logparse_rs_spark.warmup")
 
 JAVA_OPTS = "spark.driver.extraJavaOptions"
 # with an archive in play the JVM logs to stderr only: its default log
@@ -38,10 +46,32 @@ JVM_OUTPUT_TO_STDERR = ("-Xlog:disable -Xlog:all=warning:stderr "
                         "-XX:+DisplayVMOutputToStderr")
 # the JVM writes the archive at exit, 10-15 s for a Spark driver
 PUBLISH_WAIT_S = 120
+# when writing it, the JVM warns about every class it cannot archive
+# (janino's signed jar, generated accessors): 60-70 KB of stderr that says
+# nothing about the run
+RECORDING_QUIET = "-Xlog:cds*=error:stderr"
 # the launcher puts these on the driver class path beside the Spark jars
 # (AbstractCommandBuilder.buildClassPath); CDS cannot key on what they hold
 CLASS_PATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH",
                   "SPARK_PREPEND_CLASSES", "SPARK_TESTING")
+# the confs that results depend on and that a running session takes:
+# get_spark builds with them, and the spark-submit job sets them on the
+# session it is handed
+RESULT_CONFS = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+}
+# local mode runs every task in the driver JVM: its heap ceiling is this
+# share of the memory the process can use, at most 48g (above 32g the JVM
+# turns compressed oops off). The rest is left to the Python workers, the
+# driver's Python process and the JVM's memory outside the heap.
+DRIVER_HEAP_SHARE = 0.5
+DRIVER_HEAP_MAX_MB = 48 * 1024
+CGROUP_MEMORY_LIMITS = ("/sys/fs/cgroup/memory.max",  # cgroup v2
+                        "/sys/fs/cgroup/memory/memory.limit_in_bytes")  # v1
+WARMUP_JOB = "session:python-warmup"
+# the SparkContexts whose Python workers were warmed
+_warmed = weakref.WeakSet()
 
 
 def default_parallelism() -> int:
@@ -51,6 +81,69 @@ def default_parallelism() -> int:
     # the CPUs this process may run on, not the host's: under a cpuset
     # local[os.cpu_count()] oversubscribes the cores it has
     return len(os.sched_getaffinity(0))
+
+
+def usable_memory_bytes() -> int:
+    """Physical memory, or this process's cgroup memory limit if lower."""
+    usable = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in CGROUP_MEMORY_LIMITS:
+        try:
+            with open(path) as fh:
+                limit = fh.read().strip()
+        except OSError:
+            continue
+        if limit.isdigit():  # v2 writes "max" when there is no limit
+            usable = min(usable, int(limit))
+    return usable
+
+
+def driver_memory() -> str:
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    mb = min(DRIVER_HEAP_MAX_MB,
+             int(usable_memory_bytes() * DRIVER_HEAP_SHARE) >> 20)
+    return f"{mb // 1024}g" if mb % 1024 == 0 else f"{mb}m"
+
+
+def _touch(ids: pd.Series) -> pd.Series:
+    """The warm-up's UDF; workers import it from this module."""
+    return ids
+
+
+def warm_python_workers(spark: SparkSession) -> None:
+    """Start the Python worker daemon of ``spark``'s context, and fork one
+    worker per task slot, in a background thread; once per SparkContext.
+
+    One pandas-UDF job over ``defaultParallelism`` one-row partitions
+    writes to the noop sink. It has to be a SQL pandas UDF: Spark keys its
+    daemons on the workers' environment, and SQL runners add to it, so an
+    RDD job would start a daemon that no UDF task uses. A failed job, or
+    one cut short by ``stop()``, is dropped with one DEBUG record.
+    """
+    sc = spark.sparkContext
+    if sc in _warmed:
+        return
+    _warmed.add(sc)
+
+    def run() -> None:
+        try:
+            # a UDF built once the context has stopped would create a new
+            # one: stop() clears the active context under this lock
+            with SparkContext._lock:
+                if SparkContext._active_spark_context is not sc:
+                    return
+                n = sc.defaultParallelism
+                touch = F.pandas_udf(_touch, T.LongType())
+                writer = (spark.range(n, numPartitions=n)
+                          .select(touch("id"))
+                          .write.format("noop").mode("overwrite"))
+            sc.setJobDescription(WARMUP_JOB)
+            writer.save()
+        except Exception:
+            warmup_log.debug("python worker warm-up dropped", exc_info=True)
+
+    threading.Thread(target=run, name="python-warmup", daemon=True).start()
 
 
 @dataclass
@@ -80,7 +173,8 @@ class ClassSharing:
         if self.mode == "mapped":
             opt = "-XX:SharedArchiveFile=" + shlex.quote(self.archive)
         elif self.mode == "recording":
-            opt = "-XX:ArchiveClassesAtExit=" + shlex.quote(self.part)
+            opt = (f"{RECORDING_QUIET} -XX:ArchiveClassesAtExit="
+                   + shlex.quote(self.part))
         else:
             return base
         return f"{JVM_OUTPUT_TO_STDERR} {base} {opt}"
@@ -283,12 +377,11 @@ def get_spark(app_name: str = "logparse_rs_spark", cores: int | None = None,
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.session.timeZone": "UTC",
         # commit algorithm 2: task output renames directly to the final
         # location — the v1 job-commit pass over 13 sinks x hundreds of
         # bucket dirs is pure serial rename latency on this filesystem
         "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version": "2",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        **RESULT_CONFS,
         "spark.sql.execution.arrow.maxRecordsPerBatch": "20000",
         # scan-split sizing: the fan-out sinks evaluate their (wide,
         # expression-heavy) projections in the parquet READ stage; at the
@@ -301,9 +394,9 @@ def get_spark(app_name: str = "logparse_rs_spark", cores: int | None = None,
         # local mode = one JVM doing the work of every executor: size the
         # heap for cores * concurrent task memory (32 threads on 8g thrashes
         # GC and anti-scales). This sets -Xmx only, a ceiling the heap grows
-        # into, so the 48g default also starts on a 16 GB host; above 32g
-        # the JVM turns compressed oops off.
-        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+        # into, but a heap that grows past the host's memory kills the JVM:
+        # the default is half the usable memory, at most 48g.
+        "spark.driver.memory": driver_memory(),
         # G1, and nothing else: no -Xms is set, so the heap starts small and
         # resizes. (ParallelGC measured 6x faster on a codegen-only probe
         # but 2-4x SLOWER on the real pipeline — G1 is the net winner.)
@@ -355,4 +448,5 @@ def get_spark(app_name: str = "logparse_rs_spark", cores: int | None = None,
     if sharing.mode == "recording":
         sharing.publish_at_exit(spark.sparkContext._gateway.proc)
     spark.sparkContext.setLogLevel("WARN")
+    warm_python_workers(spark)
     return spark

@@ -1,12 +1,15 @@
 """Session start-up caches (README "Session start-up caches"): the driver
 JVM's class-data-sharing archive, recorded by the first session and mapped
-by the next, and the daemon's bytecode cache for zip imports; plus the
-CPU count `get_spark` sizes `local[N]` by."""
+by the next, and the daemon's bytecode cache for zip imports; the Python
+worker warm-up of a new session (README "Python worker start-up"); plus the
+CPU count and driver heap `get_spark` sizes the session by, and the confs
+the spark-submit job sets on the session it is handed."""
 
 import glob
 import json
 import os
 import re
+import runpy
 import subprocess
 import sys
 import time
@@ -178,6 +181,143 @@ def test_default_parallelism_counts_the_cpus_this_process_may_use(
     monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0, 1})
     monkeypatch.setattr(os, "cpu_count", lambda: 64)
     assert session.default_parallelism() == 2
+
+
+@pytest.mark.parametrize("usable, heap", [
+    (16 << 30, "8g"), (15_000 << 20, "7500m"), (200 << 30, "48g")])
+def test_driver_heap_fits_the_memory_this_process_may_use(
+        monkeypatch, usable, heap):
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    monkeypatch.setattr(session, "usable_memory_bytes", lambda: usable)
+    assert session.driver_memory() == heap
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "1g")
+    assert session.driver_memory() == "1g"
+
+
+def test_usable_memory_takes_the_lower_cgroup_limit(tmp_path, monkeypatch):
+    v2, v1 = tmp_path / "memory.max", tmp_path / "limit_in_bytes"
+    v2.write_text("max\n")
+    v1.write_text(f"{1 << 30}\n")
+    monkeypatch.setattr(session, "CGROUP_MEMORY_LIMITS", (str(v2), str(v1)))
+    assert session.usable_memory_bytes() == 1 << 30
+    v1.write_text(f"{1 << 62}\n")
+    assert session.usable_memory_bytes() == (
+        os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"))
+
+
+# a fresh session without the cds archive (whose recording delays the exit):
+# argv[1] "stop" stops it at once; otherwise argv[1] is an event log dir, and
+# the script waits for the warm-up, notes the workers the daemon has forked,
+# calls get_spark again, runs one pandas-UDF job that reports its workers'
+# pids, and prints both sets
+WARMUP_SCRIPT = r"""
+import json, os, sys, threading
+from logparse_rs_spark.session import JAVA_OPTS, get_spark
+conf = {JAVA_OPTS: "-XX:+UseG1GC"}
+if sys.argv[1] == "stop":
+    get_spark("warmup-test", cores=2, extra_conf=conf).stop()
+    sys.exit(0)
+conf.update({"spark.eventLog.enabled": "true",
+             "spark.eventLog.compress": "false",
+             "spark.eventLog.dir": "file://" + sys.argv[1]})
+spark = get_spark("warmup-test", cores=2, extra_conf=conf)
+for t in threading.enumerate():
+    if t.name == "python-warmup":
+        t.join()
+
+
+def children(pid):
+    out = set()
+    for entry in os.listdir("/proc"):
+        try:
+            with open(f"/proc/{entry}/stat") as fh:
+                if int(fh.read().rsplit(")", 1)[1].split()[1]) == pid:
+                    out.add(int(entry))
+        except (OSError, ValueError):
+            pass
+    return out
+
+
+daemons = [p for p in children(spark.sparkContext._gateway.proc.pid)
+           if b"logparse_rs_spark.pydaemon" in
+           open(f"/proc/{p}/cmdline", "rb").read()]
+forked = set().union(*map(children, daemons))
+spark = get_spark("warmup-test", cores=2, extra_conf=conf)
+import pandas as pd
+from pyspark.sql import functions as F
+
+
+@F.pandas_udf("long")
+def worker_pid(ids: pd.Series) -> pd.Series:
+    return pd.Series(os.getpid(), index=ids.index)
+
+
+used = {r[0] for r in
+        spark.range(8, numPartitions=2).select(worker_pid("id")).collect()}
+spark.stop()
+print(json.dumps({"forked": sorted(forked), "used": sorted(used)}))
+"""
+
+
+def run_warmup_script(arg):
+    res = subprocess.run(
+        [sys.executable, "-c", WARMUP_SCRIPT, arg], capture_output=True,
+        text=True, timeout=300,
+        env=dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g", PYTHONPATH=ROOT))
+    assert res.returncode == 0, res.stderr[-3000:]
+    return res
+
+
+class TestPythonWarmup:
+    @pytest.fixture(scope="class")
+    def warmed(self, tmp_path_factory):
+        """The script's pids and the session's event log records."""
+        logs = tmp_path_factory.mktemp("eventlog")
+        res = run_warmup_script(str(logs))
+        (path,) = glob.glob(str(logs / "*" / "events_*"))
+        with open(path) as fh:
+            events = [json.loads(ln) for ln in fh]
+        return json.loads(res.stdout.strip().splitlines()[-1]), events
+
+    def test_first_udf_job_runs_in_workers_forked_before_it(self, warmed):
+        pids, _ = warmed
+        assert len(pids["forked"]) == 2  # one per task slot
+        assert set(pids["used"]) <= set(pids["forked"])
+
+    def test_one_described_warmup_job_per_context(self, warmed):
+        _, events = warmed
+        starts = [e for e in events if e["Event"] == "SparkListenerJobStart"]
+        warm = [e for e in starts if e["Properties"].get(
+            "spark.job.description") == session.WARMUP_JOB]
+        assert len(warm) == 1
+        (stage,) = warm[0]["Stage Infos"]
+        assert stage["Number of Tasks"] == 2
+        assert len(starts) == 2  # the warm-up and the pid job
+
+    def test_stop_right_after_the_session_starts_is_silent(self):
+        res = run_warmup_script("stop")
+        assert res.stdout == ""
+        noise = [ln for ln in res.stderr.splitlines()
+                 if re.search(r"ERROR|Exception|Traceback|\[Stage", ln)]
+        assert not noise, res.stderr[-3000:]
+
+
+def test_job_sets_the_result_confs_on_the_session_it_is_handed(
+        spark, monkeypatch):
+    from pyspark.sql import SparkSession
+
+    handed = spark.newSession()
+    for key in session.RESULT_CONFS:
+        handed.conf.unset(key)
+    assert not session.RESULT_CONFS.keys() & handed.conf.getAll.keys()
+    warmed = []
+    monkeypatch.setattr(SparkSession, "getActiveSession", lambda: handed)
+    monkeypatch.setattr(session, "warm_python_workers", warmed.append)
+    job = runpy.run_path(os.path.join(ROOT, "jobs", "run_pipeline_job.py"))
+    assert job["job_session"]() is handed
+    assert {k: handed.conf.get(k) for k in session.RESULT_CONFS} == (
+        session.RESULT_CONFS)
+    assert warmed == [handed]
 
 
 class TestZipBytecodeCache:
