@@ -18,8 +18,10 @@ between docs sharing a band index (probability ~n_pairs / 2^64).
 
 from __future__ import annotations
 
+import hashlib
 import os
 import re
+import shutil
 from typing import Dict
 
 import numpy as np
@@ -54,20 +56,15 @@ FUZZY_FRESH_OFFSET = 3_000_000     # doc_id % 10 == 6 -> brand-new text
 FUZZY_VARIANT_SUFFIX = " updated edition appendix"
 FUZZY_FRESH_PREFIX = "fresh standalone page number "
 
-# parameters pinned to the __spark_entry__ query definitions
-MINHASH_NUM_PERM = 64
-MINHASH_SHINGLE_K = 5
-SIMHASH_SHINGLE_K = 4
-LSH_N_PLANES = 32
-LSH_BANDS = 8
-LSH_SEED = 13
+# values the queries choose and the aux build must match: the queries
+# import them from here (the sketch constants live in the operators)
 IVF_N_CELLS = 8
 IVF_N_PROBE = 4
-IVF_SEED = 17
-IVF_ITERS = 5
-IVF_SAMPLE_ROWS = 4096
-N_QUERIES = 3   # queries are vec_id < 3
+N_QUERIES = 3   # the top-k queries are vec_id < N_QUERIES
 DSIR_N_BUCKETS = 256
+# the bucket cap of the capped near-dup queries (doc_simhash_candidates,
+# doc_near_dup_dedup, doc_text_neardup_verified, img_neardup_candidates)
+ENTRY_MAX_BUCKET = 1000
 
 # Java \s (ASCII-only), matching Spark's regexp_replace(col, r"\s+", " ")
 _JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
@@ -79,6 +76,32 @@ def normalized_text_py(t: str) -> str:
     if t is None:
         return None
     return _JAVA_WS.sub(" ", t.lower()).strip(" ")
+
+
+def derived_dir(fixture_root: str, prefix: str, *sources: str) -> str:
+    """The staging dir, under ``fixture_root``, of a fixture derived from
+    the ``sources`` files of one sf dir: ``{prefix}_{sf}_{key}``, ``sf``
+    the sf dir's name and ``key`` a digest of each source's (st_size,
+    st_mtime_ns). A rewritten source, or another sf dir of the same name,
+    gets its own dir, and the dirs it supersedes are removed."""
+    stats = [(os.stat(s).st_size, os.stat(s).st_mtime_ns) for s in sources]
+    key = hashlib.sha1(repr(stats).encode()).hexdigest()[:12]
+    sf = os.path.basename(os.path.dirname(os.path.abspath(sources[0])))
+    base = f"{prefix}_{sf}"
+    name = f"{base}_{key}"
+    superseded = re.compile(re.escape(base) + "_[0-9a-f]{12}")
+    if os.path.isdir(fixture_root):
+        for old in os.listdir(fixture_root):
+            if old != name and superseded.fullmatch(old):
+                shutil.rmtree(os.path.join(fixture_root, old),
+                              ignore_errors=True)
+    return os.path.join(fixture_root, name)
+
+
+def _aux_dir(fixture_root: str, sf_dir: str) -> str:
+    return derived_dir(fixture_root, f"dataaux_v{_AUX_VERSION}",
+                       os.path.join(sf_dir, "documents.parquet"),
+                       os.path.join(sf_dir, "embeddings.parquet"))
 
 
 def _image_blobs(doc_ids) -> list:
@@ -114,8 +137,7 @@ def ensure_images_fixture(fixture_root: str, sf_dir: str) -> str:
     (oracle_sql() ensures it itself); keeping the bench query path off it
     keeps a cold first img_neardup_candidates run at driver bench scale to
     the image synthesis alone."""
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    out_dir = os.path.join(fixture_root, f"dataaux_{tag}_v{_AUX_VERSION}")
+    out_dir = _aux_dir(fixture_root, sf_dir)
     path = os.path.join(out_dir, "images.parquet")
     if os.path.exists(path):
         return path
@@ -134,8 +156,7 @@ def ensure_dataops_aux(fixture_root: str, sf_dir: str) -> Dict[str, str]:
     return {name: path}. Names: doc_aux, emb_bands, emb_cells, emb_probes,
     tok_buckets."""
     tag = os.path.basename(sf_dir.rstrip("/"))
-    out_dir = os.path.join(fixture_root,
-                           f"dataaux_{tag}_v{_AUX_VERSION}")
+    out_dir = _aux_dir(fixture_root, sf_dir)
     paths = {
         "doc_aux": os.path.join(out_dir, "doc_aux.parquet"),
         "emb_bands": os.path.join(out_dir, "emb_bands.parquet"),
@@ -152,9 +173,10 @@ def ensure_dataops_aux(fixture_root: str, sf_dir: str) -> Dict[str, str]:
 
     from .kernels import fnv1a_series
     from .operators.dedup import minhash_sig_batch, simhash_batch
-    from .operators.similarity import (assign_cells_np, hyperplane_planes,
-                                       hyperplane_sig_np, kmeans_cells,
-                                       probe_cells_np)
+    from .operators.similarity import (IVF_SAMPLE_ROWS, LSH_N_PLANES,
+                                       TOPK_BANDS, assign_cells_np,
+                                       hyperplane_planes, hyperplane_sig_np,
+                                       kmeans_cells, probe_cells_np)
 
     # ---- documents: minhash sig / simhash / fnv fingerprint ---------------
     docs = pq.read_table(os.path.join(sf_dir, "documents.parquet"),
@@ -162,8 +184,8 @@ def ensure_dataops_aux(fixture_root: str, sf_dir: str) -> Dict[str, str]:
     doc_ids = docs.column("doc_id").to_pylist()
     texts = pd.Series(docs.column("text").to_pylist())
 
-    sigs = minhash_sig_batch(texts, MINHASH_NUM_PERM, MINHASH_SHINGLE_K)
-    sims = simhash_batch(texts, SIMHASH_SHINGLE_K)
+    sigs = minhash_sig_batch(texts)
+    sims = simhash_batch(texts)
     if tag in ORACLE_GATE_SFS:
         # Only the gate SFs are ever compared against the uncapped DuckDB
         # oracles, so only there is a cap-overflowing bucket an
@@ -199,8 +221,7 @@ def ensure_dataops_aux(fixture_root: str, sf_dir: str) -> Dict[str, str]:
         elif m == 6:
             batch_ids.append(i + FUZZY_FRESH_OFFSET)
             batch_texts.append(FUZZY_FRESH_PREFIX + str(i))
-    batch_sigs = minhash_sig_batch(pd.Series(batch_texts),
-                                   MINHASH_NUM_PERM, MINHASH_SHINGLE_K)
+    batch_sigs = minhash_sig_batch(pd.Series(batch_texts))
     _atomic_write(pa.table({
         "doc_id": pa.array(batch_ids, pa.int64()),
         "sig": pa.array([s.tolist() for s in batch_sigs],
@@ -243,12 +264,11 @@ def ensure_dataops_aux(fixture_root: str, sf_dir: str) -> Dict[str, str]:
     vm = np.array(emb.column("embedding").to_pylist(), dtype=np.float64)
     dim = vm.shape[1]
 
-    planes = hyperplane_planes(dim, LSH_N_PLANES, LSH_SEED)
-    sig = hyperplane_sig_np(vm, planes).view(np.uint64)
-    width = LSH_N_PLANES // LSH_BANDS
+    sig = hyperplane_sig_np(vm, hyperplane_planes(dim)).view(np.uint64)
+    width = LSH_N_PLANES // TOPK_BANDS
     mask = np.uint64((1 << width) - 1)
     band_rows = {"vec_id": [], "band": [], "bucket": []}
-    for b in range(LSH_BANDS):
+    for b in range(TOPK_BANDS):
         bucket = ((sig >> np.uint64(b * width)) & mask).view(np.int64)
         band_rows["vec_id"].extend(vec_ids.tolist())
         band_rows["band"].extend([b] * len(vec_ids))
@@ -259,12 +279,12 @@ def ensure_dataops_aux(fixture_root: str, sf_dir: str) -> Dict[str, str]:
         "bucket": pa.array(band_rows["bucket"], pa.int64()),
     }), paths["emb_bands"])
 
-    # IVF: replicate train_ivf_centroids (stride=1: first sample_rows by id)
+    # IVF: replicate train_ivf_centroids (the first IVF_SAMPLE_ROWS by id)
     order = np.argsort(vec_ids, kind="stable")
     sample = vm[order][:IVF_SAMPLE_ROWS]
     x = sample / np.maximum(
         np.linalg.norm(sample, axis=1, keepdims=True), 1e-12)
-    cents = kmeans_cells(x, IVF_N_CELLS, IVF_ITERS, IVF_SEED)
+    cents = kmeans_cells(x, IVF_N_CELLS)
     cn = cents / np.linalg.norm(cents, axis=1, keepdims=True)
 
     cells = assign_cells_np(vm, cn)
@@ -284,11 +304,6 @@ def ensure_dataops_aux(fixture_root: str, sf_dir: str) -> Dict[str, str]:
     return paths
 
 
-# must match the max_bucket arguments in __spark_entry__'s
-# doc_simhash_candidates / doc_near_dup_dedup / doc_text_neardup_verified
-ENTRY_MAX_BUCKET = 1000
-
-
 def _assert_oracle_caps(sigs, sims) -> None:
     """The entry queries run the CAPPED (scale-safe) operator forms while the
     DuckDB oracles band uncapped; they agree iff no oracle-scale bucket
@@ -296,9 +311,12 @@ def _assert_oracle_caps(sigs, sims) -> None:
     change can't silently turn a cap-drop into an oracle mismatch."""
     from collections import Counter
 
+    from .operators.dedup import BANDS, NUM_PERM, SIMHASH_CHUNKS
+
+    width = 64 // SIMHASH_CHUNKS
     svals = np.asarray(sims, dtype=np.int64).view(np.uint64)
-    for i in range(4):
-        chunk = (svals >> np.uint64(i * 16)) & np.uint64(0xFFFF)
+    for i in range(SIMHASH_CHUNKS):
+        chunk = (svals >> np.uint64(i * width)) & np.uint64((1 << width) - 1)
         top = int(np.unique(chunk, return_counts=True)[1].max())
         if top > ENTRY_MAX_BUCKET:
             raise RuntimeError(
@@ -306,8 +324,8 @@ def _assert_oracle_caps(sigs, sims) -> None:
                 f"cap {ENTRY_MAX_BUCKET}; capped Spark query and uncapped "
                 f"oracle would diverge")
     sig_mat = np.stack(sigs)
-    rows_per_band = MINHASH_NUM_PERM // 16
-    for band in range(16):
+    rows_per_band = NUM_PERM // BANDS
+    for band in range(BANDS):
         sl = sig_mat[:, band * rows_per_band:(band + 1) * rows_per_band]
         top = max(Counter(r.tobytes() for r in sl).values())
         if top > ENTRY_MAX_BUCKET:

@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..kernels import (
-    fnv1a_seed,
     fnv1a_series,
     split_csv,
     strip_syslog_prefix_series,
@@ -74,9 +73,8 @@ line_of, hash64_of, qfields_of = _parse_udfs(strip_syslog_prefix_series)
 line_of_raw, hash64_of_raw, qfields_of_raw = _parse_udfs(_strip_cr)
 
 
-def fnv1a_col(col, salt_bytes: bytes = b"") -> F.Column:
+def fnv1a_col(col) -> F.Column:
     """FNV-1a-64 of a string column as two's-complement LongType."""
-    seed = fnv1a_seed(salt_bytes)
 
     @F.pandas_udf(T.LongType())
     def _fnv(s: pd.Series) -> pd.Series:
@@ -88,13 +86,11 @@ def fnv1a_col(col, salt_bytes: bytes = b"") -> F.Column:
         if len(s) >= 1024:
             codes, uniq = s.factorize(use_na_sentinel=True)
             if 0 < len(uniq) and len(uniq) * 4 <= len(s):
-                hu = fnv1a_series(pd.Series(uniq),
-                                  seed=seed).view("int64")
+                hu = fnv1a_series(pd.Series(uniq)).view("int64")
                 out = pd.Series(hu[np.maximum(codes, 0)], index=s.index)
                 out[codes < 0] = None
                 return out
-        out = pd.Series(fnv1a_series(s, seed=seed).view("int64"),
-                        index=s.index)
+        out = pd.Series(fnv1a_series(s).view("int64"), index=s.index)
         out[s.isna()] = None
         return out
 

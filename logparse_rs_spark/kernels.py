@@ -226,10 +226,9 @@ def fnv1a_series(values: pd.Series, prefix: bytes = b"", seed: Optional[int] = N
     return out
 
 
-def fnv1a_series_signed(values: pd.Series, prefix: bytes = b"",
-                        seed: Optional[int] = None) -> pd.Series:
+def fnv1a_series_signed(values: pd.Series) -> pd.Series:
     """FNV-1a-64 as two's-complement int64 (Spark LongType storage, SURVEY §8.4)."""
-    return pd.Series(fnv1a_series(values, prefix, seed=seed).view(np.int64))
+    return pd.Series(fnv1a_series(values).view(np.int64))
 
 
 def split_csv_series(lines: pd.Series) -> pd.Series:

@@ -10,7 +10,7 @@ by the input-derived (url, line_ordinal) identity.
 
 from __future__ import annotations
 
-from typing import Iterable, Optional
+from typing import Iterable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -46,8 +46,8 @@ def count_by(projected: DataFrame, dim: str) -> DataFrame:
     )
 
 
-def top_k(projected: DataFrame, dim: str, k: int = 10) -> DataFrame:
-    """G4: top-k values of a dimension with the pinned tie-break
+def top_k(projected: DataFrame, dim: str) -> DataFrame:
+    """G4: top-10 values of a dimension with the pinned tie-break
     (count desc, value asc). Catalyst plans this as a partial agg +
     TakeOrderedAndProject — no full sort at scale."""
     return (
@@ -55,19 +55,16 @@ def top_k(projected: DataFrame, dim: str, k: int = 10) -> DataFrame:
         .groupBy(dim)
         .agg(F.count("*").alias("n"))
         .orderBy(F.desc("n"), F.asc(dim))
-        .limit(k)
+        .limit(10)
     )
 
 
-def first_sample_per_type(parsed: DataFrame,
-                          types: Optional[Iterable[str]] = None) -> DataFrame:
+def first_sample_per_type(parsed: DataFrame) -> DataFrame:
     """G5: the first ok record of each log type, "first" = min (url,
     line_ordinal) — a deterministic total order derived from the input, not
     from partition scheduling. Implemented as min_by over a struct (single
     shuffle-free-able agg) rather than a window sort."""
     df = parsed.filter(F.col("status") == STATUS_OK)
-    if types is not None:
-        df = df.filter(F.col("log_type").isin(list(types)))
     key = F.struct(F.col("url"), F.col("line_ordinal"))
     return (
         df.groupBy("log_type")
@@ -81,16 +78,17 @@ def first_sample_per_type(parsed: DataFrame,
     )
 
 
-def report(parsed: DataFrame, traffic_projected: DataFrame, k: int = 10) -> dict:
+def report(parsed: DataFrame, traffic_projected: DataFrame) -> dict:
     """The reference's end-of-run JSON report shape
     (pan_dynamic_parser.py:1284-1310): totals, per-type counts, action
-    counts, top-k sources/destinations/applications. Small aggregates are
+    counts, top-10 sources/destinations/applications. Small aggregates are
     collected to the driver like the reference's report sink (S5)."""
     totals = count_rows_and_errors(parsed).collect()[0]
     by_type = count_by_log_type(parsed).collect()
     actions = count_by(traffic_projected, "action").collect()
     tops = {
-        dim: [(r[dim], r["n"]) for r in top_k(traffic_projected, dim, k).collect()]
+        dim: [(r[dim], r["n"])
+              for r in top_k(traffic_projected, dim).collect()]
         for dim in ("source_address", "destination_address", "application")
     }
     return {
@@ -104,13 +102,11 @@ def report(parsed: DataFrame, traffic_projected: DataFrame, k: int = 10) -> dict
     }
 
 
-def spike_windows(df: DataFrame, ts_col: str = "ts",
-                  key_col: str = "event_type", window_s: int = 3600,
-                  factor_num: int = 2, factor_den: int = 1) -> DataFrame:
+def spike_windows(df: DataFrame, window_s: int = 3600) -> DataFrame:
     """Volume-spike detection over fixed time windows, integer-exact: flag
-    every (key, window) whose event count exceeds factor (= factor_num /
-    factor_den) times the key's mean count per ACTIVE window. The
-    comparison is cross-multiplied (n * n_windows * den > num * total), so
+    every (event_type, window) whose event count exceeds twice the type's
+    mean count per ACTIVE window. The comparison is cross-multiplied
+    (n * n_windows * den > num * total, factor num / den = 2 / 1), so
     no float mean ever exists and the answer is engine-exact — the mean
     baseline is over windows that contain at least one event (empty
     windows are never materialized; a sparse stream's baseline is its
@@ -122,16 +118,17 @@ def spike_windows(df: DataFrame, ts_col: str = "ts",
     touched once and shuffled only by the (key, window) agg key, which is
     spike-proof: a hot window still folds map-side before the exchange.
     Output is all-integer (window starts as epoch micros)."""
+    num, den = 2, 1
     width = int(window_s) * 1_000_000
-    us = F.unix_micros(F.col(ts_col).cast("timestamp_ltz"))
+    us = F.unix_micros(F.col("ts").cast("timestamp_ltz"))
     w = (df.withColumn("_wb", F.floor(us / F.lit(width)))
-         .groupBy(key_col, "_wb").agg(F.count("*").alias("n")))
-    t = w.groupBy(key_col).agg(F.count("*").alias("n_windows"),
-                               F.sum("n").alias("total_n"))
-    return (w.join(F.broadcast(t), key_col)
-            .filter(F.col("n") * F.col("n_windows") * F.lit(int(factor_den))
-                    > F.lit(int(factor_num)) * F.col("total_n"))
-            .select(key_col,
+         .groupBy("event_type", "_wb").agg(F.count("*").alias("n")))
+    t = w.groupBy("event_type").agg(F.count("*").alias("n_windows"),
+                                    F.sum("n").alias("total_n"))
+    return (w.join(F.broadcast(t), "event_type")
+            .filter(F.col("n") * F.col("n_windows") * F.lit(den)
+                    > F.lit(num) * F.col("total_n"))
+            .select("event_type",
                     (F.col("_wb") * width).alias("window_start_us"),
                     "n", "n_windows", "total_n"))
 

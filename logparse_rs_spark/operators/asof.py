@@ -39,29 +39,28 @@ from pyspark.sql import functions as F
 
 
 def asof_join(left: DataFrame, right: DataFrame, on: str,
-              left_ts: str = "ts", right_ts: Optional[str] = None,
               value_cols: Optional[Sequence[str]] = None,
               direction: str = "backward",
               tolerance_s: Optional[float] = None,
               suffix: str = "_asof") -> DataFrame:
-    """Backward/forward as-of join of `right` onto `left` by key `on`.
+    """Backward/forward as-of join of `right` onto `left` by key `on`,
+    both sides timed by their `ts` column.
 
     Returns every left row + for each v in value_cols a `v{suffix}` column
-    (null when no right row qualifies) + `{right_ts}{suffix}` with the
+    (null when no right row qualifies) + `ts{suffix}` with the
     matched right timestamp. `tolerance_s` drops matches further than that
     many seconds from the left timestamp (nulls them, like pandas
     merge_asof's tolerance).
     """
     if direction not in ("backward", "forward"):
         raise ValueError("direction must be 'backward' or 'forward'")
-    right_ts = right_ts or left_ts
     if value_cols is None:
-        value_cols = [c for c in right.columns if c not in (on, right_ts)]
+        value_cols = [c for c in right.columns if c not in (on, "ts")]
 
     ts = "_asof_ts"
     tag = "_asof_is_left"
     row = "_asof_row"
-    matched_ts = f"{right_ts}{suffix}"
+    matched_ts = f"ts{suffix}"
 
     # ONE struct per right row carries (matched_ts, *values) together: a
     # single last(ignorenulls) then resolves the whole matching ROW, so a
@@ -71,13 +70,13 @@ def asof_join(left: DataFrame, right: DataFrame, on: str,
     rhs = right.select(
         F.col(on),
         F.lit(0).alias(tag),
-        F.col(right_ts).alias(ts),
-        F.struct(F.col(right_ts).alias(matched_ts),
+        F.col("ts").alias(ts),
+        F.struct(F.col("ts").alias(matched_ts),
                  *[F.col(v).alias(f"{v}{suffix}") for v in value_cols])
         .alias(row),
     )
     lhs = left.withColumn(tag, F.lit(1)) \
-        .withColumn(ts, F.col(left_ts)) \
+        .withColumn(ts, F.col("ts")) \
         .withColumn(row, F.lit(None).cast(rhs.schema[row].dataType))
     unioned = lhs.unionByName(rhs, allowMissingColumns=True)
 
@@ -96,7 +95,7 @@ def asof_join(left: DataFrame, right: DataFrame, on: str,
 
     if tolerance_s is not None:
         gap = F.abs(
-            F.unix_micros(F.col(left_ts).cast("timestamp_ltz"))
+            F.unix_micros(F.col("ts").cast("timestamp_ltz"))
             - F.unix_micros(F.col(row)[matched_ts].cast("timestamp_ltz")))
         out = out.withColumn(
             row, F.when(gap <= int(tolerance_s * 1_000_000), F.col(row)))
@@ -108,15 +107,15 @@ def asof_join(left: DataFrame, right: DataFrame, on: str,
 
 
 def interval_join(points: DataFrame, intervals: DataFrame, on: str,
-                  point_ts: str = "ts", start_ts: str = "start_ts",
+                  start_ts: str = "start_ts",
                   end_ts: str = "end_ts",
                   value_cols: Optional[Sequence[str]] = None,
-                  bucket_s: int = 3600,
-                  suffix: str = "_iv") -> DataFrame:
+                  bucket_s: int = 3600) -> DataFrame:
     """Point-in-interval (range) join: one output row per (point, interval)
-    pair with the same key where ``start_ts <= point_ts < end_ts``
-    (half-open, the standard attribution-window convention — an instant on
-    the boundary belongs to exactly one adjacent window).
+    pair with the same key where ``start_ts <= ts < end_ts`` (half-open,
+    the standard attribution-window convention — an instant on the
+    boundary belongs to exactly one adjacent window); each interval value
+    column ``v`` comes out as ``v_iv``.
 
     Spark-first physical form: Spark plans a naive
     ``p.ts >= i.start AND p.ts < i.end`` theta join as a broadcast
@@ -143,13 +142,13 @@ def interval_join(points: DataFrame, intervals: DataFrame, on: str,
     rhs = (intervals.select(
         F.col(on),
         s_us.alias("_iv_s"), e_us.alias("_iv_e"),
-        *[F.col(v).alias(f"{v}{suffix}") for v in value_cols])
+        *[F.col(v).alias(f"{v}_iv") for v in value_cols])
         .filter(F.col("_iv_e") > F.col("_iv_s"))     # empty intervals: no bucket
         .withColumn("_iv_bucket", F.explode(F.sequence(
             F.floor(F.col("_iv_s") / width),
             F.floor((F.col("_iv_e") - 1) / width)))))
 
-    p_us = F.unix_micros(F.col(point_ts).cast("timestamp_ltz"))
+    p_us = F.unix_micros(F.col("ts").cast("timestamp_ltz"))
     lhs = (points.withColumn("_iv_t", p_us)
            .withColumn("_iv_bucket", F.floor(F.col("_iv_t") / width)))
 

@@ -28,9 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def funnel(events: DataFrame, steps: list[str],
-           user_col: str = "user_id", type_col: str = "event_type",
-           ts_col: str = "ts", tiebreak_col: str = "event_id") -> DataFrame:
+def funnel(events: DataFrame, steps: list[str]) -> DataFrame:
     """Ordered conversion funnel: one row per stage with the number of
     users who reached it IN ORDER.
 
@@ -44,13 +42,13 @@ def funnel(events: DataFrame, steps: list[str],
     """
     if not steps:
         raise ValueError("funnel needs at least one step")
-    w_prev = (Window.partitionBy(user_col).orderBy(ts_col, tiebreak_col)
+    w_prev = (Window.partitionBy("user_id").orderBy("ts", "event_id")
               .rowsBetween(Window.unboundedPreceding, -1))
     df = events
     qual_cols = []
     for i, step in enumerate(steps):
         q = f"_q{i}"
-        hit = F.col(type_col) == F.lit(step)
+        hit = F.col("event_type") == F.lit(step)
         if i == 0:
             df = df.withColumn(q, hit.cast("int"))
         else:
@@ -58,7 +56,7 @@ def funnel(events: DataFrame, steps: list[str],
                 F.max(F.col(f"_q{i-1}")).over(w_prev), F.lit(0))
             df = df.withColumn(q, (hit & (reached_prev == 1)).cast("int"))
         qual_cols.append(q)
-    per_user = df.groupBy(user_col).agg(
+    per_user = df.groupBy("user_id").agg(
         *[F.max(q).alias(q) for q in qual_cols])
     totals = per_user.agg(
         *[F.sum(q).cast("long").alias(q) for q in qual_cols])
@@ -68,11 +66,9 @@ def funnel(events: DataFrame, steps: list[str],
         f"stack({len(steps)}, {stack}) AS (stage_idx, step, n_users)"))
 
 
-def retention_cohorts(events: DataFrame, bucket_s: int = 86400,
-                      user_col: str = "user_id",
-                      ts_col: str = "ts") -> DataFrame:
-    """Cohort retention matrix: users grouped by the time bucket of their
-    FIRST event; for every later bucket they were active in, how many of
+def retention_cohorts(events: DataFrame) -> DataFrame:
+    """Cohort retention matrix: users grouped by the one-day time bucket
+    of their FIRST event; for every later bucket they were active in, how many of
     the cohort came back.
 
     Buckets are integer floor-divisions of the epoch-microsecond timestamp
@@ -82,10 +78,10 @@ def retention_cohorts(events: DataFrame, bucket_s: int = 86400,
 
     Returns (cohort_bucket BIGINT, bucket_offset BIGINT, n_users BIGINT).
     """
-    bucket_us = int(bucket_s) * 1_000_000
-    us = F.unix_micros(F.col(ts_col).cast("timestamp_ltz"))
+    bucket_us = 86400 * 1_000_000
+    us = F.unix_micros(F.col("ts").cast("timestamp_ltz"))
     active = (events
-              .select(F.col(user_col).alias("_u"),
+              .select(F.col("user_id").alias("_u"),
                       (us - F.pmod(us, F.lit(bucket_us)))
                       .alias("_bucket_us"))
               .distinct())
@@ -100,15 +96,14 @@ def retention_cohorts(events: DataFrame, bucket_s: int = 86400,
 
 
 def top_n_per_group(df: DataFrame, group_cols: list[str], order_col: str,
-                    n: int, descending: bool = True,
-                    tiebreak_col: str | None = None) -> DataFrame:
+                    n: int, tiebreak_col: str | None = None) -> DataFrame:
     """Exact top-N rows per group with a deterministic tie-break.
 
     Expressed as row_number over a per-group window + ``<= n`` filter so
     Spark's WindowGroupLimit rule pushes a Partial limit below the
     Exchange: each map task forwards at most N rows per group it sees.
     """
-    order = [F.desc(order_col) if descending else F.asc(order_col)]
+    order = [F.desc(order_col)]
     if tiebreak_col is not None:
         order.append(F.asc(tiebreak_col))
     w = Window.partitionBy(*group_cols).orderBy(*order)
@@ -116,10 +111,7 @@ def top_n_per_group(df: DataFrame, group_cols: list[str], order_col: str,
             .filter(F.col("rank") <= n))
 
 
-def transition_counts(events: DataFrame, k: int = 20,
-                      user_col: str = "user_id",
-                      type_col: str = "event_type", ts_col: str = "ts",
-                      tiebreak_col: str = "event_id") -> DataFrame:
+def transition_counts(events: DataFrame, k: int = 20) -> DataFrame:
     """Top-k behavior-path transitions: for each user's event stream in
     ``(ts, tiebreak)`` order, count consecutive ``src -> dst`` event-type
     pairs across the whole corpus (the Markov-transition / clickstream-path
@@ -133,20 +125,18 @@ def transition_counts(events: DataFrame, k: int = 20,
 
     Returns (src STRING, dst STRING, n BIGINT), k rows.
     """
-    w = Window.partitionBy(user_col).orderBy(ts_col, tiebreak_col)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = (events
-             .select(F.lag(type_col).over(w).alias("src"),
-                     F.col(type_col).alias("dst"))
+             .select(F.lag("event_type").over(w).alias("src"),
+                     F.col("event_type").alias("dst"))
              .filter(F.col("src").isNotNull()))
     return (pairs.groupBy("src", "dst").agg(F.count("*").alias("n"))
             .orderBy(F.desc("n"), F.asc("src"), F.asc("dst"))
             .limit(k))
 
 
-def versioned_intervals(events: DataFrame, key_cols: list[str] | None = None,
-                        ts_col: str = "ts",
-                        tiebreak_col: str = "event_id") -> DataFrame:
-    """SCD2-style validity intervals: treat each key's event stream as a
+def versioned_intervals(events: DataFrame) -> DataFrame:
+    """SCD2-style validity intervals: treat each user's event stream as a
     sequence of record VERSIONS and emit, per version, its validity window
     ``[valid_from, valid_to)`` plus a version number and an is_current
     flag — the slowly-changing-dimension snapshot build every warehouse
@@ -163,25 +153,22 @@ def versioned_intervals(events: DataFrame, key_cols: list[str] | None = None,
     10^12 change rows this is the minimum possible movement — every
     per-key computation needs the key's rows co-located once.
     """
-    keys = list(key_cols) if key_cols else ["user_id"]
-    w = Window.partitionBy(*keys).orderBy(ts_col, tiebreak_col)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     ts_us = F.expr(
-        f"timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', "
-        f"{ts_col})")
+        "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', "
+        "ts)")
     return events.select(
-        *keys,
-        F.col(tiebreak_col),
+        "user_id",
+        F.col("event_id"),
         F.row_number().over(w).alias("version"),
         ts_us.alias("valid_from_us"),
         F.lead(ts_us).over(w).alias("valid_to_us"),
         F.lead(ts_us).over(w).isNull().alias("is_current"))
 
 
-def props_field_stats(events: DataFrame, field: str = "k",
-                      type_col: str = "event_type",
-                      props_col: str = "props") -> DataFrame:
-    """Semi-structured payload extraction + profile: pull one numeric
-    field out of the JSON ``props`` column and aggregate it per event
+def props_field_stats(events: DataFrame) -> DataFrame:
+    """Semi-structured payload extraction + profile: pull the numeric
+    ``k`` field out of the JSON ``props`` column and aggregate it per event
     type — the schema-on-read pass every log pipeline runs over its
     attribute blob (get_json_object is JVM-side JSON-path evaluation
     inside whole-stage codegen; no UDF, no shuffle of the raw JSON).
@@ -192,21 +179,19 @@ def props_field_stats(events: DataFrame, field: str = "k",
     Returns (event_type, n, n_with_field, sum_v, min_v, max_v,
     distinct_v) ordered by type.
     """
-    v = F.get_json_object(F.col(props_col), f"$.{field}").cast("long")
-    return (events.select(F.col(type_col), v.alias("v"))
-            .groupBy(type_col)
+    v = F.get_json_object(F.col("props"), "$.k").cast("long")
+    return (events.select(F.col("event_type"), v.alias("v"))
+            .groupBy("event_type")
             .agg(F.count("*").alias("n"),
                  F.count("v").alias("n_with_field"),
                  F.sum("v").alias("sum_v"),
                  F.min("v").alias("min_v"),
                  F.max("v").alias("max_v"),
                  F.countDistinct("v").alias("distinct_v"))
-            .orderBy(type_col))
+            .orderBy("event_type"))
 
 
-def user_event_paths(events: DataFrame, user_col: str = "user_id",
-                     type_col: str = "event_type", ts_col: str = "ts",
-                     tiebreak_col: str = "event_id") -> DataFrame:
+def user_event_paths(events: DataFrame) -> DataFrame:
     """Training-sequence assembly: each user's full event-type history as
     one ordered path string — the per-entity timeline export a behavioral
     training pipeline materializes (one row per user, ready for
@@ -226,23 +211,20 @@ def user_event_paths(events: DataFrame, user_col: str = "user_id",
 
     Returns (user_id, n_events BIGINT, path STRING).
     """
-    packed = F.struct(F.col(ts_col), F.col(tiebreak_col),
-                      F.col(type_col).alias("etype"))
-    return (events.groupBy(user_col)
+    packed = F.struct(F.col("ts"), F.col("event_id"),
+                      F.col("event_type").alias("etype"))
+    return (events.groupBy("user_id")
             .agg(F.count("*").alias("n_events"),
                  F.array_sort(F.collect_list(packed)).alias("seq"))
-            .select(user_col, "n_events",
+            .select("user_id", "n_events",
                     F.array_join(
                         F.transform("seq", lambda x: x["etype"]),
                         ">").alias("path")))
 
 
-def sliding_window_activity(events: DataFrame, window: str = "30 minutes",
-                            slide: str = "15 minutes",
-                            user_col: str = "user_id",
-                            ts_col: str = "ts") -> DataFrame:
+def sliding_window_activity(events: DataFrame) -> DataFrame:
     """SLIDING (hopping) window activity: distinct active users + event
-    volume per overlapping window — the dashboard/alerting aggregate
+    volume per overlapping 30-minute window sliding by 15 minutes — the dashboard/alerting aggregate
     (tumbling windows under-read spikes that straddle a boundary; ops
     dashboards hop). Window start is emitted as epoch MICROSECONDS
     (BIGINT) against an NTZ epoch literal — engine/timezone-proof.
@@ -252,9 +234,9 @@ def sliding_window_activity(events: DataFrame, window: str = "30 minutes",
     one window-keyed aggregate; countDistinct rewrites to a two-level agg
     with map-side partials on (window, user).
     """
-    w = F.window(F.col(ts_col), window, slide)
+    w = F.window(F.col("ts"), "30 minutes", "15 minutes")
     return (events.groupBy(w.alias("w"))
-            .agg(F.countDistinct(user_col).alias("active_users"),
+            .agg(F.countDistinct("user_id").alias("active_users"),
                  F.count("*").alias("n_events"))
             .select(F.expr("timestampdiff(MICROSECOND, "
                            "TIMESTAMP_NTZ '1970-01-01 00:00:00', w.start)")

@@ -44,7 +44,6 @@ def host_hash60(col) -> F.Column:
 
 
 def frontier_schedule(urls: DataFrame, n_workers: int = 8,
-                      url_col: str = "url",
                       priority_col: str | None = None) -> DataFrame:
     """Assign every frontier URL a (worker, fetch_round) slot under
     per-host politeness: a host's URLs are fetched one per round, in
@@ -68,8 +67,8 @@ def frontier_schedule(urls: DataFrame, n_workers: int = 8,
     over this output is how you see it. The window state per host is one
     counter, so a 10^8-URL host streams through a single task without
     materializing the host's rows."""
-    host = F.regexp_extract(F.col(url_col), HOST_PATTERN, 1)
-    cols = [F.col(url_col).alias("url"), host.alias("host")]
+    host = F.regexp_extract(F.col("url"), HOST_PATTERN, 1)
+    cols = [F.col("url"), host.alias("host")]
     if priority_col:
         cols.append(F.col(priority_col).alias("_prio"))
     t = urls.select(*cols).filter(F.col("host") != "")
@@ -84,8 +83,7 @@ def frontier_schedule(urls: DataFrame, n_workers: int = 8,
 
 
 def apply_url_policy(urls: DataFrame, rules: List[Tuple[str, bool]],
-                     default_allow: bool = True,
-                     url_col: str = "url") -> DataFrame:
+                     default_allow: bool = True) -> DataFrame:
     """robots.txt-shaped URL policy: the LONGEST matching prefix rule
     decides allow/deny; no match falls back to ``default_allow`` (robots
     semantics: longest-match wins, Google tie-break prefers allow — ties
@@ -104,7 +102,7 @@ def apply_url_policy(urls: DataFrame, rules: List[Tuple[str, bool]],
     arr = F.array(*[
         F.struct(F.lit(p).alias("prefix"), F.lit(bool(a)).alias("allow"))
         for p, a in rules])
-    matched = F.filter(arr, lambda r: F.col(url_col).startswith(r["prefix"]))
+    matched = F.filter(arr, lambda r: F.col("url").startswith(r["prefix"]))
     best = F.array_max(F.transform(
         matched, lambda r: F.struct(F.length(r["prefix"]).alias("l"),
                                     r["allow"].alias("allow"),
@@ -118,9 +116,7 @@ def apply_url_policy(urls: DataFrame, rules: List[Tuple[str, bool]],
             .drop("_best"))
 
 
-def apply_url_policy_df(urls: DataFrame, rules: DataFrame,
-                        default_allow: bool = True,
-                        url_col: str = "url") -> DataFrame:
+def apply_url_policy_df(urls: DataFrame, rules: DataFrame) -> DataFrame:
     """The at-scale form of :func:`apply_url_policy` for per-host rule
     TABLES (robots.txt across the whole crawl, 10^6+ rules): ``rules`` is
     a DataFrame (prefix STRING, allow BOOLEAN). Rules aggregate to ONE
@@ -132,7 +128,7 @@ def apply_url_policy_df(urls: DataFrame, rules: DataFrame,
 
     Decision semantics are identical to apply_url_policy: longest
     matching prefix wins, (length, allow) max tie-break, no match (or no
-    rules for the host) falls back to ``default_allow``. A rule whose
+    rules for the host) allows. A rule whose
     prefix carries no parseable host can never match a host-joined URL
     and is dropped.
 
@@ -150,11 +146,11 @@ def apply_url_policy_df(urls: DataFrame, rules: DataFrame,
                 .agg(F.collect_list(
                     F.struct(F.col("prefix"), F.col("allow"))
                 ).alias("_rules")))
-    j = (urls.withColumn("_uhost", _host(F.col(url_col)))
+    j = (urls.withColumn("_uhost", _host(F.col("url")))
          .join(F.broadcast(per_host),
                F.col("_uhost") == F.col("_rhost"), "left"))
     matched = F.filter(F.col("_rules"),
-                       lambda r: F.col(url_col).startswith(r["prefix"]))
+                       lambda r: F.col("url").startswith(r["prefix"]))
     best = F.array_max(F.transform(
         matched, lambda r: F.struct(F.length(r["prefix"]).alias("l"),
                                     r["allow"].alias("allow"),
@@ -162,14 +158,12 @@ def apply_url_policy_df(urls: DataFrame, rules: DataFrame,
     return (j.withColumn("_best", best)
             .withColumn("allowed",
                         F.coalesce(F.col("_best.allow"),
-                                   F.lit(bool(default_allow))))
+                                   F.lit(True)))
             .withColumn("rule_prefix", F.col("_best.prefix"))
             .drop("_best", "_uhost", "_rhost", "_rules"))
 
 
-def crawl_delta(old_pages: DataFrame, new_pages: DataFrame,
-                url_col: str = "url",
-                content_col: str = "text") -> DataFrame:
+def crawl_delta(old_pages: DataFrame, new_pages: DataFrame) -> DataFrame:
     """Snapshot-over-snapshot crawl delta: per URL, whether it was
     ``added``, ``removed``, ``changed`` or ``unchanged`` between two crawl
     snapshots — the freshness/volatility report that drives recrawl
@@ -183,10 +177,10 @@ def crawl_delta(old_pages: DataFrame, new_pages: DataFrame,
     at recrawl-scheduling stakes that is the correct trade.
 
     Returns (url, host, status STRING)."""
-    o = old_pages.select(F.col(url_col).alias("url"),
-                         host_hash60(F.col(content_col)).alias("_oh"))
-    n = new_pages.select(F.col(url_col).alias("url"),
-                         host_hash60(F.col(content_col)).alias("_nh"))
+    o = old_pages.select(F.col("url"),
+                         host_hash60(F.col("text")).alias("_oh"))
+    n = new_pages.select(F.col("url"),
+                         host_hash60(F.col("text")).alias("_nh"))
     j = o.join(n, "url", "full_outer")
     status = (F.when(F.col("_oh").isNull(), F.lit("added"))
               .when(F.col("_nh").isNull(), F.lit("removed"))
@@ -198,8 +192,7 @@ def crawl_delta(old_pages: DataFrame, new_pages: DataFrame,
         status.alias("status"))
 
 
-def parse_robots(robots: DataFrame, host_col: str = "host",
-                 body_col: str = "body") -> DataFrame:
+def parse_robots(robots: DataFrame) -> DataFrame:
     """robots.txt parser (simplified RFC 9309) — (host, body) rows in,
     (host, prefix, allow, ordinal) rules out, ready for
     :func:`apply_url_policy_df`. Honors exactly the wildcard agent:
@@ -223,8 +216,8 @@ def parse_robots(robots: DataFrame, host_col: str = "host",
     shuffle total; robots bodies are KB-sized per host by construction,
     so per-host partitions stay trivially small at any corpus size."""
     lines = (robots.select(
-        F.col(host_col).alias("host"),
-        F.posexplode(F.split(F.col(body_col), "\n"))
+        F.col("host"),
+        F.posexplode(F.split(F.col("body"), "\n"))
         .alias("_ord", "_raw")))
     clean = F.trim(F.regexp_replace(F.regexp_replace(
         F.col("_raw"), "#.*$", ""), "\r", ""))
@@ -257,8 +250,7 @@ def parse_robots(robots: DataFrame, host_col: str = "host",
                     F.col("ordinal")))
 
 
-def parse_sitemap(sitemaps: DataFrame, host_col: str = "host",
-                  body_col: str = "body") -> DataFrame:
+def parse_sitemap(sitemaps: DataFrame) -> DataFrame:
     """sitemap.xml parser — (host, body) rows in, one row per entry out:
     (host, kind, loc, lastmod, priority_ppm, ordinal). ``kind`` is
     ``'url'`` for page entries and ``'sitemap'`` for sitemap-index child
@@ -282,9 +274,9 @@ def parse_sitemap(sitemaps: DataFrame, host_col: str = "host",
     blocks. Zero joins, zero UDFs; one narrow projection per entry.
     """
     def _entries(kind: str, block_pat: str) -> DataFrame:
-        blocks = F.regexp_extract_all(F.col(body_col),
+        blocks = F.regexp_extract_all(F.col("body"),
                                       F.lit(block_pat), 1)
-        e = (sitemaps.select(F.col(host_col).alias("host"),
+        e = (sitemaps.select(F.col("host").alias("host"),
                              F.posexplode(blocks).alias("_i", "_e")))
         loc = F.regexp_extract(F.col("_e"), "<loc>([^<]*)</loc>", 1)
         lastmod = F.regexp_extract(F.col("_e"),

@@ -32,23 +32,22 @@ from .text import STOPWORDS, _words
 LINE_SEP = "\n"
 
 
-def _exploded_lines(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
+def _exploded_lines(docs: DataFrame) -> DataFrame:
     """(id, pos, line) with pos 0-based in document order; trailing empty
     lines are kept (Spark split(limit=-1) and DuckDB string_split agree)."""
     return docs.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), LINE_SEP, -1))
+        F.col("doc_id"),
+        F.posexplode(F.split(F.col("text"), LINE_SEP, -1))
         .alias("pos", "line"),
     )
 
 
-def _reassemble(docs: DataFrame, kept: DataFrame, text_col: str,
-                id_col: str) -> DataFrame:
+def _reassemble(docs: DataFrame, kept: DataFrame) -> DataFrame:
     """Rebuild (id, text_clean, n_lines, n_kept) from surviving (id, pos,
     line) rows. collect_list is per-document — a document fits in one task
     by definition, so this agg is safe at any corpus size; array_sort on
     struct(pos, line) restores original line order deterministically."""
-    clean = (kept.groupBy(id_col).agg(
+    clean = (kept.groupBy("doc_id").agg(
         F.array_join(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("pos", "line"))),
@@ -56,20 +55,18 @@ def _reassemble(docs: DataFrame, kept: DataFrame, text_col: str,
             LINE_SEP).alias("text_clean"),
         F.count("*").alias("n_kept")))
     base = docs.select(
-        F.col(id_col),
-        F.size(F.split(F.col(text_col), LINE_SEP, -1)).alias("n_lines"))
+        F.col("doc_id"),
+        F.size(F.split(F.col("text"), LINE_SEP, -1)).alias("n_lines"))
     # left join keeps documents whose every line was removed (empty result)
-    return (base.join(clean, id_col, "left")
-            .select(F.col(id_col),
+    return (base.join(clean, "doc_id", "left")
+            .select(F.col("doc_id"),
                     F.coalesce("text_clean", F.lit("")).alias("text_clean"),
                     F.col("n_lines").cast("long").alias("n_lines"),
                     F.coalesce("n_kept", F.lit(0)).cast("long")
                     .alias("n_kept")))
 
 
-def remove_frequent_lines(docs: DataFrame, min_docs: int = 50,
-                          text_col: str = "text", id_col: str = "doc_id"
-                          ) -> DataFrame:
+def remove_frequent_lines(docs: DataFrame, min_docs: int = 50) -> DataFrame:
     """C4/CCNet-style boilerplate removal: drop every line that occurs in
     >= min_docs DISTINCT documents (nav menus, cookie banners, copyright
     footers), keep everything else in original order. Empty lines are
@@ -83,18 +80,17 @@ def remove_frequent_lines(docs: DataFrame, min_docs: int = 50,
     total_lines/min_docs and is usually tiny relative to the corpus, so
     the removal is a BROADCAST left-anti join and the full corpus never
     shuffles for the filter step."""
-    lines = _exploded_lines(docs, text_col, id_col)
+    lines = _exploded_lines(docs)
     # two-level distinct: (line, id) dedup first => partial agg both levels
     freq = (lines.filter(F.col("line") != "")
-            .groupBy("line", id_col).agg(F.lit(1))
+            .groupBy("line", "doc_id").agg(F.lit(1))
             .groupBy("line").agg(F.count("*").alias("df")))
     boiler = freq.filter(F.col("df") >= min_docs).select("line")
     kept = lines.join(F.broadcast(boiler), "line", "left_anti")
-    return _reassemble(docs, kept, text_col, id_col)
+    return _reassemble(docs, kept)
 
 
-def dedup_paragraphs(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+def dedup_paragraphs(docs: DataFrame) -> DataFrame:
     """Cross-document exact paragraph (line) dedup, keep-first: for each
     distinct non-empty line, only the occurrence with the smallest
     (doc_id, pos) survives; empty lines always survive (structure, not
@@ -106,29 +102,26 @@ def dedup_paragraphs(docs: DataFrame, text_col: str = "text",
     text: unavoidable for exact semantics (see module docstring on why not
     a 64-bit hash key); Catalyst gets a sort-merge join whose both sides
     partial-agg first."""
-    lines = _exploded_lines(docs, text_col, id_col)
+    lines = _exploded_lines(docs)
     ne = lines.filter(F.col("line") != "")
     winner = ne.groupBy("line").agg(
-        F.min(F.struct(F.col(id_col).alias("id"), F.col("pos").alias("pos")))
-        .alias("w"))
+        F.min(F.struct(F.col("doc_id").alias("id"),
+                       F.col("pos").alias("pos"))).alias("w"))
     kept_ne = (ne.join(winner, "line")
-               .filter((F.col("w.id") == F.col(id_col))
+               .filter((F.col("w.id") == F.col("doc_id"))
                        & (F.col("w.pos") == F.col("pos")))
-               .select(id_col, "pos", "line"))
+               .select("doc_id", "pos", "line"))
     kept = kept_ne.unionByName(lines.filter(F.col("line") == ""))
-    return _reassemble(docs, kept, text_col, id_col)
+    return _reassemble(docs, kept)
 
 
-def gopher_quality(docs: DataFrame, text_col: str = "text",
-                   id_col: str = "doc_id",
-                   min_words: int = 50, max_words: int = 100_000,
-                   keep_cols: tuple = ()) -> DataFrame:
+def gopher_quality(docs: DataFrame, keep_cols: tuple = ()) -> DataFrame:
     """Gopher-style (Rae et al. 2021, appendix A1.1) document quality rules,
     re-expressed in EXACT INTEGER arithmetic so the keep decision is
     bit-reproducible across engines (no float ratios on the output
     surface):
 
-      word count in [min_words, max_words]
+      word count in [50, 100000]
       mean word length in [3, 10]      <=> 3*n_words <= chars <= 10*n_words
       >= 80% of words contain a letter <=> 5*n_alpha_words >= 4*n_words
       '#' and '...' each <= 10% of words (symbol-to-word ratio)
@@ -136,8 +129,8 @@ def gopher_quality(docs: DataFrame, text_col: str = "text",
 
     Pure JVM expressions over one projection — runs inside whole-stage
     codegen on the scan, no shuffle, no Python."""
-    words = _words(F.col(text_col))
-    text = F.col(text_col)
+    words = _words(F.col("text"))
+    text = F.col("text")
     n_words = F.size(words).cast("long")
     n_word_chars = F.aggregate(
         words, F.lit(0).cast("long"), lambda a, w: a + F.length(w))
@@ -154,7 +147,7 @@ def gopher_quality(docs: DataFrame, text_col: str = "text",
     # references every feature again, and flat-select higher-order exprs
     # re-evaluate per reference
     feats = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[F.col(c) for c in keep_cols],
         n_words.alias("n_words"),
         n_word_chars.alias("n_word_chars"),
@@ -163,7 +156,7 @@ def gopher_quality(docs: DataFrame, text_col: str = "text",
         n_hash.alias("n_hash"),
         n_ellipsis.alias("n_ellipsis"))
     nw = F.col("n_words")
-    keep = (nw.between(min_words, max_words)
+    keep = (nw.between(50, 100_000)
             & (3 * nw <= F.col("n_word_chars"))
             & (F.col("n_word_chars") <= 10 * nw)
             & (5 * F.col("n_alpha_words") >= 4 * nw)
@@ -171,15 +164,14 @@ def gopher_quality(docs: DataFrame, text_col: str = "text",
             & (F.col("n_ellipsis") * 10 <= nw)
             & (F.col("n_stopwords") >= 2))
     return feats.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[F.col(c) for c in keep_cols],
         "n_words", "n_word_chars", "n_alpha_words",
         "n_stopwords", "n_hash", "n_ellipsis",
         keep.cast("int").alias("keep"))
 
 
-def gopher_repetition(docs: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id") -> DataFrame:
+def gopher_repetition(docs: DataFrame) -> DataFrame:
     """Gopher-style (Rae et al. 2021) within-document repetition signals:
     duplicate-line count and characters, plus the most common word bigram
     and the characters it covers. Everything is doc-local, so the whole
@@ -193,7 +185,7 @@ def gopher_repetition(docs: DataFrame, text_col: str = "text",
     Mode tie-break: among equal-count bigrams the lexicographically
     smallest wins (sorted array + strict-greater update), matching
     ORDER BY count DESC, gram ASC in SQL. Integer outputs only."""
-    text = F.col(text_col)
+    text = F.col("text")
     lines = F.split(text, LINE_SEP, -1)
     n_lines = F.size(lines).cast("long")
     sl = F.array_sort(lines)
@@ -232,14 +224,14 @@ def gopher_repetition(docs: DataFrame, text_col: str = "text",
     # build + sort + fold; when()/higher-order exprs are CodegenFallback
     # and get no CSE) — materialize the heavy intermediates once
     feats = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_lines.alias("_nl"),
         n_dup_lines.alias("_ndl"),
         dup_line_chars.alias("_dlc"),
         F.size(grams).cast("long").alias("_nb"),
         mode.alias("_mode"))
     return feats.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("_nl").alias("n_lines"),
         F.col("_ndl").alias("n_dup_lines"),
         F.col("_dlc").alias("dup_line_chars"),
@@ -250,17 +242,14 @@ def gopher_repetition(docs: DataFrame, text_col: str = "text",
         .alias("top_bigram_chars"))
 
 
-def token_budget_cap(docs: DataFrame, budgets: dict,
-                     default_budget: int | None = None,
-                     group_col: str = "source", text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
-    """Cap each group (source/domain/lang) at a TOKEN budget instead of a
+def token_budget_cap(docs: DataFrame, budgets: dict) -> DataFrame:
+    """Cap each ``source`` group at a TOKEN budget instead of a
     document quota — the unit corpus mixing is actually planned in. A doc
     survives iff the cumulative token count of the group's docs up to and
     including it (in content-fingerprint order: deterministic,
     partitioning- and input-order-independent, same ordering rule as
     rebalance_by_group) stays <= the group's budget; groups without a
-    budget pass through (default_budget=None) or get default_budget.
+    budget pass through.
 
     Scale shape: unlike the rank-limit in rebalance_by_group, a running
     SUM has no WindowGroupLimit pushdown, so the window sorts each group
@@ -271,13 +260,12 @@ def token_budget_cap(docs: DataFrame, budgets: dict,
 
     from .dedup import content_fingerprint
 
-    fp = content_fingerprint(F.col(text_col))
-    n_tokens = F.size(_words(F.col(text_col))).cast("long")
+    fp = content_fingerprint(F.col("text"))
+    n_tokens = F.size(_words(F.col("text"))).cast("long")
     items = [F.lit(x) for kv in sorted(budgets.items()) for x in kv]
-    budget = F.coalesce(
-        F.element_at(F.create_map(*items), F.col(group_col)).cast("long"),
-        F.lit(default_budget).cast("long"))
-    w = (Window.partitionBy(group_col).orderBy("fp", id_col)
+    budget = F.element_at(F.create_map(*items),
+                          F.col("source")).cast("long")
+    w = (Window.partitionBy("source").orderBy("fp", "doc_id")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     t = (docs.withColumn("fp", fp).withColumn("n_tokens", n_tokens)
          .withColumn("running_tokens", F.sum("n_tokens").over(w))
@@ -303,8 +291,8 @@ def latest_by_key(df: DataFrame, key_cols: Sequence[str], order_col: str,
         F.count("*").alias("n_versions"))
 
 
-def filter_blocked_hosts(pages: DataFrame, blocked_hosts: Iterable[str],
-                         url_col: str = "url") -> DataFrame:
+def filter_blocked_hosts(pages: DataFrame,
+                         blocked_hosts: Iterable[str]) -> DataFrame:
     """Drop pages whose URL host is on a blocklist (spam/adult/SEO domain
     lists are a standard first gate of web-corpus curation). The blocklist
     is a driver-side list turned into a BROADCAST left-anti join — the
@@ -313,18 +301,16 @@ def filter_blocked_hosts(pages: DataFrame, blocked_hosts: Iterable[str],
     spark = pages.sparkSession
     bl = spark.createDataFrame([(h,) for h in sorted(set(blocked_hosts))],
                                "host string")
-    host = F.regexp_extract(F.col(url_col), "^[a-z]+://([^/]+)", 1)
+    host = F.regexp_extract(F.col("url"), "^[a-z]+://([^/]+)", 1)
     return (pages.withColumn("host", host)
             .join(F.broadcast(bl), "host", "left_anti"))
 
 
-def dsir_weights(docs: DataFrame, target="lang = 'en'",
-                 n_buckets: int = 256, text_col: str = "text",
-                 id_col: str = "doc_id") -> DataFrame:
+def dsir_weights(docs: DataFrame, n_buckets: int = 256) -> DataFrame:
     """DSIR-style importance weights (Data Selection via Importance
     Resampling, Xie et al. 2023, arXiv:2302.03169): score every document
     by how much more likely its tokens are under the TARGET distribution
-    (rows where `target` holds — the high-quality / in-domain slice) than
+    (rows where ``lang = 'en'`` — the high-quality / in-domain slice) than
     under the raw corpus distribution. Features are hashed unigram buckets
     (fnv1a(token) % n_buckets — the paper's hashed n-gram model);
     bucket unigram models are add-one smoothed; the weight is the per-token
@@ -341,9 +327,9 @@ def dsir_weights(docs: DataFrame, target="lang = 'en'",
     required."""
     from ..functions import fnv1a_col
 
-    is_t = F.expr(target) if isinstance(target, str) else target
-    tok = (docs.select(F.col(id_col), is_t.alias("_is_target"),
-                       F.explode(_words(F.col(text_col))).alias("token"))
+    is_t = F.expr("lang = 'en'")
+    tok = (docs.select(F.col("doc_id"), is_t.alias("_is_target"),
+                       F.explode(_words(F.col("text"))).alias("token"))
            .withColumn("bucket",
                        F.pmod(fnv1a_col(F.col("token")),
                               F.lit(n_buckets)).cast("int")))
@@ -360,12 +346,12 @@ def dsir_weights(docs: DataFrame, target="lang = 'en'",
                       / (F.col("q_tot") + F.lit(float(n_buckets)))))
           .select("bucket", "lw"))
     return (tok.join(F.broadcast(lw), "bucket")
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(F.count("*").alias("n_tokens"),
                  F.round(F.avg("lw"), 6).alias("dsir_weight")))
 
 
-def attrition_funnel(stages: Sequence, text_col: str = "text") -> DataFrame:
+def attrition_funnel(stages: Sequence) -> DataFrame:
     """Stage-by-stage survivor accounting for a curation pipeline — the
     report every corpus run ships with ("raw 10.2B -> lang 7.9B ->
     quality 4.1B -> dedup 2.6B"). Takes [(stage_name, DataFrame), ...]
@@ -381,7 +367,7 @@ def attrition_funnel(stages: Sequence, text_col: str = "text") -> DataFrame:
     for i, (name, df) in enumerate(stages):
         parts.append(df.agg(
             F.count("*").alias("n_docs"),
-            F.coalesce(F.sum(F.length(F.col(text_col))), F.lit(0))
+            F.coalesce(F.sum(F.length(F.col("text"))), F.lit(0))
             .cast("long").alias("total_chars"))
             .select(F.lit(i).cast("long").alias("stage"),
                     F.lit(name).alias("stage_name"),
@@ -392,9 +378,7 @@ def attrition_funnel(stages: Sequence, text_col: str = "text") -> DataFrame:
     return out
 
 
-def shard_assign_balanced(docs: DataFrame, n_shards: int = 8,
-                          size_col: str = "n_tokens",
-                          id_col: str = "doc_id") -> DataFrame:
+def shard_assign_balanced(docs: DataFrame, n_shards: int = 8) -> DataFrame:
     """Token-balanced training-shard assignment WITHOUT a global sort —
     the write-out step of a curation pipeline: spread documents over
     ``n_shards`` output shards so every shard carries a near-equal token
@@ -422,7 +406,7 @@ def shard_assign_balanced(docs: DataFrame, n_shards: int = 8,
     Returns the input columns + (rank BIGINT, shard BIGINT); rank is the
     0-based global (size desc, id asc) position — deterministic, both
     engines."""
-    hist = (docs.groupBy(F.col(size_col).cast("long").alias("_sz"))
+    hist = (docs.groupBy(F.col("n_tokens").cast("long").alias("_sz"))
             .agg(F.count("*").alias("_cnt")))
     # cumulative count of STRICTLY larger sizes in one single-partition
     # window: its input is the size histogram, never the corpus, so
@@ -432,8 +416,8 @@ def shard_assign_balanced(docs: DataFrame, n_shards: int = 8,
           .rowsBetween(Window.unboundedPreceding, -1))
     off = hist.select(
         "_sz", F.coalesce(F.sum("_cnt").over(wh), F.lit(0)).alias("_off"))
-    we = Window.partitionBy("_sz").orderBy(id_col)
-    ranked = (docs.withColumn("_sz", F.col(size_col).cast("long"))
+    we = Window.partitionBy("_sz").orderBy("doc_id")
+    ranked = (docs.withColumn("_sz", F.col("n_tokens").cast("long"))
               .join(off, "_sz")
               .withColumn("rank", (F.col("_off")
                                    + F.row_number().over(we) - 1)
@@ -447,7 +431,6 @@ def shard_assign_balanced(docs: DataFrame, n_shards: int = 8,
 
 
 def sequential_ids(df: DataFrame, key_cols: Sequence[str],
-                   out_col: str = "seq_id",
                    num_partitions: int = 0) -> DataFrame:
     """Contiguous 0-based ordinals in ``key_cols`` order WITHOUT a global
     sort — the scalable form of zipWithIndex, and the standard packaging
@@ -484,7 +467,7 @@ def sequential_ids(df: DataFrame, key_cols: Sequence[str],
     lands), but EQUAL keys straddling a boundary would receive
     partition-dependent ordinals — add a tiebreaker column instead.
 
-    Returns the input columns + ``out_col`` (BIGINT, 0-based, dense).
+    Returns the input columns + ``seq_id`` (BIGINT, 0-based, dense).
     """
     from pyspark.sql import Window
 
@@ -510,7 +493,7 @@ def sequential_ids(df: DataFrame, key_cols: Sequence[str],
         "_pid", "_mn",
         F.coalesce(F.sum("_cnt").over(wh), F.lit(0)).alias("_off"))
     return (part.join(F.broadcast(off), "_pid")
-            .withColumn(out_col,
+            .withColumn("seq_id",
                         (F.col("_off") + F.col("_mid") - F.col("_mn"))
                         .cast("bigint"))
             .drop("_pid", "_mid", "_mn", "_off"))

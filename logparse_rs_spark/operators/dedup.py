@@ -34,6 +34,16 @@ from pyspark.sql import types as T
 
 from ..shared import SIMHASH_MAX_PAIRS, collect_if_fits, fits, shared
 
+# the sketch constants every near-dup operator and the oracle aux build
+# (dataops_fixtures) share: minhash signature length and char-shingle
+# width, LSH bands over the signature, simhash char-shingle width and
+# Hamming-band chunks
+NUM_PERM = 64
+SHINGLE_K = 5
+BANDS = 16
+SIMHASH_SHINGLE_K = 4
+SIMHASH_CHUNKS = 4
+
 # deterministic 64-bit mix constants (splitmix64)
 _MIX1 = np.uint64(0xBF58476D1CE4E5B9)
 _MIX2 = np.uint64(0x94D049BB133111EB)
@@ -141,7 +151,7 @@ def _batch_counts(keys_a: pd.Series, keys_b: pd.Series, text_of, n: int):
                         index=keys_a.index)
 
 
-def _bcast_norm_texts(docs: DataFrame, text_col: str, id_col: str):
+def _bcast_norm_texts(docs: DataFrame):
     """Broadcast {id: normalized text} for the pair-verify kernel, or
     None when the ids are not integral, the corpus exceeds the
     driver-collect budget (shared.collect_if_fits: one exact size job
@@ -154,10 +164,10 @@ def _bcast_norm_texts(docs: DataFrame, text_col: str, id_col: str):
     (guide §8: shuffle a lightweight proxy, keep the heavy bytes still)."""
     import hashlib
 
-    if not isinstance(docs.schema[id_col].dataType, T.IntegralType):
+    if not isinstance(docs.schema["doc_id"].dataType, T.IntegralType):
         return None
-    norm = docs.select(F.col(id_col).cast("long").alias("_id"),
-                       normalized_text(F.col(text_col)).alias("_nt"))
+    norm = docs.select(F.col("doc_id").cast("long").alias("_id"),
+                       normalized_text(F.col("text")).alias("_nt"))
     spark = docs.sparkSession
 
     def build():
@@ -185,17 +195,16 @@ def _bcast_norm_texts(docs: DataFrame, text_col: str, id_col: str):
                   hashlib.md5(plan_str.encode()).hexdigest(), build)
 
 
-def _pairs_with_known_ids(pairs: DataFrame, docs: DataFrame,
-                          id_col: str) -> DataFrame:
+def _pairs_with_known_ids(pairs: DataFrame, docs: DataFrame) -> DataFrame:
     """Mirror the join form's inner-join semantics on the broadcast
     path: a pair whose side is absent from docs is dropped, not scored
     against an empty text. Ids-only broadcast hash joins — the pair
     frame is never exchanged."""
-    ids = docs.select(id_col)
+    ids = docs.select("doc_id")
     return (pairs
-            .join(F.broadcast(ids.withColumnRenamed(id_col, "id_a")),
+            .join(F.broadcast(ids.withColumnRenamed("doc_id", "id_a")),
                   "id_a")
-            .join(F.broadcast(ids.withColumnRenamed(id_col, "id_b")),
+            .join(F.broadcast(ids.withColumnRenamed("doc_id", "id_b")),
                   "id_b"))
 
 
@@ -231,16 +240,16 @@ def content_fingerprint(col) -> F.Column:
     return fnv1a_col(normalized_text(col))
 
 
-def exact_dedup(docs: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Keep one canonical doc (min id) per distinct normalized text.
     xxhash64 on the normalized text gives a uniform 8-byte shuffle key —
     grouping by the raw text would shuffle whole documents."""
-    key = F.xxhash64(normalized_text(F.col(text_col))).alias("text_key")
+    key = F.xxhash64(normalized_text(F.col("text"))).alias("text_key")
     return (
-        docs.select(F.col(id_col), key)
+        docs.select(F.col("doc_id"), key)
         .groupBy("text_key")
-        .agg(F.min(id_col).alias(id_col), F.count("*").alias("dup_count"))
+        .agg(F.min("doc_id").alias("doc_id"),
+             F.count("*").alias("dup_count"))
     )
 
 
@@ -262,18 +271,17 @@ def _char_shingle_hashes(texts: pd.Series, k: int) -> list:
     return out
 
 
-def minhash_sig_batch(texts: pd.Series, num_perm: int = 64,
-                      shingle_k: int = 5) -> list:
+def minhash_sig_batch(texts: pd.Series) -> list:
     """Pure-numpy minhash signature batch — the single implementation shared
     by the Spark pandas UDF and the oracle fixture generator (so the two
     sides can never drift)."""
-    a = _splitmix64(np.arange(1, num_perm + 1, dtype=np.uint64))
-    b = _splitmix64(np.arange(1001, 1001 + num_perm, dtype=np.uint64))
-    shingles = _char_shingle_hashes(texts, shingle_k)
+    a = _splitmix64(np.arange(1, NUM_PERM + 1, dtype=np.uint64))
+    b = _splitmix64(np.arange(1001, 1001 + NUM_PERM, dtype=np.uint64))
+    shingles = _char_shingle_hashes(texts, SHINGLE_K)
     sigs = []
     for h in shingles:
         if len(h) == 0:
-            sigs.append(np.zeros(num_perm, dtype=np.int64))
+            sigs.append(np.zeros(NUM_PERM, dtype=np.int64))
             continue
         # (n, p) affine permutation; min over shingles per permutation
         vals = h[:, None] * a[None, :] + b[None, :]
@@ -281,25 +289,23 @@ def minhash_sig_batch(texts: pd.Series, num_perm: int = 64,
     return sigs
 
 
-def minhash_signatures(docs: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", num_perm: int = 64,
-                       shingle_k: int = 5) -> DataFrame:
-    """(id, sig array<long>) — minhash over char-k shingles with num_perm
-    affine permutations computed as one (n_shingles x num_perm) numpy min."""
+def minhash_signatures(docs: DataFrame) -> DataFrame:
+    """(doc_id, sig array<long>) — minhash of ``text`` over char-SHINGLE_K
+    shingles with NUM_PERM affine permutations computed as one
+    (n_shingles x NUM_PERM) numpy min."""
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def _sig(texts: pd.Series) -> pd.Series:
-        sigs = minhash_sig_batch(texts, num_perm, shingle_k)
+        sigs = minhash_sig_batch(texts)
         return pd.Series([s.tolist() for s in sigs], index=texts.index)
 
-    return docs.select(F.col(id_col), _sig(F.col(text_col)).alias("sig"))
+    return docs.select(F.col("doc_id"), _sig(F.col("text")).alias("sig"))
 
 
-def minhash_lsh_pairs(signatures: DataFrame, id_col: str = "doc_id",
-                      bands: int = 16, num_perm: int = 64,
+def minhash_lsh_pairs(signatures: DataFrame, bands: int = BANDS,
                       max_bucket: Optional[int] = None) -> DataFrame:
     """Candidate near-dup pairs: docs sharing >=1 LSH band bucket.
-    num_perm (the signature length) must be divisible by bands. Pure
+    NUM_PERM (the signature length) must be divisible by bands. Pure
     DataFrame ops: explode band hashes -> groupBy bucket self-join ->
     distinct pairs.
 
@@ -311,16 +317,16 @@ def minhash_lsh_pairs(signatures: DataFrame, id_col: str = "doc_id",
     first (see minhash_near_dup) so identical docs collapse to one member
     and a capped bucket only ever drops genuinely-distinct long tails.
     Use lsh_bucket_stats for the dropped-membership accounting."""
-    banded = _cap_buckets(_banded(signatures, id_col, bands, num_perm),
+    banded = _cap_buckets(_banded(signatures, bands),
                           ("band", "bucket"), max_bucket)
     left = banded.alias("l")
     right = banded.alias("r")
     pairs = (
         left.join(right, (F.col("l.band") == F.col("r.band"))
                   & (F.col("l.bucket") == F.col("r.bucket"))
-                  & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")))
-        .select(F.col(f"l.{id_col}").alias("id_a"),
-                F.col(f"r.{id_col}").alias("id_b"))
+                  & (F.col("l.doc_id") < F.col("r.doc_id")))
+        .select(F.col("l.doc_id").alias("id_a"),
+                F.col("r.doc_id").alias("id_b"))
     )
     return _distinct_pairs(pairs)
 
@@ -336,7 +342,7 @@ def _cap_buckets(rows: DataFrame, bucket_cols, max_bucket) -> DataFrame:
             .filter(F.col("_bsz") <= max_bucket).drop("_bsz"))
 
 
-def _distinct_pairs(pairs: DataFrame, cols=("id_a", "id_b")) -> DataFrame:
+def _distinct_pairs(pairs: DataFrame) -> DataFrame:
     """Cross-band pair dedup sized for the pair volume, not the session
     default. A band join emits O(sum bucket^2) rows — typically 10-1000x
     the doc count — so a `.distinct()` at the session's (input-sized)
@@ -349,25 +355,24 @@ def _distinct_pairs(pairs: DataFrame, cols=("id_a", "id_b")) -> DataFrame:
     parts = max(8 * sc.defaultParallelism,
                 int(pairs.sparkSession.conf.get(
                     "spark.sql.shuffle.partitions", "200")))
-    return pairs.repartition(parts, *cols).dropDuplicates()
+    return pairs.repartition(parts, "id_a", "id_b").dropDuplicates()
 
 
-def _banded(signatures: DataFrame, id_col: str, bands: int,
-            num_perm: int) -> DataFrame:
-    if num_perm % bands != 0:
+def _banded(signatures: DataFrame, bands: int) -> DataFrame:
+    if NUM_PERM % bands != 0:
         raise ValueError(
-            f"num_perm ({num_perm}) must be divisible by bands ({bands})")
-    rows_per_band = num_perm // bands
+            f"num_perm ({NUM_PERM}) must be divisible by bands ({bands})")
+    rows_per_band = NUM_PERM // bands
     # runtime guard: if the signatures were built with a DIFFERENT num_perm,
     # F.slice past the array end returns short/empty slices whose xxhash64
     # collides across docs — the self-join then explodes quadratically and
     # silently mis-bands. Fail the job instead (per-row check, codegen'd).
-    sig_checked = F.when(F.size("sig") == num_perm, F.col("sig")).otherwise(
+    sig_checked = F.when(F.size("sig") == NUM_PERM, F.col("sig")).otherwise(
         F.raise_error(F.format_string(
             "minhash signature length %s does not match num_perm "
-            + str(num_perm), F.size("sig"))))
+            + str(NUM_PERM), F.size("sig"))))
     return signatures.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(
             F.transform(
                 F.sequence(F.lit(0), F.lit(bands - 1)),
@@ -380,40 +385,34 @@ def _banded(signatures: DataFrame, id_col: str, bands: int,
     )
 
 
-def lsh_bucket_stats(signatures: DataFrame, id_col: str = "doc_id",
-                     bands: int = 16, num_perm: int = 64,
+def lsh_bucket_stats(signatures: DataFrame,
                      max_bucket: int = 1000) -> DataFrame:
     """Side-output accounting for the bucket cap: one row per oversized
     (band, bucket) with its membership — the 'what did the cap drop'
     answer a 100 TB dedup run must be able to report."""
-    return (_banded(signatures, id_col, bands, num_perm)
+    return (_banded(signatures, BANDS)
             .groupBy("band", "bucket")
             .agg(F.count("*").alias("members"))
             .filter(F.col("members") > max_bucket))
 
 
-def canonical_signatures(docs: DataFrame, text_col: str = "text",
-                         id_col: str = "doc_id", num_perm: int = 64,
-                         shingle_k: int = 5) -> DataFrame:
+def canonical_signatures(docs: DataFrame) -> DataFrame:
     """exact_dedup -> minhash signatures over the canonical (min-id) doc
     per distinct normalized text — the persisted signature table every
     near-dup consumer shares (minhash_near_dup's first two stages, split
     out so a session/pipeline computes them once)."""
     canon = (
-        docs.select(F.col(id_col), F.col(text_col),
-                    F.xxhash64(normalized_text(F.col(text_col)))
+        docs.select(F.col("doc_id"), F.col("text"),
+                    F.xxhash64(normalized_text(F.col("text")))
                     .alias("text_key"))
         .groupBy("text_key")
-        .agg(F.min(id_col).alias(id_col),
-             F.min_by(text_col, F.col(id_col)).alias(text_col))
+        .agg(F.min("doc_id").alias("doc_id"),
+             F.min_by("text", F.col("doc_id")).alias("text"))
     )
-    return minhash_signatures(canon, text_col, id_col, num_perm, shingle_k)
+    return minhash_signatures(canon)
 
 
-def minhash_near_dup(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id", num_perm: int = 64,
-                     bands: int = 16, shingle_k: int = 5,
-                     max_bucket: Optional[int] = 1000,
+def minhash_near_dup(docs: DataFrame, max_bucket: Optional[int] = 1000,
                      canon_sigs: Optional[DataFrame] = None) -> DataFrame:
     """The composed duplicate-heavy-safe near-dup plan:
 
@@ -431,15 +430,12 @@ def minhash_near_dup(docs: DataFrame, text_col: str = "text",
     frame — pass it when several consumers share one corpus so the
     dedup+signature stages run once instead of once per consumer."""
     sigs = (canon_sigs if canon_sigs is not None
-            else canonical_signatures(docs, text_col, id_col, num_perm,
-                                      shingle_k))
-    return minhash_lsh_pairs(sigs, id_col, bands, num_perm,
-                             max_bucket=max_bucket)
+            else canonical_signatures(docs))
+    return minhash_lsh_pairs(sigs, BANDS, max_bucket=max_bucket)
 
 
-def winnow_fingerprints(docs: DataFrame, k: int = 8, window: int = 16,
-                        text_col: str = "text",
-                        id_col: str = "doc_id") -> DataFrame:
+def winnow_fingerprints(docs: DataFrame, k: int = 8,
+                        window: int = 16) -> DataFrame:
     """Winnowing document fingerprints (Schleimer, Wilkerson & Aiken,
     SIGMOD'03 — the MOSS scheme): hash every character k-gram of the
     normalized text, then keep the MINIMUM hash of each sliding window of
@@ -455,8 +451,8 @@ def winnow_fingerprints(docs: DataFrame, k: int = 8, window: int = 16,
     oracle engine compute the identical value (a production deployment
     would swap in a rolling polynomial hash; the selection logic — the
     actual winnowing — is hash-agnostic)."""
-    base = docs.select(F.col(id_col),
-                       normalized_text(F.col(text_col)).alias("t_"))
+    base = docs.select(F.col("doc_id"),
+                       normalized_text(F.col("text")).alias("t_"))
     # Selection kernel: the all-JVM form (transform over a sequence with
     # array_min(slice(...)) per window) evaluates O(n_grams * window)
     # interpreted higher-order calls per doc — CodegenFallback, measured
@@ -468,7 +464,7 @@ def winnow_fingerprints(docs: DataFrame, k: int = 8, window: int = 16,
     # ever hex-formatted. array_distinct order (first occurrence) is
     # preserved via dict.fromkeys.
     out_schema = T.StructType([
-        docs.schema[id_col],
+        docs.schema["doc_id"],
         T.StructField("fingerprints", T.ArrayType(T.StringType())),
         T.StructField("n_grams", T.IntegerType()),
         T.StructField("n_fingerprints", T.IntegerType()),
@@ -479,7 +475,7 @@ def winnow_fingerprints(docs: DataFrame, k: int = 8, window: int = 16,
         swv = np.lib.stride_tricks.sliding_window_view
         for pdf in pdfs:
             ids, fps, ngs, nfs = [], [], [], []
-            for i, t in zip(pdf[id_col], pdf["t_"]):
+            for i, t in zip(pdf["doc_id"], pdf["t_"]):
                 t = t or ""
                 enc = t.encode("utf-8")
                 one_byte = len(enc) == len(t)
@@ -506,7 +502,7 @@ def winnow_fingerprints(docs: DataFrame, k: int = 8, window: int = 16,
                 fps.append(sel)
                 ngs.append(n_g)
                 nfs.append(len(sel))
-            yield pd.DataFrame({id_col: ids, "fingerprints": fps,
+            yield pd.DataFrame({"doc_id": ids, "fingerprints": fps,
                                 "n_grams": np.array(ngs, dtype=np.int32),
                                 "n_fingerprints": np.array(nfs,
                                                            dtype=np.int32)})
@@ -514,11 +510,11 @@ def winnow_fingerprints(docs: DataFrame, k: int = 8, window: int = 16,
     return base.mapInPandas(winnow, schema=out_schema)
 
 
-def simhash_batch(texts: pd.Series, shingle_k: int = 4) -> np.ndarray:
+def simhash_batch(texts: pd.Series) -> np.ndarray:
     """Pure-numpy simhash batch — shared by the Spark UDF and the oracle
     fixture generator."""
     out = np.zeros(len(texts), dtype=np.int64)
-    shingles = _char_shingle_hashes(texts, shingle_k)
+    shingles = _char_shingle_hashes(texts, SIMHASH_SHINGLE_K)
     bit_idx = np.arange(64, dtype=np.uint64)
     for i, h in enumerate(shingles):
         if len(h) == 0:
@@ -533,19 +529,18 @@ def simhash_batch(texts: pd.Series, shingle_k: int = 4) -> np.ndarray:
     return out
 
 
-def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-            shingle_k: int = 4) -> DataFrame:
+def simhash(docs: DataFrame) -> DataFrame:
     """64-bit simhash per doc: sign-sum of shingle-hash bit vectors."""
 
     @F.pandas_udf(T.LongType())
     def _simhash(texts: pd.Series) -> pd.Series:
-        return pd.Series(simhash_batch(texts, shingle_k), index=texts.index)
+        return pd.Series(simhash_batch(texts), index=texts.index)
 
-    return docs.select(F.col(id_col), _simhash(F.col(text_col)).alias("simhash"))
+    return docs.select(F.col("doc_id"),
+                       _simhash(F.col("text")).alias("simhash"))
 
 
-def _simhash_candidates_broadcast(sim: DataFrame, id_col: str,
-                                  chunks: int, max_bucket):
+def _simhash_candidates_broadcast(sim: DataFrame, max_bucket):
     """Broadcast fast path for simhash_candidates: when the (id, simhash)
     table fits the driver-collect budget (shared.collect_if_fits), each
     chunk becomes one numpy task over the broadcast arrays — bucket
@@ -553,9 +548,9 @@ def _simhash_candidates_broadcast(sim: DataFrame, id_col: str,
     all happen in-task, and only candidate pairs leave. The chunk
     self-join shuffles nothing. None above the gate; identical pairs +
     hamming, same final dedup."""
-    if not isinstance(sim.schema[id_col].dataType, T.IntegralType):
+    if not isinstance(sim.schema["doc_id"].dataType, T.IntegralType):
         return None
-    head = collect_if_fits(sim.select(F.col(id_col).cast("long"),
+    head = collect_if_fits(sim.select(F.col("doc_id").cast("long"),
                                       "simhash"), "simhash")
     if head is None:
         return None
@@ -567,7 +562,7 @@ def _simhash_candidates_broadcast(sim: DataFrame, id_col: str,
     ])
     if not head.num_rows:
         return _distinct_pairs(spark.createDataFrame([], out_schema))
-    width = 64 // chunks
+    width = 64 // SIMHASH_CHUNKS
     mask = np.uint64((1 << width) - 1)
     ids = head.column(0).to_numpy()
     sh = head.column(1).to_numpy().view(np.uint64)
@@ -575,7 +570,7 @@ def _simhash_candidates_broadcast(sim: DataFrame, id_col: str,
     # high candidate volume the Python->Arrow pair emission loses to the
     # JVM chunk join, so route big outputs back to the join plan
     est = 0
-    for chunk in range(chunks):
+    for chunk in range(SIMHASH_CHUNKS):
         vals = np.sort((sh >> np.uint64(chunk * width)) & mask)
         seg = np.flatnonzero(np.r_[True, vals[1:] != vals[:-1]])
         sizes = np.diff(np.r_[seg, len(vals)])
@@ -588,9 +583,9 @@ def _simhash_candidates_broadcast(sim: DataFrame, id_col: str,
         # hashes (one UDF pass total; the self-join aliases of the lazy
         # signature frame re-ran the simhash UDF once per side)
         local = spark.createDataFrame(
-            pd.DataFrame({id_col: ids, "simhash": sh.view(np.int64)})) \
+            pd.DataFrame({"doc_id": ids, "simhash": sh.view(np.int64)})) \
             .repartition(spark.sparkContext.defaultParallelism)
-        return _simhash_chunk_join(local, id_col, chunks, max_bucket)
+        return _simhash_chunk_join(local, max_bucket)
     bcv = spark.sparkContext.broadcast((ids, sh))
 
     n_slices = 4
@@ -641,46 +636,44 @@ def _simhash_candidates_broadcast(sim: DataFrame, id_col: str,
                          pa.array(ham[sel].astype(np.int32))],
                         names=["id_a", "id_b", "hamming"])
 
-    pairs = (spark.range(0, chunks * n_slices, 1,
-                         numPartitions=chunks * n_slices)
+    pairs = (spark.range(0, SIMHASH_CHUNKS * n_slices, 1,
+                         numPartitions=SIMHASH_CHUNKS * n_slices)
              .mapInArrow(emit, schema=out_schema))
     return _distinct_pairs(pairs)
 
 
-def simhash_candidates(sim: DataFrame, id_col: str = "doc_id",
-                       chunks: int = 4,
+def simhash_candidates(sim: DataFrame,
                        max_bucket: Optional[int] = None) -> DataFrame:
-    """Near-dup candidates: pairs sharing at least one 64/chunks-bit simhash
-    chunk.
+    """Near-dup candidates over (doc_id, simhash): pairs sharing at least
+    one of the SIMHASH_CHUNKS (4) 16-bit simhash chunks.
 
     GUARANTEE (pigeonhole): any pair within Hamming distance chunks-1 agrees
     on at least one chunk, so recall is 1.0 for that radius; pairs farther
     apart may or may not collide. Choosing chunks = radius+1 is the Manku
     et al. block design. Cost note for 10^9+ docs: a chunk table has
     2^(64/chunks) buckets, so expected self-join work is ~n^2/2^(64/chunks)
-    per chunk — survivable at chunks=4 (65,536 buckets) only with
+    per chunk — survivable at 4 chunks (65,536 buckets) only with
     exact-dedup-first plus the ``max_bucket`` cap, which drops buckets whose
     membership exceeds the cap (duplicate-heavy clusters; see
     minhash_near_dup for the same pattern and lsh_bucket_stats-style
     accounting). At larger radii use more tables over bit permutations
     rather than narrower chunks."""
-    bc = _simhash_candidates_broadcast(sim, id_col, chunks, max_bucket)
+    bc = _simhash_candidates_broadcast(sim, max_bucket)
     if bc is not None:
         return bc
-    return _simhash_chunk_join(sim, id_col, chunks, max_bucket)
+    return _simhash_chunk_join(sim, max_bucket)
 
 
-def _simhash_chunk_join(sim: DataFrame, id_col: str, chunks: int,
-                        max_bucket) -> DataFrame:
+def _simhash_chunk_join(sim: DataFrame, max_bucket) -> DataFrame:
     """The distributed chunk self-join form of simhash_candidates."""
-    width = 64 // chunks
+    width = 64 // SIMHASH_CHUNKS
     mask = (1 << width) - 1
     chunked = sim.select(
-        F.col(id_col), F.col("simhash"),
+        F.col("doc_id"), F.col("simhash"),
         F.posexplode(F.array(*[
             (F.shiftrightunsigned(F.col("simhash"), i * width)
              .bitwiseAND(F.lit(mask)))
-            for i in range(chunks)
+            for i in range(SIMHASH_CHUNKS)
         ])).alias("chunk_idx", "chunk_val"),
     )
     chunked = _cap_buckets(chunked, ("chunk_idx", "chunk_val"), max_bucket)
@@ -693,9 +686,9 @@ def _simhash_chunk_join(sim: DataFrame, id_col: str, chunks: int,
     pairs = (
         l.join(r, (F.col("l.chunk_idx") == F.col("r.chunk_idx"))
                & (F.col("l.chunk_val") == F.col("r.chunk_val"))
-               & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")))
-        .select(F.col(f"l.{id_col}").alias("id_a"),
-                F.col(f"r.{id_col}").alias("id_b"),
+               & (F.col("l.doc_id") < F.col("r.doc_id")))
+        .select(F.col("l.doc_id").alias("id_a"),
+                F.col("r.doc_id").alias("id_b"),
                 F.bit_count(F.col("l.simhash")
                             .bitwiseXOR(F.col("r.simhash")))
                 .alias("hamming"))
@@ -719,8 +712,7 @@ def _gram_hash_np(t: str, n: int) -> np.ndarray:
     return np.unique(h)
 
 
-def ngram_jaccard(docs: DataFrame, pairs: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id", n: int = 3) -> DataFrame:
+def ngram_jaccard(docs: DataFrame, pairs: DataFrame, n: int = 3) -> DataFrame:
     """Exact char-n-gram Jaccard (1 <= n <= 3) for candidate pairs — the
     verify stage after LSH: ngram_overlap_pairs' exact counts divided
     JVM-side, n_common / (n_a + n_b - n_common), null for two empty gram
@@ -730,16 +722,13 @@ def ngram_jaccard(docs: DataFrame, pairs: DataFrame, text_col: str = "text",
     every pair and running array_intersect/array_union per pair measured
     53% of the whole 33-query bench at sf0.1 (30.5 s); the pairs carry
     ids (or the ~1-2 KB normalized text) instead."""
-    ov = ngram_overlap_pairs(docs, pairs, text_col=text_col,
-                             id_col=id_col, n=n)
+    ov = ngram_overlap_pairs(docs, pairs, n=n)
     union = F.col("n_a") + F.col("n_b") - F.col("n_common")
     return ov.select("id_a", "id_b", F.when(union > 0, F.col("n_common")
                                             / union).alias("jaccard"))
 
 
-def incremental_dedup(new_docs: DataFrame, corpus: DataFrame,
-                      text_col: str = "text",
-                      id_col: str = "doc_id") -> DataFrame:
+def incremental_dedup(new_docs: DataFrame, corpus: DataFrame) -> DataFrame:
     """Dedup a NEW batch against an existing corpus plus itself — the
     recurring production shape (each crawl/snapshot dedupes against every
     earlier one; re-deduping the whole union from scratch would reread
@@ -755,17 +744,17 @@ def incremental_dedup(new_docs: DataFrame, corpus: DataFrame,
     distinct key set (the information-theoretic minimum for exact dedup);
     in practice you persist that key table once and reuse it every
     increment instead of rescanning the corpus."""
-    key = F.xxhash64(normalized_text(F.col(text_col))).alias("_k")
-    nk = new_docs.select(F.col(id_col), key)
+    key = F.xxhash64(normalized_text(F.col("text"))).alias("_k")
+    nk = new_docs.select(F.col("doc_id"), key)
     ck = corpus.select(key).distinct()
     surv = (nk.join(ck, "_k", "left_anti")
-            .groupBy("_k").agg(F.min(id_col).alias(id_col))
-            .select(id_col))
-    return new_docs.join(surv, id_col, "left_semi")
+            .groupBy("_k").agg(F.min("doc_id").alias("doc_id"))
+            .select("doc_id"))
+    return new_docs.join(surv, "doc_id", "left_semi")
 
 
-def bloom_bits(keys: DataFrame, key_col: str, m_bits: int = 1 << 20,
-               n_hashes: int = 2) -> DataFrame:
+def bloom_bits(keys: DataFrame, key_col: str,
+               m_bits: int = 1 << 20) -> DataFrame:
     """Build a Bloom-filter bitmap over a key column as a TABLE of
     (word_idx BIGINT, bits BIGINT) — 63 usable bits per word so no shift
     ever touches the sign bit (engine-portable two's-complement safety).
@@ -779,7 +768,7 @@ def bloom_bits(keys: DataFrame, key_col: str, m_bits: int = 1 << 20,
     degenerate h2 only raises the false-positive rate, never causes a
     false negative. Size m at ~10 bits per distinct key for ~3% FP with
     the default two hashes ((1 - e^(-k*n/m))^k)."""
-    pos = F.array(*_bloom_positions(F.col(key_col), n_hashes, m_bits))
+    pos = F.array(*_bloom_positions(F.col(key_col), m_bits))
     return (keys.select(F.explode(pos).alias("_pos"))
             .select(F.expr("_pos DIV 63").alias("_w"),
                     F.expr("shiftleft(CAST(1 AS BIGINT), "
@@ -787,17 +776,17 @@ def bloom_bits(keys: DataFrame, key_col: str, m_bits: int = 1 << 20,
             .groupBy("_w").agg(F.bit_or("_m").alias("_bits")))
 
 
-def _bloom_positions(key_col: F.Column, n_hashes: int, m_bits: int) -> list:
+def _bloom_positions(key_col: F.Column, m_bits: int) -> list:
     """k bit positions for a key: md5 -> two 60-bit ints -> double hash."""
     digest = F.md5(key_col.cast("string"))
     h1 = F.conv(F.substring(digest, 1, 15), 16, 10).cast("bigint")
     h2 = F.conv(F.substring(digest, 16, 15), 16, 10).cast("bigint")
     return [F.pmod(h1 + F.lit(j) * h2, F.lit(m_bits))
-            for j in range(n_hashes)]
+            for j in range(2)]
 
 
 def bloom_anti_join(batch: DataFrame, corpus: DataFrame, key_col: str,
-                    m_bits: int = 1 << 20, n_hashes: int = 2,
+                    m_bits: int = 1 << 20,
                     bits: Optional[DataFrame] = None) -> DataFrame:
     """EXACT anti-join (batch keys not present in corpus) with a
     Bloom-filter prefilter — the result is identical to a plain
@@ -817,8 +806,8 @@ def bloom_anti_join(batch: DataFrame, corpus: DataFrame, key_col: str,
     when batch-internal dedup is wanted."""
     if bits is None:
         bits = bloom_bits(corpus.select(key_col).distinct(), key_col,
-                          m_bits, n_hashes)
-    pos = F.array(*_bloom_positions(F.col(key_col), n_hashes, m_bits))
+                          m_bits)
+    pos = F.array(*_bloom_positions(F.col(key_col), m_bits))
     probes = (batch.select(key_col).distinct()
               .select(key_col, F.explode(pos).alias("_pos"))
               .select(key_col, F.expr("_pos DIV 63").alias("_w"),
@@ -838,8 +827,7 @@ def bloom_anti_join(batch: DataFrame, corpus: DataFrame, key_col: str,
     return batch.join(new_keys, key_col, "left_semi")
 
 
-def duplicate_span_stats(docs: DataFrame, n: int = 8,
-                         id_col: str = "doc_id") -> DataFrame:
+def duplicate_span_stats(docs: DataFrame, n: int = 8) -> DataFrame:
     """Per-document duplicated-span exposure — the document-level signal
     behind substring-level training-data dedup (Lee et al. 2022,
     "Deduplicating Training Data Makes Language Models Better"): for each
@@ -865,13 +853,13 @@ def duplicate_span_stats(docs: DataFrame, n: int = 8,
     wire."""
     from .text import word_ngrams
 
-    base = docs.select(F.col(id_col), F.col("words").alias("_ws"))
+    base = docs.select(F.col("doc_id"), F.col("words").alias("_ws"))
     spans = word_ngrams(F.col("_ws"), n)
-    per = base.select(F.col(id_col),
+    per = base.select(F.col("doc_id"),
                       F.explode(F.array_distinct(spans)).alias("span"))
     n_docs = F.count("*").over(Window.partitionBy("span"))
     return (per.withColumn("_nd", n_docs)
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(F.count("*").alias("n_spans"),
                  F.sum((F.col("_nd") >= 2).cast("long")).alias("n_shared"))
             .withColumn("shared_ppm",
@@ -879,8 +867,6 @@ def duplicate_span_stats(docs: DataFrame, n: int = 8,
 
 
 def minhash_cross_candidates(sig_new: DataFrame, sig_corpus: DataFrame,
-                             id_col: str = "doc_id", bands: int = 16,
-                             num_perm: int = 64,
                              max_bucket: Optional[int] = None) -> DataFrame:
     """Candidate near-dup pairs BETWEEN two signature sets (batch vs
     corpus) — the cross form of minhash_lsh_pairs: docs sharing >=1 LSH
@@ -891,19 +877,16 @@ def minhash_cross_candidates(sig_new: DataFrame, sig_corpus: DataFrame,
     side; a batch key joining an oversized corpus bucket is exactly the
     blowup the cap exists for). Capped drops are visible through
     lsh_bucket_stats on the corpus signatures."""
-    a = (_banded(sig_new, id_col, bands, num_perm)
-         .withColumnRenamed(id_col, "id_a"))
-    b = _cap_buckets(_banded(sig_corpus, id_col, bands, num_perm)
-                     .withColumnRenamed(id_col, "id_b"),
+    a = _banded(sig_new, BANDS).withColumnRenamed("doc_id", "id_a")
+    b = _cap_buckets(_banded(sig_corpus, BANDS)
+                     .withColumnRenamed("doc_id", "id_b"),
                      ("band", "bucket"), max_bucket)
     return _distinct_pairs(
         a.join(b, ["band", "bucket"]).select("id_a", "id_b"))
 
 
 def minhash_cross_dedup(new_docs: DataFrame, corpus: DataFrame,
-                        text_col: str = "text", id_col: str = "doc_id",
-                        threshold: float = 0.5, num_perm: int = 64,
-                        bands: int = 16, shingle_k: int = 5,
+                        threshold: float = 0.5,
                         max_bucket: Optional[int] = 1000,
                         corpus_sigs: Optional[DataFrame] = None
                         ) -> DataFrame:
@@ -923,27 +906,22 @@ def minhash_cross_dedup(new_docs: DataFrame, corpus: DataFrame,
     candidates. Within-batch near-dups are NOT collapsed here (membership
     vs the corpus only); compose with minhash_near_dup for batch-internal
     dedup."""
-    sig_a = minhash_signatures(new_docs, text_col, id_col,
-                               num_perm, shingle_k)
+    sig_a = minhash_signatures(new_docs)
     sig_b = (corpus_sigs if corpus_sigs is not None
-             else minhash_signatures(corpus, text_col, id_col,
-                                     num_perm, shingle_k))
-    cands = minhash_cross_candidates(sig_a, sig_b, id_col, bands,
-                                     num_perm, max_bucket)
-    both = (new_docs.select(id_col, text_col)
-            .unionByName(corpus.select(id_col, text_col)))
-    verified = ngram_jaccard(both, cands, text_col, id_col, n=3)
+             else minhash_signatures(corpus))
+    cands = minhash_cross_candidates(sig_a, sig_b, max_bucket)
+    both = (new_docs.select("doc_id", "text")
+            .unionByName(corpus.select("doc_id", "text")))
+    verified = ngram_jaccard(both, cands, n=3)
     dup_ids = (verified.filter(F.col("jaccard") >= threshold)
-               .select(F.col("id_a").alias(id_col)).distinct())
-    return new_docs.join(dup_ids, id_col, "left_anti")
+               .select(F.col("id_a").alias("doc_id")).distinct())
+    return new_docs.join(dup_ids, "doc_id", "left_anti")
 
 
-def remove_duplicate_spans(docs: DataFrame, n: int = 8, min_docs: int = 2,
-                           text_col: str = "text",
-                           id_col: str = "doc_id") -> DataFrame:
+def remove_duplicate_spans(docs: DataFrame, n: int = 8) -> DataFrame:
     """Substring-level dedup REMOVAL (the endgame of Lee et al. 2022):
     rewrite every document dropping each word that is covered by any
-    n-word span occurring in >= ``min_docs`` documents. The flagging
+    n-word span occurring in >= 2 documents. The flagging
     form (:func:`duplicate_span_stats`) scores exposure; this one edits.
 
     Returns (id, text, n_removed BIGINT): docs with no removed word keep
@@ -960,58 +938,40 @@ def remove_duplicate_spans(docs: DataFrame, n: int = 8, min_docs: int = 2,
     rebuild is one id-keyed aggregate whose per-group state is bounded
     by the document's own length. Untouched docs never leave the scan —
     they join the edited set by id with a coalesce."""
-    base, per = _span_frames(docs, n, text_col, id_col)
-    if min_docs == 2:
-        # ">= 2 distinct owner docs" is exactly min(id) != max(id) over
-        # the span window — one exchange marks the banned occurrences
-        # in place of the r5 distinct + groupBy + semi-join chain
-        w = Window.partitionBy("_span")
-        hits = (per.withColumn("_mn", F.min(id_col).over(w))
-                .withColumn("_mx", F.max(id_col).over(w))
-                .filter(F.col("_mn") != F.col("_mx")))
-        return _scrub_from_hits(base, hits, n, text_col, id_col)
-    # span -> distinct-doc frequency (vocab-sized after the map-side
-    # partials); shared = spans carried by >= min_docs docs
-    shared = (per.select(id_col, "_span").distinct()
-              .groupBy("_span").agg(F.count("*").alias("_nd"))
-              .filter(F.col("_nd") >= min_docs)
-              .select("_span"))
-    return _scrub_spans(base, per, shared, n, text_col, id_col)
+    base, per = _span_frames(docs, n)
+    # ">= 2 distinct owner docs" is exactly min(id) != max(id) over the
+    # span window — one exchange marks the banned occurrences in place of
+    # a distinct + groupBy + semi-join chain
+    w = Window.partitionBy("_span")
+    hits = (per.withColumn("_mn", F.min("doc_id").over(w))
+            .withColumn("_mx", F.max("doc_id").over(w))
+            .filter(F.col("_mn") != F.col("_mx")))
+    return _scrub_from_hits(base, hits, n)
 
 
-def _span_frames(docs: DataFrame, n: int, text_col: str, id_col: str):
+def _span_frames(docs: DataFrame, n: int):
     """(base, per): the tokenized doc frame and its positioned n-word
     spans — shared by the duplicate-span and contamination scrubbers."""
     from .text import word_ngrams
 
-    base = docs.select(F.col(id_col), F.col(text_col),
+    base = docs.select(F.col("doc_id"), F.col("text"),
                        F.col("words").alias("_ws"))
     spans = word_ngrams(F.col("_ws"), n)
     # (id, start0, span): posexplode's index IS the 0-based start word
-    per = base.select(id_col, F.posexplode(spans).alias("_start", "_span"))
+    per = base.select("doc_id", F.posexplode(spans).alias("_start", "_span"))
     return base, per
 
 
-def _scrub_spans(base: DataFrame, per: DataFrame, banned: DataFrame,
-                 n: int, text_col: str, id_col: str) -> DataFrame:
-    """Drop every word covered by a banned span; rebuild only touched
-    docs (see remove_duplicate_spans for the scale notes)."""
-    # r6 shape: the shuffle carries only (id, banned-span START) — the
-    # covered word-index set expands JVM-side AFTER the per-doc rollup
-    # (flatten of per-start sequences), and touched docs rebuild from
-    # their own word array by index arithmetic. The previous plan
-    # exploded every covered index through a distinct, posexploded every
-    # token of every doc, anti-joined, and re-sorted a collect_list per
-    # doc — four extra exchanges and a corpus-sized token explode for
-    # the same rows.
-    return _scrub_from_hits(base, per.join(banned, "_span", "left_semi"),
-                            n, text_col, id_col)
-
-
-def _scrub_from_hits(base: DataFrame, hits: DataFrame, n: int,
-                     text_col: str, id_col: str) -> DataFrame:
-    """Rebuild docs from their banned-span HIT rows (id, _start, ...)."""
-    starts = (hits.groupBy(id_col)
+def _scrub_from_hits(base: DataFrame, hits: DataFrame, n: int) -> DataFrame:
+    """Rebuild docs from their banned-span HIT rows (id, _start, ...):
+    drop every word covered by a banned span; rebuild only touched docs
+    (see remove_duplicate_spans for the scale notes)."""
+    # the shuffle carries only (id, banned-span START) — the covered
+    # word-index set expands JVM-side AFTER the per-doc rollup (flatten
+    # of per-start sequences), and touched docs rebuild from their own
+    # word array by index arithmetic, instead of exploding every covered
+    # index through a distinct and posexploding every token of every doc
+    starts = (hits.groupBy("doc_id")
               .agg(F.collect_set("_start").alias("_starts")))
     cov = F.array_sort(F.array_distinct(F.flatten(F.transform(
         F.col("_starts"),
@@ -1020,12 +980,12 @@ def _scrub_from_hits(base: DataFrame, hits: DataFrame, n: int,
         F.sequence(F.lit(0), F.size("_ws") - 1), F.col("_cov"))
     rebuilt = F.concat_ws(" ", F.transform(
         keep_idx, lambda i: F.element_at(F.col("_ws"), i + 1)))
-    out = (base.join(starts, id_col, "left")
+    out = (base.join(starts, "doc_id", "left")
            .withColumn("_cov", F.when(F.col("_starts").isNotNull(), cov))
            .select(
-               F.col(id_col),
-               F.when(F.col("_cov").isNull(), F.col(text_col))
-               .otherwise(rebuilt).alias(text_col),
+               F.col("doc_id"),
+               F.when(F.col("_cov").isNull(), F.col("text"))
+               .otherwise(rebuilt).alias("text"),
                F.when(F.col("_cov").isNull(), F.lit(0))
                .otherwise(F.size("_cov")).cast("bigint")
                .alias("n_removed")))
@@ -1033,8 +993,7 @@ def _scrub_from_hits(base: DataFrame, hits: DataFrame, n: int,
 
 
 def remove_contaminated_spans(docs: DataFrame, eval_docs: DataFrame,
-                              n: int = 8, text_col: str = "text",
-                              id_col: str = "doc_id") -> DataFrame:
+                              n: int = 8) -> DataFrame:
     """Benchmark DECONTAMINATION by span scrubbing: drop every corpus word
     covered by an n-word span that appears anywhere in the eval set — the
     editing counterpart of the contamination CHECK (which only flags).
@@ -1049,15 +1008,13 @@ def remove_contaminated_spans(docs: DataFrame, eval_docs: DataFrame,
     never shuffles to discover contamination; only the docs that
     actually hit an eval span pay the covered-index explode and the
     id-keyed rebuild."""
-    base, per = _span_frames(docs, n, text_col, id_col)
-    _, eval_per = _span_frames(eval_docs, n, text_col, id_col)
+    base, per = _span_frames(docs, n)
+    _, eval_per = _span_frames(eval_docs, n)
     banned = F.broadcast(eval_per.select("_span").distinct())
-    return _scrub_spans(base, per, banned, n, text_col, id_col)
+    return _scrub_from_hits(base, per.join(banned, "_span", "left_semi"), n)
 
 
-def soft_dedup_weights(docs: DataFrame, clusters: DataFrame,
-                       id_col: str = "doc_id",
-                       scale: int = 1_000_000) -> DataFrame:
+def soft_dedup_weights(docs: DataFrame, clusters: DataFrame) -> DataFrame:
     """Soft deduplication — DOWN-WEIGHT duplicated documents instead of
     dropping them (the sampling-weight alternative to hard removal,
     cf. SoftDeDup, Xia et al. 2024): every member of a near-dup cluster
@@ -1071,29 +1028,28 @@ def soft_dedup_weights(docs: DataFrame, clusters: DataFrame,
     the closure is computed once across the dedup family.
 
     Returns (id, cluster_size BIGINT, weight_ppm BIGINT) for EVERY input
-    doc; weight_ppm = scale DIV cluster_size, exact integer on any
-    engine (cluster_size >= 1, so no division edge cases; at the default
-    scale the weight is parts-per-million, losing at most 1 ppm to the
-    floor — callers needing finer resolution raise ``scale``).
+    doc; weight_ppm = 1000000 DIV cluster_size, exact integer on any
+    engine (cluster_size >= 1, so no division edge cases; the weight is
+    parts-per-million, losing at most 1 ppm to the floor).
 
     Scale shape: one hash join of the corpus id column against the
     cluster assignment (cluster table is duplicate-sized, far smaller
     than the corpus; the corpus side carries only the 8-byte id — text
     never shuffles). The weight arithmetic is scan-side integer DIV."""
-    cs = (clusters.select(F.col("id").alias(id_col),
+    cs = (clusters.select(F.col("id").alias("doc_id"),
                           F.col("cluster_size")))
-    return (docs.select(id_col)
-            .join(cs, on=id_col, how="left")
+    return (docs.select("doc_id")
+            .join(cs, on="doc_id", how="left")
             .select(
-                F.col(id_col),
+                F.col("doc_id"),
                 F.coalesce(F.col("cluster_size"), F.lit(1))
                 .cast("bigint").alias("cluster_size"),
-                F.expr(f"CAST({scale} DIV coalesce(cluster_size, 1) "
+                F.expr("CAST(1000000 DIV coalesce(cluster_size, 1) "
                        "AS BIGINT)").alias("weight_ppm")))
 
 
-def cluster_representatives(clusters: DataFrame, quality: DataFrame,
-                            id_col: str = "doc_id") -> DataFrame:
+def cluster_representatives(clusters: DataFrame,
+                            quality: DataFrame) -> DataFrame:
     """Quality-aware canonical-copy selection: for each near-dup cluster,
     keep the HIGHEST-quality member (ties broken by smallest id) — the
     "which copy do we actually train on" step that replaces keep-first /
@@ -1112,21 +1068,20 @@ def cluster_representatives(clusters: DataFrame, quality: DataFrame,
     not the corpus), then ONE hash aggregation on component with
     map-side-combinable max_by — no window, no sort, no corpus scan
     beyond the quality frame the session already computed."""
-    q = quality.select(F.col(id_col), F.col("quality"))
-    members = (clusters.select(F.col("id").alias(id_col),
+    q = quality.select(F.col("doc_id"), F.col("quality"))
+    members = (clusters.select(F.col("id").alias("doc_id"),
                                "component", "cluster_size")
-               .join(q, on=id_col, how="inner"))
+               .join(q, on="doc_id", how="inner"))
     key = F.struct(F.col("quality").alias("q"),
-                   (-F.col(id_col)).alias("nid"))
+                   (-F.col("doc_id")).alias("nid"))
     return (members.groupBy("component")
-            .agg(F.max_by(F.col(id_col), key).alias("rep_doc_id"),
+            .agg(F.max_by(F.col("doc_id"), key).alias("rep_doc_id"),
                  F.max_by(F.col("quality"), key).alias("rep_quality"),
                  F.max("cluster_size").cast("bigint")
                  .alias("cluster_size")))
 
 
-def span_novelty(docs: DataFrame, n: int = 8,
-                 id_col: str = "doc_id") -> DataFrame:
+def span_novelty(docs: DataFrame, n: int = 8) -> DataFrame:
     """First-occurrence attribution — per document, how much of its
     content is NEW relative to everything with a smaller id (ids are the
     ingest order in this corpus): the fraction of its distinct word
@@ -1150,7 +1105,7 @@ def span_novelty(docs: DataFrame, n: int = 8,
     2^-64 collision)."""
     from .text import word_ngrams
 
-    wbase = docs.select(F.col(id_col), F.col("words").alias("_ws"))
+    wbase = docs.select(F.col("doc_id"), F.col("words").alias("_ws"))
     spans = word_ngrams(F.col("_ws"), n)
     # per-doc span dedup happens SCAN-SIDE (array_distinct before the
     # explode, the duplicate_span_stats discipline) and the first-owner
@@ -1158,24 +1113,22 @@ def span_novelty(docs: DataFrame, n: int = 8,
     # paid a distinct exchange, a groupBy exchange and a big-to-big
     # span-string join for the same numbers (guide §2.4: a window
     # partitioned like the aggregation needs no second shuffle)
-    per_d = wbase.select(F.col(id_col),
+    per_d = wbase.select(F.col("doc_id"),
                          F.explode(F.array_distinct(spans)).alias("_span"))
-    first = F.min(id_col).over(Window.partitionBy("_span"))
+    first = F.min("doc_id").over(Window.partitionBy("_span"))
     return (per_d.withColumn("_first", first)
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(F.count("*").alias("n_spans"),
-                 F.sum((F.col(id_col) == F.col("_first")).cast("bigint"))
+                 F.sum((F.col("doc_id") == F.col("_first")).cast("bigint"))
                  .alias("n_novel"))
-            .select(F.col(id_col),
+            .select(F.col("doc_id"),
                     F.col("n_spans"),
                     F.col("n_novel"),
                     F.expr("CAST(n_novel * 1000000 DIV n_spans AS BIGINT)")
                     .alias("novel_ppm")))
 
 
-def source_overlap(pairs: DataFrame, docs: DataFrame,
-                   id_col: str = "doc_id",
-                   source_col: str = "source") -> DataFrame:
+def source_overlap(pairs: DataFrame, docs: DataFrame) -> DataFrame:
     """Syndication detection — aggregate document near-dup pairs up to
     the SOURCE level: which feeds/domains keep publishing each other's
     content. (source_a, source_b) is canonically ordered (least first)
@@ -1193,11 +1146,11 @@ def source_overlap(pairs: DataFrame, docs: DataFrame,
     source-pair-keyed aggregation whose key space is |sources|^2-bounded
     and far sparser. n_docs uses one distinct over (pair, id), the only
     extra shuffle, still pair-table-sized."""
-    src = docs.select(F.col(id_col), F.col(source_col))
-    a = src.select(F.col(id_col).alias("id_a"),
-                   F.col(source_col).alias("_sa"))
-    b = src.select(F.col(id_col).alias("id_b"),
-                   F.col(source_col).alias("_sb"))
+    src = docs.select(F.col("doc_id"), F.col("source"))
+    a = src.select(F.col("doc_id").alias("id_a"),
+                   F.col("source").alias("_sa"))
+    b = src.select(F.col("doc_id").alias("id_b"),
+                   F.col("source").alias("_sb"))
     tagged = (pairs.select("id_a", "id_b").join(a, "id_a").join(b, "id_b")
               .select(F.least("_sa", "_sb").alias("source_a"),
                       F.greatest("_sa", "_sb").alias("source_b"),
@@ -1218,7 +1171,6 @@ def source_overlap(pairs: DataFrame, docs: DataFrame,
 
 
 def ngram_overlap_pairs(docs: DataFrame, pairs: DataFrame,
-                        text_col: str = "text", id_col: str = "doc_id",
                         n: int = 3) -> DataFrame:
     """Exact char-n-gram overlap STATS (1 <= n <= 3) for candidate pairs:
     (id_a, id_b, n_common, n_a, n_b) as integers — the primitive under
@@ -1240,7 +1192,7 @@ def ngram_overlap_pairs(docs: DataFrame, pairs: DataFrame,
         raise ValueError(f"n={n}: exact char-gram sets need 1 <= n <= 3 "
                          "(three 21-bit code points per 64-bit code)")
 
-    bc = _bcast_norm_texts(docs, text_col, id_col)
+    bc = _bcast_norm_texts(docs)
     if bc is not None:
 
         @F.pandas_udf("n_common long, n_a long, n_b long")
@@ -1249,28 +1201,27 @@ def ngram_overlap_pairs(docs: DataFrame, pairs: DataFrame,
             # than scoring against the wrong text
             return _batch_counts(ia, ib, bc.value.__getitem__, n)
 
-        scored = (_pairs_with_known_ids(pairs, docs, id_col)
+        scored = (_pairs_with_known_ids(pairs, docs)
                   .select("id_a", "id_b",
                           _ov_bc(F.col("id_a").cast("long"),
                                  F.col("id_b").cast("long")).alias("_o")))
     else:
-        norm = docs.select(F.col(id_col),
-                           normalized_text(F.col(text_col)).alias("_nt"))
+        norm = docs.select(F.col("doc_id"),
+                           normalized_text(F.col("text")).alias("_nt"))
         a, b = norm.alias("a"), norm.alias("b")
 
         @F.pandas_udf("n_common long, n_a long, n_b long")
         def _ov(ta: pd.Series, tb: pd.Series) -> pd.DataFrame:
             return _batch_counts(ta.fillna(""), tb.fillna(""), str, n)
 
-        scored = (pairs.join(a, pairs["id_a"] == F.col(f"a.{id_col}"))
-                  .join(b, pairs["id_b"] == F.col(f"b.{id_col}"))
+        scored = (pairs.join(a, pairs["id_a"] == F.col("a.doc_id"))
+                  .join(b, pairs["id_b"] == F.col("b.doc_id"))
                   .select("id_a", "id_b",
                           _ov(F.col("a._nt"), F.col("b._nt")).alias("_o")))
     return scored.select("id_a", "id_b", "_o.n_common", "_o.n_a", "_o.n_b")
 
 
 def containment_pairs(docs: DataFrame, pairs: DataFrame,
-                      text_col: str = "text", id_col: str = "doc_id",
                       n: int = 3, min_ppm: int = 800_000) -> DataFrame:
     """Asymmetric containment verify over candidate pairs (Broder's
     containment coefficient): keep pairs where EITHER side's gram set is
@@ -1280,8 +1231,7 @@ def containment_pairs(docs: DataFrame, pairs: DataFrame,
     side). Scores are exact integer ppm (``n_common * 1e6 DIV n_side``,
     NULL when a side has no grams), so both engines agree bit-for-bit.
     """
-    ov = ngram_overlap_pairs(docs, pairs, text_col=text_col,
-                             id_col=id_col, n=n)
+    ov = ngram_overlap_pairs(docs, pairs, n=n)
     cont_a = F.when(F.col("n_a") > 0,
                     F.expr("CAST(n_common * 1000000 DIV n_a AS BIGINT)"))
     cont_b = F.when(F.col("n_b") > 0,

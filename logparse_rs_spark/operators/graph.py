@@ -33,6 +33,12 @@ from pyspark.sql import types as T
 
 from ..shared import collect_if_fits
 
+# fixed-point units (1.0) and rounds of pagerank_integer, and the
+# fixed-point unit of hits_integer
+PR_SCALE = 10**12
+PR_ITERATIONS = 3
+HITS_SCALE = 10**6
+
 
 def _truncate(df: DataFrame, eager: bool = True) -> DataFrame:
     """Cut lineage between rounds (iterative plans grow exponentially
@@ -46,8 +52,7 @@ def _truncate(df: DataFrame, eager: bool = True) -> DataFrame:
     return df.localCheckpoint(eager=eager)
 
 
-def connected_components(pairs: DataFrame, src: str = "id_a",
-                         dst: str = "id_b", max_iter: int = 20) -> DataFrame:
+def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     """Return (id, component) for every node appearing in `pairs`, where
     component = min node id reachable through the pair graph.
 
@@ -57,13 +62,13 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
     (_components_star) raises if it has not converged after max_iter
     rounds instead of returning a wrong clustering.
     """
-    local = _components_local(pairs, src, dst)
+    local = _components_local(pairs)
     if local is not None:
         return local
-    return _components_star(pairs, src, dst, max_iter)
+    return _components_star(pairs, max_iter)
 
 
-def _components_local(pairs: DataFrame, src: str, dst: str):
+def _components_local(pairs: DataFrame):
     """Size-gated local path: when the edge list fits the driver-collect
     budget (shared.collect_if_fits: 16 B per edge, so 4M edges at the
     default), pull it once and run vectorized min-label propagation with
@@ -73,8 +78,8 @@ def _components_local(pairs: DataFrame, src: str, dst: str):
     node id reachable, nodes = pair endpoints, deterministic (depends
     only on the edge set). Replaces O(log n) rounds of 6-exchange Spark
     jobs with one collect for the small-graph regime."""
-    tbl = collect_if_fits(pairs.select(F.col(src).cast("long").alias("a"),
-                                       F.col(dst).cast("long").alias("b")),
+    tbl = collect_if_fits(pairs.select(F.col("id_a").cast("long").alias("a"),
+                                       F.col("id_b").cast("long").alias("b")),
                           "components")
     if tbl is None:
         return None
@@ -152,15 +157,14 @@ def _edge_fingerprint(e: DataFrame):
     return (row["n"], row["h1"], row["h2"])
 
 
-def _components_star(pairs: DataFrame, src: str, dst: str,
-                     max_iter: int) -> DataFrame:
+def _components_star(pairs: DataFrame, max_iter: int) -> DataFrame:
     # truncate the INPUT once: nodes and the canonical edge set both
     # derive from it, and for LSH pair graphs the pair lineage is the
     # whole signature/banding/verify computation — without this it would
     # execute once per derived frame
     pairs = _truncate(
-        pairs.select(F.col(src).cast("long").alias("s"),
-                     F.col(dst).cast("long").alias("d")), eager=False)
+        pairs.select(F.col("id_a").cast("long").alias("s"),
+                     F.col("id_b").cast("long").alias("d")), eager=False)
     nodes = (pairs.select(F.col("s").alias("id"))
              .union(pairs.select(F.col("d").alias("id")))
              .distinct())
@@ -189,8 +193,7 @@ def _components_star(pairs: DataFrame, src: str, dst: str,
             .select("id", F.coalesce("component", "id").alias("component")))
 
 
-def dup_clusters(pairs: Optional[DataFrame] = None, src: str = "id_a",
-                 dst: str = "id_b", max_iter: int = 20,
+def dup_clusters(pairs: Optional[DataFrame] = None,
                  components: Optional[DataFrame] = None) -> DataFrame:
     """Per-node duplicate-cluster assignment + cluster size:
     (id, component, cluster_size). Pass `components` to reuse an
@@ -200,28 +203,26 @@ def dup_clusters(pairs: Optional[DataFrame] = None, src: str = "id_a",
     if components is None:
         if pairs is None:
             raise ValueError("need pairs or components")
-        components = connected_components(pairs, src=src, dst=dst,
-                                          max_iter=max_iter)
+        components = connected_components(pairs)
     sizes = components.groupBy("component").agg(
         F.count("*").alias("cluster_size"))
     return components.join(sizes, on="component").select(
         "id", "component", "cluster_size")
 
 
-def _pagerank_local(pairs: DataFrame, iterations: int, scale: int,
-                    src: str, dst: str):
+def _pagerank_local(pairs: DataFrame):
     """Size-gated local path for pagerank_integer (the same
     shared.collect_if_fits gate as _components_local): the exact-integer
     rounds run as numpy int64 segment sums over the collected edge list.
     Bit-identical to the distributed rounds inside the documented
     overflow bound — every quantity is positive, so int64 // and sums
     match Spark's BIGINT DIV / SUM exactly. None above the gate."""
-    tbl = collect_if_fits(pairs.select(F.col(src).alias("s"),
-                                       F.col(dst).alias("t")), "pagerank")
+    tbl = collect_if_fits(pairs.select(F.col("id_a").alias("s"),
+                                       F.col("id_b").alias("t")), "pagerank")
     if tbl is None:
         return None
     spark = pairs.sparkSession
-    node_field = pairs.schema[src]
+    node_field = pairs.schema["id_a"]
     out_schema = T.StructType([
         T.StructField("node", node_field.dataType),
         T.StructField("pr", T.LongType()),
@@ -239,9 +240,9 @@ def _pagerank_local(pairs: DataFrame, iterations: int, scale: int,
     si_o, ti_o = si[order], ti[order]
     seg = np.flatnonzero(np.r_[True, ti_o[1:] != ti_o[:-1]])
     seg_nodes = ti_o[seg]
-    base = np.int64((15 * scale) // 100)
-    pr = np.full(n, np.int64(scale))
-    for _ in range(iterations):
+    base = np.int64((15 * PR_SCALE) // 100)
+    pr = np.full(n, np.int64(PR_SCALE))
+    for _ in range(PR_ITERATIONS):
         contrib = pr[si_o] // deg[si_o]
         inflow = np.zeros(n, dtype=np.int64)
         inflow[seg_nodes] = np.add.reduceat(contrib, seg)
@@ -250,16 +251,14 @@ def _pagerank_local(pairs: DataFrame, iterations: int, scale: int,
     return spark.createDataFrame(out, schema=out_schema)
 
 
-def pagerank_integer(pairs: DataFrame, iterations: int = 3,
-                     scale: int = 10**12, src: str = "id_a",
-                     dst: str = "id_b") -> DataFrame:
+def pagerank_integer(pairs: DataFrame) -> DataFrame:
     """PageRank over an UNDIRECTED pair graph in EXACT INTEGER arithmetic —
     the link-authority ranking pass (here: which documents sit centrally
     in the shared-rare-phrase graph; on a web corpus, the host/page link
     graph), expressed so any two engines produce bit-identical scores.
 
-    Determinism: ranks live in fixed-point units of ``scale`` (1e12 =
-    1.0). Each round computes ``pr' = (15 * scale) DIV 100 +
+    Determinism: ranks live in fixed-point units of ``scale`` (PR_SCALE,
+    1e12 = 1.0). Each round computes ``pr' = (15 * scale) DIV 100 +
     (85 * inflow) DIV 100`` with ``inflow = SUM(pr DIV degree)`` over
     in-neighbors — integer division and integer sums are associative/
     commutative, so no float summation order can differ. (Float PageRank
@@ -278,18 +277,18 @@ def pagerank_integer(pairs: DataFrame, iterations: int = 3,
     most the total circulating mass ~ n_nodes * scale (realizable: a star
     hub fed by degree-1 leaves), so ``inflow * 85`` stays inside BIGINT
     only while ``n_nodes * scale < 2^63 / 85`` ~ 1.08e17 — i.e. ~1e5 nodes
-    at the default scale=1e12, ~1e8 nodes at scale=1e9, ~1e11 nodes at
+    at scale=1e12, ~1e8 nodes at scale=1e9, ~1e11 nodes at
     scale=1e6. Pick ``scale <= 2^63 / (100 * n_nodes)``: rank precision
     trades directly against node count. Spark (non-ANSI) would WRAP
     silently past the bound while DuckDB errors, so exceeding it breaks
     cross-engine bit-equality silently — size ``scale`` first.
 
-    Returns (node, pr BIGINT): every node with its rank after
-    ``iterations`` rounds. ``node`` inherits the input id type (BIGINT for
-    doc ids, STRING for host names — any equi-joinable key works; only
-    ``pr`` is guaranteed BIGINT).
+    Returns (node, pr BIGINT): every node of the ``id_a``/``id_b`` pairs
+    with its rank after PR_ITERATIONS rounds. ``node`` inherits the input
+    id type (BIGINT for doc ids, STRING for host names — any equi-joinable
+    key works; only ``pr`` is guaranteed BIGINT).
     """
-    local = _pagerank_local(pairs, iterations, scale, src, dst)
+    local = _pagerank_local(pairs)
     if local is not None:
         return local
     # materialize the edge list ONCE: without truncation every round's
@@ -298,15 +297,15 @@ def pagerank_integer(pairs: DataFrame, iterations: int = 3,
     # ~1 s at sf0.1 on the rare-phrase graph. deg rides on the truncated
     # edges, and its own reuse across rounds is an in-plan exchange reuse.
     edges = _truncate(
-        pairs.select(F.col(src).alias("s"), F.col(dst).alias("t"))
-        .union(pairs.select(F.col(dst).alias("s"),
-                            F.col(src).alias("t"))),
+        pairs.select(F.col("id_a").alias("s"), F.col("id_b").alias("t"))
+        .union(pairs.select(F.col("id_b").alias("s"),
+                            F.col("id_a").alias("t"))),
         eager=True)
     deg = edges.groupBy("s").agg(F.count("*").alias("outdeg"))
-    base = (15 * scale) // 100
+    base = (15 * PR_SCALE) // 100
     pr = deg.select(F.col("s").alias("node"),
-                    F.lit(scale).cast("long").alias("pr"))
-    for _ in range(iterations):
+                    F.lit(PR_SCALE).cast("long").alias("pr"))
+    for _ in range(PR_ITERATIONS):
         inflow = (edges
                   .join(pr.withColumnRenamed("node", "s"), "s")
                   .join(deg, "s")
@@ -324,7 +323,7 @@ def pagerank_integer(pairs: DataFrame, iterations: int = 3,
 
 
 def hits_integer(edges: DataFrame, iterations: int = 2,
-                 scale: int = 10**6, src: str = "src",
+                 src: str = "src",
                  dst: str = "dst") -> DataFrame:
     """HITS hubs-and-authorities over a DIRECTED edge set in EXACT INTEGER
     arithmetic — the classic complement to PageRank on a web host graph
@@ -334,8 +333,8 @@ def hits_integer(edges: DataFrame, iterations: int = 2,
     is the standard pair of link-quality signals a crawl-corpus curator
     ranks hosts by.
 
-    Determinism: scores live in fixed-point units of ``scale`` (the
-    per-round maximum normalizes to exactly ``scale``). Each round is
+    Determinism: scores live in fixed-point units of ``scale`` (HITS_SCALE;
+    the per-round maximum normalizes to exactly ``scale``). Each round is
     ``auth_raw(t) = SUM(hub(s))`` over in-edges, then ``auth = (auth_raw
     * scale) DIV max(auth_raw)``, then the mirrored hub update from the
     NEW auth — integer sums and integer division only, so any two engines
@@ -345,9 +344,9 @@ def hits_integer(edges: DataFrame, iterations: int = 2,
 
     Overflow bound (the exact-integer contract): ``auth_raw <= d_in_max *
     scale`` and the normalization product ``auth_raw * scale`` must stay
-    inside BIGINT, so ``d_max * scale^2 < 2^63`` — at the default
-    scale=1e6 that is d_max < 9.2e6 distinct in- (or out-) neighbors per
-    node; pick ``scale <= sqrt(2^63 / d_max)`` for denser graphs. Spark
+    inside BIGINT, so ``d_max * scale^2 < 2^63`` — at scale=1e6 that is
+    d_max < 9.2e6 distinct in- (or out-) neighbors per node; pick
+    ``scale <= sqrt(2^63 / d_max)`` for denser graphs. Spark
     (non-ANSI) would WRAP silently past the bound while DuckDB errors, so
     size ``scale`` first (same contract note as ``pagerank_integer``).
 
@@ -366,7 +365,7 @@ def hits_integer(edges: DataFrame, iterations: int = 2,
                                F.col(dst).alias("t")), eager=True)
     nodes = e.select(F.col("s").alias("node")).union(
         e.select(F.col("t").alias("node"))).distinct()
-    hub = nodes.select("node", F.lit(scale).cast("long").alias("hub"))
+    hub = nodes.select("node", F.lit(HITS_SCALE).cast("long").alias("hub"))
     auth = None
     for _ in range(iterations):
         a_raw = (e.join(hub.withColumnRenamed("node", "s"), "s")
@@ -377,7 +376,7 @@ def hits_integer(edges: DataFrame, iterations: int = 2,
             nodes.join(a_raw, "node", "left").crossJoin(a_max)
             .select("node",
                     F.coalesce(
-                        F.expr(f"CAST(raw * {scale} DIV mx AS BIGINT)"),
+                        F.expr(f"CAST(raw * {HITS_SCALE} DIV mx AS BIGINT)"),
                         F.lit(0).cast("long")).alias("auth")),
             eager=False)
         h_raw = (e.join(auth.withColumnRenamed("node", "t"), "t")
@@ -388,18 +387,16 @@ def hits_integer(edges: DataFrame, iterations: int = 2,
             nodes.join(h_raw, "node", "left").crossJoin(h_max)
             .select("node",
                     F.coalesce(
-                        F.expr(f"CAST(raw * {scale} DIV mx AS BIGINT)"),
+                        F.expr(f"CAST(raw * {HITS_SCALE} DIV mx AS BIGINT)"),
                         F.lit(0).cast("long")).alias("hub")),
             eager=False)
     return hub.join(auth, "node")
 
 
-def reciprocal_link_stats(edges: DataFrame, src: str = "src_host",
-                          dst: str = "dst_host",
-                          min_out: int = 1) -> DataFrame:
+def reciprocal_link_stats(edges: DataFrame) -> DataFrame:
     """Per-source reciprocal-link profile over a DIRECTED edge set:
     (node, n_out, n_recip, recip_ppm) where ``n_out`` counts distinct
-    out-neighbors, ``n_recip`` counts those that link BACK, and
+    out-neighbors of ``src_host``, ``n_recip`` counts those that link BACK, and
     ``recip_ppm = n_recip * 1e6 DIV n_out`` (exact integer parts per
     million). A near-1.0 reciprocal rate over a large out-set is the
     classic link-farm / link-exchange signature (organic linking is
@@ -412,8 +409,8 @@ def reciprocal_link_stats(edges: DataFrame, src: str = "src_host",
     produced them. Everything is JVM-side; works on any equi-joinable id
     type.
     """
-    e = (edges.filter(F.col(src) != F.col(dst))
-         .select(F.col(src).alias("s"), F.col(dst).alias("t"))
+    e = (edges.filter(F.col("src_host") != F.col("dst_host"))
+         .select(F.col("src_host").alias("s"), F.col("dst_host").alias("t"))
          .distinct())
     recip = e.join(e.select(F.col("t").alias("s"), F.col("s").alias("t")),
                    ["s", "t"], "left_semi")
@@ -425,7 +422,7 @@ def reciprocal_link_stats(edges: DataFrame, src: str = "src_host",
             .select("node", "n_out",
                     F.coalesce("n_recip", F.lit(0).cast("long"))
                     .alias("n_recip"))
-            .filter(F.col("n_out") >= min_out)
+            .filter(F.col("n_out") >= 1)
             .withColumn("recip_ppm",
                         F.expr("CAST(n_recip * 1000000 DIV n_out "
                                "AS BIGINT)")))

@@ -41,23 +41,21 @@ ANCHOR_PATTERN = r'(<a href="[^"]*">[^<]*</a>)'
 ANCHOR_TEXT_PATTERN = r">([^<]*)</a>"
 
 
-def extract_links(pages: DataFrame, url_col: str = "url",
-                  html_col: str = "html") -> DataFrame:
+def extract_links(pages: DataFrame) -> DataFrame:
     """(src_url, href) pairs from every anchor in the html bytes.
     One scan-side projection + explode; no shuffle, no Python."""
     hrefs = F.regexp_extract_all(
-        F.col(html_col).cast("string"), F.lit(HREF_PATTERN), 1)
-    return (pages.select(F.col(url_col).alias("src_url"),
+        F.col("html").cast("string"), F.lit(HREF_PATTERN), 1)
+    return (pages.select(F.col("url").alias("src_url"),
                          F.explode(hrefs).alias("href")))
 
 
-def host_edges(pages: DataFrame, url_col: str = "url",
-               html_col: str = "html") -> DataFrame:
+def host_edges(pages: DataFrame) -> DataFrame:
     """Host-level link graph: (src_host, dst_host, n_links), hrefs that
     carry no parseable host dropped. The aggregate key space is
     |hosts|^2-bounded (and far sparser), so map-side partials collapse
     the per-page link stream before the one small shuffle."""
-    links = extract_links(pages, url_col=url_col, html_col=html_col)
+    links = extract_links(pages)
     src_host = F.regexp_extract(F.col("src_url"), HOST_PATTERN, 1)
     dst_host = F.regexp_extract(F.col("href"), HOST_PATTERN, 1)
     return (links.select(src_host.alias("src_host"),
@@ -67,8 +65,7 @@ def host_edges(pages: DataFrame, url_col: str = "url",
             .agg(F.count("*").alias("n_links")))
 
 
-def extract_anchors(pages: DataFrame, url_col: str = "url",
-                    html_col: str = "html") -> DataFrame:
+def extract_anchors(pages: DataFrame) -> DataFrame:
     """(src_url, href, anchor_text) from every anchor — link extraction
     plus the VISIBLE link text, the classic off-page relevance/quality
     signal (anchor text describes the TARGET; web search engines and
@@ -77,8 +74,8 @@ def extract_anchors(pages: DataFrame, url_col: str = "url",
     exploded strings, so the 10^12-page html scan stays single-pass and
     the bytes never shuffle."""
     anchors = F.regexp_extract_all(
-        F.col(html_col).cast("string"), F.lit(ANCHOR_PATTERN), 1)
-    a = (pages.select(F.col(url_col).alias("src_url"),
+        F.col("html").cast("string"), F.lit(ANCHOR_PATTERN), 1)
+    a = (pages.select(F.col("url").alias("src_url"),
                       F.explode(anchors).alias("_a")))
     return a.select(
         "src_url",
@@ -87,15 +84,14 @@ def extract_anchors(pages: DataFrame, url_col: str = "url",
         .alias("anchor_text"))
 
 
-def anchor_text_terms(pages: DataFrame, url_col: str = "url",
-                      html_col: str = "html") -> DataFrame:
+def anchor_text_terms(pages: DataFrame) -> DataFrame:
     """Per-destination-host anchor-term profile: (dst_host, term,
     n_anchors) with terms lowercased and whitespace-split. The aggregate
     key space is |hosts| x |anchor vocab|-bounded — far smaller than the
     per-page anchor stream — so map-side partials collapse it before the
     one small shuffle, same shape as host_edges."""
     from logparse_rs_spark.operators.dedup import WORD_SPLIT_CLASS
-    anchors = extract_anchors(pages, url_col=url_col, html_col=html_col)
+    anchors = extract_anchors(pages)
     dst_host = F.regexp_extract(F.col("href"), HOST_PATTERN, 1)
     # explicit whitespace class shared with the oracles (Java \s and RE2
     # \s disagree on \x0B — ADVICE r3)
@@ -108,8 +104,7 @@ def anchor_text_terms(pages: DataFrame, url_col: str = "url",
             .agg(F.count("*").alias("n_anchors")))
 
 
-def host_profile(pages: DataFrame, url_col: str = "url",
-                 html_col: str = "html") -> DataFrame:
+def host_profile(pages: DataFrame) -> DataFrame:
     """Per-host crawl telemetry straight off the page scan: (host,
     n_pages, total_bytes, n_links, links_per_page_ppm) — the fetch-side
     dashboard a crawl operator watches (page volume and byte volume per
@@ -122,12 +117,12 @@ def host_profile(pages: DataFrame, url_col: str = "url",
     regexp count per page) and collapses through map-side partials into
     one |hosts|-bounded aggregate — the html bytes never shuffle.
     """
-    host = F.regexp_extract(F.col(url_col), HOST_PATTERN, 1)
+    host = F.regexp_extract(F.col("url"), HOST_PATTERN, 1)
     n_links = F.size(F.regexp_extract_all(
-        F.col(html_col).cast("string"), F.lit(HREF_PATTERN), 1))
+        F.col("html").cast("string"), F.lit(HREF_PATTERN), 1))
     per_page = pages.select(
         host.alias("host"),
-        F.octet_length(F.col(html_col)).cast("long").alias("_bytes"),
+        F.octet_length(F.col("html")).cast("long").alias("_bytes"),
         n_links.cast("long").alias("_links"))
     return (per_page.filter(F.col("host") != "")
             .groupBy("host")

@@ -51,8 +51,7 @@ def _sniff(b: bytes) -> str:
     return "unknown"
 
 
-def media_metadata(df: DataFrame, binary_col: str = "html",
-                   media_type: str = "image") -> DataFrame:
+def media_metadata(df: DataFrame, binary_col: str = "html") -> DataFrame:
     """Typed metadata struct for an opaque binary column. sha256 digest is
     the content-addressed lineage key (dedup before decode: identical bytes
     decode once)."""
@@ -63,7 +62,7 @@ def media_metadata(df: DataFrame, binary_col: str = "html",
         for b in blobs:
             b = b or b""
             rows.append({
-                "media_type": media_type,
+                "media_type": "image",
                 "n_bytes": len(b),
                 "format_tag": _sniff(b),
                 "digest": hashlib.sha256(b).hexdigest(),
@@ -133,10 +132,10 @@ def decode_and_featurize(df: DataFrame, binary_col: str = "html",
     return df.mapInPandas(run, schema=out_schema)
 
 
-def frame_sample(df: DataFrame, binary_col: str = "html",
-                 every_n: int = 10, max_frames: int = 4) -> DataFrame:
+def frame_sample(df: DataFrame, binary_col: str = "html") -> DataFrame:
     """Video frame-sampling plumbing: one output row per sampled frame index
-    with a frame digest (fake: slices of the content digest). The explode
+    (every 10th fake frame, at most 4) with a frame digest (fake: slices of
+    the content digest). The explode
     shape — row per (url, frame_idx) — is what a real ffmpeg-backed sampler
     produces."""
     frames_schema = T.ArrayType(T.StructType([
@@ -149,8 +148,8 @@ def frame_sample(df: DataFrame, binary_col: str = "html",
         out = []
         for b in blobs:
             b = bytes(b or b"")
-            n_fake_frames = max(len(b) // max(every_n, 1), 1)
-            idxs = list(range(0, n_fake_frames, every_n))[:max_frames]
+            n_fake_frames = max(len(b) // 10, 1)
+            idxs = list(range(0, n_fake_frames, 10))[:4]
             d = hashlib.sha256(b).hexdigest()
             out.append([
                 {"frame_idx": i, "frame_digest": d[i % 32: i % 32 + 16]}
@@ -197,10 +196,10 @@ def _raw8_decode(blob: bytes, h: int, w: int) -> np.ndarray:
     return grid[np.ix_(ri, ci)].astype(np.float64) / 255.0
 
 
-def ahash_batch(blobs: pd.Series, size: int = 8) -> np.ndarray:
+def ahash_batch(blobs: pd.Series) -> np.ndarray:
     """Pure-numpy average-hash batch — shared by the Spark pandas UDF and
     the oracle fixture generator (one kernel, zero drift): decode ->
-    size x size grid -> bit j set iff pixel j > grid mean (row-major),
+    8 x 8 grid -> bit j set iff pixel j > grid mean (row-major),
     packed into an int64 (two's complement, same packing as simhash)."""
     out = np.zeros(len(blobs), dtype=np.int64)
     for i, b in enumerate(blobs):
@@ -209,25 +208,25 @@ def ahash_batch(blobs: pd.Series, size: int = 8) -> np.ndarray:
             continue
         try:
             if b.startswith(RAW8_MAGIC):
-                g = _raw8_decode(b, size, size)
+                g = _raw8_decode(b, 8, 8)
             elif _PIL_Image is not None:
-                g = _pil_decode(b, size, size)
+                g = _pil_decode(b, 8, 8)
             else:
-                g = _fake_decode(b, size, size)
+                g = _fake_decode(b, 8, 8)
         except Exception:
             continue                     # undecodable -> hash 0
         bits = (g > g.mean()).reshape(-1)
         v = np.uint64(0)
-        for j in range(size * size):
+        for j in range(64):
             if bits[j]:
                 v |= np.uint64(1) << np.uint64(j)
         out[i] = np.int64(v.view(np.int64))
     return out
 
 
-def image_ahash(df: DataFrame, binary_col: str = "img",
-                id_col: str = "doc_id", size: int = 8) -> DataFrame:
-    """(id, ahash BIGINT) — the perceptual near-dup key for image dedup
+def image_ahash(df: DataFrame) -> DataFrame:
+    """(doc_id, ahash BIGINT) of the ``img`` column — the perceptual
+    near-dup key for image dedup
     (dedup-before-decode's fuzzy sibling: byte-identical images collapse
     on the sha256 digest, re-encoded/lightly-edited ones land within a
     small Hamming distance of each other). Feed the output to
@@ -241,6 +240,6 @@ def image_ahash(df: DataFrame, binary_col: str = "img",
 
     @F.pandas_udf(T.LongType())
     def _ahash(blobs: pd.Series) -> pd.Series:
-        return pd.Series(ahash_batch(blobs, size), index=blobs.index)
+        return pd.Series(ahash_batch(blobs), index=blobs.index)
 
-    return df.select(F.col(id_col), _ahash(F.col(binary_col)).alias("ahash"))
+    return df.select(F.col("doc_id"), _ahash(F.col("img")).alias("ahash"))

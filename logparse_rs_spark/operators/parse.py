@@ -53,7 +53,6 @@ def explode_lines(pages: DataFrame, keep_cols: Iterable[str] = ("lang",)) -> Dat
 
 
 def parse_lines(lines: DataFrame, schema: CompiledSchema,
-                raw_col: str = "raw_line",
                 strip_prefix: bool = True) -> DataFrame:
     """Attach line/hash64/fields/log_type/status to exploded lines.
 
@@ -76,13 +75,14 @@ def parse_lines(lines: DataFrame, schema: CompiledSchema,
         # one ArrowEvalPython stage: line + hash + rare quoted split (the
         # hash UDF is pruned automatically by queries that never read hash64)
         .withColumns({
-            "line": (line_of if strip_prefix else line_of_raw)(F.col(raw_col)),
+            "line": (line_of if strip_prefix
+                     else line_of_raw)(F.col("raw_line")),
             "_hash64": (hash64_of if strip_prefix
-                        else hash64_of_raw)(F.col(raw_col)),
+                        else hash64_of_raw)(F.col("raw_line")),
             "qfields": (qfields_of if strip_prefix
-                        else qfields_of_raw)(F.col(raw_col)),
+                        else qfields_of_raw)(F.col("raw_line")),
         })
-        .drop(raw_col)
+        .drop("raw_line")
         # NOTE: the split fields array is deliberately NOT part of the parse
         # output — storing/caching a 46-117 element array per row costs more
         # than recomputing the JVM split at projection time (measured ~1.6x
@@ -136,8 +136,6 @@ def rejected(parsed: DataFrame) -> DataFrame:
 def project_type(parsed: DataFrame, schema: CompiledSchema, log_type: str,
                  columns: Optional[Iterable[str]] = None,
                  anon: Optional[CompiledAnonymizer] = None,
-                 include_identity: bool = True,
-                 include_enrichment: bool = True,
                  extra_cols: Iterable[str] = ()) -> DataFrame:
     """Project the ok-rows of one log type to named columns.
 
@@ -159,17 +157,14 @@ def project_type(parsed: DataFrame, schema: CompiledSchema, log_type: str,
     if columns is not None:
         wanted = set(columns)
         pairs = [(n, p) for n, p in pairs if n in wanted]
-    out_cols = []
-    if include_identity:
-        out_cols += [F.col("url"), F.col("line_ordinal")]
+    out_cols = [F.col("url"), F.col("line_ordinal")]
     for name, pos in pairs:
         c = F.get(F.col("fields"), pos)
         if anon is not None:
             plan = anon.plan_for(name)
             c = anonymize_expr(c, plan, anon.default_salt)
         out_cols.append(c.alias(name))
-    if include_enrichment:
-        out_cols += [F.col("raw_excerpt"), F.col("hash64")]
+    out_cols += [F.col("raw_excerpt"), F.col("hash64")]
     out_cols += [F.col(c) for c in extra_cols]
     return (
         parsed

@@ -24,6 +24,18 @@ from pyspark.sql import types as T
 
 from ..shared import collect_if_fits
 
+# the sketch constants the operators and the oracle aux build
+# (dataops_fixtures) share: hyperplane-LSH planes and seed, the LSH
+# bands of lsh_topk and of neardup_pairs, and the IVF k-means seed,
+# rounds and training-sample size
+LSH_N_PLANES = 32
+LSH_SEED = 13
+TOPK_BANDS = 8
+NEARDUP_BANDS = 16
+IVF_SEED = 17
+IVF_ITERS = 5
+IVF_SAMPLE_ROWS = 4096
+
 
 def _vec_matrix(vecs: "pd.Series") -> np.ndarray:
     """(rows, dim) float64 matrix from an Arrow list column. np.stack over
@@ -36,27 +48,24 @@ def _vec_matrix(vecs: "pd.Series") -> np.ndarray:
     return np.stack(vecs.to_numpy()).astype(np.float64, copy=False)
 
 
-def _collect_queries(queries: DataFrame, id_col: str, vec_col: str
-                     ) -> Tuple[np.ndarray, np.ndarray]:
-    rows = queries.select(id_col, vec_col).collect()
-    qids = np.array([r[id_col] for r in rows], dtype=np.int64)
-    qm = np.array([r[vec_col] for r in rows], dtype=np.float64)
+def _collect_queries(queries: DataFrame) -> Tuple[np.ndarray, np.ndarray]:
+    rows = queries.select("query_id", "embedding").collect()
+    qids = np.array([r["query_id"] for r in rows], dtype=np.int64)
+    qm = np.array([r["embedding"] for r in rows], dtype=np.float64)
     norms = np.linalg.norm(qm, axis=1)
     norms[norms == 0] = 1.0
     return qids, qm / norms[:, None]
 
 
-def cosine_scores(vectors: DataFrame, queries: DataFrame,
-                  id_col: str = "vec_id", vec_col: str = "embedding",
-                  query_id_col: str = "query_id") -> DataFrame:
+def cosine_scores(vectors: DataFrame, queries: DataFrame) -> DataFrame:
     """(query_id, vec_id, cos_sim) for every (query, vector) pair, computed
     as a per-batch numpy matmul against the broadcast query matrix."""
-    qids, qmat = _collect_queries(queries, query_id_col, vec_col)
+    qids, qmat = _collect_queries(queries)
     n_q = len(qids)
 
     schema = T.StructType([
-        T.StructField(query_id_col, T.LongType()),
-        T.StructField(id_col, T.LongType()),
+        T.StructField("query_id", T.LongType()),
+        T.StructField("vec_id", T.LongType()),
         T.StructField("cos_sim", T.DoubleType()),
     ])
 
@@ -64,40 +73,38 @@ def cosine_scores(vectors: DataFrame, queries: DataFrame,
         for pdf in iterator:
             if len(pdf) == 0:
                 continue
-            vm = _vec_matrix(pdf[vec_col])
+            vm = _vec_matrix(pdf["embedding"])
             norms = np.linalg.norm(vm, axis=1)
             norms[norms == 0] = 1.0
             sims = (vm / norms[:, None]) @ qmat.T        # (rows, n_q)
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
+            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
             yield pd.DataFrame({
-                query_id_col: np.repeat(qids, len(ids)),
-                id_col: np.tile(ids, n_q),
+                "query_id": np.repeat(qids, len(ids)),
+                "vec_id": np.tile(ids, n_q),
                 "cos_sim": sims.T.reshape(-1),
             })
 
-    return vectors.select(id_col, vec_col).mapInPandas(score, schema=schema)
+    return (vectors.select("vec_id", "embedding")
+            .mapInPandas(score, schema=schema))
 
 
-def brute_force_topk(vectors: DataFrame, queries: DataFrame, k: int = 10,
-                     id_col: str = "vec_id", vec_col: str = "embedding",
-                     query_id_col: str = "query_id") -> DataFrame:
-    """Exact cosine top-k per query; ties break (cos desc, vec_id asc)."""
-    scored = cosine_scores(vectors, queries, id_col, vec_col, query_id_col)
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("cos_sim"), F.asc(id_col))
+def brute_force_topk(vectors: DataFrame, queries: DataFrame) -> DataFrame:
+    """Exact cosine top-5 per query; ties break (cos desc, vec_id asc)."""
+    scored = cosine_scores(vectors, queries)
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cos_sim"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 5)
         .withColumn("cos_sim", F.round("cos_sim", 6))
     )
 
 
-def hyperplane_planes(dim: int, n_planes: int = 32,
-                      seed: int = 13) -> np.ndarray:
+def hyperplane_planes(dim: int) -> np.ndarray:
     """The fixed random hyperplane matrix — seeded, deterministic across
     runs and engines (shared by the Spark path and the oracle refimpl)."""
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal((n_planes, dim))
+    rng = np.random.default_rng(LSH_SEED)
+    return rng.standard_normal((LSH_N_PLANES, dim))
 
 
 def hyperplane_sig_np(vm: np.ndarray, planes: np.ndarray) -> np.ndarray:
@@ -107,24 +114,20 @@ def hyperplane_sig_np(vm: np.ndarray, planes: np.ndarray) -> np.ndarray:
     return (bits.astype(np.uint64) @ weights).view(np.int64)
 
 
-def hyperplane_signatures(vectors: DataFrame, dim: int, n_planes: int = 32,
-                          seed: int = 13, id_col: str = "vec_id",
-                          vec_col: str = "embedding") -> DataFrame:
-    """Sign-bit signature per vector under `n_planes` fixed random
+def hyperplane_signatures(vectors: DataFrame, dim: int) -> DataFrame:
+    """Sign-bit signature per vector under LSH_N_PLANES fixed random
     hyperplanes (seeded — deterministic across runs and engines)."""
-    planes = hyperplane_planes(dim, n_planes, seed)
+    planes = hyperplane_planes(dim)
 
     @F.pandas_udf(T.LongType())
     def sig(vecs: pd.Series) -> pd.Series:
         vm = _vec_matrix(vecs)
         return pd.Series(hyperplane_sig_np(vm, planes), index=vecs.index)
 
-    return vectors.withColumn("lsh_sig", sig(F.col(vec_col)))
+    return vectors.withColumn("lsh_sig", sig(F.col("embedding")))
 
 
-def ivf_assign(vectors: DataFrame, centroids: "np.ndarray",
-               id_col: str = "vec_id", vec_col: str = "embedding",
-               out_col: str = "ivf_cell") -> DataFrame:
+def ivf_assign(vectors: DataFrame, centroids: "np.ndarray") -> DataFrame:
     """Assign each vector to its nearest (cosine) centroid cell — the IVF
     partitioning step. Centroids are a small driver-side matrix captured by
     the UDF (broadcast-by-closure)."""
@@ -135,17 +138,16 @@ def ivf_assign(vectors: DataFrame, centroids: "np.ndarray",
         vm = _vec_matrix(vecs)
         return pd.Series(assign_cells_np(vm, cn), index=vecs.index)
 
-    return vectors.withColumn(out_col, assign(F.col(vec_col)))
+    return vectors.withColumn("ivf_cell", assign(F.col("embedding")))
 
 
-def kmeans_cells(x: np.ndarray, n_cells: int, iters: int = 5,
-                 seed: int = 17) -> np.ndarray:
+def kmeans_cells(x: np.ndarray, n_cells: int) -> np.ndarray:
     """Deterministic spherical mini k-means over a (rows, dim) matrix of
     already-normalized vectors — shared by the Spark trainer and the oracle
     refimpl."""
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(IVF_SEED)
     cents = x[rng.choice(len(x), size=min(n_cells, len(x)), replace=False)]
-    for _ in range(iters):
+    for _ in range(IVF_ITERS):
         sims = x @ cents.T
         assign = sims.argmax(axis=1)
         for c in range(len(cents)):
@@ -173,42 +175,29 @@ def probe_cells_np(vm: np.ndarray, cn: np.ndarray, n_probe: int) -> np.ndarray:
     return np.argsort(-sims, axis=1)[:, :n_probe].astype("int32")
 
 
-def train_ivf_centroids(vectors: DataFrame, n_cells: int = 16,
-                        iters: int = 5, seed: int = 17,
-                        vec_col: str = "embedding",
-                        id_col: str = "vec_id",
-                        sample_rows: int = 4096,
-                        sample_stride: int = 1) -> "np.ndarray":
+def train_ivf_centroids(vectors: DataFrame,
+                        n_cells: int = 16) -> "np.ndarray":
     """Deterministic mini k-means on an id-keyed sample (collected to the
     driver — at 10^12 scale you train on a fixed-size sample regardless of
     table size, so this stays O(sample)).
 
-    Sampling is input-deterministic and engine-replicable: thin by
-    ``pmod(id, stride) == 0`` (a pure filter, no full-table sort), then take
-    the first ``sample_rows`` by id via TakeOrdered over the thinned set.
-    At 10^12 rows pick stride ~ n / (10 * sample_rows)."""
-    cand = vectors.select(id_col, vec_col)
-    if sample_stride > 1:
-        cand = cand.filter(F.pmod(F.col(id_col), F.lit(sample_stride)) == 0)
-    sample = cand.orderBy(id_col).limit(sample_rows).collect()
-    x = np.array([r[vec_col] for r in sample], dtype=np.float64)
+    Sampling is input-deterministic and engine-replicable: the first
+    IVF_SAMPLE_ROWS by id via TakeOrdered (no full-table sort)."""
+    sample = (vectors.select("vec_id", "embedding").orderBy("vec_id")
+              .limit(IVF_SAMPLE_ROWS).collect())
+    x = np.array([r["embedding"] for r in sample], dtype=np.float64)
     x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-    return kmeans_cells(x, n_cells, iters, seed)
+    return kmeans_cells(x, n_cells)
 
 
 def ivf_topk(vectors: DataFrame, queries: DataFrame, k: int = 10,
-             n_cells: int = 16, n_probe: int = 3, seed: int = 17,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             query_id_col: str = "query_id",
-             centroids: "np.ndarray" = None) -> DataFrame:
+             n_cells: int = 16, n_probe: int = 3) -> DataFrame:
     """IVF ANN: vectors partitioned into centroid cells; each query probes
     its n_probe nearest cells and exact-reranks only those vectors. The
     cell equi-join replaces the all-pairs scan (the scale path alongside
     lsh_topk; recall grows with n_probe)."""
-    if centroids is None:
-        centroids = train_ivf_centroids(vectors, n_cells, seed=seed,
-                                        vec_col=vec_col)
-    assigned = ivf_assign(vectors, centroids, id_col, vec_col).alias("v")
+    centroids = train_ivf_centroids(vectors, n_cells)
+    assigned = ivf_assign(vectors, centroids).alias("v")
 
     cn = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
 
@@ -219,15 +208,15 @@ def ivf_topk(vectors: DataFrame, queries: DataFrame, k: int = 10,
         return pd.Series([row.tolist() for row in order], index=vecs.index)
 
     q = (queries.withColumn("ivf_cell",
-                            F.explode(probe_cells(F.col(vec_col))))
-         .select(F.col(query_id_col), F.col(vec_col).alias("q_vec"),
+                            F.explode(probe_cells(F.col("embedding"))))
+         .select(F.col("query_id"), F.col("embedding").alias("q_vec"),
                  "ivf_cell").alias("q"))
     cands = (assigned.join(F.broadcast(q), "ivf_cell")
-             .select(F.col(query_id_col), F.col(f"v.{id_col}").alias(id_col),
-                     F.col(f"v.{vec_col}").cast("array<double>")
+             .select(F.col("query_id"), F.col("v.vec_id").alias("vec_id"),
+                     F.col("v.embedding").cast("array<double>")
                      .alias("v_vec"),
                      F.col("q_vec").cast("array<double>").alias("q_vec"))
-             .dropDuplicates([query_id_col, id_col]))
+             .dropDuplicates(["query_id", "vec_id"]))
     dot = F.aggregate(F.zip_with("v_vec", "q_vec", lambda a, b: a * b),
                       F.lit(0.0), lambda acc, x: acc + x)
     norm = lambda c: F.sqrt(F.aggregate(  # noqa: E731
@@ -236,9 +225,9 @@ def ivf_topk(vectors: DataFrame, queries: DataFrame, k: int = 10,
         "cos_sim",
         F.when((norm(F.col("v_vec")) == 0) | (norm(F.col("q_vec")) == 0), 0.0)
         .otherwise(dot / (norm(F.col("v_vec")) * norm(F.col("q_vec")))))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("cos_sim"), F.asc(id_col))
-    return (scored.select(query_id_col, id_col, "cos_sim")
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cos_sim"), F.asc("vec_id"))
+    return (scored.select("query_id", "vec_id", "cos_sim")
             .withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
             .withColumn("cos_sim", F.round("cos_sim", 6)))
@@ -251,9 +240,7 @@ _PAIR_SCHEMA = T.StructType([
 ])
 
 
-def _neardup_pairs_broadcast(vectors: DataFrame, dim: int, threshold: float,
-                             n_planes: int, bands: int, seed: int,
-                             id_col: str, vec_col: str):
+def _neardup_pairs_broadcast(vectors: DataFrame, dim: int, threshold: float):
     """Broadcast-matrix fast path for neardup_pairs, or None when the
     vector set exceeds the broadcast budget.
 
@@ -272,17 +259,17 @@ def _neardup_pairs_broadcast(vectors: DataFrame, dim: int, threshold: float,
     gate cannot drop a true pair because its margin, max(1e-3, dim *
     2^-20), covers the f32 matmul error bound of ~dim * 2^-20 on unit
     vectors."""
-    head = collect_if_fits(vectors.select(id_col, vec_col), "neardup",
+    head = collect_if_fits(vectors.select("vec_id", "embedding"), "neardup",
                            row_bytes=16 + 12 * dim)
     if head is None:
         return None
     spark = vectors.sparkSession
-    width = n_planes // bands
+    width = LSH_N_PLANES // NEARDUP_BANDS
     mask = (1 << width) - 1
     ids = head.column(0).to_numpy().astype(np.int64, copy=False)
     vm = (head.column(1).combine_chunks().flatten().to_numpy()
           .astype(np.float64).reshape(head.num_rows, dim))
-    sigs = hyperplane_sig_np(vm, hyperplane_planes(dim, n_planes, seed))
+    sigs = hyperplane_sig_np(vm, hyperplane_planes(dim))
     norms = np.linalg.norm(vm, axis=1)
     norms[norms == 0] = 1.0
     vn = vm / norms[:, None]
@@ -313,16 +300,14 @@ def _neardup_pairs_broadcast(vectors: DataFrame, dim: int, threshold: float,
                         "cos_sim": cos,
                     })
 
-    pairs = (spark.range(0, bands, 1, numPartitions=bands)
+    pairs = (spark.range(0, NEARDUP_BANDS, 1, numPartitions=NEARDUP_BANDS)
              .mapInPandas(score_bands, schema=_PAIR_SCHEMA))
     return (pairs.groupBy("id_a", "id_b")
             .agg(F.round(F.min("cos_sim"), 6).alias("cos_sim")))
 
 
-def neardup_pairs(vectors: DataFrame, dim: int, threshold: float = 0.35,
-                  n_planes: int = 32, bands: int = 16, seed: int = 13,
-                  id_col: str = "vec_id",
-                  vec_col: str = "embedding") -> DataFrame:
+def neardup_pairs(vectors: DataFrame, dim: int,
+                  threshold: float = 0.35) -> DataFrame:
     """Embedding near-duplicate pairs >= cosine threshold, as the composed
     scale plan: hyperplane-LSH band-bucket candidate self-join -> exact
     cosine verify. Replaces the all-pairs cross product with an equi-join on
@@ -330,25 +315,24 @@ def neardup_pairs(vectors: DataFrame, dim: int, threshold: float = 0.35,
 
     Recall is a (banding, threshold, data) property: a pair at angle theta
     collides in one band with p = (1 - theta/pi)^(n_planes/bands). The
-    defaults (width-2 bands) are tuned for LOW thresholds; real near-dup
-    dedup (threshold >= 0.8) wants wider bands (e.g. bands=8, width 4) where
-    the same code prunes hard. The correctness gate proves the composition
-    exact at the configured threshold against a DuckDB all-pairs oracle.
+    width-2 bands (LSH_N_PLANES / NEARDUP_BANDS) are tuned for LOW
+    thresholds; real near-dup dedup (threshold >= 0.8) wants wider bands
+    (e.g. 8 bands, width 4) where the same code prunes hard. The
+    correctness gate proves the composition exact at the configured
+    threshold against a DuckDB all-pairs oracle.
     """
-    width = n_planes // bands
+    width = LSH_N_PLANES // NEARDUP_BANDS
     mask = (1 << width) - 1
-    bc_pairs = _neardup_pairs_broadcast(vectors, dim, threshold, n_planes,
-                                        bands, seed, id_col, vec_col)
+    bc_pairs = _neardup_pairs_broadcast(vectors, dim, threshold)
     if bc_pairs is not None:
         return bc_pairs
-    sigs = hyperplane_signatures(vectors, dim, n_planes, seed, id_col,
-                                 vec_col)
+    sigs = hyperplane_signatures(vectors, dim)
     banded = sigs.select(
-        F.col(id_col), F.col(vec_col),
+        F.col("vec_id"), F.col("embedding"),
         F.posexplode(F.array(*[
             F.shiftrightunsigned(F.col("lsh_sig"), i * width)
             .bitwiseAND(F.lit(mask))
-            for i in range(bands)
+            for i in range(NEARDUP_BANDS)
         ])).alias("band", "bucket"),
     )
 
@@ -361,8 +345,8 @@ def neardup_pairs(vectors: DataFrame, dim: int, threshold: float = 0.35,
         n = len(pdf)
         if n < 2:
             return pd.DataFrame({"id_a": [], "id_b": [], "cos_sim": []})
-        ids = pdf[id_col].to_numpy(dtype=np.int64)
-        vm = _vec_matrix(pdf[vec_col])
+        ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+        vm = _vec_matrix(pdf["embedding"])
         norms = np.linalg.norm(vm, axis=1)
         norms[norms == 0] = 1.0
         vn = vm / norms[:, None]
@@ -384,9 +368,6 @@ def neardup_pairs(vectors: DataFrame, dim: int, threshold: float = 0.35,
 
 
 def semdedup(vectors: DataFrame, threshold: float = 0.35, n_cells: int = 8,
-             iters: int = 5, seed: int = 17, sample_rows: int = 4096,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             centroids: "np.ndarray" = None,
              max_cell: int = 200_000) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): partition the embedding space into k-means cells,
@@ -408,15 +389,10 @@ def semdedup(vectors: DataFrame, threshold: float = 0.35, n_cells: int = 8,
     (mirrors dedup.max_bucket's contract); the fix at scale is more cells,
     not a bigger cap. Centroid training collects a fixed-size id-ordered
     sample (train_ivf_centroids) — O(sample) regardless of table size."""
-    if centroids is None:
-        centroids = train_ivf_centroids(vectors, n_cells, iters=iters,
-                                        seed=seed, vec_col=vec_col,
-                                        id_col=id_col,
-                                        sample_rows=sample_rows)
-    assigned = ivf_assign(vectors, centroids, id_col, vec_col)
+    assigned = ivf_assign(vectors, train_ivf_centroids(vectors, n_cells))
 
     out_schema = T.StructType([
-        T.StructField(id_col, T.LongType()),
+        T.StructField("vec_id", T.LongType()),
         T.StructField("ivf_cell", T.IntegerType()),
     ])
 
@@ -427,8 +403,8 @@ def semdedup(vectors: DataFrame, threshold: float = 0.35, n_cells: int = 8,
                 f"semdedup cell {int(pdf['ivf_cell'].iloc[0])} has {n} "
                 f"rows > max_cell={max_cell}; raise n_cells so cells stay "
                 "bounded (the greedy scan is O(cell * kept))")
-        pdf = pdf.sort_values(id_col, kind="mergesort")
-        vm = _vec_matrix(pdf[vec_col])
+        pdf = pdf.sort_values("vec_id", kind="mergesort")
+        vm = _vec_matrix(pdf["embedding"])
         norms = np.linalg.norm(vm, axis=1)
         norms[norms == 0] = 1.0
         vn = vm / norms[:, None]
@@ -437,45 +413,42 @@ def semdedup(vectors: DataFrame, threshold: float = 0.35, n_cells: int = 8,
             if not kept or (vn[kept] @ vn[i] < threshold).all():
                 kept.append(i)
         return pd.DataFrame({
-            id_col: pdf[id_col].to_numpy()[kept],
+            "vec_id": pdf["vec_id"].to_numpy()[kept],
             "ivf_cell": pdf["ivf_cell"].to_numpy()[kept],
         })
 
-    return (assigned.select(id_col, vec_col, "ivf_cell")
+    return (assigned.select("vec_id", "embedding", "ivf_cell")
             .groupBy("ivf_cell").applyInPandas(keep_cell, schema=out_schema))
 
 
-def lsh_topk(vectors: DataFrame, queries: DataFrame, dim: int, k: int = 10,
-             n_planes: int = 32, bands: int = 4, seed: int = 13,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             query_id_col: str = "query_id") -> DataFrame:
-    """ANN top-k: hyperplane-LSH band buckets -> candidate set -> exact
+def lsh_topk(vectors: DataFrame, queries: DataFrame, dim: int) -> DataFrame:
+    """ANN top-5: hyperplane-LSH band buckets -> candidate set -> exact
     cosine re-rank. Recall grows with bands; candidates per query stay
     ~bucket-sized instead of the full table."""
-    width = n_planes // bands
+    width = LSH_N_PLANES // TOPK_BANDS
     mask = (1 << width) - 1
 
     def banded(df, idc):
-        sigs = hyperplane_signatures(df, dim, n_planes, seed, idc, vec_col)
+        sigs = hyperplane_signatures(df, dim)
         return sigs.select(
-            F.col(idc), F.col(vec_col),
+            F.col(idc), F.col("embedding"),
             F.posexplode(F.array(*[
                 F.shiftrightunsigned(F.col("lsh_sig"), i * width)
                 .bitwiseAND(F.lit(mask))
-                for i in range(bands)
+                for i in range(TOPK_BANDS)
             ])).alias("band", "bucket"),
         )
 
-    v = banded(vectors, id_col).alias("v")
-    q = banded(queries, query_id_col).alias("q")
+    v = banded(vectors, "vec_id").alias("v")
+    q = banded(queries, "query_id").alias("q")
     cands = (
         v.join(F.broadcast(q), (F.col("v.band") == F.col("q.band"))
                & (F.col("v.bucket") == F.col("q.bucket")))
-        .select(F.col(f"q.{query_id_col}").alias(query_id_col),
-                F.col(f"v.{id_col}").alias(id_col),
-                F.col(f"v.{vec_col}").cast("array<double>").alias("v_vec"),
-                F.col(f"q.{vec_col}").cast("array<double>").alias("q_vec"))
-        .dropDuplicates([query_id_col, id_col])
+        .select(F.col("q.query_id").alias("query_id"),
+                F.col("v.vec_id").alias("vec_id"),
+                F.col("v.embedding").cast("array<double>").alias("v_vec"),
+                F.col("q.embedding").cast("array<double>").alias("q_vec"))
+        .dropDuplicates(["query_id", "vec_id"])
     )
     # exact cosine on candidates, JVM-side higher-order functions
     dot = F.aggregate(
@@ -488,20 +461,17 @@ def lsh_topk(vectors: DataFrame, queries: DataFrame, dim: int, k: int = 10,
         F.when((norm(F.col("v_vec")) == 0) | (norm(F.col("q_vec")) == 0), 0.0)
         .otherwise(dot / (norm(F.col("v_vec")) * norm(F.col("q_vec")))),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("cos_sim"), F.asc(id_col))
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cos_sim"), F.asc("vec_id"))
     return (
-        scored.select(query_id_col, id_col, "cos_sim")
+        scored.select("query_id", "vec_id", "cos_sim")
         .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 5)
         .withColumn("cos_sim", F.round("cos_sim", 6))
     )
 
 
-def kmeans_assign_exact(vectors: DataFrame, k: int = 8, iterations: int = 2,
-                        scale: int = 1_000_000,
-                        id_col: str = "vec_id",
-                        vec_col: str = "embedding") -> DataFrame:
+def kmeans_assign_exact(vectors: DataFrame, k: int = 8) -> DataFrame:
     """Lloyd's k-means assignment in EXACT INTEGER arithmetic — the
     cluster-then-curate step of embedding-space corpus work (SemDeDup
     cells, D4-style cluster-balanced sampling, topic bucketing), expressed
@@ -510,7 +480,7 @@ def kmeans_assign_exact(vectors: DataFrame, k: int = 8, iterations: int = 2,
     centroids + ivf_assign above).
 
     Determinism contract: dimensions quantize scan-side via
-    FLOOR(float64(x) * scale) (float32 -> float64 widening and the
+    FLOOR(float64(x) * scale), scale = 1e6 (float32 -> float64 widening and the
     multiply are IEEE-exact, so both engines floor the same double);
     distances are BIGINT sums of squared integer deltas; centroid updates
     are exact floored integer means (s - pmod(s, n)) DIV n — no float
@@ -530,21 +500,22 @@ def kmeans_assign_exact(vectors: DataFrame, k: int = 8, iterations: int = 2,
     k*dim join multiplier prices this for k <= ~100 analysis clustering;
     for k in the thousands use the vectorized ivf_assign path.
 
-    Returns (vec_id, cluster BIGINT) after ``iterations`` assignment
-    rounds (centroids update between rounds, not after the last).
+    Returns (vec_id, cluster BIGINT) after 2 assignment rounds (centroids
+    update between rounds, not after the last).
     """
-    v = (vectors.select(F.col(id_col).alias("_id"),
-                        F.posexplode(F.col(vec_col)).alias("_i", "_x"))
+    v = (vectors.select(F.col("vec_id").alias("_id"),
+                        F.posexplode(F.col("embedding")).alias("_i", "_x"))
          .select("_id", "_i",
-                 F.floor(F.col("_x").cast("double") * F.lit(scale))
+                 F.floor(F.col("_x").cast("double") * F.lit(1_000_000))
                  .cast("bigint").alias("_v"))
          .persist())
-    seeds = vectors.select(F.col(id_col).alias("_id")).orderBy("_id").limit(k)
+    seeds = (vectors.select(F.col("vec_id").alias("_id"))
+             .orderBy("_id").limit(k))
     cent = (v.join(F.broadcast(seeds), "_id")
             .select(F.col("_id").alias("_c"), "_i",
                     F.col("_v").alias("_cv")))
     assign = None
-    for r in range(iterations):
+    for r in range(2):
         d2 = (F.col("_v") - F.col("_cv")) * (F.col("_v") - F.col("_cv"))
         dist = (v.join(F.broadcast(cent), "_i")
                 .select("_id", "_c", d2.alias("_d2"))
@@ -552,12 +523,12 @@ def kmeans_assign_exact(vectors: DataFrame, k: int = 8, iterations: int = 2,
         assign = (dist.groupBy("_id")
                   .agg(F.min(F.struct("_dist", "_c")).alias("_m"))
                   .select("_id", F.col("_m._c").alias("_c")))
-        if r < iterations - 1:
+        if r == 0:
             cent = (v.join(assign, "_id")
                     .groupBy("_c", "_i")
                     .agg(F.sum("_v").alias("_s"), F.count("*").alias("_n"))
                     .select("_c", "_i",
                             F.expr("(_s - pmod(_s, _n)) DIV _n")
                             .cast("bigint").alias("_cv")))
-    return assign.select(F.col("_id").alias(id_col),
+    return assign.select(F.col("_id").alias("vec_id"),
                          F.col("_c").alias("cluster"))

@@ -23,8 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def salt_column(df: DataFrame, salt_factor: int,
-                salt_col: str = "_salt") -> DataFrame:
+def salt_column(df: DataFrame, salt_factor: int) -> DataFrame:
     """Per-row salt in [0, salt_factor) that spreads even FULLY DUPLICATE
     rows (the classic hot key in log data is a million identical rows —
     hashing column values would give them all one salt and salt nothing).
@@ -37,7 +36,7 @@ def salt_column(df: DataFrame, salt_factor: int,
     dependence is safe."""
     pos = F.monotonically_increasing_id()   # partition id << 33 | ordinal
     return df.withColumn(
-        salt_col,
+        "_salt",
         F.pmod(F.xxhash64(pos), F.lit(salt_factor)).cast("int"),
     )
 

@@ -37,15 +37,13 @@ def _padded(col) -> F.Column:
     return F.concat(F.lit(" "), F.lower(col), F.lit(" "))
 
 
-def language_id(docs: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id",
-                keep_cols: tuple = ()) -> DataFrame:
+def language_id(docs: DataFrame, keep_cols: tuple = ()) -> DataFrame:
     """N-gram-marker language ID: count marker hits per language, pick the
     max with a deterministic tie-break (score desc, lang asc); no hits ->
     'unknown'. Pure JVM expressions — one projection, no shuffle.
     keep_cols carries extra input columns through (same contract as
     quality_score), so composed curation plans never self-join."""
-    padded = _padded(F.col(text_col))
+    padded = _padded(F.col("text"))
     scores = [
         F.struct(
             sum((F.instr(padded, m) > 0).cast("int") for m in markers)
@@ -68,10 +66,10 @@ def language_id(docs: DataFrame, text_col: str = "text",
     # layered projection (see quality_score): the three output references
     # to `best` would each rebuild + re-sort the whole marker-score array
     # in a flat select; materialize the struct once, then extract fields
-    feats = docs.select(F.col(id_col), *[F.col(c) for c in keep_cols],
+    feats = docs.select(F.col("doc_id"), *[F.col(c) for c in keep_cols],
                         best.alias("_best"))
     return feats.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[F.col(c) for c in keep_cols],
         F.when(F.col("_best.score") > 0, F.col("_best.lang"))
         .otherwise(F.lit("unknown")).alias("lang_pred"),
@@ -79,16 +77,14 @@ def language_id(docs: DataFrame, text_col: str = "text",
     )
 
 
-def quality_score(docs: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id",
-                  keep_cols: tuple = ()) -> DataFrame:
+def quality_score(docs: DataFrame, keep_cols: tuple = ()) -> DataFrame:
     """Deterministic quality features + composite score in [0,1]:
     length band, alpha ratio, punctuation ratio, stopword hit ratio,
     mean word length band. All JVM-side string ops. keep_cols carries
     extra input columns through the projection, so downstream consumers
     (e.g. the percentile filter grouping by language) never need to
     self-join this frame back against its own source scan."""
-    text = F.col(text_col)
+    text = F.col("text")
     words = F.split(F.trim(text), WORD_SPLIT_CLASS)
     padded = _padded(text)
     # layered projection: every string-heavy feature (regex, split, the
@@ -105,7 +101,7 @@ def quality_score(docs: DataFrame, text_col: str = "text",
     # string through the Java regex engine per character)
     letters = "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz"
     feats = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[F.col(c) for c in keep_cols],
         F.length(text).alias("_nc"),
         (F.length(text) - F.length(F.translate(text, letters, "")))
@@ -125,7 +121,7 @@ def quality_score(docs: DataFrame, text_col: str = "text",
     score = (0.4 * alpha_ratio + 0.3 * stop_ratio + 0.2 * len_band
              + 0.1 * (1.0 - F.least(punct_ratio * 10.0, F.lit(1.0))))
     return feats.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[F.col(c) for c in keep_cols],
         n_chars.alias("n_chars"),
         F.col("_nw").alias("n_words"),
@@ -136,13 +132,11 @@ def quality_score(docs: DataFrame, text_col: str = "text",
     )
 
 
-def token_counts(docs: DataFrame, text_col: str = "text",
-                 id_col: str = "doc_id",
-                 keep_cols: tuple = ()) -> DataFrame:
+def token_counts(docs: DataFrame, keep_cols: tuple = ()) -> DataFrame:
     """Whitespace tokens + a BPE-ish subword estimate: alnum runs count 1 per
     ceil(len/4) (the 'four chars per token' rule of thumb) and every
     non-space symbol counts 1. Deterministic and SQL-replicable."""
-    text = F.col(text_col)
+    text = F.col("text")
     trimmed = F.trim(text)
     ws_tokens = F.when(trimmed == "", 0).otherwise(
         F.size(F.split(trimmed, WORD_SPLIT_CLASS)))
@@ -164,7 +158,7 @@ def token_counts(docs: DataFrame, text_col: str = "text",
     # the three regex-backed features, which would re-evaluate each regex
     # in a single flat select
     feats = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[F.col(c) for c in keep_cols],
         ws_tokens.alias("_wt"),
         alnum_runs.cast("long").alias("_ar"),
@@ -172,7 +166,7 @@ def token_counts(docs: DataFrame, text_col: str = "text",
         alnum_chars.cast("long").alias("_ac"),
     )
     return feats.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[F.col(c) for c in keep_cols],
         F.col("_wt").alias("ws_tokens"),
         F.col("_ar").alias("alnum_runs"),
@@ -212,23 +206,16 @@ def _assert_placeholders_inert(patterns: dict) -> None:
 _assert_placeholders_inert(PII_PATTERNS)
 
 
-def pii_scrub(docs: DataFrame, text_col: str = "text",
-              id_col: str = "doc_id",
-              patterns: dict | None = None) -> DataFrame:
+def pii_scrub(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Redact PII-shaped substrings with <KIND> placeholder tokens and count
     matches per kind. Pure JVM regexp ops — one projection, no shuffle, no
     Python in the row path; at 100 TB this runs inside whole-stage codegen
     on the scan. (The log pipeline's keyed-hash anonymizer is the
     REVERSIBLE-mapping path; this is the destructive scrub used before
     publishing a training corpus.)"""
-    if patterns is None:
-        patterns = PII_PATTERNS
-    else:
-        _assert_placeholders_inert(patterns)
-    text = F.col(text_col)
-    scrubbed = text
-    for kind in sorted(patterns):
-        scrubbed = F.regexp_replace(scrubbed, patterns[kind],
+    scrubbed = F.col("text")
+    for kind in sorted(PII_PATTERNS):
+        scrubbed = F.regexp_replace(scrubbed, PII_PATTERNS[kind],
                                     f"<{kind.upper()}>")
     # counts = placeholder occurrences in the scrubbed text (a literal
     # split, not a second regex pass over the raw text — the regex
@@ -240,7 +227,7 @@ def pii_scrub(docs: DataFrame, text_col: str = "text",
     counts = [
         (F.size(F.split(scrubbed, f"<{kind.upper()}>", -1)) - 1)
         .cast("long").alias(f"n_{kind}")
-        for kind in sorted(patterns)
+        for kind in sorted(PII_PATTERNS)
     ]
     return docs.select(F.col(id_col), *counts,
                        F.length(scrubbed).alias("scrubbed_len"))
@@ -273,10 +260,10 @@ def word_ngrams(words, n: int) -> F.Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def vocab_top(docs: DataFrame, k: int = 25) -> DataFrame:
+def vocab_top(docs: DataFrame) -> DataFrame:
     """Corpus vocabulary build (the token-frequency pass a BPE/tokenizer
     training job starts from): explode whitespace tokens, hash-aggregate
-    counts, top-k with a full deterministic order (count desc, token asc).
+    counts, top-25 with a full deterministic order (count desc, token asc).
 
     Scale shape: explode -> partial map-side count -> one shuffle on token
     -> TakeOrdered. Token frequency is Zipfian — the hottest tokens are
@@ -285,12 +272,11 @@ def vocab_top(docs: DataFrame, k: int = 25) -> DataFrame:
     vocab-sized, not corpus-sized, data)."""
     return (docs.select(F.explode("words").alias("token"))
             .groupBy("token").agg(F.count("*").alias("n"))
-            .orderBy(F.desc("n"), F.asc("token")).limit(k))
+            .orderBy(F.desc("n"), F.asc("token")).limit(25))
 
 
-def repeated_ngrams(docs: DataFrame, n: int = 5, k: int = 20,
-                    min_count: int = 2) -> DataFrame:
-    """Most-repeated word n-grams across the corpus (the repetition /
+def repeated_ngrams(docs: DataFrame, min_count: int = 2) -> DataFrame:
+    """The 20 most-repeated word 5-grams across the corpus (the repetition /
     boilerplate detector — C4-style cleaning drops documents dominated by
     duplicated lines; at corpus level the top repeated n-grams ARE the
     boilerplate inventory). Every occurrence counts, so duplicated
@@ -298,16 +284,14 @@ def repeated_ngrams(docs: DataFrame, n: int = 5, k: int = 20,
 
     JVM-side throughout: higher-order transform over an index sequence
     (no UDF) -> explode -> hash count -> TakeOrdered."""
-    return (docs.select(F.explode(word_ngrams(F.col("words"), n))
+    return (docs.select(F.explode(word_ngrams(F.col("words"), 5))
                         .alias("ngram"))
             .groupBy("ngram").agg(F.count("*").alias("n"))
             .filter(F.col("n") >= min_count)
-            .orderBy(F.desc("n"), F.asc("ngram")).limit(k))
+            .orderBy(F.desc("n"), F.asc("ngram")).limit(20))
 
 
-def rebalance_by_group(docs: DataFrame, group_col: str = "lang",
-                       quota: int = 1000, text_col: str = "text",
-                       id_col: str = "doc_id") -> DataFrame:
+def rebalance_by_group(docs: DataFrame, quota: int = 1000) -> DataFrame:
     """Per-group quota cap — the data-mixing step of corpus assembly
     (e.g. at most N documents per language/source so one stratum cannot
     dominate the training mix). Which documents survive is decided by
@@ -326,16 +310,15 @@ def rebalance_by_group(docs: DataFrame, group_col: str = "lang",
     hand-written two-phase (rank within (group, partition-id) cells, then
     merge) produced the identical candidate flow with one EXTRA shuffle,
     so the declarative form wins."""
-    w = Window.partitionBy(group_col).orderBy(F.col("_ord"), F.col(id_col))
-    return (docs.withColumn("_ord", content_fingerprint(F.col(text_col)))
+    w = Window.partitionBy("lang").orderBy(F.col("_ord"), F.col("doc_id"))
+    return (docs.withColumn("_ord", content_fingerprint(F.col("text")))
             .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") <= quota)
             .drop("_ord", "_rn"))
 
 
 def chunk_documents(docs: DataFrame, chunk_words: int = 64,
-                    stride: int = 48, text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
+                    stride: int = 48) -> DataFrame:
     """Split documents into fixed-word-budget chunks with overlap — the
     sequence-preparation step before tokenization/packing in a training
     pipeline (stride < chunk_words gives the standard sliding-window
@@ -351,7 +334,7 @@ def chunk_documents(docs: DataFrame, chunk_words: int = 64,
     # materialize the word array first: inline split() referenced inside
     # the transform/filter lambdas re-tokenizes per element on the
     # interpreted higher-order path
-    base = docs.select(F.col(id_col), _words(F.col(text_col)).alias("_ws"))
+    base = docs.select(F.col("doc_id"), _words(F.col("text")).alias("_ws"))
     words = F.col("_ws")
     n = F.size(words)
     # chunk start offsets 1, 1+stride, ... — keep a start only while the
@@ -370,11 +353,11 @@ def chunk_documents(docs: DataFrame, chunk_words: int = 64,
             F.slice(words, i, chunk_words).alias("ws"),
         ),
     )
-    ex = base.select(F.col(id_col), F.explode(chunks).alias("c"))
+    ex = base.select(F.col("doc_id"), F.explode(chunks).alias("c"))
     ws = F.col("c.ws")
     txt = F.concat_ws(" ", ws)
     return ex.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("c.chunk_id").alias("chunk_id"),
         F.size(ws).alias("chunk_words"),
         F.length(txt).alias("chunk_chars"),
@@ -382,15 +365,15 @@ def chunk_documents(docs: DataFrame, chunk_words: int = 64,
     )
 
 
-def _doc_bigrams(docs: DataFrame, id_col: str) -> DataFrame:
+def _doc_bigrams(docs: DataFrame) -> DataFrame:
     """(id, bigram) pairs — the shared scan of both lm_score passes."""
-    base = docs.select(F.col(id_col), F.col("words").alias("_ws"))
-    return base.select(F.col(id_col),
+    base = docs.select(F.col("doc_id"), F.col("words").alias("_ws"))
+    return base.select(F.col("doc_id"),
                        F.explode(word_ngrams(F.col("_ws"), 2))
                        .alias("bigram"))
 
 
-def lm_bigram_model(docs: DataFrame, id_col: str = "doc_id",
+def lm_bigram_model(docs: DataFrame,
                     doc_bg: DataFrame | None = None) -> tuple:
     """PASS 1 of the at-scale lm_score deployment: build the corpus bigram
     count model as two vocab-sized DataFrames plus the vocabulary size —
@@ -400,7 +383,7 @@ def lm_bigram_model(docs: DataFrame, id_col: str = "doc_id",
     persisted (e.g. parquet) and broadcast at apply time, so the scoring
     pass over a 10^12-doc corpus never rebuilds or shuffles the model."""
     if doc_bg is None:
-        doc_bg = _doc_bigrams(docs, id_col)
+        doc_bg = _doc_bigrams(docs)
     bg_counts = doc_bg.groupBy("bigram").agg(F.count("*").alias("bg_n"))
     un_counts = (doc_bg
                  .select(F.split(F.col("bigram"), " ").getItem(0).alias("w1"))
@@ -413,8 +396,7 @@ def lm_bigram_model(docs: DataFrame, id_col: str = "doc_id",
     return bg_counts, un_counts, int(vocab)
 
 
-def lm_score(docs: DataFrame, id_col: str = "doc_id",
-             model: tuple | None = None,
+def lm_score(docs: DataFrame, model: tuple | None = None,
              doc_bg: DataFrame | None = None) -> DataFrame:
     """Statistical language-model quality score (the perplexity-filter
     step of C4/CCNet-style curation, with EXACT corpus counts instead of
@@ -442,7 +424,7 @@ def lm_score(docs: DataFrame, id_col: str = "doc_id",
     from pyspark.sql import Window
 
     if doc_bg is None:
-        doc_bg = _doc_bigrams(docs, id_col)
+        doc_bg = _doc_bigrams(docs)
     w1 = F.split(F.col("bigram"), " ").getItem(0)
     if model is None:
         bg_n = F.count("*").over(Window.partitionBy("bigram"))
@@ -450,7 +432,7 @@ def lm_score(docs: DataFrame, id_col: str = "doc_id",
         vocab = docs.select(F.explode(F.array_distinct("words")).alias("t")) \
             .agg(F.count_distinct("t")).first()[0]
         scored = doc_bg.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.log((bg_n + F.lit(1.0)) / (un_n + F.lit(float(vocab))))
             .alias("lp"))
     else:
@@ -460,18 +442,17 @@ def lm_score(docs: DataFrame, id_col: str = "doc_id",
                   .join(F.broadcast(bg_counts), on="bigram", how="left")
                   .join(F.broadcast(un_counts), on="w1", how="left")
                   .select(
-                      F.col(id_col),
+                      F.col("doc_id"),
                       F.log((F.coalesce(F.col("bg_n"), F.lit(0)) + F.lit(1.0))
                             / (F.coalesce(F.col("un_n"), F.lit(0))
                                + F.lit(float(vocab)))).alias("lp")))
-    return (scored.groupBy(id_col)
+    return (scored.groupBy("doc_id")
             .agg(F.count("*").alias("n_bigrams"),
                  F.round(F.avg("lp"), 6).alias("lm_score")))
 
 
-def pack_chunks(chunks: DataFrame, budget: int = 256, n_buckets: int = 8,
-                words_col: str = "chunk_words", doc_col: str = "doc_id",
-                chunk_col: str = "chunk_id") -> DataFrame:
+def pack_chunks(chunks: DataFrame, budget: int = 256,
+                n_buckets: int = 8) -> DataFrame:
     """Greedy sequence packing: fill fixed word-budget packs from an
     ordered stream of chunks (the step between chunking and tokenization
     that turns ragged documents into dense training sequences). A chunk
@@ -499,10 +480,10 @@ def pack_chunks(chunks: DataFrame, budget: int = 256, n_buckets: int = 8,
         T.StructField("pack_id", T.LongType()),
     ])
     keyed = chunks.select(
-        F.col(doc_col).cast("long").alias("doc_id"),
-        F.col(chunk_col).cast("long").alias("chunk_id"),
-        F.col(words_col).cast("long").alias("w"),
-        F.pmod(F.col(doc_col).cast("long"), F.lit(n_buckets))
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.col("chunk_id").cast("long").alias("chunk_id"),
+        F.col("chunk_words").cast("long").alias("w"),
+        F.pmod(F.col("doc_id").cast("long"), F.lit(n_buckets))
         .cast("long").alias("bucket"))
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -523,13 +504,12 @@ def pack_chunks(chunks: DataFrame, budget: int = 256, n_buckets: int = 8,
     return keyed.groupBy("bucket").applyInPandas(pack, out_schema)
 
 
-def rare_terms(docs: DataFrame, k: int = 3, min_len: int = 4,
-               text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Per-document distinguishing-term extraction: the k RAREST terms of
+def rare_terms(docs: DataFrame) -> DataFrame:
+    """Per-document distinguishing-term extraction: the 3 RAREST terms of
     each doc by corpus document frequency (df asc, then tf desc, then
     token asc — an all-integer ranking, so the result is bit-deterministic
     across engines, unlike a float tf-idf score ordering). Tokens shorter
-    than min_len are dropped (stopword-ish noise). Returns
+    than 4 characters are dropped (stopword-ish noise). Returns
     (id, token, tf, df).
 
     Scale shape: explode -> ONE (doc, token) aggregate, then df as a
@@ -541,31 +521,28 @@ def rare_terms(docs: DataFrame, k: int = 3, min_len: int = 4,
     shuffles on a single linear pipeline: (doc,token) -> token -> doc."""
     from pyspark.sql import Window
 
-    toks = (docs.select(F.col(id_col),
-                        F.explode(_words(F.col(text_col))).alias("token"))
-            .filter(F.length("token") >= min_len))
-    tf = toks.groupBy(id_col, "token").agg(F.count("*").alias("tf"))
+    toks = (docs.select(F.col("doc_id"),
+                        F.explode(_words(F.col("text"))).alias("token"))
+            .filter(F.length("token") >= 4))
+    tf = toks.groupBy("doc_id", "token").agg(F.count("*").alias("tf"))
     tfdf = tf.withColumn(
         "df", F.count("*").over(Window.partitionBy("token")))
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy("doc_id").orderBy(
         F.asc("df"), F.desc("tf"), F.asc("token"))
     return (tfdf.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k)
-            .select(F.col(id_col), "token", "tf", "df"))
+            .filter(F.col("_rn") <= 3)
+            .select(F.col("doc_id"), "token", "tf", "df"))
 
 
-def quality_percentile_filter(docs: DataFrame, frac: float = 0.25,
-                              group_col: str = "lang",
-                              text_col: str = "text",
-                              id_col: str = "doc_id") -> DataFrame:
-    """Keep the top `frac` of documents by quality score within each group
+def quality_percentile_filter(docs: DataFrame) -> DataFrame:
+    """Keep the top quarter of documents by quality score within each lang
     — the percentile-threshold curation step ("keep the best quarter per
     language") that follows quality scoring in a corpus-assembly pipeline.
     Returns (id, group) of the survivors.
 
     Deterministic: rank ties break on the document id, so the survivor
     set is independent of partitioning and input order. The kept count
-    per group is ceil(frac * group_size) — integer semantics both engines
+    per group is ceil(0.25 * group_size) — integer semantics both engines
     agree on exactly.
 
     Scale shape: quality is a pure scan-side projection (quality_score
@@ -579,16 +556,15 @@ def quality_percentile_filter(docs: DataFrame, frac: float = 0.25,
     shuffle."""
     from pyspark.sql import Window
 
-    q = (quality_score(docs, text_col=text_col, id_col=id_col,
-                       keep_cols=(group_col,))
-         .select(id_col, group_col, "quality"))
-    wr = Window.partitionBy(group_col).orderBy(F.desc("quality"),
-                                               F.asc(id_col))
-    wc = Window.partitionBy(group_col)
+    q = (quality_score(docs, keep_cols=("lang",))
+         .select("doc_id", "lang", "quality"))
+    wr = Window.partitionBy("lang").orderBy(F.desc("quality"),
+                                            F.asc("doc_id"))
+    wc = Window.partitionBy("lang")
     return (q.withColumn("_rn", F.row_number().over(wr))
             .withColumn("_cnt", F.count("*").over(wc))
-            .filter(F.col("_rn") <= F.ceil(F.col("_cnt") * F.lit(frac)))
-            .select(id_col, group_col))
+            .filter(F.col("_rn") <= F.ceil(F.col("_cnt") * F.lit(0.25)))
+            .select("doc_id", "lang"))
 
 
 # fixed log-ish length bands, spelled as explicit edges so Spark and any
@@ -597,8 +573,7 @@ def quality_percentile_filter(docs: DataFrame, frac: float = 0.25,
 LENGTH_BANDS = [100, 300, 1000, 3000, 10000]
 
 
-def length_histogram(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+def length_histogram(docs: DataFrame) -> DataFrame:
     """Corpus length-distribution histogram over fixed log-spaced bands —
     the first diagnostic a training-data pipeline runs (truncation rates,
     boilerplate spikes, tokenizer budget planning). Pure scan + a
@@ -606,7 +581,7 @@ def length_histogram(docs: DataFrame, text_col: str = "text",
     global sort — unlike an exact decile split, which is a total-order
     statistic, fixed bands keep the exact answer embarrassingly
     parallel at any scale."""
-    c = F.length(F.col(text_col))
+    c = F.length(F.col("text"))
     band = F.lit(f"{LENGTH_BANDS[-1]}+")
     for hi in reversed(LENGTH_BANDS):
         lo = LENGTH_BANDS[LENGTH_BANDS.index(hi) - 1] if \
@@ -620,11 +595,9 @@ def length_histogram(docs: DataFrame, text_col: str = "text",
                  F.max("n_chars").alias("max_chars")))
 
 
-def contamination_check(docs: DataFrame, eval_docs: DataFrame, n: int = 5,
-                        text_col: str = "text",
-                        id_col: str = "doc_id") -> DataFrame:
+def contamination_check(docs: DataFrame, eval_docs: DataFrame) -> DataFrame:
     """Benchmark-decontamination scan: which training documents share at
-    least one word n-gram with an evaluation set (the standard test-set
+    least one word 5-gram with an evaluation set (the standard test-set
     leakage check run before training). Returns (doc_id, eval_id,
     shared_ngrams) per contaminated (train, eval) pair.
 
@@ -639,9 +612,9 @@ def contamination_check(docs: DataFrame, eval_docs: DataFrame, n: int = 5,
         # words materialized first (an inline split re-tokenizes once per
         # shingle: measured ~5x the whole operator); hashed BEFORE the
         # per-doc distinct, so colliding shingles count once, as they join
-        base = df.select(F.col(id_col).alias(out_id),
-                         _words(F.col(text_col)).alias("_ws"))
-        shingles = F.transform(word_ngrams(F.col("_ws"), n),
+        base = df.select(F.col("doc_id").alias(out_id),
+                         _words(F.col("text")).alias("_ws"))
+        shingles = F.transform(word_ngrams(F.col("_ws"), 5),
                                lambda g: F.xxhash64(g))
         return base.select(out_id,
                            F.explode(F.array_distinct(shingles)).alias("gh"))
@@ -653,9 +626,8 @@ def contamination_check(docs: DataFrame, eval_docs: DataFrame, n: int = 5,
             .agg(F.count("*").alias("shared_ngrams")))
 
 
-def fingerprint_sample(docs: DataFrame, modulus: int = 20, keep: int = 0,
-                       text_col: str = "text",
-                       id_col: str = "doc_id") -> DataFrame:
+def fingerprint_sample(docs: DataFrame, modulus: int = 20,
+                       keep: int = 0) -> DataFrame:
     """Deterministic content-hash sampling: keep the rows whose text
     fingerprint ≡ keep (mod modulus). The workhorse of reproducible corpus
     curation — the sample is a pure function of the CONTENT, so it is
@@ -665,7 +637,7 @@ def fingerprint_sample(docs: DataFrame, modulus: int = 20, keep: int = 0,
     one inline fingerprint + filter on the scan, no shuffle, no second
     pass over docs; composes with stratification by grouping the
     survivors."""
-    fp = content_fingerprint(F.col(text_col))
+    fp = content_fingerprint(F.col("text"))
     return docs.filter(F.pmod(fp, F.lit(modulus)) == F.lit(keep))
 
 
@@ -695,14 +667,13 @@ def canonical_url(col) -> F.Column:
                                                           sorted_q)))
 
 
-def mixture_sample(docs: DataFrame, rates: dict, default_rate: float = 1.0,
-                   group_col: str = "source", text_col: str = "text",
-                   id_col: str = "doc_id",
-                   resolution: int = 10_000) -> DataFrame:
+def mixture_sample(docs: DataFrame, rates: dict,
+                   default_rate: float = 1.0) -> DataFrame:
     """Deterministic weighted mixture sampling — the data-mixing step
     where each source/domain contributes at its own rate (e.g. books at
     1.0, web at 0.25). A doc of group g survives iff
-    pmod(fingerprint, resolution) < rates.get(g, default) * resolution:
+    pmod(fingerprint, 10^4) < rates.get(g, default) * 10^4, g the
+    ``source`` column:
     the decision is a pure function of the CONTENT (not an RNG), so the
     mix is reproducible across runs, cluster sizes, resumes, and input
     orderings, and nested rates are subsets (a 0.1 sample is contained
@@ -710,16 +681,16 @@ def mixture_sample(docs: DataFrame, rates: dict, default_rate: float = 1.0,
 
     Narrow: one inline fingerprint + a when-chain threshold per group,
     filter on the scan — no shuffle, no per-group pass."""
-    fp = content_fingerprint(F.col(text_col))
+    resolution = 10_000
+    fp = content_fingerprint(F.col("text"))
     thr = F.lit(int(round(default_rate * resolution)))
     for g, r in sorted(rates.items()):
-        thr = F.when(F.col(group_col) == g,
+        thr = F.when(F.col("source") == g,
                      F.lit(int(round(r * resolution)))).otherwise(thr)
     return docs.filter(F.pmod(fp, F.lit(resolution)) < thr)
 
 
-def collocations(docs: DataFrame, k: int = 20,
-                 min_count: int = 5) -> DataFrame:
+def collocations(docs: DataFrame, k: int = 20) -> DataFrame:
     """Top-k collocations (PMI-style lift): word bigrams that co-occur far
     more often than their unigram frequencies predict — the phrase-mining
     pass (new-terminology discovery, tokenizer merge candidates, boilerplate
@@ -729,8 +700,8 @@ def collocations(docs: DataFrame, k: int = 20,
     ``n_xy / (n_x * n_y)`` (the corpus-size factor N is constant within one
     ranking), so we order by ``score_ppb = n_xy * 1e9 // (n_x * n_y)`` —
     bit-identical on any engine, no float division. Ties break by n_xy
-    desc, then bigram text. min_count floors the numerator so one noise
-    pair of two hapaxes cannot top the list.
+    desc, then bigram text. Bigrams seen fewer than 5 times are dropped,
+    so one noise pair of two hapaxes cannot top the list.
 
     Scale shape: bigram + unigram counts are each explode -> map-side
     partial agg -> ONE vocab-sized shuffle (Zipf does the map-side work);
@@ -744,8 +715,8 @@ def collocations(docs: DataFrame, k: int = 20,
     the unigram-count product < 2^63 ~ 9.2e18 (geometric mean < ~3.0e9 per
     word — a stopword pair in a 10^12-token corpus violates this first).
     Past either bound, rank per shard (counts reset per shard) or compute
-    the products in DECIMAL(38,0); min_count does not protect the
-    denominator.
+    the products in DECIMAL(38,0); the 5-occurrence floor does not protect
+    the denominator.
 
     Returns (w1, w2, n_xy, n_x, n_y, score_ppb), k rows.
     """
@@ -762,7 +733,7 @@ def collocations(docs: DataFrame, k: int = 20,
     bi = (wbase.select(F.explode(pairs).alias("p"))
           .select("p.w1", "p.w2")
           .groupBy("w1", "w2").agg(F.count("*").alias("n_xy"))
-          .filter(F.col("n_xy") >= min_count))
+          .filter(F.col("n_xy") >= 5))
     uni = (wbase.select(F.explode(words).alias("token"))
            .groupBy("token").agg(F.count("*").alias("n")))
     return (bi
@@ -779,8 +750,7 @@ def collocations(docs: DataFrame, k: int = 20,
             .limit(k))
 
 
-def exact_quantile_bins(docs: DataFrame, q: int = 10,
-                        value_col: str = "n_chars") -> DataFrame:
+def exact_quantile_bins(docs: DataFrame, q: int = 10) -> DataFrame:
     """EXACT global quantile boundaries WITHOUT a global sort — the
     data-dependent complement of ``length_histogram``'s fixed bands (corpus
     length profiling, sequence-length bucketing for packing budgets).
@@ -798,7 +768,7 @@ def exact_quantile_bins(docs: DataFrame, q: int = 10,
 
     Returns (quantile INT, boundary BIGINT, cum_rows BIGINT), q-1 rows.
     """
-    hist = (docs.groupBy(F.col(value_col).cast("long").alias("v"))
+    hist = (docs.groupBy(F.col("n_chars").cast("long").alias("v"))
             .agg(F.count("*").alias("cnt")))
     # a single-partition window: its input is the value histogram above
     # (distinct-value-sized, never the corpus — pinned in
@@ -821,9 +791,8 @@ def exact_quantile_bins(docs: DataFrame, q: int = 10,
             .orderBy("quantile"))
 
 
-def inverted_index(docs: DataFrame, min_df: int = 2, max_df: int = 8,
-                   min_len: int = 8, ngram: int = 1,
-                   id_col: str = "doc_id") -> DataFrame:
+def inverted_index(docs: DataFrame, min_len: int = 8,
+                   ngram: int = 1) -> DataFrame:
     """Posting-list build for mid-rarity terms — the retrieval-index /
     concordance pass (which documents mention this term/phrase?), df-banded
     so the output is the interesting tail, not the stopword head. With
@@ -837,13 +806,13 @@ def inverted_index(docs: DataFrame, min_df: int = 2, max_df: int = 8,
     Scale shape: per-doc DISTINCT terms first (array_distinct inside the
     row — dedup before the explode so the shuffle carries (term, doc)
     once, not per occurrence), then one term-keyed shuffle. The df band
-    [min_df, max_df] bounds every posting list (max_df ids), so no
+    [2, 8] bounds every posting list (8 ids), so no
     collect_set can blow up on a stopword; the min_len filter drops the
     short-term head scan-side.
 
     Returns (token, df BIGINT, postings STRING).
     """
-    posts = _posting_ids(docs, min_df, max_df, min_len, ngram, id_col)
+    posts = _posting_ids(docs, 8, min_len, ngram)
     return posts.select(
         "token", "df",
         F.array_join(
@@ -851,25 +820,24 @@ def inverted_index(docs: DataFrame, min_df: int = 2, max_df: int = 8,
             ",").alias("postings"))
 
 
-def _posting_ids(docs: DataFrame, min_df: int, max_df: int, min_len: int,
-                 ngram: int, id_col: str) -> DataFrame:
+def _posting_ids(docs: DataFrame, max_df: int, min_len: int,
+                 ngram: int) -> DataFrame:
     """Shared posting-list core: (token, df BIGINT, ids array) with df in
-    [min_df, max_df] — so every ids array is bounded by max_df."""
+    [2, max_df] — so every ids array is bounded by max_df."""
     docs = docs.select("*", F.col("words").alias("_pws"))
     words = F.col("_pws")
     terms = word_ngrams(words, ngram) if ngram > 1 else words
     toks = F.array_distinct(
         F.filter(terms, lambda x: F.length(x) >= min_len))
-    return (docs.select(F.col(id_col), F.explode(toks).alias("token"))
+    return (docs.select(F.col("doc_id"), F.explode(toks).alias("token"))
             .groupBy("token")
-            .agg(F.collect_set(id_col).alias("ids"))
+            .agg(F.collect_set("doc_id").alias("ids"))
             .withColumn("df", F.size("ids").cast("long"))
-            .filter((F.col("df") >= min_df) & (F.col("df") <= max_df)))
+            .filter((F.col("df") >= 2) & (F.col("df") <= max_df)))
 
 
 def related_doc_pairs(docs: DataFrame, min_shared: int = 2,
-                      min_df: int = 2, max_df: int = 8, min_len: int = 1,
-                      ngram: int = 3, id_col: str = "doc_id") -> DataFrame:
+                      max_df: int = 8) -> DataFrame:
     """Related-document candidate pairs via shared MID-RARITY phrases: two
     docs are related when they co-occur on >= min_shared posting lists of
     df-banded terms (the "more like this" retrieval pass, and a third
@@ -885,7 +853,7 @@ def related_doc_pairs(docs: DataFrame, min_shared: int = 2,
 
     Returns (id_a, id_b, shared_terms BIGINT), id_a < id_b, unordered set.
     """
-    posts = _posting_ids(docs, min_df, max_df, min_len, ngram, id_col)
+    posts = _posting_ids(docs, max_df, 1, 3)
     pairs = (posts.select(F.explode("ids").alias("id_a"), "ids")
              .select("id_a", F.explode("ids").alias("id_b"))
              .filter(F.col("id_a") < F.col("id_b")))
@@ -894,8 +862,7 @@ def related_doc_pairs(docs: DataFrame, min_shared: int = 2,
             .filter(F.col("shared_terms") >= min_shared))
 
 
-def bpe_pair_counts(docs: DataFrame, k: int = 20,
-                    text_col: str = "text") -> DataFrame:
+def bpe_pair_counts(docs: DataFrame, k: int = 20) -> DataFrame:
     """One round of the BPE-trainer inner loop: the top-k adjacent symbol
     pairs, weighted by word frequency — the distributed-expensive step of
     byte-pair-encoding tokenizer training (each merge round picks the
@@ -912,7 +879,7 @@ def bpe_pair_counts(docs: DataFrame, k: int = 20,
     Exact integer weights; order pinned (weighted_count desc, a, b).
     Returns (a STRING, b STRING, weighted_count BIGINT), k rows.
     """
-    wc = (docs.select(F.explode(_words(F.col(text_col))).alias("word"))
+    wc = (docs.select(F.explode(_words(F.col("text"))).alias("word"))
           .groupBy("word").agg(F.count("*").alias("n")))
     cs = F.split(F.col("word"), "")
     pairs = F.when(
@@ -930,8 +897,7 @@ def bpe_pair_counts(docs: DataFrame, k: int = 20,
             .limit(k))
 
 
-def tfidf_topk(docs: DataFrame, terms: list, k: int = 20,
-               id_col: str = "doc_id") -> DataFrame:
+def tfidf_topk(docs: DataFrame, terms: list, k: int = 20) -> DataFrame:
     """Ranked retrieval: top-k documents for a bag-of-terms query under
     tf-idf scoring with an exact-integer idf (idf_ppb = N * 1e9 DIV df) —
     float-free on purpose so the ranking is bit-identical on any engine
@@ -956,25 +922,23 @@ def tfidf_topk(docs: DataFrame, terms: list, k: int = 20,
     Returns (doc_id, score_ppb BIGINT), k rows, ties pinned by doc_id.
     """
     hits = F.filter(F.col("words"), lambda x: x.isin(*terms))
-    tf = (docs.select(F.col(id_col), F.explode(hits).alias("term"))
-          .groupBy(id_col, "term").agg(F.count("*").alias("tf")))
+    tf = (docs.select(F.col("doc_id"), F.explode(hits).alias("term"))
+          .groupBy("doc_id", "term").agg(F.count("*").alias("tf")))
     df_t = tf.groupBy("term").agg(
-        F.countDistinct(id_col).alias("term_df"))
+        F.countDistinct("doc_id").alias("term_df"))
     total = docs.groupBy().agg(F.count("*").alias("n_docs"))
     idf = (df_t.crossJoin(F.broadcast(total))
            .select("term",
                    F.expr("CAST(n_docs * CAST(1000000000 AS BIGINT) "
                           "DIV term_df AS BIGINT)").alias("idf_ppb")))
     return (tf.join(F.broadcast(idf), "term")
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(F.sum(F.col("tf") * F.col("idf_ppb")).alias("score_ppb"))
-            .orderBy(F.desc("score_ppb"), F.asc(id_col))
+            .orderBy(F.desc("score_ppb"), F.asc("doc_id"))
             .limit(k))
 
 
-def quantile_bucket_stats(docs: DataFrame, q: int = 10,
-                          value_col: str = "n_chars",
-                          id_col: str = "doc_id") -> DataFrame:
+def quantile_bucket_stats(docs: DataFrame, q: int = 10) -> DataFrame:
     """Per-quantile-bucket corpus stats: compose ``exact_quantile_bins``
     into a bucket ASSIGNMENT (row -> which decile band) and aggregate each
     band (the length-stratified corpus profile: how many docs and chars
@@ -991,13 +955,13 @@ def quantile_bucket_stats(docs: DataFrame, q: int = 10,
 
     Returns (bucket INT, n_docs, min_v, max_v, total_v), <= q rows.
     """
-    bounds = (exact_quantile_bins(docs, q=q, value_col=value_col)
+    bounds = (exact_quantile_bins(docs, q=q)
               .select("boundary"))
-    v = F.col(value_col).cast("long")
-    assigned = (docs.select(F.col(id_col), v.alias("v"))
+    v = F.col("n_chars").cast("long")
+    assigned = (docs.select(F.col("doc_id"), v.alias("v"))
                 .join(F.broadcast(bounds),
                       F.col("v") > F.col("boundary"), "left")
-                .groupBy(id_col, "v")
+                .groupBy("doc_id", "v")
                 .agg((F.count("boundary") + 1).cast("int").alias("bucket")))
     return (assigned.groupBy("bucket")
             .agg(F.count("*").alias("n_docs"),
@@ -1007,25 +971,22 @@ def quantile_bucket_stats(docs: DataFrame, q: int = 10,
             .orderBy("bucket"))
 
 
-def fingerprint(docs: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
+def fingerprint(docs: DataFrame) -> DataFrame:
     """64-bit document fingerprint over normalized text: the reference's
     FNV-1a (dedup.content_fingerprint, Arrow-batched)."""
-    return docs.select(F.col(id_col),
-                       content_fingerprint(F.col(text_col))
+    return docs.select(F.col("doc_id"),
+                       content_fingerprint(F.col("text"))
                        .alias("fingerprint"))
 
 
 def rank_fusion_topk(docs: DataFrame, terms: list, k: int = 20,
-                     pool: int = 100, rrf_k: int = 60,
-                     text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+                     pool: int = 100) -> DataFrame:
     """Reciprocal-rank fusion of two retrieval rankings — the standard way
     to merge heterogeneous scorers (here: tf-idf relevance for a term
     query x a length prior; in production: BM25 x embedding-ANN) without
     calibrating their score scales against each other.
 
-    Exact integers throughout: contribution = 1e9 DIV (rrf_k + rank), so
+    Exact integers throughout: contribution = 1e9 DIV (60 + rank), so
     fused scores are bit-identical on any engine. Fusion operates on the
     top-``pool`` candidates of EACH ranking (rank lists, not full-corpus
     ranks) — that is both the standard IR formulation and the scale shape:
@@ -1039,18 +1000,18 @@ def rank_fusion_topk(docs: DataFrame, terms: list, k: int = 20,
     # top-`pool` frames (tfidf_topk's limit / the TakeOrdered length prior
     # — pinned in tests/test_plans.py), never the corpus, so WindowExec's
     # "No Partition Defined" warning is expected here
-    r1 = (tfidf_topk(docs, terms, k=pool, id_col=id_col)
+    r1 = (tfidf_topk(docs, terms, k=pool)
           .withColumn("rank", F.row_number().over(
-              Window.orderBy(F.desc("score_ppb"), F.asc(id_col))))
-          .select(id_col, "rank"))
-    r2 = (docs.select(id_col, F.length(text_col).cast("long").alias("len"))
-          .orderBy(F.desc("len"), F.asc(id_col)).limit(pool)
+              Window.orderBy(F.desc("score_ppb"), F.asc("doc_id"))))
+          .select("doc_id", "rank"))
+    r2 = (docs.select("doc_id", F.length("text").cast("long").alias("len"))
+          .orderBy(F.desc("len"), F.asc("doc_id")).limit(pool)
           .withColumn("rank", F.row_number().over(
-              Window.orderBy(F.desc("len"), F.asc(id_col))))
-          .select(id_col, "rank"))
-    contrib = F.expr(f"CAST(1000000000 DIV ({rrf_k} + rank) AS BIGINT)")
-    fused = (r1.select(id_col, contrib.alias("c"))
-             .unionAll(r2.select(id_col, contrib.alias("c")))
-             .groupBy(id_col)
+              Window.orderBy(F.desc("len"), F.asc("doc_id"))))
+          .select("doc_id", "rank"))
+    contrib = F.expr("CAST(1000000000 DIV (60 + rank) AS BIGINT)")
+    fused = (r1.select("doc_id", contrib.alias("c"))
+             .unionAll(r2.select("doc_id", contrib.alias("c")))
+             .groupBy("doc_id")
              .agg(F.sum("c").alias("fused_ppb")))
-    return (fused.orderBy(F.desc("fused_ppb"), F.asc(id_col)).limit(k))
+    return (fused.orderBy(F.desc("fused_ppb"), F.asc("doc_id")).limit(k))

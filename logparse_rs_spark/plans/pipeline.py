@@ -51,10 +51,11 @@ class SinkSpec:
 
     payload:
       "columns" — per-field columnar projection (its own table/write job)
-      "map"     — type-erased map<string,string> payload (SURVEY §1.2);
-                  all map-payload sinks share ONE table partitioned by
-                  (log_type, bucket) and ONE write job — the fixed-cost
-                  saver for the long tail of low-volume log types
+      "map"     — type-erased map<string,string> payload (SURVEY §1.2) of
+                  every schema field (no ``columns``); all map-payload
+                  sinks share ONE table partitioned by (log_type, bucket)
+                  and ONE write job — the fixed-cost saver for the long
+                  tail of low-volume log types
     """
 
     log_type: str
@@ -205,6 +206,7 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig,
     def mark(label: str, t_start: float) -> None:
         timings[label] = round(time.perf_counter() - t_start, 3)
 
+    _check_sinks(cfg.sinks)
     run_id = uuid.uuid4().hex[:12]
     schema = load_schema(cfg.schema_path)
     anon = load_anonymizer(cfg.anonymizer_path) if cfg.anonymizer_path else None
@@ -401,8 +403,6 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig,
 
     columnar_sinks = [s for s in cfg.sinks if s.payload == "columns"]
     map_sinks = [s for s in cfg.sinks if s.payload == "map"]
-    if map_sinks and len({s.table for s in map_sinks}) != 1:
-        raise ValueError("all map-payload sinks must share one table")
     col_groups: Dict[str, List[SinkSpec]] = {}
     for s in columnar_sinks:
         col_groups.setdefault(s.table, []).append(s)
@@ -494,6 +494,23 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig,
         lines_in=lines_in,
         timings=timings,
     )
+
+
+def _check_sinks(sinks: Sequence[SinkSpec]) -> None:
+    """Raise ValueError for a sink list run_pipeline cannot write as
+    given: a payload other than "columns" or "map" (no writer would touch
+    it, yet its rows would be reported), a map-payload sink with
+    ``columns`` (the map payload holds every schema field), or map-payload
+    sinks spread over several tables."""
+    for s in sinks:
+        if s.payload not in ("columns", "map"):
+            raise ValueError(f"sink {s.table}/{s.log_type}: payload "
+                             f"{s.payload!r} is not 'columns' or 'map'")
+        if s.payload == "map" and s.columns is not None:
+            raise ValueError(f"sink {s.table}/{s.log_type}: a map-payload "
+                             "sink writes every schema field; drop columns")
+    if len({s.table for s in sinks if s.payload == "map"}) > 1:
+        raise ValueError("all map-payload sinks must share one table")
 
 
 def default_sinks(schema: CompiledSchema) -> List[SinkSpec]:

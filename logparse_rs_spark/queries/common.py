@@ -20,7 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from logparse_rs_spark.anonymizer import load_anonymizer
-from logparse_rs_spark.dataops_fixtures import ensure_dataops_aux
+from logparse_rs_spark.dataops_fixtures import (ENTRY_MAX_BUCKET,
+                                                ensure_dataops_aux)
 from logparse_rs_spark.fixtures import ensure_fixture_pair
 from logparse_rs_spark.operators.dedup import (canonical_signatures,
                                                minhash_lsh_pairs,
@@ -183,8 +184,7 @@ def _doc_sigs(spark, sf_dir):
     # persisted corpus signature table a production dedup increment
     # reuses instead of re-running the signature UDF per job.
     return shared(spark, "doc_sigs", f"{sf_dir}/documents.parquet",
-                  lambda: minhash_signatures(_docs(spark, sf_dir),
-                                             num_perm=64).persist())
+                  lambda: minhash_signatures(_docs(spark, sf_dir)).persist())
 
 
 def _canon_sigs(spark, sf_dir):
@@ -214,7 +214,7 @@ def _canon_pairs(spark, sf_dir):
     # pair frame is each's common prefix)
     return shared(spark, "canon_pairs", f"{sf_dir}/documents.parquet",
                   lambda: minhash_near_dup(
-                      _docs(spark, sf_dir), max_bucket=1000,
+                      _docs(spark, sf_dir), max_bucket=ENTRY_MAX_BUCKET,
                       canon_sigs=_canon_sigs(spark, sf_dir)).persist())
 
 

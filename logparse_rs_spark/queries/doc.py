@@ -10,11 +10,12 @@ import glob
 import os
 import shutil
 
-import pyarrow.parquet as pq
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from logparse_rs_spark.dataops_fixtures import (DSIR_N_BUCKETS,
+                                                ENTRY_MAX_BUCKET,
+                                                derived_dir,
                                                 FUZZY_FRESH_OFFSET,
                                                 FUZZY_FRESH_PREFIX,
                                                 FUZZY_RECRAWL_OFFSET,
@@ -29,7 +30,7 @@ from logparse_rs_spark.operators.curate import (dedup_paragraphs, dsir_weights,
                                                 shard_assign_balanced,
                                                 token_budget_cap)
 from logparse_rs_spark.operators.dedup import WORD_SPLIT_CLASS as WSP
-from logparse_rs_spark.operators.dedup import (WS_CHARS, _banded,
+from logparse_rs_spark.operators.dedup import (BANDS, WS_CHARS, _banded,
                                                bloom_anti_join,
                                                cluster_representatives,
                                                containment_pairs,
@@ -73,7 +74,7 @@ from logparse_rs_spark.streaming.stateful import (streaming_band_registry,
 
 from .common import (STREAM_BATCHES, OracleTables, _canon_pairs,
                      _doc_components, _doc_pairs, _doc_sigs, _docs, _tok_docs,
-                     fixture_root, run_available_now, sf_basename)
+                     fixture_root, run_available_now)
 
 # whitespace spelled as an explicit character class on BOTH sides (the
 # operators use the same constants) — Java \s and RE2 \s disagree on
@@ -113,13 +114,13 @@ def doc_minhash_pairs(spark, sf_dir):
 
 
 def doc_simhash_candidates(spark, sf_dir):
-    # max_bucket=1000 is the demonstrated (scale-safe) form: a chunk
+    # the capped form is the demonstrated (scale-safe) one: a chunk
     # table has only 65,536 buckets, so uncapped the self-join is
     # n^2/65,536 at corpus scale. The fixture build asserts no sf0.01
     # chunk bucket exceeds the cap (dataops_fixtures._assert_oracle_caps)
     # so the uncapped DuckDB oracle sees the identical pair set.
     return simhash_candidates(simhash(_docs(spark, sf_dir)),
-                              max_bucket=1000)
+                              max_bucket=ENTRY_MAX_BUCKET)
 
 
 def doc_curation_stats(spark, sf_dir):
@@ -256,8 +257,7 @@ def doc_curation_funnel(spark, sf_dir):
 def doc_dsir_weights(spark, sf_dir):
     # DSIR importance weights: per-doc mean log-likelihood ratio of
     # hashed-unigram models, target = English slice vs whole corpus
-    return dsir_weights(_docs(spark, sf_dir), target="lang = 'en'",
-                        n_buckets=DSIR_N_BUCKETS)
+    return dsir_weights(_docs(spark, sf_dir), n_buckets=DSIR_N_BUCKETS)
 
 
 def doc_stratified_sample(spark, sf_dir):
@@ -271,20 +271,18 @@ def doc_stratified_sample(spark, sf_dir):
 
 
 def doc_vocab_top25(spark, sf_dir):
-    return vocab_top(_tok_docs(spark, sf_dir), k=25)
+    return vocab_top(_tok_docs(spark, sf_dir))
 
 
 def doc_repeated_5grams(spark, sf_dir):
-    return repeated_ngrams(_tok_docs(spark, sf_dir), n=5, k=20,
-                           min_count=2)
+    return repeated_ngrams(_tok_docs(spark, sf_dir), min_count=2)
 
 
 def doc_lang_rebalance(spark, sf_dir):
     # data-mixing cap: at most 30 docs per language, survivors chosen
     # by content-fingerprint order (deterministic + unbiased); oracle
     # ranks by the refimpl FNV parquet
-    kept = rebalance_by_group(_docs(spark, sf_dir), group_col="lang",
-                              quota=30)
+    kept = rebalance_by_group(_docs(spark, sf_dir), quota=30)
     return (kept.groupBy("lang")
             .agg(F.count("*").alias("kept_docs"),
                  F.sum("n_chars").alias("kept_chars")))
@@ -303,7 +301,7 @@ def doc_contamination(spark, sf_dir):
     # shingle side is broadcast so the corpus never shuffles
     docs = _docs(spark, sf_dir)
     return contamination_check(docs.filter("doc_id >= 25"),
-                               docs.filter("doc_id < 25"), n=5)
+                               docs.filter("doc_id < 25"))
 
 
 def doc_cluster_dedup_stats(spark, sf_dir):
@@ -393,7 +391,7 @@ def doc_lm_score(spark, sf_dir):
     # materializes once per call instead of three times
     docs = _tok_docs(spark, sf_dir)
     bg = shared(spark, "lm_bigrams", f"{sf_dir}/documents.parquet",
-                lambda: _doc_bigrams(docs, "doc_id").persist())
+                lambda: _doc_bigrams(docs).persist())
     model = lm_bigram_model(docs, doc_bg=bg)
     return lm_score(docs, model=model, doc_bg=bg)
 
@@ -401,14 +399,14 @@ def doc_lm_score(spark, sf_dir):
 def doc_rare_terms(spark, sf_dir):
     # per-doc distinguishing terms: 3 rarest tokens by corpus document
     # frequency (all-integer ranking: df asc, tf desc, token asc)
-    return rare_terms(_docs(spark, sf_dir), k=3, min_len=4)
+    return rare_terms(_docs(spark, sf_dir))
 
 
 def doc_quality_topfrac(spark, sf_dir):
     # percentile-threshold curation: keep the best quarter per
     # language by quality score (ties broken by doc_id; kept count
     # = ceil(0.25 * group size), integer-exact on both sides)
-    return quality_percentile_filter(_docs(spark, sf_dir), frac=0.25)
+    return quality_percentile_filter(_docs(spark, sf_dir))
 
 
 def doc_length_bands(spark, sf_dir):
@@ -433,43 +431,35 @@ def _staged_doc_batches(spark, sf_dir):
     # files so the first batch containing a text/band holds its global
     # min id and streaming first-seen equals the batch min-id answer.
     # Dir name embeds the batch count: a changed STREAM_BATCHES must
-    # not silently reuse a differently-split staging dir.
-    # key by the REAL sf basename, not _sf_tag (which collapses unknown
-    # tags onto sf0.01): a generated sf1.0 run must not write its
-    # staging into the sf0.01 dir. Belt+braces: a row-count staleness
-    # probe below rebuilds any staging whose total rows no longer
-    # match the source documents table.
+    # not silently reuse a differently-split staging dir. The batches
+    # are staged in a scratch dir renamed into place once complete.
     n_b = STREAM_BATCHES
-    src = os.path.join(fixture_root(),
-                       f"docstream_{sf_basename(sf_dir)}_b{n_b}")
-    staged = sorted(glob.glob(os.path.join(src, "b*.parquet")))
-    if staged:
-        n_staged = sum(pq.ParquetFile(f).metadata.num_rows
-                       for f in staged)
-        n_src = pq.ParquetFile(
-            f"{sf_dir}/documents.parquet").metadata.num_rows
-        if n_staged != n_src:
-            shutil.rmtree(src, ignore_errors=True)
-            staged = []
-    if not staged:
-        docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-                .select("doc_id", "text"))
+    origin = f"{sf_dir}/documents.parquet"
+    src = derived_dir(fixture_root(), f"docstream_b{n_b}", origin)
+    if not os.path.isdir(src):
+        docs = spark.read.parquet(origin).select("doc_id", "text")
         n = docs.count()
-        os.makedirs(src, exist_ok=True)
+        tmp = f"{src}.tmp{os.getpid()}"
+        shutil.rmtree(tmp, ignore_errors=True)
+        os.makedirs(tmp)
         for b in range(n_b):
             lo, hi = b * n // n_b, (b + 1) * n // n_b
-            part_dir = os.path.join(src, f"_tmp_b{b}")
+            part_dir = os.path.join(tmp, f"_tmp_b{b}")
             (docs.filter((F.col("doc_id") >= lo)
                          & (F.col("doc_id") < hi) if b < n_b - 1
                          else (F.col("doc_id") >= lo))
              .coalesce(1).write.mode("overwrite").parquet(part_dir))
             part = glob.glob(os.path.join(part_dir, "part-*.parquet"))[0]
-            dest = os.path.join(src, f"b{b}.parquet")
+            dest = os.path.join(tmp, f"b{b}.parquet")
             shutil.move(part, dest)
             shutil.rmtree(part_dir, ignore_errors=True)
             # the file source triggers oldest-mtime-first: pin the
             # batch order to the id order explicitly
             os.utime(dest, (1_000_000_000 + b, 1_000_000_000 + b))
+        try:
+            os.rename(tmp, src)
+        except OSError:   # another process staged it first
+            shutil.rmtree(tmp, ignore_errors=True)
     return src
 
 
@@ -523,7 +513,7 @@ def doc_streaming_fuzzy_dedup(spark, sf_dir):
                 .agg(F.min("doc_id").alias("_owner")))
     # batch-side survivor decision from the STREAMED registry: every
     # (band, bucket) of the doc must be owned by the doc itself
-    mine = _banded(_doc_sigs(spark, sf_dir), "doc_id", 16, 64)
+    mine = _banded(_doc_sigs(spark, sf_dir), BANDS)
     return (mine.join(registry, ["band", "bucket"])
             .groupBy("doc_id")
             .agg(F.sum((F.col("_owner") != F.col("doc_id"))
@@ -633,7 +623,7 @@ def doc_collocations(spark, sf_dir):
     # PMI-style collocation mining, ranked by exact integer lift
     # (n_xy * 1e9 DIV (n_x * n_y)) — no float division anywhere on
     # either engine; corpus never shuffles, only vocab-sized frames.
-    return collocations(_tok_docs(spark, sf_dir), k=20, min_count=5)
+    return collocations(_tok_docs(spark, sf_dir), k=20)
 
 
 def doc_length_deciles(spark, sf_dir):
@@ -649,8 +639,7 @@ def doc_inverted_index(spark, sf_dir):
     # trigram phrases have a long df tail at every SF. Per-doc distinct
     # before the explode, postings as a comma-joined ascending id
     # string (engine-neutral render).
-    return inverted_index(_tok_docs(spark, sf_dir), min_df=2, max_df=8,
-                          min_len=1, ngram=3)
+    return inverted_index(_tok_docs(spark, sf_dir), min_len=1, ngram=3)
 
 
 def doc_related_pairs(spark, sf_dir):
@@ -658,7 +647,7 @@ def doc_related_pairs(spark, sf_dir):
     # trigram posting lists — pair explosion bounded by max_df per
     # term, never by corpus size.
     return related_doc_pairs(_tok_docs(spark, sf_dir), min_shared=2,
-                             min_df=2, max_df=8, min_len=1, ngram=3)
+                             max_df=8)
 
 
 def doc_bpe_pairs(spark, sf_dir):
@@ -686,7 +675,7 @@ def doc_pagerank(spark, sf_dir):
     # integer fixed-point PageRank (3 rounds) over the shared-rare-
     # phrase graph: exact BIGINT ranks, each round one edge-vs-rank
     # join + one dst-keyed sum. Top-20, ties pinned by node id.
-    pr = pagerank_integer(doc_related_pairs(spark, sf_dir), iterations=3)
+    pr = pagerank_integer(doc_related_pairs(spark, sf_dir))
     return (pr.select(F.col("node").alias("doc_id"),
                       F.col("pr").alias("pagerank"))
             .orderBy(F.desc("pagerank"), F.asc("doc_id")).limit(20))
@@ -706,7 +695,7 @@ def doc_sequential_ids(spark, sf_dir):
     # global sort: range-partition + frozen layout + broadcast prefix
     # offsets (the scalable zipWithIndex; one corpus shuffle).
     d = _docs(spark, sf_dir).select("doc_id", "lang")
-    return (sequential_ids(d, ["lang", "doc_id"], out_col="seq_id")
+    return (sequential_ids(d, ["lang", "doc_id"])
             .select("doc_id", "lang", "seq_id")
             .orderBy("seq_id"))
 

@@ -7,7 +7,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from logparse_rs_spark.dataops_fixtures import ensure_images_fixture
+from logparse_rs_spark.dataops_fixtures import (ENTRY_MAX_BUCKET, IVF_N_CELLS,
+                                                IVF_N_PROBE, N_QUERIES,
+                                                ensure_images_fixture)
 from logparse_rs_spark.operators.dedup import simhash_candidates
 from logparse_rs_spark.operators.graph import dup_clusters
 from logparse_rs_spark.operators.multimodal import image_ahash
@@ -20,25 +22,25 @@ from .common import OracleTables, _emb, _emb_dim, _par_parquet, fixture_root
 
 
 def _query_vectors(emb):
-    # the top-k queries' query set: the first three vectors
-    return (emb.filter("vec_id < 3")
+    # the top-k queries' query set: the first N_QUERIES vectors
+    return (emb.filter(f"vec_id < {N_QUERIES}")
             .select(F.col("vec_id").alias("query_id"), "embedding"))
 
 
 def emb_bruteforce_topk(spark, sf_dir):
     emb = _emb(spark, sf_dir)
-    return brute_force_topk(emb, _query_vectors(emb), k=5)
+    return brute_force_topk(emb, _query_vectors(emb))
 
 
 def emb_lsh_topk(spark, sf_dir):
     emb = _emb(spark, sf_dir)
-    return lsh_topk(emb, _query_vectors(emb), dim=_emb_dim(sf_dir), k=5,
-                    n_planes=32, bands=8)
+    return lsh_topk(emb, _query_vectors(emb), dim=_emb_dim(sf_dir))
 
 
 def emb_ivf_topk(spark, sf_dir):
     emb = _emb(spark, sf_dir)
-    return ivf_topk(emb, _query_vectors(emb), k=5, n_cells=8, n_probe=4)
+    return ivf_topk(emb, _query_vectors(emb), k=5, n_cells=IVF_N_CELLS,
+                    n_probe=IVF_N_PROBE)
 
 
 def emb_neardup_pairs(spark, sf_dir):
@@ -46,8 +48,7 @@ def emb_neardup_pairs(spark, sf_dir):
     # verify; checked against the DuckDB ALL-PAIRS oracle, proving the
     # bucketed plan returns the exact >=threshold answer on this data
     emb = _emb(spark, sf_dir)
-    return neardup_pairs(emb, dim=_emb_dim(sf_dir), threshold=0.35,
-                         bands=16)
+    return neardup_pairs(emb, dim=_emb_dim(sf_dir), threshold=0.35)
 
 
 def emb_semdedup(spark, sf_dir):
@@ -55,7 +56,8 @@ def emb_semdedup(spark, sf_dir):
     # by-id within each cell on the cosine>=0.35 graph. All-integer
     # survivor output; cell training mirrors emb_ivf_topk's params so
     # the oracle can reuse the refimpl cell-assignment aux parquet.
-    return semdedup(_emb(spark, sf_dir), threshold=0.35, n_cells=8)
+    return semdedup(_emb(spark, sf_dir), threshold=0.35,
+                    n_cells=IVF_N_CELLS)
 
 
 def emb_dup_clusters(spark, sf_dir):
@@ -71,7 +73,7 @@ def emb_kmeans_assign(spark, sf_dir):
     # distances -> floored-integer centroid means): 2 assignment
     # rounds, k=8, seeds = 8 smallest vec_ids. The relational spec of
     # the numpy IVF path, oracle-checked bit-for-bit.
-    return kmeans_assign_exact(_emb(spark, sf_dir), k=8, iterations=2)
+    return kmeans_assign_exact(_emb(spark, sf_dir), k=8)
 
 
 def img_neardup_candidates(spark, sf_dir):
@@ -85,7 +87,7 @@ def img_neardup_candidates(spark, sf_dir):
                         ensure_images_fixture(fixture_root(), sf_dir),
                         rows_per_task=3000)
     ah = image_ahash(imgs).withColumnRenamed("ahash", "simhash")
-    return simhash_candidates(ah, max_bucket=1000)
+    return simhash_candidates(ah, max_bucket=ENTRY_MAX_BUCKET)
 
 
 def oracle_sql(t: OracleTables) -> dict[str, str]:

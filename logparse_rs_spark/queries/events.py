@@ -10,6 +10,7 @@ import shutil
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from logparse_rs_spark.dataops_fixtures import derived_dir
 from logparse_rs_spark.operators.aggregates import (merge_aggregates,
                                                     spike_windows)
 from logparse_rs_spark.operators.asof import asof_join, interval_join
@@ -24,7 +25,7 @@ from logparse_rs_spark.streaming.stream import (streaming_interval_join,
                                                 streaming_sessions)
 
 from .common import (OracleTables, _par_parquet, fixture_root,
-                     run_available_now, sf_basename)
+                     run_available_now)
 
 
 def _events(spark, sf_dir):
@@ -54,7 +55,7 @@ def events_spike_windows(spark, sf_dir):
     # float baseline, no timestamp output surface). 900 s keeps the
     # flag set non-trivial at BOTH gate SFs (472 @ sf0.01, 151 @ sf0.1)
     ev = _events(spark, sf_dir)
-    return spike_windows(ev, window_s=900, factor_num=2, factor_den=1)
+    return spike_windows(ev, window_s=900)
 
 
 def events_attribution_join(spark, sf_dir):
@@ -72,8 +73,8 @@ def events_attribution_join(spark, sf_dir):
                       F.col("ts").alias("c_ts")))
     purchases = (ev.filter("event_type = 'purchase'")
                  .select("event_id", "user_id", "ts"))
-    j = interval_join(purchases, clicks, on="user_id", point_ts="ts",
-                      start_ts="c_start", end_ts="c_end",
+    j = interval_join(purchases, clicks, on="user_id", start_ts="c_start",
+                      end_ts="c_end",
                       value_cols=["click_id", "c_ts"], bucket_s=43200)
     return j.select(F.col("event_id").alias("purchase_id"),
                     F.col("click_id_iv").alias("click_id"),
@@ -120,7 +121,7 @@ def events_asof_join(spark, sf_dir):
     purchases = (ev.filter(F.col("event_type") == "purchase")
                  .groupBy("user_id", "ts")
                  .agg(F.max_by("value", "event_id").alias("purchase_value")))
-    out = asof_join(clicks, purchases, on="user_id", left_ts="ts",
+    out = asof_join(clicks, purchases, on="user_id",
                     value_cols=["purchase_value"], suffix="_last")
     return out.select("event_id", "user_id", "ts", "value",
                       F.col("purchase_value_last").alias("purchase_value"),
@@ -135,30 +136,20 @@ _EVENTS_STREAM_SCHEMA = ("event_id long, ts timestamp_ntz, "
 def _staged_events_dir(sf_dir) -> str:
     # the file-stream source lists a DIRECTORY; the events table is a
     # single parquet file — stage it (hardlink when possible) into a
-    # per-sf fixture dir once, keyed by the real sf basename so two sf
-    # dirs never share one. Staleness guard (ADVICE.md): if the source
-    # fixture was regenerated (size or mtime differs from the staged
-    # copy), re-stage — a name-only key would silently keep the old
-    # bytes and validate every streaming query against stale data.
-    src = os.path.join(fixture_root(), f"eventstream_{sf_basename(sf_dir)}")
-    dest = os.path.join(src, "events.parquet")
+    # fixture dir keyed on the source file, so a regenerated events table
+    # is re-staged instead of validating the streaming queries against
+    # stale bytes
     origin = f"{sf_dir}/events.parquet"
-    if os.path.exists(dest):
-        so, sd = os.stat(origin), os.stat(dest)
-        same_file = (so.st_dev, so.st_ino) == (sd.st_dev, sd.st_ino)
-        if not same_file and (so.st_size != sd.st_size
-                              or so.st_mtime != sd.st_mtime):
-            os.remove(dest)
+    src = derived_dir(fixture_root(), "eventstream", origin)
+    dest = os.path.join(src, "events.parquet")
     if not os.path.exists(dest):
         os.makedirs(src, exist_ok=True)
+        tmp = f"{dest}.tmp{os.getpid()}"
         try:
-            os.link(origin, dest)
+            os.link(origin, tmp)
         except OSError:
-            shutil.copyfile(origin, dest)
-            # carry the origin mtime so the staleness probe above
-            # compares source-vs-source, not source-vs-copy-time
-            st = os.stat(origin)
-            os.utime(dest, (st.st_atime, st.st_mtime))
+            shutil.copyfile(origin, tmp)
+        os.replace(tmp, dest)
     return src
 
 
@@ -184,8 +175,7 @@ def events_streaming_attribution(spark, sf_dir):
                  .filter("event_type = 'purchase'")
                  .select("event_id", "user_id", "ts"))
     joined = streaming_interval_join(
-        purchases, clicks, key_col="user_id", point_ts="ts",
-        start_ts="c_start", end_ts="c_end", watermark="24 hours")
+        purchases, clicks, watermark="24 hours")
     out = run_available_now(spark, joined, "attribution_feed", "append")
     return out.select(
         F.col("event_id").alias("purchase_id"),
@@ -200,8 +190,7 @@ def events_streaming_sessions(spark, sf_dir):
     # streaming/stream.py) driven to batch equivalence over the events
     # table, then rolled up per user. Oracle = the same half-open gap
     # rule (a gap of EXACTLY 30 min starts a new session) as SQL.
-    sessions = streaming_sessions(_events_stream(spark, sf_dir),
-                                  gap="30 minutes")
+    sessions = streaming_sessions(_events_stream(spark, sf_dir))
     out = run_available_now(spark, sessions, "sessions_feed", "complete")
     return (out.groupBy("user_id")
             .agg(F.count("*").alias("n_sessions"),
@@ -244,7 +233,7 @@ def events_retention(spark, sf_dir):
     # active-user-days, not events; cohort derived as min(bucket) over
     # the same partitioning (no first-event join).
     ev = _events(spark, sf_dir)
-    return retention_cohorts(ev, bucket_s=86400)
+    return retention_cohorts(ev)
 
 
 def events_top3_per_type(spark, sf_dir):
@@ -275,7 +264,7 @@ def events_props_stats(spark, sf_dir):
     # before it (guide §2.5 input skew; safe here: every aggregate
     # is integer/min/max/distinct, no float re-association)
     ev = _par_parquet(spark, f"{sf_dir}/events.parquet")
-    return props_field_stats(ev, field="k")
+    return props_field_stats(ev)
 
 
 def events_user_paths(spark, sf_dir):
@@ -344,7 +333,7 @@ def events_scd2_versions(spark, sf_dir):
     # One user-keyed shuffle; window ordering shared by all outputs.
     ev = (_events(spark, sf_dir)
           .filter(F.col("event_type") == "signup"))
-    return versioned_intervals(ev, key_cols=["user_id"])
+    return versioned_intervals(ev)
 
 
 def oracle_sql(t: OracleTables) -> dict[str, str]:

@@ -174,11 +174,11 @@ def log_action_counts(spark, sf_dir):
 
 def log_top10_sources_anon(spark, sf_dir):
     df = _traffic(spark, sf_dir, anonymized=True)
-    return top_k(df, "source_address", 10)
+    return top_k(df, "source_address")
 
 
 def log_top10_applications(spark, sf_dir):
-    return top_k(_traffic(spark, sf_dir), "application", 10)
+    return top_k(_traffic(spark, sf_dir), "application")
 
 
 def log_url_hash_xor(spark, sf_dir):
@@ -223,7 +223,7 @@ def log_total_and_errors(spark, sf_dir):
 
 def log_pii_scrub(spark, sf_dir):
     pages = _pages(spark, sf_dir).select("url", "text")
-    return pii_scrub(pages, text_col="text", id_col="url")
+    return pii_scrub(pages, id_col="url")
 
 
 def log_url_canonicalize(spark, sf_dir):
@@ -314,7 +314,7 @@ def log_host_pagerank(spark, sf_dir):
            .select(F.least("src_host", "dst_host").alias("id_a"),
                    F.greatest("src_host", "dst_host").alias("id_b"))
            .distinct())
-    pr = pagerank_integer(und, iterations=3)
+    pr = pagerank_integer(und)
     return (pr.select(F.col("node").alias("host"),
                       F.col("pr").alias("pagerank"))
             .orderBy(F.desc("pagerank"), F.asc("host")).limit(20))
@@ -342,8 +342,7 @@ def log_host_hits(spark, sf_dir):
     e = (_host_edges(spark, sf_dir)
          .filter(F.col("src_host") != F.col("dst_host"))
          .select("src_host", "dst_host").distinct())
-    out = hits_integer(e, iterations=2, scale=10**6,
-                       src="src_host", dst="dst_host")
+    out = hits_integer(e, iterations=2, src="src_host", dst="dst_host")
     return (out.select(F.col("node").alias("host"), "hub", "auth")
             .orderBy(F.desc("auth"), F.desc("hub"), F.asc("host"))
             .limit(20))
@@ -425,7 +424,7 @@ def log_sitemap_robots_conflicts(spark, sf_dir):
     sm = _sitemap_entries(spark)
     urls = (sm.filter(F.col("kind") == "url")
             .select("host", F.col("loc").alias("url")))
-    dec = apply_url_policy_df(urls, rules, default_allow=True)
+    dec = apply_url_policy_df(urls, rules)
     return (dec.filter(~F.col("allowed"))
             .select("host", "url", "rule_prefix")
             .orderBy("host", "url"))
@@ -491,7 +490,7 @@ def log_url_policy_hosted(spark, sf_dir):
     rules_df = spark.createDataFrame(_url_policy_rules(DOMAINS),
                                      "prefix string, allow boolean")
     urls = _pages(spark, sf_dir).select("url").distinct()
-    out = apply_url_policy_df(urls, rules_df, default_allow=True)
+    out = apply_url_policy_df(urls, rules_df)
     return _policy_by_host(out)
 
 
@@ -560,7 +559,7 @@ def log_robots_applied(spark, sf_dir):
     rules = _robots_rules(spark).select("prefix", "allow")
     urls = spark.createDataFrame(
         [(u,) for u in _robots_probe_urls(DOMAINS)], "url string")
-    out = apply_url_policy_df(urls, rules, default_allow=True)
+    out = apply_url_policy_df(urls, rules)
     return _policy_by_host(out)
 
 

@@ -97,8 +97,7 @@ def streaming_integrity_feed(pairs_stream: DataFrame) -> DataFrame:
         GroupStateTimeout.NoTimeout)
 
 
-def streaming_exact_dedup(docs_stream: DataFrame, text_col: str = "text",
-                          id_col: str = "doc_id") -> DataFrame:
+def streaming_exact_dedup(docs_stream: DataFrame) -> DataFrame:
     """Incremental exact dedup over a document stream, keyed by
     xxhash64(normalized text). State = the minimum owning doc_id per
     distinct text key, held by Spark's NATIVE streaming aggregation (one
@@ -126,15 +125,13 @@ def streaming_exact_dedup(docs_stream: DataFrame, text_col: str = "text",
     from ..operators.dedup import normalized_text
 
     keyed = docs_stream.select(
-        F.col(id_col).alias("doc_id"),
-        F.xxhash64(normalized_text(F.col(text_col))).alias("text_key"))
+        F.col("doc_id"),
+        F.xxhash64(normalized_text(F.col("text"))).alias("text_key"))
     return keyed.groupBy("text_key").agg(
         F.min("doc_id").alias("doc_id")).select("doc_id", "text_key")
 
 
-def streaming_band_registry(docs_stream: DataFrame, bands: int = 16,
-                            num_perm: int = 64, text_col: str = "text",
-                            id_col: str = "doc_id") -> DataFrame:
+def streaming_band_registry(docs_stream: DataFrame) -> DataFrame:
     """Incremental NEAR-dup state over a document stream: the minhash
     band registry. Each arriving doc computes its signature (stateless
     Arrow UDF) and explodes into (band, bucket) keys — the same banding
@@ -165,10 +162,9 @@ def streaming_band_registry(docs_stream: DataFrame, bands: int = 16,
     like streaming_exact_dedup."""
     from pyspark.sql import functions as F
 
-    from ..operators.dedup import _banded, minhash_signatures
+    from ..operators.dedup import BANDS, _banded, minhash_signatures
 
-    sigs = minhash_signatures(docs_stream, text_col=text_col,
-                              id_col=id_col, num_perm=num_perm)
-    banded = _banded(sigs, id_col, bands, num_perm)
+    sigs = minhash_signatures(docs_stream)
+    banded = _banded(sigs, BANDS)
     return banded.groupBy("band", "bucket").agg(
-        F.min(id_col).alias(id_col))
+        F.min("doc_id").alias("doc_id"))

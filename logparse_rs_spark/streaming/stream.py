@@ -91,8 +91,7 @@ def kafka_records_to_lines(records: DataFrame) -> DataFrame:
 
 
 def read_lines_kafka(spark: SparkSession, bootstrap_servers: str,
-                     topic: str, starting_offsets: str = "latest"
-                     ) -> DataFrame:
+                     topic: str) -> DataFrame:
     """Kafka line-ingest source: format('kafka') -> kafka_records_to_lines.
     Requires the spark-sql-kafka connector on the classpath (absent in this
     sandbox — the projection and downstream plan are covered by tests over
@@ -101,7 +100,7 @@ def read_lines_kafka(spark: SparkSession, bootstrap_servers: str,
         spark.readStream.format("kafka")
         .option("kafka.bootstrap.servers", bootstrap_servers)
         .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
+        .option("startingOffsets", "latest")
         .load()
     )
     return kafka_records_to_lines(records)
@@ -154,42 +153,39 @@ def stream_pipeline(spark: SparkSession, pages_stream: DataFrame,
     )
 
 
-def streaming_type_counts(pages_stream: DataFrame, schema: CompiledSchema,
-                          watermark: str = "10 minutes",
-                          window: str = "5 minutes") -> DataFrame:
+def streaming_type_counts(pages_stream: DataFrame,
+                          schema: CompiledSchema) -> DataFrame:
     """Native watermarked windowed aggregate: routed-row counts per log type
     per event-time window of warc_ts (late pages beyond the watermark are
     dropped deterministically)."""
     parsed = parse_pages(
-        pages_stream.withWatermark("warc_ts", watermark),
+        pages_stream.withWatermark("warc_ts", "10 minutes"),
         schema, keep_cols=("lang", "warc_ts"))
     return (
         parsed.filter(F.col("status") == "ok")
-        .groupBy(F.window("warc_ts", window), F.col("log_type"))
+        .groupBy(F.window("warc_ts", "5 minutes"), F.col("log_type"))
         .agg(F.count("*").alias("n"))
     )
 
 
-def streaming_sessions(events_stream: DataFrame, gap: str = "30 minutes",
-                       watermark: str = "1 hour",
-                       ts_col: str = "ts",
-                       key_col: str = "user_id") -> DataFrame:
+def streaming_sessions(events_stream: DataFrame) -> DataFrame:
     """Gap-based sessionization as a NATIVE streaming aggregate:
-    ``F.session_window`` merges events separated by less than `gap` into
-    one dynamic window per key, and the watermark closes (finalizes)
-    sessions deterministically once event time has moved `watermark` past
-    their end — the streaming form of the batch lag-over-window
+    ``F.session_window`` merges a user's events separated by less than
+    30 minutes into one dynamic window, and the watermark closes
+    (finalizes) sessions deterministically once event time has moved an
+    hour past their end — the streaming form of the batch lag-over-window
     sessionization, with state per OPEN session only (closed sessions are
     emitted and evicted, so state does not grow with stream length).
     Returns (key, session_start, session_end, n_events)."""
     # watermarks require TIMESTAMP (LTZ) event time; parquet event tables
     # surface TIMESTAMP_NTZ — cast via the session timezone (UTC in the
     # session factory), the same convention the batch queries use
-    ev = events_stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    ev = ev.withWatermark(ts_col, watermark)
-    return (ev.groupBy(F.session_window(F.col(ts_col), gap), F.col(key_col))
+    ev = events_stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    ev = ev.withWatermark("ts", "1 hour")
+    return (ev.groupBy(F.session_window(F.col("ts"), "30 minutes"),
+                       F.col("user_id"))
             .agg(F.count("*").alias("n_events"))
-            .select(F.col(key_col),
+            .select(F.col("user_id"),
                     F.col("session_window.start").alias("session_start"),
                     F.col("session_window.end").alias("session_end"),
                     "n_events"))
@@ -273,15 +269,11 @@ def run_available_now(spark, stream: DataFrame, name: str,
 
 def streaming_interval_join(points_stream: DataFrame,
                             intervals_stream: DataFrame,
-                            key_col: str = "user_id",
-                            point_ts: str = "ts",
-                            start_ts: str = "c_start",
-                            end_ts: str = "c_end",
                             watermark: str = "24 hours") -> DataFrame:
     """Watermarked STREAM-STREAM point-in-interval join — the online form
     of ``operators/asof.interval_join`` (ad attribution, request/response
-    pairing): every point row joins every same-key interval row with
-    ``start <= point_ts < end``, as the two streams arrive in any
+    pairing): every point row joins every same-``user_id`` interval row
+    with ``c_start <= ts < c_end``, as the two streams arrive in any
     interleaving.
 
     Spark's stream-stream inner join buffers both sides in state; the
@@ -295,13 +287,13 @@ def streaming_interval_join(points_stream: DataFrame,
     ``start <= point < end``, inner join, duplicates preserved.
     """
     pts = (points_stream
-           .withColumn(point_ts, F.col(point_ts).cast("timestamp"))
-           .withWatermark(point_ts, watermark))
+           .withColumn("ts", F.col("ts").cast("timestamp"))
+           .withWatermark("ts", watermark))
     ivs = (intervals_stream
-           .withColumn(start_ts, F.col(start_ts).cast("timestamp"))
-           .withColumn(end_ts, F.col(end_ts).cast("timestamp"))
-           .withWatermark(start_ts, watermark))
-    cond = ((pts[key_col] == ivs[key_col])
-            & (pts[point_ts] >= ivs[start_ts])
-            & (pts[point_ts] < ivs[end_ts]))
-    return pts.join(ivs, cond, "inner").drop(ivs[key_col])
+           .withColumn("c_start", F.col("c_start").cast("timestamp"))
+           .withColumn("c_end", F.col("c_end").cast("timestamp"))
+           .withWatermark("c_start", watermark))
+    cond = ((pts["user_id"] == ivs["user_id"])
+            & (pts["ts"] >= ivs["c_start"])
+            & (pts["ts"] < ivs["c_end"]))
+    return pts.join(ivs, cond, "inner").drop(ivs["user_id"])

@@ -42,8 +42,7 @@ def _collect(df):
 class TestAsofBackward:
     def test_semantics(self, frames):
         left, right = frames
-        out = asof_join(left, right, on="k", left_ts="ts",
-                        value_cols=["rv"])
+        out = asof_join(left, right, on="k", value_cols=["rv"])
         got = _collect(out)
         # k=1: ts=5 -> no prior; ts=10 -> tie matches (inclusive) 100;
         # ts=20 -> 200. k=2: ts=2 -> none; ts=15 -> 300. k=3: no right rows.
@@ -52,8 +51,7 @@ class TestAsofBackward:
 
     def test_matched_ts_carried(self, frames):
         left, right = frames
-        out = asof_join(left, right, on="k", left_ts="ts",
-                        value_cols=["rv"])
+        out = asof_join(left, right, on="k", value_cols=["rv"])
         r = {(x["k"], x["ts"].second): x["ts_asof"]
              for x in out.collect()}
         assert r[(1, 20)].second == 18
@@ -86,7 +84,7 @@ class TestAsofBackward:
             on="ts", by="k")
         out = asof_join(spark.createDataFrame(lpd),
                         spark.createDataFrame(rpd),
-                        on="k", left_ts="ts", value_cols=["rv"])
+                        on="k", value_cols=["rv"])
         got = out.toPandas()
         wkey = {(r.k, r.ts, round(r.lv, 9)):
                 (None if pd.isna(r.rv) else round(r.rv, 9))
@@ -112,7 +110,7 @@ class TestAsofNullValue:
                 "rv": [100.0, None],
                 "rw": [7.0, 8.0],
             }))
-        r = asof_join(left, right, on="k", left_ts="ts",
+        r = asof_join(left, right, on="k",
                       value_cols=["rv", "rw"]).collect()[0]
         assert r["ts_asof"].second == 8
         assert r["rv_asof"] is None   # NULL in the matched row, kept NULL
@@ -122,8 +120,8 @@ class TestAsofNullValue:
 class TestAsofVariants:
     def test_forward(self, frames):
         left, right = frames
-        out = asof_join(left, right, on="k", left_ts="ts",
-                        value_cols=["rv"], direction="forward")
+        out = asof_join(left, right, on="k", value_cols=["rv"],
+                        direction="forward")
         got = _collect(out)
         # k=1: ts=5 -> next is 10 (100); ts=10 -> inclusive tie 100;
         # ts=20 -> none after. k=2: ts=2 -> 300@14; ts=15 -> none.
@@ -132,15 +130,15 @@ class TestAsofVariants:
 
     def test_tolerance(self, frames):
         left, right = frames
-        out = asof_join(left, right, on="k", left_ts="ts",
-                        value_cols=["rv"], tolerance_s=3)
+        out = asof_join(left, right, on="k", value_cols=["rv"],
+                        tolerance_s=3)
         got = _collect(out)
         # k=1 ts=20 matched 18 (gap 2s, kept); k=2 ts=15 matched 14 (kept);
         # k=1 ts=10 matched 10 (gap 0, kept) — others null
         assert got == [(1, 5, None), (1, 10, 100.0), (1, 20, 200.0),
                        (2, 2, None), (2, 15, 300.0), (3, 30, None)]
-        out2 = asof_join(left, right, on="k", left_ts="ts",
-                         value_cols=["rv"], tolerance_s=1)
+        out2 = asof_join(left, right, on="k", value_cols=["rv"],
+                         tolerance_s=1)
         got2 = _collect(out2)
         assert got2 == [(1, 5, None), (1, 10, 100.0), (1, 20, None),
                         (2, 2, None), (2, 15, 300.0), (3, 30, None)]
@@ -149,8 +147,7 @@ class TestAsofVariants:
         # the physical plan must be union -> ONE exchange on the key ->
         # window; no join operator, no broadcast nested loop
         left, right = frames
-        out = asof_join(left, right, on="k", left_ts="ts",
-                        value_cols=["rv"])
+        out = asof_join(left, right, on="k", value_cols=["rv"])
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "Join" not in plan
         assert plan.count("Exchange hashpartitioning") == 1

@@ -160,7 +160,7 @@ class TestVersionedIntervals:
             (1, "signup", _t(20), 3), (2, "signup", _t(5), 4),
         ])
         rows = {r["event_id"]: r for r in
-                versioned_intervals(ev, key_cols=["user_id"]).collect()}
+                versioned_intervals(ev).collect()}
         assert [rows[i]["version"] for i in (1, 2, 3)] == [1, 2, 3]
         # each version's valid_to == the next version's valid_from
         assert rows[1]["valid_to_us"] == rows[2]["valid_from_us"]
@@ -173,7 +173,7 @@ class TestVersionedIntervals:
     def test_single_window_single_exchange(self, spark):
         from logparse_rs_spark.operators.behavior import versioned_intervals
         ev = _ev(spark, [(1, "signup", _t(0), 1), (1, "signup", _t(9), 2)])
-        plan = (versioned_intervals(ev, key_cols=["user_id"])
+        plan = (versioned_intervals(ev)
                 ._jdf.queryExecution().executedPlan().toString())
         # version/lead/is_current share one Window + one Exchange
         assert plan.count("Window") == 1, plan

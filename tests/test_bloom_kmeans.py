@@ -85,7 +85,7 @@ class TestKmeansAssignExact:
             rows, "vec_id bigint, embedding array<double>")
 
     def test_separated_groups_cluster_together(self, vecs):
-        out = kmeans_assign_exact(vecs, k=3, iterations=2)
+        out = kmeans_assign_exact(vecs, k=3)
         got = {r.vec_id: r.cluster for r in out.collect()}
         assert len(got) == 15
         for g in range(3):
@@ -95,10 +95,10 @@ class TestKmeansAssignExact:
     def test_deterministic_across_partitionings(self, vecs):
         a = {(r.vec_id, r.cluster)
              for r in kmeans_assign_exact(
-                 vecs.repartition(7), k=3, iterations=2).collect()}
+                 vecs.repartition(7), k=3).collect()}
         b = {(r.vec_id, r.cluster)
              for r in kmeans_assign_exact(
-                 vecs.coalesce(1), k=3, iterations=2).collect()}
+                 vecs.coalesce(1), k=3).collect()}
         assert a == b
 
     def test_empty_cluster_drops_deterministically(self, spark):
@@ -109,7 +109,7 @@ class TestKmeansAssignExact:
                 (3, [100.0, 0.0])]
         df = spark.createDataFrame(
             rows, "vec_id bigint, embedding array<double>")
-        out = kmeans_assign_exact(df, k=2, iterations=2).collect()
+        out = kmeans_assign_exact(df, k=2).collect()
         assert len(out) == 4
         assert all(r.cluster in (0, 1) for r in out)
 

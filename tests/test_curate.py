@@ -215,7 +215,7 @@ class TestDsirWeights:
         df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
         B = 16
         got = {r.doc_id: (r.n_tokens, r.dsir_weight) for r in
-               dsir_weights(df, target="lang = 'en'", n_buckets=B).collect()}
+               dsir_weights(df, n_buckets=B).collect()}
 
         split = re.compile(WORD_SPLIT_CLASS)
         toks = {i: [t for t in split.split(tx.lower()) if t]
@@ -256,7 +256,7 @@ class TestDsirWeights:
                    (201, "offdomain noise tokens junk", "en")])
         df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
         w = {r.doc_id: r.dsir_weight for r in
-             dsir_weights(df, target="lang = 'en'", n_buckets=64).collect()}
+             dsir_weights(df, n_buckets=64).collect()}
         # a doc made of target-slice tokens outweighs one made of
         # off-target tokens, regardless of its own label
         assert w[200] > w[201]

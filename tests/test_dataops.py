@@ -53,7 +53,7 @@ class TestMinHash:
             minhash_lsh_pairs, minhash_signatures)
         base = docs.limit(20).select("doc_id", "text")
         clones = base.withColumn("doc_id", F.col("doc_id") + 1_000_000)
-        sigs = minhash_signatures(base.union(clones), num_perm=64)
+        sigs = minhash_signatures(base.union(clones))
         pairs = minhash_lsh_pairs(sigs, bands=16)
         got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
         for r in base.collect():
@@ -172,7 +172,7 @@ class TestSimilarity:
         from logparse_rs_spark.operators.similarity import brute_force_topk
         queries = (emb.limit(3)
                    .select(F.col("vec_id").alias("query_id"), "embedding"))
-        got = brute_force_topk(emb, queries, k=5).collect()
+        got = brute_force_topk(emb, queries).collect()
         rows = emb.select("vec_id", "embedding").collect()
         ids = np.array([r["vec_id"] for r in rows])
         mat = np.array([r["embedding"] for r in rows], dtype=np.float64)
@@ -197,9 +197,8 @@ class TestSimilarity:
         dim = len(emb.select("embedding").first()["embedding"])
         queries = (emb.limit(5)
                    .select(F.col("vec_id").alias("query_id"), "embedding"))
-        exact = brute_force_topk(emb, queries, k=5).collect()
-        approx = lsh_topk(emb, queries, dim=dim, k=5, n_planes=32,
-                          bands=8).collect()
+        exact = brute_force_topk(emb, queries).collect()
+        approx = lsh_topk(emb, queries, dim=dim).collect()
         exact_sets = {}
         for r in exact:
             exact_sets.setdefault(r["query_id"], set()).add(r["vec_id"])
@@ -251,7 +250,7 @@ class TestIVF:
         from pyspark.sql import functions as F
         queries = (emb.filter("vec_id < 5")
                    .select(F.col("vec_id").alias("query_id"), "embedding"))
-        exact = brute_force_topk(emb, queries, k=5).collect()
+        exact = brute_force_topk(emb, queries).collect()
         approx = ivf_topk(emb, queries, k=5, n_cells=8, n_probe=4).collect()
         exact_sets, approx_sets = {}, {}
         for r in exact:
@@ -305,7 +304,7 @@ class TestSemDedup:
         vm = np.array([by_id[i] for i in ids], dtype=np.float64)
         x = vm[:4096] / np.maximum(
             np.linalg.norm(vm[:4096], axis=1, keepdims=True), 1e-12)
-        cents = kmeans_cells(x, 8, 5, 17)
+        cents = kmeans_cells(x, 8)
         cells = assign_cells_np(
             vm, cents / np.linalg.norm(cents, axis=1, keepdims=True))
         vn = vm / np.maximum(
@@ -354,11 +353,11 @@ class TestDuplicateHeavy:
         sig = list(range(64))
         sigs = spark.createDataFrame([(i, sig) for i in range(50)],
                                      "doc_id long, sig array<long>")
-        uncapped = minhash_lsh_pairs(sigs, bands=16, num_perm=64)
+        uncapped = minhash_lsh_pairs(sigs, bands=16)
         assert uncapped.count() == 50 * 49 // 2
-        capped = minhash_lsh_pairs(sigs, bands=16, num_perm=64, max_bucket=10)
+        capped = minhash_lsh_pairs(sigs, bands=16, max_bucket=10)
         assert capped.count() == 0
-        stats = lsh_bucket_stats(sigs, bands=16, num_perm=64, max_bucket=10)
+        stats = lsh_bucket_stats(sigs, max_bucket=10)
         assert stats.count() == 16           # one oversized bucket per band
         assert stats.first()["members"] == 50
 
@@ -518,7 +517,7 @@ class TestBandingValidation:
         sigs = spark.createDataFrame([(1, list(range(64)))],
                                      "doc_id long, sig array<long>")
         with pytest.raises(ValueError, match="divisible"):
-            minhash_lsh_pairs(sigs, bands=10, num_perm=64)
+            minhash_lsh_pairs(sigs, bands=10)
 
     def test_sig_length_mismatch_fails_loudly(self, spark):
         from logparse_rs_spark.operators.dedup import minhash_lsh_pairs
@@ -528,7 +527,7 @@ class TestBandingValidation:
             [(i, list(range(32))) for i in range(4)],
             "doc_id long, sig array<long>")
         with pytest.raises(Exception, match="does not match num_perm"):
-            minhash_lsh_pairs(sigs, bands=16, num_perm=64).collect()
+            minhash_lsh_pairs(sigs, bands=16).collect()
 
 
 class TestMultimodalBackends:
@@ -608,7 +607,7 @@ class TestVocabAndNgrams:
         c = Counter(w for r in rows for w in r["text"].lower().split())
         want = sorted(c.items(), key=lambda kv: (-kv[1], kv[0]))[:25]
         got = [(r["token"], r["n"])
-               for r in vocab_top(with_words(docs), k=25).collect()]
+               for r in vocab_top(with_words(docs)).collect()]
         assert got == want
 
     def test_repeated_ngrams_match_python(self, spark, docs):
@@ -623,7 +622,7 @@ class TestVocabAndNgrams:
         want = sorted(((g, n) for g, n in c.items() if n >= 2),
                       key=lambda kv: (-kv[1], kv[0]))[:20]
         got = [(r["ngram"], r["n"])
-               for r in repeated_ngrams(with_words(docs), n=5, k=20,
+               for r in repeated_ngrams(with_words(docs),
                                         min_count=2).collect()]
         assert got == want
 
@@ -632,7 +631,7 @@ class TestVocabAndNgrams:
         from logparse_rs_spark.operators.text import repeated_ngrams
         df = spark.createDataFrame(pd.DataFrame(
             {"doc_id": [1, 2], "text": ["a b c d", "a b c d"]}))
-        assert repeated_ngrams(with_words(df), n=5, min_count=1).count() == 0
+        assert repeated_ngrams(with_words(df), min_count=1).count() == 0
 
 
 class TestFingerprintSample:
@@ -894,8 +893,7 @@ class TestMixtureSample:
                 docs.select("source").distinct().collect()]
         zero, full = srcs[0], srcs[1]
         kept = mixture_sample(docs, {zero: 0.0, full: 1.0},
-                              default_rate=0.0,
-                              group_col="source").collect()
+                              default_rate=0.0).collect()
         by_src = {}
         for r in kept:
             by_src[r["source"]] = by_src.get(r["source"], 0) + 1
@@ -978,7 +976,7 @@ class TestQualityPercentile:
         from logparse_rs_spark.operators.text import (
             quality_percentile_filter)
         import math
-        kept = quality_percentile_filter(docs, frac=0.25)
+        kept = quality_percentile_filter(docs)
         per = {r["lang"]: r["n"] for r in
                kept.groupBy("lang").agg(F.count("*").alias("n")).collect()}
         totals = {r["lang"]: r["n"] for r in
@@ -991,7 +989,7 @@ class TestQualityPercentile:
         from logparse_rs_spark.operators.text import (
             quality_percentile_filter, quality_score)
         kept_ids = {r["doc_id"] for r in
-                    quality_percentile_filter(docs, frac=0.25).collect()}
+                    quality_percentile_filter(docs).collect()}
         q = {r["doc_id"]: r["quality"]
              for r in quality_score(docs).collect()}
         langs = {r["doc_id"]: r["lang"]
@@ -1008,9 +1006,9 @@ class TestQualityPercentile:
         from logparse_rs_spark.operators.text import (
             quality_percentile_filter)
         a = sorted(r["doc_id"] for r in
-                   quality_percentile_filter(docs, frac=0.25).collect())
+                   quality_percentile_filter(docs).collect())
         b = sorted(r["doc_id"] for r in
-                   quality_percentile_filter(docs.repartition(7), frac=0.25)
+                   quality_percentile_filter(docs.repartition(7))
                    .collect())
         assert a == b
 
@@ -1066,7 +1064,7 @@ class TestContamination:
         got = {(r["doc_id"], r["eval_id"]): r["shared_ngrams"]
                for r in contamination_check(
                    docs.filter("doc_id >= 10"),
-                   docs.filter("doc_id < 10"), n=5).collect()}
+                   docs.filter("doc_id < 10")).collect()}
         assert got == want
 
     def test_repeated_phrase_counts_once(self, spark):
@@ -1078,7 +1076,7 @@ class TestContamination:
             "text": [f"{phrase} and {phrase} and {phrase}"]}))
         evals = spark.createDataFrame(pd.DataFrame({
             "doc_id": [1], "text": [phrase]}))
-        out = contamination_check(train, evals, n=5).collect()
+        out = contamination_check(train, evals).collect()
         assert len(out) == 1
         assert out[0]["shared_ngrams"] == 1  # distinct per doc, not 3
 
@@ -1086,7 +1084,7 @@ class TestContamination:
 class TestRebalance:
     def test_quota_and_determinism(self, spark, docs):
         from logparse_rs_spark.operators.text import rebalance_by_group
-        kept = rebalance_by_group(docs, group_col="lang", quota=5)
+        kept = rebalance_by_group(docs, quota=5)
         per = {r["lang"]: r["n"] for r in
                kept.groupBy("lang").agg(F.count("*").alias("n")).collect()}
         totals = {r["lang"]: r["n"] for r in
@@ -1095,13 +1093,13 @@ class TestRebalance:
             assert n == min(5, totals[lang])
         a = sorted(r["doc_id"] for r in kept.select("doc_id").collect())
         b = sorted(r["doc_id"] for r in
-                   rebalance_by_group(docs.repartition(7), "lang", quota=5)
+                   rebalance_by_group(docs.repartition(7), quota=5)
                    .select("doc_id").collect())
         assert a == b  # survivor set independent of input partitioning
 
     def test_columns_preserved(self, spark, docs):
         from logparse_rs_spark.operators.text import rebalance_by_group
-        kept = rebalance_by_group(docs, group_col="lang", quota=3)
+        kept = rebalance_by_group(docs, quota=3)
         assert kept.columns == docs.columns
 
     def test_plan_is_two_phase_topk(self, spark, docs):
@@ -1111,7 +1109,7 @@ class TestRebalance:
         # ships at most quota rows per map partition, never sorts in full
         # on one reducer) and a FINAL trim above it
         from logparse_rs_spark.operators.text import rebalance_by_group
-        plan = (rebalance_by_group(docs, "lang", quota=3)
+        plan = (rebalance_by_group(docs, quota=3)
                 ._jdf.queryExecution().executedPlan().toString())
         partial = plan.find("Partial")
         exchange = plan.find("Exchange")
@@ -1133,14 +1131,14 @@ class TestRebalance:
         df = spark.createDataFrame(
             pd.DataFrame(rows, columns=["doc_id", "lang", "text"]))
         want = sorted(r["doc_id"] for r in
-                      rebalance_by_group(df, "lang", quota=quota).collect())
+                      rebalance_by_group(df, quota=quota).collect())
         for parts in (1, 7, 32):
             got = sorted(r["doc_id"] for r in
-                         rebalance_by_group(df.repartition(parts), "lang",
+                         rebalance_by_group(df.repartition(parts),
                                             quota=quota).collect())
             assert got == want, f"parts={parts}"
         per = {r["lang"]: r["n"] for r in
-               rebalance_by_group(df, "lang", quota=quota)
+               rebalance_by_group(df, quota=quota)
                .groupBy("lang").agg(F.count("*").alias("n")).collect()}
         assert per == {"xx": quota, "yy": 3}
 
@@ -1188,7 +1186,7 @@ class TestCollocations:
         rows += [(100 + i, "the cat") for i in range(5)]
         rows += [(200 + i, "the dog") for i in range(5)]
         df = spark.createDataFrame(rows, "doc_id long, text string")
-        out = collocations(with_words(df), k=10, min_count=5).collect()
+        out = collocations(with_words(df), k=10).collect()
         assert out[0]["w1"] == "new" and out[0]["w2"] == "york"
         ny = out[0]
         # exact integer lift: 5 * 1e9 // (5 * 5) = 200_000_000
@@ -1201,7 +1199,7 @@ class TestCollocations:
         from logparse_rs_spark.operators.text import collocations
         df = spark.createDataFrame([(1, "rare pair"), (2, "rare pair")],
                                    "doc_id long, text string")
-        assert collocations(with_words(df), k=10, min_count=5).count() == 0
+        assert collocations(with_words(df), k=10).count() == 0
 
 
 class TestExactQuantileBins:
@@ -1256,8 +1254,7 @@ class TestInvertedIndex:
             (4, "singleton_token_here"),
         ], "doc_id long, text string")
         out = {r["token"]: (r["df"], r["postings"])
-               for r in inverted_index(with_words(df), min_df=2, max_df=8,
-                                       min_len=8).collect()}
+               for r in inverted_index(with_words(df), min_len=8).collect()}
         # within-doc repeats collapse; ids ascend; df band drops the
         # singleton; short tokens (potato, extra) drop scan-side
         assert out == {"mitochondria": (3, "1,2,3")}
@@ -1267,8 +1264,7 @@ class TestInvertedIndex:
         df = spark.createDataFrame(
             [(i, "everywhere_token") for i in range(20)],
             "doc_id long, text string")
-        assert inverted_index(with_words(df), min_df=2, max_df=8,
-                              min_len=8).count() == 0
+        assert inverted_index(with_words(df), min_len=8).count() == 0
 
     def test_ngram_phrase_postings(self, spark):
         from logparse_rs_spark.operators.text import inverted_index
@@ -1280,8 +1276,8 @@ class TestInvertedIndex:
             (3, "quick brown"),
         ], "doc_id long, text string")
         out = {r["token"]: (r["df"], r["postings"])
-               for r in inverted_index(with_words(df), min_df=2, max_df=8,
-                                       min_len=1, ngram=3).collect()}
+               for r in inverted_index(with_words(df), min_len=1,
+                                       ngram=3).collect()}
         assert out == {"quick brown fox": (2, "1,2")}
 
 
@@ -1300,8 +1296,7 @@ class TestRelatedDocPairs:
         ], "doc_id long, text string")
         out = {(r["id_a"], r["id_b"]): r["shared_terms"]
                for r in related_doc_pairs(with_words(df), min_shared=2,
-                                          min_df=2, max_df=2,
-                                          ngram=3).collect()}
+                                          max_df=2).collect()}
         # "alpha beta gamma" + "beta gamma delta" -> (1,2) shared 2;
         # (1,3) shares only "gamma delta epsilon" -> below min_shared
         assert out == {(1, 2): 2}
@@ -1313,8 +1308,8 @@ class TestRelatedDocPairs:
         df = spark.createDataFrame(
             [(i, "one two three four five") for i in range(20)],
             "doc_id long, text string")
-        assert related_doc_pairs(with_words(df), min_shared=1, min_df=2,
-                                 max_df=8, ngram=3).count() == 0
+        assert related_doc_pairs(with_words(df), min_shared=1,
+                                 max_df=8).count() == 0
 
 
 class TestBpePairCounts:
@@ -1408,7 +1403,7 @@ class TestPagerankInteger:
         pairs = [(1, 2), (2, 3), (3, 1), (3, 4), (5, 6)]
         df = spark.createDataFrame(pairs, "id_a long, id_b long")
         got = {r["node"]: r["pr"]
-               for r in pagerank_integer(df, iterations=3).collect()}
+               for r in pagerank_integer(df).collect()}
         assert got == self._py_pagerank(pairs)
 
     def test_hub_outranks_leaf(self, spark):
@@ -1417,7 +1412,7 @@ class TestPagerankInteger:
         pairs = [(0, i) for i in range(1, 6)]
         df = spark.createDataFrame(pairs, "id_a long, id_b long")
         got = {r["node"]: r["pr"]
-               for r in pagerank_integer(df, iterations=3).collect()}
+               for r in pagerank_integer(df).collect()}
         assert got[0] == max(got.values())
         assert all(got[0] > got[i] for i in range(1, 6))
 
@@ -1426,9 +1421,9 @@ class TestPagerankInteger:
         pairs = [(i, (i * 7 + 1) % 50) for i in range(50)
                  if i != (i * 7 + 1) % 50]
         df = spark.createDataFrame(pairs, "id_a long, id_b long")
-        a = sorted(map(tuple, pagerank_integer(df, 3).collect()))
+        a = sorted(map(tuple, pagerank_integer(df).collect()))
         b = sorted(map(tuple,
-                       pagerank_integer(df.repartition(17), 3).collect()))
+                       pagerank_integer(df.repartition(17)).collect()))
         assert a == b
 
     def test_local_gate_matches_distributed(self, spark, monkeypatch):
@@ -1443,9 +1438,9 @@ class TestPagerankInteger:
         pairs += [(3, 3), (1, 2), (1, 2)]
         df = spark.createDataFrame(pairs, "id_a long, id_b long")
         monkeypatch.setattr(shared, "BUDGET", 0)
-        dist = sorted(map(tuple, pagerank_integer(df, 3).collect()))
+        dist = sorted(map(tuple, pagerank_integer(df).collect()))
         monkeypatch.setattr(shared, "BUDGET", DEFAULT_BUDGET)
-        local = sorted(map(tuple, pagerank_integer(df, 3).collect()))
+        local = sorted(map(tuple, pagerank_integer(df).collect()))
         assert dist == local
 
 
@@ -1496,8 +1491,7 @@ class TestNewOpPlanShapes:
         from logparse_rs_spark.operators.text import related_doc_pairs
         df = spark.createDataFrame([(1, "a b c d"), (2, "a b c e")],
                                    "doc_id long, text string")
-        plan = (related_doc_pairs(with_words(df), min_shared=1, min_df=2,
-                                  max_df=8, ngram=3)
+        plan = (related_doc_pairs(with_words(df), min_shared=1, max_df=8)
                 ._jdf.queryExecution().executedPlan().toString())
         # pair fan-out is a bounded double-explode of posting arrays —
         # never a self-join of the (token, doc) frame

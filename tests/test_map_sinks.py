@@ -20,6 +20,7 @@ from logparse_rs_spark.plans.pipeline import (
     REJECTS_TABLE,
     STAGE_TABLE,
     PipelineConfig,
+    SinkSpec,
     build_map_payload,
     default_sinks,
     run_pipeline,
@@ -284,3 +285,28 @@ class TestResumeUnderStaticSession:
         for table in ("sink_fact", "sink_other", REJECTS_TABLE):
             assert row_hash(writer.read(spark, table)) == \
                 row_hash(full_writer.read(spark, table)), table
+
+
+class TestUnwritableSinks:
+    """A sink the fan-out cannot write as given fails the run before any
+    job: an unknown payload was written nowhere yet reported its type's
+    rows, and a map sink's columns were dropped without a word."""
+
+    @pytest.mark.parametrize("sink", [
+        SinkSpec("TRAFFIC", "sink_traffic", payload="maps"),
+        SinkSpec("SYSTEM", "sink_other", columns=["serial_number"],
+                 payload="map"),
+        SinkSpec("SYSTEM", "sink_other", payload="map"),
+    ], ids=["unknown-payload", "map-with-columns", "two-map-tables"])
+    def test_raises_before_any_write(self, spark, pages_df, full_schema,
+                                     tmp_path, sink):
+        sinks = [sink]
+        if sink.columns is None and sink.payload == "map":
+            sinks.append(SinkSpec("CONFIG", "sink_config", payload="map"))
+        cfg = PipelineConfig(
+            schema_path=os.path.join(ROOT, "schemas", "schema.json"),
+            anonymizer_path=None, out_root=str(tmp_path / "out"),
+            sinks=sinks, n_buckets=N_BUCKETS)
+        with pytest.raises(ValueError, match="sink"):
+            run_pipeline(spark, pages_df, cfg)
+        assert not os.path.exists(cfg.out_root)

@@ -72,3 +72,45 @@ def test_each_sf_dir_stages_its_own_events(tmp_path, isolated_fixture_root):
     for name, origin in origins.items():
         copy = os.path.join(staged[name], "events.parquet")
         assert pq.read_table(copy).equals(pq.read_table(origin)), name
+
+
+def _write_documents(sf_dir, texts):
+    pq.write_table(pa.table({
+        "doc_id": pa.array(sorted(texts), pa.int64()),
+        "text": pa.array([texts[i] for i in sorted(texts)], pa.string())}),
+        os.path.join(sf_dir, "documents.parquet"))
+
+
+def test_derived_fixtures_follow_their_source_files(spark, tmp_path,
+                                                    isolated_fixture_root):
+    # two sf dirs of ONE name: the derived fixtures used to be keyed on
+    # the name alone, so the second dir got the first one's images and
+    # a same-row-count rewrite of the texts was never re-staged
+    from logparse_rs_spark import dataops_fixtures
+    from logparse_rs_spark.queries import doc
+
+    root = common.fixture_root()
+    images = {}
+    for parent, ids in (("a", [1, 2, 3]), ("b", [10, 11, 12, 13])):
+        sf_dir = tmp_path / parent / "sfX"
+        sf_dir.mkdir(parents=True)
+        _write_documents(str(sf_dir), {i: f"text {i}" for i in ids})
+        _write_embeddings(str(sf_dir / "embeddings.parquet"), 8)
+        path = dataops_fixtures.ensure_images_fixture(root, str(sf_dir))
+        images[parent] = pq.read_table(path).column("doc_id").to_pylist()
+    assert images == {"a": [1, 2, 3], "b": [10, 11, 12, 13]}
+    # the superseded dir of the same name is replaced, not kept beside
+    assert len([d for d in os.listdir(root)
+                if d.startswith("dataaux_v")]) == 1
+
+    def staged_texts():
+        src = doc._staged_doc_batches(spark, str(sf_dir))
+        return src, sorted(r["text"] for r in
+                           spark.read.parquet(src).collect())
+
+    first_src, first = staged_texts()
+    assert first == [f"text {i}" for i in (10, 11, 12, 13)]
+    _write_documents(str(sf_dir), {i: f"new {i}" for i in (10, 11, 12, 13)})
+    second_src, second = staged_texts()
+    assert second == [f"new {i}" for i in (10, 11, 12, 13)]
+    assert not os.path.exists(first_src)

@@ -179,7 +179,7 @@ class TestCollectIfFits:
                 + [(1000 + i, "b" * 10_000) for i in range(100)])
         docs = spark.createDataFrame(rows, "doc_id long, text string")
         monkeypatch.setattr(shared, "BUDGET", 500_000)
-        assert _bcast_norm_texts(docs, "text", "doc_id") is None
+        assert _bcast_norm_texts(docs) is None
         assert arrow_fetches == []
 
     def test_array_columns_are_sized_exactly(self, spark, monkeypatch):

@@ -329,7 +329,7 @@ class TestStreamingSessions:
         stream = (spark.readStream
                   .schema("user_id long, ts timestamp_ntz, event_id long")
                   .option("maxFilesPerTrigger", 1).parquet(str(src)))
-        q = (streaming_sessions(stream, gap="30 minutes")
+        q = (streaming_sessions(stream)
              .writeStream.outputMode("complete")
              .format("memory").queryName("sessions")
              .trigger(availableNow=True).start())
@@ -451,9 +451,7 @@ class TestStreamStreamIntervalJoin:
         pts = (spark.readStream.schema(pt_schema)
                .option("maxFilesPerTrigger", 1)
                .parquet(str(pt_dir) + "/*"))
-        joined = streaming_interval_join(pts, ivs, key_col="user_id",
-                                         point_ts="ts", start_ts="c_start",
-                                         end_ts="c_end", watermark="2 hours")
+        joined = streaming_interval_join(pts, ivs, watermark="2 hours")
         q = (joined.writeStream.outputMode("append").format("memory")
              .queryName("ssj_test").trigger(availableNow=True).start())
         q.awaitTermination()

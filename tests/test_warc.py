@@ -188,3 +188,56 @@ class TestStreamingGzip:
         finally:
             warcmod._FLUSH_ROWS = orig
         assert got == {f"u:{i}": f"page {i}" for i in range(n)}
+
+
+class TestWarcTimestampsIgnoreHostZone:
+    """The spark-submit job's session reads WARC-Date into the same
+    instants whatever the host zone: each run is a fresh process (the JVM
+    takes its default zone from TZ at start) through
+    ``jobs/run_pipeline_job.job_session``."""
+
+    PROBE = "\n".join([
+        "import json, os, sys",
+        "root = sys.argv[1]",
+        "sys.path[:0] = [root, os.path.join(root, 'jobs')]",
+        "from pyspark.sql import functions as F",
+        "from run_pipeline_job import job_session",
+        "from logparse_rs_spark.sources.warc import read_warc_pages",
+        "spark = job_session()",
+        "rows = (read_warc_pages(spark, sys.argv[2])",
+        "        .select('url', F.unix_micros('warc_ts').alias('us'))",
+        "        .collect())",
+        "print(json.dumps(sorted([r['url'], r['us']] for r in rows)))",
+        "spark.stop()",
+    ])
+
+    def test_same_epoch_micros_under_utc_and_new_york(self, tmp_path):
+        import json
+        import os
+        import subprocess
+        import sys
+
+        root = os.path.abspath(os.path.join(os.path.dirname(__file__), ".."))
+        path = str(tmp_path / "zones.warc")
+        write_warc(path, [
+            ("https://a.example/summer", "2021-06-01T12:00:00Z", b"<p>a</p>"),
+            ("https://b.example/winter", "2021-01-15T23:30:00Z", b"<p>b</p>"),
+            ("https://c.example/offset", "2021-03-14T07:30:00+02:00",
+             b"<p>c</p>"),
+        ])
+        runs = {}
+        for zone in ("UTC", "America/New_York"):
+            env = {**os.environ, "TZ": zone}
+            env.pop("PYSPARK_GATEWAY_PORT", None)
+            res = subprocess.run(
+                [sys.executable, "-c", self.PROBE, root, path],
+                capture_output=True, text=True, timeout=600, env=env,
+                cwd=str(tmp_path))
+            assert res.returncode == 0, res.stderr[-3000:]
+            runs[zone] = json.loads(res.stdout.strip().splitlines()[-1])
+        assert runs["UTC"] == runs["America/New_York"]
+        assert dict(runs["UTC"]) == {
+            "https://a.example/summer": 1622548800 * 10**6,
+            "https://b.example/winter": 1610753400 * 10**6,
+            "https://c.example/offset": 1615699800 * 10**6,
+        }
