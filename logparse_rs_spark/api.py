@@ -317,16 +317,16 @@ def parse_file_to_ndjson(input_path: str, output_path: str, *,
     return count
 
 
-def _ndjson_via_spark(input_path: str, output_path: str,
-                      schema: CompiledSchema) -> int:
-    """Distributed NDJSON: read lines, run the parse operator, nest the
-    per-type projection into a `parsed` struct, write a single NDJSON file
-    tree (output_path becomes a directory of part files — the cluster-scale
-    shape of the reference's single file)."""
+def _ndjson_frame(input_path: str, schema: CompiledSchema):
+    """The Spark NDJSON output as one `value` string column per ok line:
+    read lines, run the parse operator, and serialize each row's schema
+    fields as a JSON object (the type-erased `parsed` map, so one payload
+    expression serves every type)."""
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
+    from pyspark.sql import types as T
 
-    from .operators.parse import fields_col, parse_lines
+    from .operators.parse import fields_col, fields_map, parse_lines
 
     spark = SparkSession.getActiveSession()
     assert spark is not None
@@ -337,25 +337,12 @@ def _ndjson_via_spark(input_path: str, output_path: str,
              .withColumn("url", F.col("url").cast("string")))
     # strip_prefix=False: parse the RAW line, matching the reference NDJSON
     # path and this module's use_spark=False branch (lib.rs:394-463)
-    parsed = (parse_lines(lines, schema, strip_prefix=False)
-              .filter(F.col("status") == "ok"))
-    parsed = fields_col(parsed)
-    # per-type structs have different schemas, so serialize each type's
-    # projection to a JSON string column (union-typed payload);
-    # ignoreNullFields=false keeps missing trailing fields as explicit nulls
-    # like the reference's serde map. A tiny pandas assembler finishes the
-    # exact record shape with unsigned hash64.
-    json_payload = None
-    for t in schema.known_types:
-        pairs = schema.effective_positions(t)
-        s = F.to_json(
-            F.struct(*[F.get(F.col("fields"), pos).alias(name)
-                       for name, pos in pairs]),
-            {"ignoreNullFields": "false"})
-        json_payload = (F.when(F.col("log_type") == t, s) if json_payload is None
-                        else json_payload.when(F.col("log_type") == t, s))
-
-    from pyspark.sql import types as T
+    parsed = fields_col(parse_lines(lines, schema, strip_prefix=False)
+                        .filter(F.col("status") == "ok"))
+    # map entries keep missing trailing fields as explicit nulls like the
+    # reference's serde map. A tiny pandas assembler finishes the exact
+    # record shape with unsigned hash64.
+    json_payload = F.to_json(fields_map(schema, schema.known_types, {}))
 
     @F.pandas_udf(T.StringType())
     def _assemble(pj: pd.Series, raw: pd.Series, h: pd.Series) -> pd.Series:
@@ -365,14 +352,23 @@ def _ndjson_via_spark(input_path: str, output_path: str,
             for p, r, hh in zip(pj, raw, h)
         ], index=pj.index)
 
+    return parsed.select(_assemble(
+        json_payload, F.col("raw_excerpt"), F.col("hash64")).alias("value"))
+
+
+def _ndjson_via_spark(input_path: str, output_path: str,
+                      schema: CompiledSchema) -> int:
+    """Distributed NDJSON: write _ndjson_frame as a single NDJSON file tree
+    (output_path becomes a directory of part files — the cluster-scale
+    shape of the reference's single file)."""
     from pyspark.sql import Observation
+    from pyspark.sql import functions as F
 
     # observe() rides the write job — no second execution of the plan just
     # to learn the row count
     obs = Observation("ndjson_rows")
-    out = parsed.select(_assemble(
-        json_payload, F.col("raw_excerpt"), F.col("hash64")).alias("value"))
-    out = out.observe(obs, F.count(F.lit(1)).alias("n"))
+    out = _ndjson_frame(input_path, schema).observe(
+        obs, F.count(F.lit(1)).alias("n"))
     out.write.mode("overwrite").text(output_path)
     return int(obs.get["n"])
 

@@ -1,13 +1,17 @@
-"""Spark-level column functions backed by the vectorized kernels.
+"""Spark-level column functions: the pandas UDFs backed by the vectorized
+kernels, and `lookup`, the one literal-map lookup every keyed choice uses.
 
-Everything here is an Arrow-batched pandas UDF (never row-at-a-time Python).
-Catalyst groups all pandas UDFs referenced in one projection into a single
+Every UDF here is Arrow-batched (never row-at-a-time Python). Catalyst
+groups all pandas UDFs referenced in one projection into a single
 ArrowEvalPython stage, so e.g. six tokenized columns cost one Python crossing.
 """
 
 from __future__ import annotations
 
+from typing import List, Mapping
+
 import pandas as pd
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -106,3 +110,15 @@ def tokenize_col(col, prefix: str, field_salt: str, default_salt: str) -> F.Colu
         return tokenize_series(s, prefix, field_salt, default_salt)
 
     return _tok(col)
+
+
+def lookup(key: Column, values: Mapping[str, object]) -> Column:
+    """`values[key]` from one literal map (null on a miss, and for an empty
+    mapping): the plan holds one constant map, however many keys, shipped
+    once per task with the plan."""
+    entries: List[Column] = []
+    for k, v in values.items():
+        entries.extend([F.lit(k), F.lit(v)])
+    if not entries:
+        return F.lit(None)
+    return F.try_element_at(F.create_map(*entries), key)

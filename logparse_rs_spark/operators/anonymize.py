@@ -6,9 +6,8 @@ unnecessary — each mode compiles to a column expression:
 
 - fixed     -> F.lit(const)                         (table.rs:58)
 - tokenize  -> Arrow-batched keyed-FNV pandas UDF   (table.rs:28-44)
-- map       -> small dict: F.when chain; large dict: map-literal lookup;
-              miss -> fallback expr; reject-miss keeps the ORIGINAL value
-              (src/lib.rs:354-359)
+- map       -> map-literal lookup (any dictionary size); miss -> fallback
+              expr; reject-miss keeps the ORIGINAL value (src/lib.rs:354-359)
 
 Null values are never anonymized (src/lib.rs:353) — every expression is
 null-preserving.
@@ -25,11 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..anonymizer import CompiledAnonymizer, FieldPlan
-from ..functions import tokenize_col
-
-# above this, a map-mode dictionary becomes a map-literal lookup instead of
-# a when-chain (whole-stage codegen degrades on very long case chains)
-WHEN_CHAIN_MAX = 32
+from ..functions import lookup, tokenize_col
 
 
 def _tokenize_expr(col: Column, plan: FieldPlan, default_salt: str) -> Column:
@@ -52,21 +47,8 @@ def anonymize_expr(col: Column, plan: FieldPlan, default_salt: str) -> Column:
         miss = col  # caller keeps the original value
     else:
         miss = _tokenize_expr(col, plan, default_salt)
-    if len(plan.map) <= WHEN_CHAIN_MAX:
-        expr: Optional[Column] = None
-        for k, v in plan.map.items():
-            expr = (F.when(col == F.lit(k), F.lit(v)) if expr is None
-                    else expr.when(col == F.lit(k), F.lit(v)))
-        hit = expr.otherwise(miss) if expr is not None else miss
-        return F.when(col.isNull(), F.lit(None).cast("string")).otherwise(hit)
-    # large dictionary: try_element_at on a map literal keeps it JVM-side,
-    # shipped once per task with the plan
-    entries: List[Column] = []
-    for k, v in plan.map.items():
-        entries.extend([F.lit(k), F.lit(v)])
-    lookup = F.try_element_at(F.create_map(*entries), col)
-    return F.when(col.isNull(), F.lit(None).cast("string")) \
-            .otherwise(F.coalesce(lookup, miss))
+    hit = F.coalesce(lookup(col, plan.map), miss) if plan.map else miss
+    return F.when(col.isNull(), F.lit(None).cast("string")).otherwise(hit)
 
 
 def audit_table(pre: DataFrame, anon: CompiledAnonymizer,

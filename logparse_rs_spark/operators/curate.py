@@ -25,6 +25,7 @@ from typing import Iterable, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import lookup
 from .text import STOPWORDS, _words
 
 # paragraph boundary for the line operators: literal newline (Java-regex and
@@ -262,9 +263,7 @@ def token_budget_cap(docs: DataFrame, budgets: dict) -> DataFrame:
 
     fp = content_fingerprint(F.col("text"))
     n_tokens = F.size(_words(F.col("text"))).cast("long")
-    items = [F.lit(x) for kv in sorted(budgets.items()) for x in kv]
-    budget = F.element_at(F.create_map(*items),
-                          F.col("source")).cast("long")
+    budget = lookup(F.col("source"), budgets).cast("long")
     w = (Window.partitionBy("source").orderBy("fp", "doc_id")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     t = (docs.withColumn("fp", fp).withColumn("n_tokens", n_tokens)

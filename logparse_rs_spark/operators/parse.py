@@ -24,14 +24,14 @@ per line unconditionally — columnar pruning is our structural win).
 
 from __future__ import annotations
 
-from typing import Iterable, Optional
+from typing import Iterable, Mapping, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..anonymizer import CompiledAnonymizer
 from ..functions import (hash64_of, hash64_of_raw, line_of, line_of_raw,
-                         qfields_of, qfields_of_raw)
+                         lookup, qfields_of, qfields_of_raw)
 from ..schema import CompiledSchema
 from .anonymize import anonymize_expr
 
@@ -122,6 +122,32 @@ def fields_col(parsed: DataFrame) -> DataFrame:
     return parsed.withColumn("fields", _fields_expr())
 
 
+def by_log_type(values: Mapping[str, object]) -> Column:
+    """Each row's value for its own log_type, read from one literal map
+    (null for a type the map lacks): the reference's type -> field names
+    dispatch (schema.rs:58-81) as one lookup, whatever the type count."""
+    return lookup(F.col("log_type"), values)
+
+
+def fields_map(schema: CompiledSchema, types: Sequence[str],
+               replaced: Mapping[str, Column]) -> Column:
+    """Each row's schema fields as map<string,string> name -> split field,
+    in schema order, for rows whose log_type is in `types`: the type looks
+    up its names and their positions as two literal arrays. A name in
+    `replaced` takes that column's value instead of its split field."""
+    pairs = {t: schema.effective_positions(t) for t in types}
+    names = by_log_type({t: [n for n, _ in p] for t, p in pairs.items()})
+    positions = by_log_type({t: [i for _, i in p] for t, p in pairs.items()})
+
+    def value(name: Column, pos: Column) -> Column:
+        v = F.get(F.col("fields"), pos)
+        for n, c in replaced.items():
+            v = F.when(name == n, c).otherwise(v)
+        return v
+
+    return F.map_from_arrays(names, F.zip_with(names, positions, value))
+
+
 def parse_pages(pages: DataFrame, schema: CompiledSchema,
                 keep_cols: Iterable[str] = ("lang",)) -> DataFrame:
     """Full scan-side pipeline: explode + parse. Filter/project downstream."""
@@ -181,13 +207,7 @@ def include_all_map(parsed: DataFrame) -> Column:
     happens at read time via map_concat semantics if callers need the union.
     """
     fields = _fields_expr()
-    # guard: sequence(0, -1) would produce a DESCENDING sequence on empties
-    return F.when(
-        F.size(fields) > 0,
-        F.map_from_arrays(
-            F.transform(F.sequence(F.lit(0), F.size(fields) - 1),
-                        lambda i: F.concat(F.lit("field_"), i.cast("string"))),
-            fields,
-        ),
-    ).otherwise(F.map_from_arrays(F.array().cast("array<string>"),
-                                  F.array().cast("array<string>")))
+    return F.map_from_arrays(
+        F.transform(fields,
+                    lambda _, i: F.concat(F.lit("field_"), i.cast("string"))),
+        fields)

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import lookup
 from .dedup import WORD_SPLIT_CLASS, WS_CHARS, content_fingerprint
 
 # tiny fixed stopword list — deterministic and SQL-replicable
@@ -679,14 +680,14 @@ def mixture_sample(docs: DataFrame, rates: dict,
     orderings, and nested rates are subsets (a 0.1 sample is contained
     in the 0.5 sample — handy for scaling-law ladders).
 
-    Narrow: one inline fingerprint + a when-chain threshold per group,
+    Narrow: one inline fingerprint + a literal-map threshold per group,
     filter on the scan — no shuffle, no per-group pass."""
     resolution = 10_000
     fp = content_fingerprint(F.col("text"))
-    thr = F.lit(int(round(default_rate * resolution)))
-    for g, r in sorted(rates.items()):
-        thr = F.when(F.col("source") == g,
-                     F.lit(int(round(r * resolution)))).otherwise(thr)
+    thr = F.coalesce(
+        lookup(F.col("source"),
+               {g: int(round(r * resolution)) for g, r in rates.items()}),
+        F.lit(int(round(default_rate * resolution))))
     return docs.filter(F.pmod(fp, F.lit(resolution)) < thr)
 
 

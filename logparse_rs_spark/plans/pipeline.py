@@ -39,8 +39,9 @@ from pyspark.sql import functions as F
 
 from ..anonymizer import CompiledAnonymizer, load_anonymizer
 from ..operators.anonymize import anonymize_expr, audit_table
-from ..operators.parse import (STATUS_OK, explode_lines, fields_col,
-                               parse_lines, project_type)
+from ..operators.parse import (STATUS_OK, by_log_type, explode_lines,
+                               fields_col, fields_map, parse_lines,
+                               project_type)
 from ..schema import CompiledSchema, load_schema
 from ..sources.writers import ParquetWriter, make_writer
 
@@ -122,24 +123,15 @@ LEDGER_ARROW = pa.schema([
     ("docs", pa.int64()), ("status", pa.string()), ("run_id", pa.string())])
 
 
-def pick_by_type(positions: Sequence[Tuple[str, int]]) -> Column:
-    """The split field at each row's own log type's position: a when chain
-    over (log_type, position) pairs, null for every other type."""
-    expr = None
-    for t, pos in positions:
-        cond, val = F.col("log_type") == t, F.get(F.col("fields"), pos)
-        expr = F.when(cond, val) if expr is None else expr.when(cond, val)
-    return expr
-
-
 def field_by_type(name: str, positions: Dict[str, int],
                   anon: Optional[CompiledAnonymizer]) -> Column:
-    """One column for field `name` across several log types, anonymized
-    ONCE (not once per type). A Python UDF inside a when branch runs on
-    every input row whichever branch the row takes, so a per-type tokenize
-    chain costs one UDF per (type, field); picking the position first and
-    anonymizing the picked value costs one per field."""
-    c = pick_by_type(list(positions.items()))
+    """One column for field `name` across several log types: the split
+    field at the row's own type's position (null for every other type),
+    anonymized ONCE (not once per type). A Python UDF inside a when branch
+    runs on every input row whichever branch the row takes, so a per-type
+    tokenize chain costs one UDF per (type, field); picking the position
+    first and anonymizing the picked value costs one per field."""
+    c = F.get(F.col("fields"), by_log_type(positions))
     if anon is not None:
         c = anonymize_expr(c, anon.plan_for(name), anon.default_salt)
     return c
@@ -150,9 +142,9 @@ def build_map_payload(parsed: DataFrame, schema: CompiledSchema,
                       anon: Optional[CompiledAnonymizer]) -> DataFrame:
     """Type-erased map<string,string> payload for the long-tail map sinks:
     each anonymized field name first becomes one column (field_by_type:
-    one tokenize per name over all types), then a when chain over the
-    configured types zips each type's schema names with its split fields,
-    reading the anonymized names from those columns."""
+    one tokenize per name over all types), then fields_map zips each row's
+    schema names with its split fields, reading the anonymized names from
+    those columns."""
     df = fields_col(parsed.filter(
         (F.col("status") == STATUS_OK) & F.col("log_type").isin(types)))
     anon_pos: Dict[str, Dict[str, int]] = {}   # name -> {log_type: position}
@@ -162,15 +154,8 @@ def build_map_payload(parsed: DataFrame, schema: CompiledSchema,
                 anon_pos.setdefault(name, {})[t] = pos
     df = df.withColumns({f"_anon_{n}": field_by_type(n, pos, anon)
                          for n, pos in anon_pos.items()})
-    payload = None
-    for t in types:
-        pairs = schema.effective_positions(t)
-        vals = [F.col(f"_anon_{n}") if t in anon_pos.get(n, ())
-                else F.get(F.col("fields"), pos) for n, pos in pairs]
-        m = F.map_from_arrays(
-            F.array(*[F.lit(n) for n, _ in pairs]), F.array(*vals))
-        payload = (F.when(F.col("log_type") == t, m) if payload is None
-                   else payload.when(F.col("log_type") == t, m))
+    payload = fields_map(schema, types,
+                         {n: F.col(f"_anon_{n}") for n in anon_pos})
     return df.select("url", "line_ordinal", "log_type",
                      payload.alias("parsed"),
                      "raw_excerpt", "hash64", "bucket")
@@ -258,12 +243,11 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig,
         sink_types = sorted({s.log_type for s in cfg.sinks})
         parsed_plan = fields_col(parsed_plan)
         for d in audit_dims_active:
-            expr = pick_by_type([
-                (t, pos) for t in sink_types
-                for name, pos in schema.effective_positions(t) if name == d])
+            positions = {t: pos for t in sink_types
+                         for name, pos in schema.effective_positions(t)
+                         if name == d}
             parsed_plan = parsed_plan.withColumn(
-                f"_adt_{d}",
-                expr if expr is not None else F.lit(None).cast("string"))
+                f"_adt_{d}", field_by_type(d, positions, None))
         parsed_plan = parsed_plan.drop("fields")
 
     # ---- staging checkpoint: ONE parse pass materialized as parquet -------

@@ -203,6 +203,20 @@ class TestMapSinks:
         evals = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
         assert sum(len(re.findall(r"\b_tok\(", ln)) for ln in evals) == 5
 
+    def test_no_type_chain(self, spark, result_and_root, full_schema,
+                           sample_anon):
+        # each row picks its type's names and positions from one literal
+        # map: the plan holds no CASE WHEN branch per log type
+        _, out = result_and_root
+        stage = ParquetWriter(out).read(spark, STAGE_TABLE)
+        types = [s.log_type for s in default_sinks(full_schema)
+                 if s.payload == "map"]
+        assert len(types) == 8
+        payload = build_map_payload(stage, full_schema, types, sample_anon)
+        plan = payload._jdf.queryExecution().analyzed().toString()
+        assert "map_from_arrays" in plan
+        assert not re.search(r"WHEN \(log_type#\d+ = ", plan)
+
 
 class TestNarrowLayout:
     def test_stage_partitioned_by_bucket(self, result_and_root):

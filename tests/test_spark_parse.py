@@ -7,7 +7,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from logparse_rs_spark import fixtures
-from logparse_rs_spark.operators.anonymize import audit_table
+from logparse_rs_spark.anonymizer import FieldPlan
+from logparse_rs_spark.operators.anonymize import anonymize_expr, audit_table
 from logparse_rs_spark.operators.parse import (
     include_all_map,
     parse_pages,
@@ -164,3 +165,25 @@ class TestAudit:
                 for f, o, r2 in integrity_entries(sub, sample_anon):
                     want[(f, o)] = r2
         assert got == want
+
+
+class TestAnonymizeExpr:
+    """Map mode runs one map-literal lookup for every dictionary size; the
+    Spark expression must equal FieldPlan.apply_one on hits, misses and
+    nulls under each fallback."""
+
+    SALT = "default-salt"
+
+    @pytest.mark.parametrize("fallback", ["tokenize", "fixed", "reject"])
+    @pytest.mark.parametrize("size", [0, 1, 40])
+    def test_map_mode_matches_apply_one(self, spark, size, fallback):
+        plan = FieldPlan(field_name="f", mode="map", fixed="GONE",
+                         token_prefix="M_", field_salt="fs",
+                         map={f"k{i}": f"v{i}" for i in range(size)},
+                         fallback=fallback)
+        values = [f"k{i}" for i in range(size)][:3] + ["miss", "", None]
+        df = spark.createDataFrame(list(enumerate(values)),
+                                   "i int, value string")
+        got = [r[0] for r in df.orderBy("i").select(
+            anonymize_expr(F.col("value"), plan, self.SALT)).collect()]
+        assert got == [plan.apply_one(v, self.SALT) for v in values]
