@@ -7,10 +7,10 @@ can switch imports and run everything they run today:
 Single-record functions run the canonical pure-Python kernels on the caller's
 thread (same latency class as the reference's fallback path; the reference's
 "Rust fast path" role is played by the Spark operators for bulk work).
-Bulk entry points (`parse_many_parallel`, `parse_file_parallel`,
-`parse_file_to_ndjson`) run vectorized kernels over batches, and
-`parse_file_to_ndjson` switches to the distributed Spark pipeline when a
-SparkSession is active and the file is large.
+The batch entry points `parse_many_parallel` and `parse_file_parallel` run
+vectorized kernels over batches; `parse_file_to_ndjson` runs the distributed
+Spark pipeline whenever a SparkSession is active (or `use_spark=True`),
+whatever the file's size.
 
 Module-level mutable state (loaded schema / anonymizer / integrity table)
 reproduces the reference's process-wide caches, including env-var preload at
@@ -32,7 +32,9 @@ from .kernels import extract_field as _extract_field
 from .kernels import fnv1a_hash64 as hash64_fnv1a  # re-export name parity
 from .kernels import split_csv as _split_csv
 from .refimpl import MalformedLine, UnknownLogType
+from .refimpl import integrity_entries as _integrity_entries
 from .refimpl import parse_kv as _parse_kv
+from .refimpl import parse_kv_enriched as _parse_kv_enriched
 from .schema import CompiledSchema
 from .schema import load_schema as _load_schema_file
 
@@ -125,32 +127,25 @@ def parse_kv_with_schema(line: str, schema_path: str,
     return _parse_kv(line, _ensure_schema(schema_path), include_all=include_all)
 
 
-def _enrich(line: str, parsed: Dict) -> Dict:
-    return {"parsed": parsed, "raw_excerpt": line[:256],
-            "hash64": hash64_fnv1a(line)}
-
-
 def parse_kv_enriched(line: str, include_all: bool = False) -> Dict:
-    return _enrich(line, parse_kv(line, include_all=include_all))
+    return _parse_kv_enriched(line, _ensure_schema(), include_all=include_all)
 
 
 def parse_kv_enriched_with_schema(line: str, schema_path: str,
                                   include_all: bool = False) -> Dict:
-    return _enrich(line, parse_kv_with_schema(line, schema_path, include_all))
+    return _parse_kv_enriched(line, _ensure_schema(schema_path),
+                              include_all=include_all)
 
 
 def _anonymize_parsed(parsed: Dict[str, Optional[str]]) -> Dict[str, Optional[str]]:
     if _ANON is None:
         raise RuntimeError("Anonymized parse requires an anonymizer config "
                            "(load_anonymizer/set_anonymizer_json)")
-    out: Dict[str, Optional[str]] = {}
-    for k, v in parsed.items():
-        plan = _ANON.plan_for(k)
-        repl = plan.apply_one(v, _ANON.default_salt)
-        if (v is not None and plan.mode is not None
-                and not (plan.mode == "map" and v not in plan.map
-                         and plan.fallback == "reject")):
-            _INTEGRITY.setdefault(k, {})[v] = repl
+    # the values integrity_entries leaves out (null, passthrough,
+    # reject-miss) are the ones anonymization returns unchanged
+    out = dict(parsed)
+    for k, v, repl in _integrity_entries(parsed, _ANON):
+        _INTEGRITY.setdefault(k, {})[v] = repl
         out[k] = repl
     return out
 
@@ -286,9 +281,9 @@ def parse_file_to_ndjson(input_path: str, output_path: str, *,
     """File -> NDJSON sink (bindings/python/src/lib.rs:392-463): skips empty,
     malformed, and unknown-type lines; returns rows written.
 
-    use_spark=True (or an already-active SparkSession) routes through the
-    distributed parse pipeline + df.write.json; otherwise a streaming
-    single-process path using the vectorized kernels.
+    use_spark=True, or use_spark=None with an active SparkSession (the
+    file's size is not checked), routes through the distributed parse
+    pipeline; otherwise a streaming single-process path.
     """
     schema = _ensure_schema(schema_path)
     if use_spark is None:
@@ -310,7 +305,7 @@ def parse_file_to_ndjson(input_path: str, output_path: str, *,
             t = _extract_field(line, 3)
             if t is None or t not in schema.type_to_fields:
                 continue
-            rec = _enrich(line, _parse_kv(line, schema))
+            rec = _parse_kv_enriched(line, schema)
             _json.dump(rec, fout)
             fout.write("\n")
             count += 1

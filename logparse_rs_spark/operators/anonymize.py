@@ -12,13 +12,15 @@ unnecessary — each mode compiles to a column expression:
 Null values are never anonymized (src/lib.rs:353) — every expression is
 null-preserving.
 
-The integrity/audit table (field, original, replacement) is recovered as a
-distinct aggregation over (pre, post) column pairs — see audit_table().
+The integrity/audit table (field, original, replacement) is recovered as one
+distinct set of originals per field, each tokenized by its own field's
+expression — see audit_table().
 """
 
 from __future__ import annotations
 
-from typing import Iterable, List, Optional
+from functools import reduce
+from typing import Iterable, List
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -57,35 +59,30 @@ def audit_table(pre: DataFrame, anon: CompiledAnonymizer,
     values the reference's integrity table would record (table.rs:75-77,
     S6/M3) — i.e. transformed values, excluding reject-misses and passthrough.
 
-    `pre` must hold the PRE-anonymization projected columns. Stack the
-    (field, orig) pairs, dedupe, then apply the pure token expressions to the
-    tiny distinct set — the 100 TB-scale trick: anonymize distincts, not rows.
+    `pre` must hold the PRE-anonymization projected columns. Each field's
+    non-null originals are deduped, then run through that field's own token
+    expression — the 100 TB-scale trick: anonymize distincts, not rows — and
+    the per-field pieces are unioned. The pieces stay apart until then
+    because a Python UDF inside a `when` branch runs on every row whichever
+    branch the row takes: choosing the expression by field name would run
+    every field's tokenizer on every distinct value.
     """
     pieces: List[DataFrame] = []
     for name in columns:
         plan = anon.plan_for(name)
         if plan.mode is None:
             continue
-        col = F.col(name)
-        sel = pre.select(F.lit(name).alias("field"), col.alias("original")) \
-                 .filter(col.isNotNull())
-        if plan.mode == "map" and plan.fallback == "reject" and plan.map:
-            sel = sel.filter(F.col("original").isin(list(plan.map)))
-        elif plan.mode == "map" and plan.fallback == "reject":
-            continue  # empty map + reject records nothing
-        pieces.append(sel)
+        originals = pre.select(F.col(name).alias("original")) \
+                       .filter(F.col("original").isNotNull())
+        if plan.mode == "map" and plan.fallback == "reject":
+            if not plan.map:
+                continue  # empty map + reject records nothing
+            originals = originals.filter(
+                F.col("original").isin(list(plan.map)))
+        pieces.append(originals.distinct().select(
+            F.lit(name).alias("field"), "original",
+            anonymize_expr(F.col("original"), plan, anon.default_salt)
+            .alias("replacement")))
     if not pieces:
         raise ValueError("No anonymized columns among: " + ", ".join(columns))
-    stacked = pieces[0]
-    for p in pieces[1:]:
-        stacked = stacked.unionByName(p)
-    distinct = stacked.distinct()
-    repl: Optional[Column] = None
-    for name in columns:
-        plan = anon.plan_for(name)
-        if plan.mode is None:
-            continue
-        e = anonymize_expr(F.col("original"), plan, anon.default_salt)
-        repl = (F.when(F.col("field") == name, e) if repl is None
-                else repl.when(F.col("field") == name, e))
-    return distinct.select("field", "original", repl.alias("replacement"))
+    return reduce(DataFrame.unionByName, pieces)

@@ -161,8 +161,7 @@ def rejected(parsed: DataFrame) -> DataFrame:
 
 def project_type(parsed: DataFrame, schema: CompiledSchema, log_type: str,
                  columns: Optional[Iterable[str]] = None,
-                 anon: Optional[CompiledAnonymizer] = None,
-                 extra_cols: Iterable[str] = ()) -> DataFrame:
+                 anon: Optional[CompiledAnonymizer] = None) -> DataFrame:
     """Project the ok-rows of one log type to named columns.
 
     Positional zip of the type's sanitized names with the split fields;
@@ -191,7 +190,6 @@ def project_type(parsed: DataFrame, schema: CompiledSchema, log_type: str,
             c = anonymize_expr(c, plan, anon.default_salt)
         out_cols.append(c.alias(name))
     out_cols += [F.col("raw_excerpt"), F.col("hash64")]
-    out_cols += [F.col(c) for c in extra_cols]
     return (
         parsed
         .filter((F.col("status") == STATUS_OK) & (F.col("log_type") == log_type))

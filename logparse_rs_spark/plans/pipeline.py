@@ -31,7 +31,7 @@ from __future__ import annotations
 import time
 import uuid
 from dataclasses import dataclass, field
-from typing import Dict, List, Optional, Sequence, Tuple
+from typing import Dict, List, Optional, Sequence
 
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -40,8 +40,7 @@ from pyspark.sql import functions as F
 from ..anonymizer import CompiledAnonymizer, load_anonymizer
 from ..operators.anonymize import anonymize_expr, audit_table
 from ..operators.parse import (STATUS_OK, by_log_type, explode_lines,
-                               fields_col, fields_map, parse_lines,
-                               project_type)
+                               fields_col, fields_map, parse_lines)
 from ..schema import CompiledSchema, load_schema
 from ..sources.writers import ParquetWriter, make_writer
 
@@ -51,7 +50,9 @@ class SinkSpec:
     """One fan-out sink: a log type routed to its own table.
 
     payload:
-      "columns" — per-field columnar projection (its own table/write job)
+      "columns" — per-field columnar projection; the sinks that share a
+                  table (one log type or several) are ONE write job
+                  partitioned by (log_type, bucket)
       "map"     — type-erased map<string,string> payload (SURVEY §1.2) of
                   every schema field (no ``columns``); all map-payload
                   sinks share ONE table partitioned by (log_type, bucket)
@@ -241,14 +242,12 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig,
     ]
     if audit_dims_active:
         sink_types = sorted({s.log_type for s in cfg.sinks})
-        parsed_plan = fields_col(parsed_plan)
-        for d in audit_dims_active:
-            positions = {t: pos for t in sink_types
-                         for name, pos in schema.effective_positions(t)
-                         if name == d}
-            parsed_plan = parsed_plan.withColumn(
-                f"_adt_{d}", field_by_type(d, positions, None))
-        parsed_plan = parsed_plan.drop("fields")
+        parsed_plan = fields_col(parsed_plan).withColumns({
+            f"_adt_{d}": field_by_type(d, {
+                t: pos for t in sink_types
+                for name, pos in schema.effective_positions(t)
+                if name == d}, None)
+            for d in audit_dims_active}).drop("fields")
 
     # ---- staging checkpoint: ONE parse pass materialized as parquet -------
     # Measured against .cache(): the in-memory columnar cache serializes the
@@ -297,11 +296,12 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig,
 
     # ---- fan-out sinks (M1) + metrics + rejects + audit, as CONCURRENT
     # Spark jobs over the one staged parse (driver threads only queue jobs;
-    # executors time-share tasks). Every sink writes partitionBy("bucket")
-    # straight from its stage scan, with no shuffle: a scan split never
-    # divides a parquet row group, so each row group of a bucket's stage
-    # file is written by one task -> 1 file per bucket dir below 128 MB of
-    # staged bucket, instead of (tasks x buckets) small files. At scale the
+    # executors time-share tasks). Every sink writes partitioned by bucket
+    # (a columnar table by (log_type, bucket)) straight from its stage
+    # scan, with no shuffle: a scan split never divides a parquet row
+    # group, so each row group of a bucket's stage file is written by one
+    # task -> 1 file per bucket dir below 128 MB of staged bucket,
+    # instead of (tasks x buckets) small files. At scale the
     # 100-500MB bucket grain IS the file size you want; the file/commit
     # count is what killed r1's sink phase (217s@8c vs 60s@2c, BENCH_r01).
     # -------------------------------------------------------------------------
@@ -309,45 +309,31 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig,
 
     per_sink_rows: Dict[str, int] = {}
 
-    def write_sink(sink: SinkSpec) -> None:
-        projected = project_type(
-            parsed, schema, sink.log_type, columns=sink.columns,
-            anon=anon,
-            extra_cols=("bucket",),   # idempotent partition overwrite key
-        )
-        writer.write(projected, sink.table, partition_by=["bucket"])
-
-    def sink_positions(sink: SinkSpec) -> List[Tuple[str, int]]:
-        pairs = schema.effective_positions(sink.log_type)
-        if sink.columns is None:
-            return pairs
-        wanted = set(sink.columns)
-        return [(n, p) for n, p in pairs if n in wanted]
-
-    def write_columnar_group(sinks_in_table: List[SinkSpec]) -> None:
-        """Columnar sinks that SHARE a table fold into ONE write job over
-        ONE stage scan: each column picks its field's position by log_type
-        and is anonymized once (field_by_type), a type missing a column
-        yields nulls there, and the table is written partitioned by
-        (log_type, bucket) — readers of one type still get partition
-        pruning, replay still overwrites only the touched (type, bucket)
-        partitions, and the phase pays one job's scheduling + codegen +
-        commit instead of one per type. At 8 cores the per-job fixed cost
-        (~2-4 s of planning + Janino codegen + commit setup,
+    def write_columnar(sinks_in_table: List[SinkSpec]) -> None:
+        """The columnar sinks of one table, one log type or several, as
+        ONE write job over ONE stage scan: each column picks its field's
+        position by log_type and is anonymized once (field_by_type), a
+        type missing a column yields nulls there, and the table is written
+        partitioned by (log_type, bucket) — readers of one type still get
+        partition pruning, replay still overwrites only the touched (type,
+        bucket) partitions, and the phase pays one job's scheduling +
+        codegen + commit instead of one per type. At 8 cores the per-job
+        fixed cost (~2-4 s of planning + Janino codegen + commit setup,
         BENCH/BASELINE.md) dominated two nearly-empty write jobs — folding
         them is the N->4N efficiency lever, since fixed cost is what does
         NOT shrink with cores."""
         types = [s.log_type for s in sinks_in_table]
         positions: Dict[str, Dict[str, int]] = {}   # name -> {type: pos}
         for s in sinks_in_table:
-            for name, pos in sink_positions(s):
-                positions.setdefault(name, {})[s.log_type] = pos
+            for name, pos in schema.effective_positions(s.log_type):
+                if s.columns is None or name in s.columns:
+                    positions.setdefault(name, {})[s.log_type] = pos
         cols = [field_by_type(n, p, anon).alias(n)
                 for n, p in positions.items()]
         # the column order of a by-name union of per-type projections: the
         # first type's fields, the enrichment pair, then the fields only
         # later types have
-        k = len(sink_positions(sinks_in_table[0]))
+        k = sum(types[0] in p for p in positions.values())
         out = fields_col(parsed.filter(
             (F.col("status") == STATUS_OK)
             & F.col("log_type").isin(types))).select(
@@ -398,10 +384,7 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig,
     if map_sinks:
         jobs.append((map_sinks[0].table, lambda: write_map_sinks(map_sinks)))
     for table, group in col_groups.items():
-        if len(group) == 1:
-            jobs.append((table, lambda s=group[0]: write_sink(s)))
-        else:
-            jobs.append((table, lambda g=group: write_columnar_group(g)))
+        jobs.append((table, lambda g=group: write_columnar(g)))
     jobs.append(("rejects", write_rejects))
     jobs.append(("fine_stats", collect_fine_stats))
     if audit_dims_active:

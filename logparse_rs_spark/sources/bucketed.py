@@ -19,34 +19,29 @@ partitioned joins.
 
 from __future__ import annotations
 
-from typing import Iterable, Optional, Sequence
+from typing import Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
 
 def write_bucketed(df: DataFrame, table: str, bucket_cols: Sequence[str],
-                   n_buckets: int,
-                   sort_cols: Optional[Sequence[str]] = None,
-                   mode: str = "overwrite",
-                   fmt: str = "parquet") -> str:
-    """Persist df as a catalog-managed bucketed table. sort_cols (defaults
-    to the bucket key) pre-sorts each bucket file so the join side needs no
-    sort either."""
-    sort_cols = list(sort_cols or bucket_cols)
-    (df.write.format(fmt).mode(mode)
-       .bucketBy(n_buckets, *list(bucket_cols))
-       .sortBy(*sort_cols)
+                   n_buckets: int) -> str:
+    """Persist df as a catalog-managed parquet bucketed table, replacing
+    any previous one. Each bucket file is pre-sorted by the bucket key so
+    the join side needs no sort either."""
+    (df.write.format("parquet").mode("overwrite")
+       .bucketBy(n_buckets, *bucket_cols)
+       .sortBy(*bucket_cols)
        .saveAsTable(table))
     return table
 
 
 def bucketed_join(spark: SparkSession, left_table: str, right_table: str,
-                  on: Iterable[str], how: str = "inner") -> DataFrame:
-    """Join two same-key same-bucket-count tables; Catalyst plans this
-    shuffle-free (no Exchange under the SortMergeJoin). Verify with
+                  on: Iterable[str]) -> DataFrame:
+    """Inner-join two same-key same-bucket-count tables; Catalyst plans
+    this shuffle-free (no Exchange under the SortMergeJoin). Verify with
     plan_has_shuffle()."""
-    return spark.table(left_table).join(spark.table(right_table),
-                                        list(on), how)
+    return spark.table(left_table).join(spark.table(right_table), list(on))
 
 
 def plan_has_shuffle(df: DataFrame) -> bool:

@@ -182,10 +182,10 @@ def _parse_ts(v: Optional[str]):
 
 _FLUSH_ROWS = 2_000          # pages per emitted Arrow batch
 _FLUSH_BYTES = 32 << 20      # ... or this much html payload, whichever first
+LANG_UNDETERMINED = "und"    # BCP 47 "undetermined": WARC records carry no lang
 
 
-def read_warc_pages(spark: SparkSession, path: str,
-                    lang_default: str = "und") -> DataFrame:
+def read_warc_pages(spark: SparkSession, path: str) -> DataFrame:
     """WARC files -> pages DataFrame. Only response/resource records with a
     WARC-Target-URI become rows; metadata/request records are skipped.
     Pages stream out in bounded batches as gzip members decode (see module
@@ -219,7 +219,7 @@ def read_warc_pages(spark: SparkSession, path: str,
                     rows["warc_ts"].append(_parse_ts(headers.get("warc-date")))
                     rows["html"].append(body)
                     rows["text"].append(extract_text(body))
-                    rows["lang"].append(lang_default)
+                    rows["lang"].append(LANG_UNDETERMINED)
                     pending += len(body)
                     if len(rows["url"]) >= _FLUSH_ROWS or \
                             pending >= _FLUSH_BYTES:

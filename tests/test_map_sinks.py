@@ -2,9 +2,10 @@
 share one map-payload table partitioned by bucket, TRAFFIC/THREAT share
 one columnar fact table; the type-erased parsed map and the fact
 columns must equal the reference implementation's parsed dict
-(anonymized), per-type routed counts stay exact, every bucket directory
-holds one file, rejects keep the reference's dispatch value, and a resumed
-run writes the same rows as a one-shot run."""
+(anonymized), per-type routed counts stay exact, the audit sink equals
+the reference's integrity entries, every bucket directory holds one
+file, rejects keep the reference's dispatch value, and a resumed run
+writes the same rows as a one-shot run."""
 
 import hashlib
 import os
@@ -14,7 +15,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from logparse_rs_spark import fixtures
+from logparse_rs_spark.operators.anonymize import audit_table
 from logparse_rs_spark.plans.pipeline import (
+    AUDIT_DIMS,
+    AUDIT_TABLE,
     LEDGER_TABLE,
     METRICS_TABLE,
     REJECTS_TABLE,
@@ -25,6 +29,7 @@ from logparse_rs_spark.plans.pipeline import (
     default_sinks,
     run_pipeline,
 )
+from logparse_rs_spark.refimpl import integrity_entries
 from logparse_rs_spark.sources.writers import ParquetWriter
 
 ROOT = os.path.abspath(os.path.join(os.path.dirname(__file__), ".."))
@@ -188,6 +193,38 @@ class TestMapSinks:
         assert got == want
         assert got[("http://edge.example/empty-type", 0)] == \
             ("unknown_type", "", "a,b,c")
+
+    def test_audit_matches_refimpl(self, spark, result_and_root, pages_cols,
+                                   full_schema, sample_anon):
+        # the audit sink holds each distinct (field, original, replacement)
+        # the reference's integrity table records for the audit dims
+        _, out = result_and_root
+        got = [tuple(r) for r in ParquetWriter(out).read(spark, AUDIT_TABLE)
+               .select("field", "original", "replacement").collect()]
+        want = {e for r in fixtures.expected_records(pages_cols, full_schema)
+                if r["status"] == "ok"
+                for e in integrity_entries(
+                    {d: r["parsed"][d] for d in AUDIT_DIMS
+                     if d in r["parsed"]}, sample_anon)}
+        assert want and {f for f, _, _ in want} == set(AUDIT_DIMS)
+        assert len(got) == len(set(got))
+        assert set(got) == want
+
+    def test_audit_one_tokenize_per_field(self, spark, result_and_root,
+                                          sample_anon):
+        # each audit field runs its own tokenizer only: one ArrowEvalPython
+        # per tokenized dim, each with one _tok call (a `when` on the field
+        # name would put every dim's tokenizer in one node)
+        _, out = result_and_root
+        stage = ParquetWriter(out).read(spark, STAGE_TABLE)
+        pre = stage.select(*[F.col(f"_adt_{d}").alias(d) for d in AUDIT_DIMS])
+        audit = audit_table(pre, sample_anon, AUDIT_DIMS)
+        plan = audit._jdf.queryExecution().executedPlan().toString()
+        evals = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
+        tokenized = [d for d in AUDIT_DIMS
+                     if sample_anon.plan_for(d).mode == "tokenize"]
+        assert len(evals) == len(tokenized) == 3
+        assert [len(re.findall(r"\b_tok\(", ln)) for ln in evals] == [1] * 3
 
     def test_one_tokenize_per_field(self, spark, result_and_root,
                                     full_schema, sample_anon):

@@ -72,6 +72,13 @@ class TestPipeline:
         assert result.per_sink_rows["sink_traffic"] == want_counts["TRAFFIC"]
         assert result.per_sink_rows["sink_threat"] == want_counts["THREAT"]
         assert result.per_sink_rows["sink_system"] == want_counts["SYSTEM"]
+        # a one-type columnar table is written like a multi-type one:
+        # partitioned by (log_type, bucket), one log_type directory
+        for table, t in (("sink_traffic", "TRAFFIC"),
+                         ("sink_threat", "THREAT"), ("sink_system", "SYSTEM")):
+            dirs = os.listdir(os.path.join(cfg.out_root, table))
+            assert [d for d in dirs if d.startswith("log_type=")] == \
+                [f"log_type={t}"], table
 
         writer = ParquetWriter(cfg.out_root)
         traffic = writer.read(spark, "sink_traffic")

@@ -4,8 +4,9 @@
 Scans, with ``ast`` only (nothing is imported or run):
 
 - the functions in scope: every module-level function of
-  ``logparse_rs_spark/operators/``, ``streaming/``, ``functions/`` and
-  ``kernels.py`` (public ones and the private helpers they forward to);
+  ``logparse_rs_spark/operators/``, ``streaming/``, ``functions/``,
+  ``plans/``, ``sources/`` and ``kernels.py`` (public ones and the private
+  helpers they forward to);
 - every call to them from the product callers (the package,
   ``__spark_entry__.py``, ``jobs/``, ``bench.py``, ``bench_extra.py``,
   ``tools/``, ``perfbench/``) and from ``tests/``.
@@ -39,7 +40,8 @@ import sys
 from collections import defaultdict
 
 PKG = "logparse_rs_spark"
-SCOPE = ("operators/*.py", "streaming/*.py", "functions/*.py", "kernels.py")
+SCOPE = ("operators/*.py", "streaming/*.py", "functions/*.py", "plans/*.py",
+         "sources/*.py", "kernels.py")
 PRODUCT = (PKG + "/**/*.py", "__spark_entry__.py", "jobs/*.py", "bench.py",
            "bench_extra.py", "tools/*.py", "perfbench/**/*.py")
 TESTS = ("tests/*.py",)
