@@ -186,18 +186,10 @@ def write_pages_parquet_distributed(spark, path: str, n_pages: int,
                                     partitions: Optional[int] = None) -> str:
     """Generate the identical pages table in parallel on Spark (bench scale).
     Same bytes as generate_pages because every page seeds its own rng."""
-    from pyspark.sql import functions as F  # noqa: F401
-    from pyspark.sql import types as T
+    from .sources.warc import PAGES_SCHEMA
 
     idx_map = _idx_map()
     parts = partitions or max(int(spark.sparkContext.defaultParallelism), 8)
-    schema = T.StructType([
-        T.StructField("url", T.StringType()),
-        T.StructField("warc_ts", T.TimestampType()),
-        T.StructField("html", T.BinaryType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-    ])
 
     def gen(iterator):
         import pandas as pd
@@ -206,7 +198,7 @@ def write_pages_parquet_distributed(spark, path: str, n_pages: int,
             yield pd.DataFrame(rows)
 
     (spark.range(0, n_pages, numPartitions=parts)
-     .mapInPandas(gen, schema=schema)
+     .mapInPandas(gen, schema=PAGES_SCHEMA)
      .write.mode("overwrite").parquet(path))
     return path
 

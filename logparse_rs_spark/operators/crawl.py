@@ -82,6 +82,27 @@ def frontier_schedule(urls: DataFrame, n_workers: int = 8,
         (F.row_number().over(w) - 1).cast("bigint").alias("fetch_round"))
 
 
+def _longest_match(urls: DataFrame, rules_col: F.Column,
+                   default_allow: bool) -> DataFrame:
+    """urls plus (allowed, rule_prefix): the longest prefix of the
+    array<struct<prefix, allow>> column ``rules_col`` that ``url`` starts
+    with decides, (length, allow) max breaking ties; no match (or a null
+    rule array) takes ``default_allow``."""
+    matched = F.filter(rules_col,
+                       lambda r: F.col("url").startswith(r["prefix"]))
+    best = F.array_max(F.transform(
+        matched, lambda r: F.struct(F.length(r["prefix"]).alias("l"),
+                                    r["allow"].alias("allow"),
+                                    r["prefix"].alias("prefix"))))
+    return (urls
+            .withColumn("_best", best)
+            .withColumn("allowed",
+                        F.coalesce(F.col("_best.allow"),
+                                   F.lit(bool(default_allow))))
+            .withColumn("rule_prefix", F.col("_best.prefix"))
+            .drop("_best"))
+
+
 def apply_url_policy(urls: DataFrame, rules: List[Tuple[str, bool]],
                      default_allow: bool = True) -> DataFrame:
     """robots.txt-shaped URL policy: the LONGEST matching prefix rule
@@ -102,18 +123,7 @@ def apply_url_policy(urls: DataFrame, rules: List[Tuple[str, bool]],
     arr = F.array(*[
         F.struct(F.lit(p).alias("prefix"), F.lit(bool(a)).alias("allow"))
         for p, a in rules])
-    matched = F.filter(arr, lambda r: F.col("url").startswith(r["prefix"]))
-    best = F.array_max(F.transform(
-        matched, lambda r: F.struct(F.length(r["prefix"]).alias("l"),
-                                    r["allow"].alias("allow"),
-                                    r["prefix"].alias("prefix"))))
-    return (urls
-            .withColumn("_best", best)
-            .withColumn("allowed",
-                        F.coalesce(F.col("_best.allow"),
-                                   F.lit(bool(default_allow))))
-            .withColumn("rule_prefix", F.col("_best.prefix"))
-            .drop("_best"))
+    return _longest_match(urls, arr, default_allow)
 
 
 def apply_url_policy_df(urls: DataFrame, rules: DataFrame) -> DataFrame:
@@ -149,18 +159,8 @@ def apply_url_policy_df(urls: DataFrame, rules: DataFrame) -> DataFrame:
     j = (urls.withColumn("_uhost", _host(F.col("url")))
          .join(F.broadcast(per_host),
                F.col("_uhost") == F.col("_rhost"), "left"))
-    matched = F.filter(F.col("_rules"),
-                       lambda r: F.col("url").startswith(r["prefix"]))
-    best = F.array_max(F.transform(
-        matched, lambda r: F.struct(F.length(r["prefix"]).alias("l"),
-                                    r["allow"].alias("allow"),
-                                    r["prefix"].alias("prefix"))))
-    return (j.withColumn("_best", best)
-            .withColumn("allowed",
-                        F.coalesce(F.col("_best.allow"),
-                                   F.lit(True)))
-            .withColumn("rule_prefix", F.col("_best.prefix"))
-            .drop("_best", "_uhost", "_rhost", "_rules"))
+    return (_longest_match(j, F.col("_rules"), True)
+            .drop("_uhost", "_rhost", "_rules"))
 
 
 def crawl_delta(old_pages: DataFrame, new_pages: DataFrame) -> DataFrame:

@@ -2,7 +2,8 @@
 
 - brute_force_topk : exact cosine top-k per query — the correctness baseline.
   Dot products run in ONE Arrow-batched numpy matmul per partition against a
-  broadcast query matrix; top-k per query via groupBy + min_by-style window.
+  broadcast query matrix; top-k per query via the row_number window of
+  behavior.top_n_per_group.
 - lsh_topk         : random-hyperplane (signed projection) LSH buckets as the
   scale path — candidates share >=1 hyperplane-band bucket, then exact cosine
   re-rank on candidates only. At 10^12 rows the bucket join replaces the
@@ -18,11 +19,12 @@ from typing import Tuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..shared import collect_if_fits
+from .behavior import top_n_per_group
 
 # the sketch constants the operators and the oracle aux build
 # (dataops_fixtures) share: hyperplane-LSH planes and seed, the LSH
@@ -48,13 +50,19 @@ def _vec_matrix(vecs: "pd.Series") -> np.ndarray:
     return np.stack(vecs.to_numpy()).astype(np.float64, copy=False)
 
 
+def _unit_rows(vm: np.ndarray) -> np.ndarray:
+    """vm with every row scaled to unit L2 norm; an all-zero row stays
+    zero (its cosine to anything is 0)."""
+    norms = np.linalg.norm(vm, axis=1)
+    norms[norms == 0] = 1.0
+    return vm / norms[:, None]
+
+
 def _collect_queries(queries: DataFrame) -> Tuple[np.ndarray, np.ndarray]:
     rows = queries.select("query_id", "embedding").collect()
     qids = np.array([r["query_id"] for r in rows], dtype=np.int64)
     qm = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    norms = np.linalg.norm(qm, axis=1)
-    norms[norms == 0] = 1.0
-    return qids, qm / norms[:, None]
+    return qids, _unit_rows(qm)
 
 
 def cosine_scores(vectors: DataFrame, queries: DataFrame) -> DataFrame:
@@ -73,10 +81,7 @@ def cosine_scores(vectors: DataFrame, queries: DataFrame) -> DataFrame:
         for pdf in iterator:
             if len(pdf) == 0:
                 continue
-            vm = _vec_matrix(pdf["embedding"])
-            norms = np.linalg.norm(vm, axis=1)
-            norms[norms == 0] = 1.0
-            sims = (vm / norms[:, None]) @ qmat.T        # (rows, n_q)
+            sims = _unit_rows(_vec_matrix(pdf["embedding"])) @ qmat.T
             ids = pdf["vec_id"].to_numpy(dtype=np.int64)
             yield pd.DataFrame({
                 "query_id": np.repeat(qids, len(ids)),
@@ -88,16 +93,31 @@ def cosine_scores(vectors: DataFrame, queries: DataFrame) -> DataFrame:
             .mapInPandas(score, schema=schema))
 
 
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The k best (query_id, vec_id, cos_sim) rows per query, ranked
+    (cos_sim desc, vec_id asc), cos_sim rounded to 6 places after ranking."""
+    return (top_n_per_group(scored, ["query_id"], "cos_sim", k, "vec_id")
+            .withColumn("cos_sim", F.round("cos_sim", 6)))
+
+
 def brute_force_topk(vectors: DataFrame, queries: DataFrame) -> DataFrame:
     """Exact cosine top-5 per query; ties break (cos desc, vec_id asc)."""
-    scored = cosine_scores(vectors, queries)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .withColumn("cos_sim", F.round("cos_sim", 6))
-    )
+    return _top_k(cosine_scores(vectors, queries), 5)
+
+
+def _rerank(cands: DataFrame, k: int) -> DataFrame:
+    """Exact cosine of each (query_id, vec_id, v_vec, q_vec) candidate row,
+    JVM-side higher-order functions (0.0 when either vector is all-zero),
+    then the top k per query."""
+    dot = F.aggregate(F.zip_with("v_vec", "q_vec", lambda a, b: a * b),
+                      F.lit(0.0), lambda acc, x: acc + x)
+    norm = lambda c: F.sqrt(F.aggregate(  # noqa: E731
+        F.transform(c, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
+    scored = cands.withColumn(
+        "cos_sim",
+        F.when((norm(F.col("v_vec")) == 0) | (norm(F.col("q_vec")) == 0), 0.0)
+        .otherwise(dot / (norm(F.col("v_vec")) * norm(F.col("q_vec")))))
+    return _top_k(scored.select("query_id", "vec_id", "cos_sim"), k)
 
 
 def hyperplane_planes(dim: int) -> np.ndarray:
@@ -125,6 +145,23 @@ def hyperplane_signatures(vectors: DataFrame, dim: int) -> DataFrame:
         return pd.Series(hyperplane_sig_np(vm, planes), index=vecs.index)
 
     return vectors.withColumn("lsh_sig", sig(F.col("embedding")))
+
+
+def _hyperplane_bands(vectors: DataFrame, id_col: str, dim: int,
+                      bands: int) -> DataFrame:
+    """(id_col, embedding, band, bucket): one row per band of each vector's
+    hyperplane signature, the bucket being that band's
+    LSH_N_PLANES // bands signature bits."""
+    width = LSH_N_PLANES // bands
+    mask = (1 << width) - 1
+    return hyperplane_signatures(vectors, dim).select(
+        F.col(id_col), F.col("embedding"),
+        F.posexplode(F.array(*[
+            F.shiftrightunsigned(F.col("lsh_sig"), i * width)
+            .bitwiseAND(F.lit(mask))
+            for i in range(bands)
+        ])).alias("band", "bucket"),
+    )
 
 
 def ivf_assign(vectors: DataFrame, centroids: "np.ndarray") -> DataFrame:
@@ -162,16 +199,12 @@ def kmeans_cells(x: np.ndarray, n_cells: int) -> np.ndarray:
 
 def assign_cells_np(vm: np.ndarray, cn: np.ndarray) -> np.ndarray:
     """Nearest-centroid (cosine) cell per row of vm; cn pre-normalized."""
-    norms = np.linalg.norm(vm, axis=1)
-    norms[norms == 0] = 1.0
-    return ((vm / norms[:, None]) @ cn.T).argmax(axis=1).astype("int32")
+    return (_unit_rows(vm) @ cn.T).argmax(axis=1).astype("int32")
 
 
 def probe_cells_np(vm: np.ndarray, cn: np.ndarray, n_probe: int) -> np.ndarray:
     """(rows, n_probe) nearest cells per query row; cn pre-normalized."""
-    norms = np.linalg.norm(vm, axis=1)
-    norms[norms == 0] = 1.0
-    sims = (vm / norms[:, None]) @ cn.T
+    sims = _unit_rows(vm) @ cn.T
     return np.argsort(-sims, axis=1)[:, :n_probe].astype("int32")
 
 
@@ -217,20 +250,7 @@ def ivf_topk(vectors: DataFrame, queries: DataFrame, k: int = 10,
                      .alias("v_vec"),
                      F.col("q_vec").cast("array<double>").alias("q_vec"))
              .dropDuplicates(["query_id", "vec_id"]))
-    dot = F.aggregate(F.zip_with("v_vec", "q_vec", lambda a, b: a * b),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    norm = lambda c: F.sqrt(F.aggregate(  # noqa: E731
-        F.transform(c, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
-    scored = cands.withColumn(
-        "cos_sim",
-        F.when((norm(F.col("v_vec")) == 0) | (norm(F.col("q_vec")) == 0), 0.0)
-        .otherwise(dot / (norm(F.col("v_vec")) * norm(F.col("q_vec")))))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("vec_id"))
-    return (scored.select("query_id", "vec_id", "cos_sim")
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .withColumn("cos_sim", F.round("cos_sim", 6)))
+    return _rerank(cands, k)
 
 
 _PAIR_SCHEMA = T.StructType([
@@ -270,9 +290,7 @@ def _neardup_pairs_broadcast(vectors: DataFrame, dim: int, threshold: float):
     vm = (head.column(1).combine_chunks().flatten().to_numpy()
           .astype(np.float64).reshape(head.num_rows, dim))
     sigs = hyperplane_sig_np(vm, hyperplane_planes(dim))
-    norms = np.linalg.norm(vm, axis=1)
-    norms[norms == 0] = 1.0
-    vn = vm / norms[:, None]
+    vn = _unit_rows(vm)
     bc = spark.sparkContext.broadcast(
         (ids, vn, vn.astype(np.float32), sigs.view(np.uint64)))
     coarse = threshold - max(1e-3, dim * 2**-20)
@@ -321,20 +339,10 @@ def neardup_pairs(vectors: DataFrame, dim: int,
     correctness gate proves the composition exact at the configured
     threshold against a DuckDB all-pairs oracle.
     """
-    width = LSH_N_PLANES // NEARDUP_BANDS
-    mask = (1 << width) - 1
     bc_pairs = _neardup_pairs_broadcast(vectors, dim, threshold)
     if bc_pairs is not None:
         return bc_pairs
-    sigs = hyperplane_signatures(vectors, dim)
-    banded = sigs.select(
-        F.col("vec_id"), F.col("embedding"),
-        F.posexplode(F.array(*[
-            F.shiftrightunsigned(F.col("lsh_sig"), i * width)
-            .bitwiseAND(F.lit(mask))
-            for i in range(NEARDUP_BANDS)
-        ])).alias("band", "bucket"),
-    )
+    banded = _hyperplane_bands(vectors, "vec_id", dim, NEARDUP_BANDS)
 
     # score INSIDE each bucket with one numpy matmul (applyInPandas per
     # (band, bucket) group) instead of joining 10^7s of candidate rows and
@@ -346,10 +354,7 @@ def neardup_pairs(vectors: DataFrame, dim: int,
         if n < 2:
             return pd.DataFrame({"id_a": [], "id_b": [], "cos_sim": []})
         ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-        vm = _vec_matrix(pdf["embedding"])
-        norms = np.linalg.norm(vm, axis=1)
-        norms[norms == 0] = 1.0
-        vn = vm / norms[:, None]
+        vn = _unit_rows(_vec_matrix(pdf["embedding"]))
         sims = vn @ vn.T
         # indices of >=threshold upper-triangle entries directly: for a
         # c-member bucket, triu_indices materialized c*(c-1)/2 index pairs
@@ -404,10 +409,7 @@ def semdedup(vectors: DataFrame, threshold: float = 0.35, n_cells: int = 8,
                 f"rows > max_cell={max_cell}; raise n_cells so cells stay "
                 "bounded (the greedy scan is O(cell * kept))")
         pdf = pdf.sort_values("vec_id", kind="mergesort")
-        vm = _vec_matrix(pdf["embedding"])
-        norms = np.linalg.norm(vm, axis=1)
-        norms[norms == 0] = 1.0
-        vn = vm / norms[:, None]
+        vn = _unit_rows(_vec_matrix(pdf["embedding"]))
         kept: list[int] = []
         for i in range(n):
             if not kept or (vn[kept] @ vn[i] < threshold).all():
@@ -425,22 +427,8 @@ def lsh_topk(vectors: DataFrame, queries: DataFrame, dim: int) -> DataFrame:
     """ANN top-5: hyperplane-LSH band buckets -> candidate set -> exact
     cosine re-rank. Recall grows with bands; candidates per query stay
     ~bucket-sized instead of the full table."""
-    width = LSH_N_PLANES // TOPK_BANDS
-    mask = (1 << width) - 1
-
-    def banded(df, idc):
-        sigs = hyperplane_signatures(df, dim)
-        return sigs.select(
-            F.col(idc), F.col("embedding"),
-            F.posexplode(F.array(*[
-                F.shiftrightunsigned(F.col("lsh_sig"), i * width)
-                .bitwiseAND(F.lit(mask))
-                for i in range(TOPK_BANDS)
-            ])).alias("band", "bucket"),
-        )
-
-    v = banded(vectors, "vec_id").alias("v")
-    q = banded(queries, "query_id").alias("q")
+    v = _hyperplane_bands(vectors, "vec_id", dim, TOPK_BANDS).alias("v")
+    q = _hyperplane_bands(queries, "query_id", dim, TOPK_BANDS).alias("q")
     cands = (
         v.join(F.broadcast(q), (F.col("v.band") == F.col("q.band"))
                & (F.col("v.bucket") == F.col("q.bucket")))
@@ -450,25 +438,7 @@ def lsh_topk(vectors: DataFrame, queries: DataFrame, dim: int) -> DataFrame:
                 F.col("q.embedding").cast("array<double>").alias("q_vec"))
         .dropDuplicates(["query_id", "vec_id"])
     )
-    # exact cosine on candidates, JVM-side higher-order functions
-    dot = F.aggregate(
-        F.zip_with("v_vec", "q_vec", lambda a, b: a * b),
-        F.lit(0.0), lambda acc, x: acc + x)
-    norm = lambda c: F.sqrt(F.aggregate(  # noqa: E731
-        F.transform(c, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
-    scored = cands.withColumn(
-        "cos_sim",
-        F.when((norm(F.col("v_vec")) == 0) | (norm(F.col("q_vec")) == 0), 0.0)
-        .otherwise(dot / (norm(F.col("v_vec")) * norm(F.col("q_vec")))),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("vec_id"))
-    return (
-        scored.select("query_id", "vec_id", "cos_sim")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .withColumn("cos_sim", F.round("cos_sim", 6))
-    )
+    return _rerank(cands, 5)
 
 
 def kmeans_assign_exact(vectors: DataFrame, k: int = 8) -> DataFrame:

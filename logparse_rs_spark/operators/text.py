@@ -261,6 +261,19 @@ def word_ngrams(words, n: int) -> F.Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
+def _adjacent_pairs(arr, a: str, b: str) -> F.Column:
+    """array<struct<a, b>> of every adjacent (arr[i], arr[i + 1]) pair of a
+    string-array column, in order; empty for fewer than two elements."""
+    return F.when(
+        F.size(arr) >= 2,
+        F.transform(
+            F.sequence(F.lit(1), F.size(arr) - 1),
+            lambda i: F.struct(F.element_at(arr, i).alias(a),
+                               F.element_at(arr, i + 1).alias(b)),
+        ),
+    ).otherwise(F.array().cast(f"array<struct<{a}:string,{b}:string>>"))
+
+
 def vocab_top(docs: DataFrame) -> DataFrame:
     """Corpus vocabulary build (the token-frequency pass a BPE/tokenizer
     training job starts from): explode whitespace tokens, hash-aggregate
@@ -723,15 +736,8 @@ def collocations(docs: DataFrame, k: int = 20) -> DataFrame:
     """
     wbase = docs.select(F.col("words").alias("_ws"))
     words = F.col("_ws")
-    pairs = F.when(
-        F.size(words) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(words) - 1),
-            lambda i: F.struct(F.element_at(words, i).alias("w1"),
-                               F.element_at(words, i + 1).alias("w2")),
-        ),
-    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
-    bi = (wbase.select(F.explode(pairs).alias("p"))
+    bi = (wbase.select(F.explode(_adjacent_pairs(words, "w1", "w2"))
+                       .alias("p"))
           .select("p.w1", "p.w2")
           .groupBy("w1", "w2").agg(F.count("*").alias("n_xy"))
           .filter(F.col("n_xy") >= 5))
@@ -882,15 +888,7 @@ def bpe_pair_counts(docs: DataFrame, k: int = 20) -> DataFrame:
     """
     wc = (docs.select(F.explode(_words(F.col("text"))).alias("word"))
           .groupBy("word").agg(F.count("*").alias("n")))
-    cs = F.split(F.col("word"), "")
-    pairs = F.when(
-        F.size(cs) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(cs) - 1),
-            lambda i: F.struct(F.element_at(cs, i).alias("a"),
-                               F.element_at(cs, i + 1).alias("b")),
-        ),
-    ).otherwise(F.array().cast("array<struct<a:string,b:string>>"))
+    pairs = _adjacent_pairs(F.split(F.col("word"), ""), "a", "b")
     return (wc.select(F.explode(pairs).alias("p"), "n")
             .groupBy("p.a", "p.b")
             .agg(F.sum("n").alias("weighted_count"))

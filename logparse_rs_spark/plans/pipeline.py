@@ -367,9 +367,15 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig,
         # pruned 3-column scan -> distinct -> anonymize-the-distincts
         stacked = parsed.filter(F.col("status") == STATUS_OK).select(
             *[F.col(f"_adt_{d}").alias(d) for d in audit_dims_active])
-        audit = audit_table(stacked, anon, audit_dims_active).withColumn(
-            "run_id", F.lit(run_id))
-        writer.append(audit, AUDIT_TABLE)
+        audit = audit_table(stacked, anon, audit_dims_active)
+        # a resumed or repeated run derives triples an earlier run already
+        # recorded: append only the (field, original, replacement) triples
+        # the table does not hold yet
+        seen = writer.read(spark, AUDIT_TABLE)
+        if seen is not None:
+            triple = ["field", "original", "replacement"]
+            audit = audit.join(seen.select(*triple), triple, "left_anti")
+        writer.append(audit.withColumn("run_id", F.lit(run_id)), AUDIT_TABLE)
 
     columnar_sinks = [s for s in cfg.sinks if s.payload == "columns"]
     map_sinks = [s for s in cfg.sinks if s.payload == "map"]

@@ -417,14 +417,11 @@ def get_spark(app_name: str = "logparse_rs_spark", cores: int | None = None,
         # executor JVMs need their own heap sizing; the big single-JVM
         # driver heap would be wasted here (executors hold the data)
         conf.update({
-            "spark.executor.memory":
-                os.environ.get("SPARK_GRAFT_EXECUTOR_MEM", "6g"),
+            "spark.executor.memory": "6g",
             "spark.driver.memory":
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
             # G1 in the executors as in the driver (-Xmx only, as there)
-            "spark.executor.extraJavaOptions":
-                os.environ.get("SPARK_GRAFT_EXECUTOR_JAVA_OPTS",
-                               "-XX:+UseG1GC"),
+            "spark.executor.extraJavaOptions": "-XX:+UseG1GC",
             # local[] runs everything PROCESS_LOCAL so locality wait never
             # fires; with separate executor JVMs the default 3 s delay
             # scheduling adds up to seconds of idle per stage on a

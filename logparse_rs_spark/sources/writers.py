@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import os
 import re
-from typing import Iterable, List, Optional
+from typing import Iterable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -68,21 +68,13 @@ class ParquetWriter:
             return None
         return spark.read.parquet(p)
 
-    def tables(self) -> List[str]:
-        if not os.path.isdir(self.root):
-            return []
-        return sorted(
-            d for d in os.listdir(self.root)
-            if os.path.isdir(os.path.join(self.root, d))
-        )
-
 
 class IcebergWriter:
     """Iceberg sink: writeTo(...).overwritePartitions() for idempotent bucket
     replays, createOrReplace on first write. Requires the Iceberg Spark
     runtime jars + a configured catalog; constructor raises if absent so
     callers fall back to ParquetWriter. Implements the same surface as
-    ParquetWriter (write/append/read/tables) so plans.pipeline can use
+    ParquetWriter (write/append/read) so plans.pipeline can use
     either interchangeably via make_writer."""
 
     def __init__(self, spark: SparkSession, namespace: str,
@@ -134,10 +126,6 @@ class IcebergWriter:
         if not spark.catalog.tableExists(fq):
             return None
         return spark.table(fq)
-
-    def tables(self) -> list:
-        return sorted(t.name for t in
-                      self.spark.catalog.listTables(self.namespace))
 
 
 def _has_parquet(path: str) -> bool:

@@ -211,6 +211,73 @@ class TestSimilarity:
             assert len(got & want) / len(want) >= 0.4  # recall floor
 
 
+class TestRerank:
+    """The exact re-rank behind lsh_topk and ivf_topk: every returned
+    cos_sim is the pair's cosine rounded to 6 places (0.0 against an
+    all-zero vector), ranks run 1..n per query, equal scores rank by
+    vec_id."""
+
+    DIM = 8
+
+    def _inputs(self, spark):
+        from logparse_rs_spark.operators.similarity import hyperplane_planes
+        planes = hyperplane_planes(self.DIM)
+        # q projects negatively on the first 4 planes, so its first LSH
+        # band holds only zero bits, the bucket of the all-zero vector
+        q = -np.linalg.pinv(planes[:4]) @ np.ones(4)
+        rng = np.random.default_rng(5)
+        vecs = {0: np.zeros(self.DIM),
+                # power-of-two multiples of q: the same signature as q and
+                # the same cosine to q, bit for bit
+                1: 4 * q, 2: 2 * q,
+                3: rng.standard_normal(self.DIM),
+                4: rng.standard_normal(self.DIM)}
+        qvecs = {100: q, 101: rng.standard_normal(self.DIM)}
+        f32 = {k: v.astype(np.float32).astype(np.float64)
+               for d in (vecs, qvecs) for k, v in d.items()}
+
+        def frame(d, id_col):
+            return spark.createDataFrame(
+                [(k, [float(x) for x in f32[k]]) for k in d],
+                f"{id_col} long, embedding array<float>")
+        return frame(vecs, "vec_id"), frame(qvecs, "query_id"), f32
+
+    @staticmethod
+    def _cos(a, b):
+        # the re-rank's summation order: left to right from 0.0
+        dot = na = nb = 0.0
+        for x, y in zip(a, b):
+            dot, na, nb = dot + x * y, na + x * x, nb + y * y
+        na, nb = np.sqrt(na), np.sqrt(nb)
+        return 0.0 if na == 0 or nb == 0 else dot / (na * nb)
+
+    @pytest.mark.parametrize("op", ["lsh", "ivf"])
+    def test_scores_ranks_and_ties(self, spark, op):
+        from logparse_rs_spark.operators.similarity import ivf_topk, lsh_topk
+        vectors, queries, f32 = self._inputs(spark)
+        got = (lsh_topk(vectors, queries, dim=self.DIM) if op == "lsh"
+               else ivf_topk(vectors, queries, k=5, n_cells=1, n_probe=1))
+        by_q = {}
+        for r in got.collect():
+            by_q.setdefault(r["query_id"], []).append(r)
+        # every vector is a candidate of q: the tied pair by signature, the
+        # zero vector by band 0 (lsh) or the one cell (ivf)
+        assert {r["vec_id"] for r in by_q[100]} >= {0, 1, 2}
+        for qid, rows in by_q.items():
+            rows.sort(key=lambda r: r["rank"])
+            assert [r["rank"] for r in rows] == list(range(1, len(rows) + 1))
+            exact = [self._cos(f32[r["vec_id"]], f32[qid]) for r in rows]
+            for r, c in zip(rows, exact):
+                assert abs(r["cos_sim"] - c) <= 5e-7 + 1e-12
+                assert r["cos_sim"] == round(r["cos_sim"], 6)
+            keys = [(-c, r["vec_id"]) for r, c in zip(rows, exact)]
+            assert keys == sorted(keys)
+        assert [r["vec_id"] for r in by_q[100][:2]] == [1, 2]
+        assert by_q[100][0]["cos_sim"] == by_q[100][1]["cos_sim"]
+        zero = [r for r in by_q[100] if r["vec_id"] == 0]
+        assert zero[0]["cos_sim"] == 0.0
+
+
 class TestMultimodal:
     def test_metadata_and_features(self, spark):
         from logparse_rs_spark.operators.multimodal import (

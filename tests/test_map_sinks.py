@@ -310,6 +310,20 @@ class TestNarrowResume:
             assert got.count() == want.count(), table
             assert (got.exceptAll(want).count() == 0
                     and want.exceptAll(got).count() == 0), table
+        # _audit is appended by every run: the resumed run and a
+        # resume=False rerun re-derive triples the table already holds,
+        # and store none of them again
+
+        def triples(w):
+            return [tuple(r) for r in w.read(spark, AUDIT_TABLE).select(
+                "field", "original", "replacement").collect()]
+
+        one_shot, resumed = triples(full_writer), triples(writer)
+        run_pipeline(spark, pages_df, cfg, resume=False)
+        rerun = triples(writer)
+        for got in (one_shot, resumed, rerun):
+            assert len(got) == len(set(got))
+        assert one_shot and set(one_shot) == set(resumed) == set(rerun)
 
 
 class TestResumeUnderStaticSession:
