@@ -230,6 +230,14 @@ def normalized_text(col) -> F.Column:
     return F.trim(F.regexp_replace(F.lower(col), WORD_SPLIT_CLASS, " "))
 
 
+def text_key(col) -> F.Column:
+    """The exact-dup key: xxhash64 of normalized_text(col), the uniform
+    8-byte shuffle key every exact-dedup step groups or joins on (the
+    batch, incremental, canonical-signature and streaming forms and the
+    curation queries' keep-first windows)."""
+    return F.xxhash64(normalized_text(col))
+
+
 def content_fingerprint(col) -> F.Column:
     """The reference's FNV-1a-64 (crates/logparse_core/src/lib.rs:18-25)
     of normalized_text(col), two's-complement LongType: the one content
@@ -244,9 +252,9 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
     """Keep one canonical doc (min id) per distinct normalized text.
     xxhash64 on the normalized text gives a uniform 8-byte shuffle key —
     grouping by the raw text would shuffle whole documents."""
-    key = F.xxhash64(normalized_text(F.col("text"))).alias("text_key")
     return (
-        docs.select(F.col("doc_id"), key)
+        docs.select(F.col("doc_id"),
+                    text_key(F.col("text")).alias("text_key"))
         .groupBy("text_key")
         .agg(F.min("doc_id").alias("doc_id"),
              F.count("*").alias("dup_count"))
@@ -403,8 +411,7 @@ def canonical_signatures(docs: DataFrame) -> DataFrame:
     out so a session/pipeline computes them once)."""
     canon = (
         docs.select(F.col("doc_id"), F.col("text"),
-                    F.xxhash64(normalized_text(F.col("text")))
-                    .alias("text_key"))
+                    text_key(F.col("text")).alias("text_key"))
         .groupBy("text_key")
         .agg(F.min("doc_id").alias("doc_id"),
              F.min_by("text", F.col("doc_id")).alias("text"))
@@ -744,7 +751,7 @@ def incremental_dedup(new_docs: DataFrame, corpus: DataFrame) -> DataFrame:
     distinct key set (the information-theoretic minimum for exact dedup);
     in practice you persist that key table once and reuse it every
     increment instead of rescanning the corpus."""
-    key = F.xxhash64(normalized_text(F.col("text"))).alias("_k")
+    key = text_key(F.col("text")).alias("_k")
     nk = new_docs.select(F.col("doc_id"), key)
     ck = corpus.select(key).distinct()
     surv = (nk.join(ck, "_k", "left_anti")
@@ -768,21 +775,25 @@ def bloom_bits(keys: DataFrame, key_col: str,
     degenerate h2 only raises the false-positive rate, never causes a
     false negative. Size m at ~10 bits per distinct key for ~3% FP with
     the default two hashes ((1 - e^(-k*n/m))^k)."""
-    pos = F.array(*_bloom_positions(F.col(key_col), m_bits))
-    return (keys.select(F.explode(pos).alias("_pos"))
-            .select(F.expr("_pos DIV 63").alias("_w"),
-                    F.expr("shiftleft(CAST(1 AS BIGINT), "
-                           "CAST(pmod(_pos, 63) AS INT))").alias("_m"))
+    return (_bloom_probe(keys, key_col, m_bits)
             .groupBy("_w").agg(F.bit_or("_m").alias("_bits")))
 
 
-def _bloom_positions(key_col: F.Column, m_bits: int) -> list:
-    """k bit positions for a key: md5 -> two 60-bit ints -> double hash."""
-    digest = F.md5(key_col.cast("string"))
+def _bloom_probe(keys: DataFrame, key_col: str, m_bits: int,
+                 *cols) -> DataFrame:
+    """(*cols, _w, _m): one row per key and probe bit, holding the bitmap
+    word and the bit's mask within it. The k positions are md5 -> two
+    60-bit ints -> double hash; a null key probes word null, which no
+    bitmap word matches."""
+    digest = F.md5(F.col(key_col).cast("string"))
     h1 = F.conv(F.substring(digest, 1, 15), 16, 10).cast("bigint")
     h2 = F.conv(F.substring(digest, 16, 15), 16, 10).cast("bigint")
-    return [F.pmod(h1 + F.lit(j) * h2, F.lit(m_bits))
-            for j in range(2)]
+    pos = F.array(*[F.pmod(h1 + F.lit(j) * h2, F.lit(m_bits))
+                    for j in range(2)])
+    return (keys.select(*cols, F.explode(pos).alias("_pos"))
+            .select(*cols, F.expr("_pos DIV 63").alias("_w"),
+                    F.expr("shiftleft(CAST(1 AS BIGINT), "
+                           "CAST(pmod(_pos, 63) AS INT))").alias("_m")))
 
 
 def bloom_anti_join(batch: DataFrame, corpus: DataFrame, key_col: str,
@@ -790,16 +801,19 @@ def bloom_anti_join(batch: DataFrame, corpus: DataFrame, key_col: str,
                     bits: Optional[DataFrame] = None) -> DataFrame:
     """EXACT anti-join (batch keys not present in corpus) with a
     Bloom-filter prefilter — the result is identical to a plain
-    ``left_anti`` join; the bitmap only PRUNES the expensive path.
+    ``left_anti`` join, null-key batch rows included; the bitmap only
+    PRUNES the expensive path.
 
     Scale shape: every batch key probes the broadcast bitmap (fixed
     m_bits/63-row table, size independent of corpus cardinality). A key
     with any unset probe bit is DEFINITELY new (Bloom guarantee) and
     never enters a shuffle against the corpus; only maybe-members (true
     members + the ~3% false positives) go through the exact key-shuffle
-    anti-join. For a mostly-new crawl batch this removes almost the whole
-    corpus-side join; pass a persisted ``bits`` table (from
-    :func:`bloom_bits`) to skip rebuilding the bitmap per increment.
+    semi-join that confirms them, and the batch drops the confirmed
+    members in one anti-join. For a mostly-new crawl batch this removes
+    almost the whole corpus-side join; pass a persisted ``bits`` table
+    (from :func:`bloom_bits`) to skip rebuilding the bitmap per
+    increment.
 
     Within-batch duplicate keys are NOT collapsed — this is membership
     against the corpus only; compose with keep-first (incremental_dedup)
@@ -807,24 +821,18 @@ def bloom_anti_join(batch: DataFrame, corpus: DataFrame, key_col: str,
     if bits is None:
         bits = bloom_bits(corpus.select(key_col).distinct(), key_col,
                           m_bits)
-    pos = F.array(*_bloom_positions(F.col(key_col), m_bits))
-    probes = (batch.select(key_col).distinct()
-              .select(key_col, F.explode(pos).alias("_pos"))
-              .select(key_col, F.expr("_pos DIV 63").alias("_w"),
-                      F.expr("shiftleft(CAST(1 AS BIGINT), "
-                             "CAST(pmod(_pos, 63) AS INT))").alias("_m"))
-              .join(F.broadcast(bits), "_w", "left")
-              .withColumn("_hit",
-                          F.col("_bits").isNotNull()
-                          & (F.col("_bits").bitwiseAND(F.col("_m")) != 0))
-              .groupBy(key_col)
-              .agg(F.min(F.col("_hit").cast("int")).alias("_all_hit")))
-    fresh = probes.filter(F.col("_all_hit") == 0).select(key_col)
-    maybe = probes.filter(F.col("_all_hit") == 1).select(key_col)
-    confirmed = maybe.join(corpus.select(key_col).distinct(),
-                           key_col, "left_anti")
-    new_keys = fresh.unionByName(confirmed)
-    return batch.join(new_keys, key_col, "left_semi")
+    maybe = (_bloom_probe(batch.select(key_col).distinct(), key_col,
+                          m_bits, key_col)
+             .join(F.broadcast(bits), "_w", "left")
+             .withColumn("_hit",
+                         F.col("_bits").isNotNull()
+                         & (F.col("_bits").bitwiseAND(F.col("_m")) != 0))
+             .groupBy(key_col)
+             .agg(F.min(F.col("_hit").cast("int")).alias("_all_hit"))
+             .filter(F.col("_all_hit") == 1).select(key_col))
+    members = maybe.join(corpus.select(key_col).distinct(), key_col,
+                         "left_semi")
+    return batch.join(members, key_col, "left_anti")
 
 
 def duplicate_span_stats(docs: DataFrame, n: int = 8) -> DataFrame:
@@ -851,19 +859,37 @@ def duplicate_span_stats(docs: DataFrame, n: int = 8) -> DataFrame:
     collision), one on the doc id for the final rollup. Span frequency is Zipfian, so
     map-side partial counts collapse the hot template spans before the
     wire."""
+    return _span_rollup(docs, n, F.count("*"), F.col("_w") >= 2, "shared")
+
+
+def _span_inventory(docs: DataFrame, n: int, *cols):
+    """(base, spans): docs projected to doc_id, ``cols`` and the words
+    array ``_ws``, and the Column of base's n-word spans — the one span
+    inventory of the span rollups and the span scrubbers."""
     from .text import word_ngrams
 
-    base = docs.select(F.col("doc_id"), F.col("words").alias("_ws"))
-    spans = word_ngrams(F.col("_ws"), n)
+    base = docs.select(F.col("doc_id"), *cols, F.col("words").alias("_ws"))
+    return base, word_ngrams(F.col("_ws"), n)
+
+
+def _span_rollup(docs: DataFrame, n: int, over: F.Column, flag: F.Column,
+                 name: str) -> DataFrame:
+    """(doc_id, n_spans, n_<name>, <name>_ppm BIGINT) over each doc's
+    distinct n-word spans: ``over`` is aggregated over the span key's
+    window into column ``_w``, n_<name> counts the doc's spans where
+    ``flag`` holds, and <name>_ppm = n_<name> * 1e6 DIV n_spans. Per-doc
+    span dedup happens scan-side (array_distinct before the explode), and
+    the window is partitioned like the span shuffle, so the plan holds one
+    span-keyed and one id-keyed exchange."""
+    base, spans = _span_inventory(docs, n)
     per = base.select(F.col("doc_id"),
-                      F.explode(F.array_distinct(spans)).alias("span"))
-    n_docs = F.count("*").over(Window.partitionBy("span"))
-    return (per.withColumn("_nd", n_docs)
+                      F.explode(F.array_distinct(spans)).alias("_span"))
+    return (per.withColumn("_w", over.over(Window.partitionBy("_span")))
             .groupBy("doc_id")
             .agg(F.count("*").alias("n_spans"),
-                 F.sum((F.col("_nd") >= 2).cast("long")).alias("n_shared"))
-            .withColumn("shared_ppm",
-                        F.expr("n_shared * 1000000 DIV n_spans")))
+                 F.sum(flag.cast("long")).alias(f"n_{name}"))
+            .withColumn(f"{name}_ppm",
+                        F.expr(f"n_{name} * 1000000 DIV n_spans")))
 
 
 def minhash_cross_candidates(sig_new: DataFrame, sig_corpus: DataFrame,
@@ -952,11 +978,7 @@ def remove_duplicate_spans(docs: DataFrame, n: int = 8) -> DataFrame:
 def _span_frames(docs: DataFrame, n: int):
     """(base, per): the tokenized doc frame and its positioned n-word
     spans — shared by the duplicate-span and contamination scrubbers."""
-    from .text import word_ngrams
-
-    base = docs.select(F.col("doc_id"), F.col("text"),
-                       F.col("words").alias("_ws"))
-    spans = word_ngrams(F.col("_ws"), n)
+    base, spans = _span_inventory(docs, n, F.col("text"))
     # (id, start0, span): posexplode's index IS the 0-based start word
     per = base.select("doc_id", F.posexplode(spans).alias("_start", "_span"))
     return base, per
@@ -1103,29 +1125,8 @@ def span_novelty(docs: DataFrame, n: int = 8) -> DataFrame:
     id-keyed rollup. At production scale hash the span through xxhash64
     first so the shuffle carries 8-byte keys (identical answer absent a
     2^-64 collision)."""
-    from .text import word_ngrams
-
-    wbase = docs.select(F.col("doc_id"), F.col("words").alias("_ws"))
-    spans = word_ngrams(F.col("_ws"), n)
-    # per-doc span dedup happens SCAN-SIDE (array_distinct before the
-    # explode, the duplicate_span_stats discipline) and the first-owner
-    # attribution is a min-over-window on the span key — the r5 plan
-    # paid a distinct exchange, a groupBy exchange and a big-to-big
-    # span-string join for the same numbers (guide §2.4: a window
-    # partitioned like the aggregation needs no second shuffle)
-    per_d = wbase.select(F.col("doc_id"),
-                         F.explode(F.array_distinct(spans)).alias("_span"))
-    first = F.min("doc_id").over(Window.partitionBy("_span"))
-    return (per_d.withColumn("_first", first)
-            .groupBy("doc_id")
-            .agg(F.count("*").alias("n_spans"),
-                 F.sum((F.col("doc_id") == F.col("_first")).cast("bigint"))
-                 .alias("n_novel"))
-            .select(F.col("doc_id"),
-                    F.col("n_spans"),
-                    F.col("n_novel"),
-                    F.expr("CAST(n_novel * 1000000 DIV n_spans AS BIGINT)")
-                    .alias("novel_ppm")))
+    return _span_rollup(docs, n, F.min("doc_id"),
+                        F.col("doc_id") == F.col("_w"), "novel")
 
 
 def source_overlap(pairs: DataFrame, docs: DataFrame) -> DataFrame:

@@ -322,9 +322,7 @@ def pagerank_integer(pairs: DataFrame) -> DataFrame:
     return pr
 
 
-def hits_integer(edges: DataFrame, iterations: int = 2,
-                 src: str = "src",
-                 dst: str = "dst") -> DataFrame:
+def hits_integer(edges: DataFrame, iterations: int = 2) -> DataFrame:
     """HITS hubs-and-authorities over a DIRECTED edge set in EXACT INTEGER
     arithmetic — the classic complement to PageRank on a web host graph
     (Kleinberg, "Authoritative Sources in a Hyperlinked Environment",
@@ -355,42 +353,67 @@ def hits_integer(edges: DataFrame, iterations: int = 2,
     aggregates broadcast back — the same shuffle class as a PageRank
     round. Edges are materialized once; lineage is truncated per round.
 
-    Caller supplies the edge SET (dedupe/self-loop policy is the
-    caller's). Returns (node, hub BIGINT, auth BIGINT) for every node;
-    ``node`` inherits the input id type.
+    Caller supplies the (src_host, dst_host) edge SET (dedupe/self-loop
+    policy is the caller's; ``directed_edge_set`` is the host graph's).
+    Returns (node, hub BIGINT, auth BIGINT) for every node; ``node``
+    inherits the input id type.
     """
     if iterations < 1:
         raise ValueError("hits_integer needs iterations >= 1")
-    e = _truncate(edges.select(F.col(src).alias("s"),
-                               F.col(dst).alias("t")), eager=True)
+    e = _truncate(edges.select(F.col("src_host").alias("s"),
+                               F.col("dst_host").alias("t")), eager=True)
     nodes = e.select(F.col("s").alias("node")).union(
         e.select(F.col("t").alias("node"))).distinct()
     hub = nodes.select("node", F.lit(HITS_SCALE).cast("long").alias("hub"))
-    auth = None
     for _ in range(iterations):
-        a_raw = (e.join(hub.withColumnRenamed("node", "s"), "s")
-                 .groupBy(F.col("t").alias("node"))
-                 .agg(F.sum("hub").alias("raw")))
-        a_max = F.broadcast(a_raw.agg(F.max("raw").alias("mx")))
-        auth = _truncate(
-            nodes.join(a_raw, "node", "left").crossJoin(a_max)
-            .select("node",
-                    F.coalesce(
-                        F.expr(f"CAST(raw * {HITS_SCALE} DIV mx AS BIGINT)"),
-                        F.lit(0).cast("long")).alias("auth")),
-            eager=False)
-        h_raw = (e.join(auth.withColumnRenamed("node", "t"), "t")
-                 .groupBy(F.col("s").alias("node"))
-                 .agg(F.sum("auth").alias("raw")))
-        h_max = F.broadcast(h_raw.agg(F.max("raw").alias("mx")))
-        hub = _truncate(
-            nodes.join(h_raw, "node", "left").crossJoin(h_max)
-            .select("node",
-                    F.coalesce(
-                        F.expr(f"CAST(raw * {HITS_SCALE} DIV mx AS BIGINT)"),
-                        F.lit(0).cast("long")).alias("hub")),
-            eager=False)
+        auth = _hits_step(e, nodes, hub, "s", "t", "auth")
+        hub = _hits_step(e, nodes, auth, "t", "s", "hub")
     return hub.join(auth, "node")
+
+
+def _hits_step(e: DataFrame, nodes: DataFrame, scores: DataFrame, by: str,
+               to: str, name: str) -> DataFrame:
+    """One HITS half-step: (node, <name>) for every node, the max-normalized
+    sum of the (node, score) ``scores`` of its ``by``-side neighbors over
+    the (s, t) edges ``e`` — auth from hub along s -> t, hub from auth
+    along t -> s."""
+    raw = (e.join(scores.withColumnRenamed("node", by), by)
+           .groupBy(F.col(to).alias("node"))
+           .agg(F.sum(scores.columns[1]).alias("raw")))
+    mx = F.broadcast(raw.agg(F.max("raw").alias("mx")))
+    return _truncate(
+        nodes.join(raw, "node", "left").crossJoin(mx)
+        .select("node",
+                F.coalesce(
+                    F.expr(f"CAST(raw * {HITS_SCALE} DIV mx AS BIGINT)"),
+                    F.lit(0).cast("long")).alias(name)),
+        eager=False)
+
+
+def directed_edge_set(edges: DataFrame) -> DataFrame:
+    """The distinct directed (src_host, dst_host) edges of an edge list,
+    self-loops dropped — the edge set of the directed link operators
+    (reciprocal_link_stats; hits_integer's caller)."""
+    return (edges.filter(F.col("src_host") != F.col("dst_host"))
+            .select("src_host", "dst_host").distinct())
+
+
+def undirected_edge_set(edges: DataFrame) -> DataFrame:
+    """The distinct undirected (id_a, id_b) pairs, id_a < id_b, of the
+    graph a (src_host, dst_host) edge list induces, self-loops dropped —
+    the pair set of triangle_counts, kcore_nodes and pagerank_integer's
+    host-graph caller."""
+    return (edges.filter(F.col("src_host") != F.col("dst_host"))
+            .select(F.least("src_host", "dst_host").alias("id_a"),
+                    F.greatest("src_host", "dst_host").alias("id_b"))
+            .distinct())
+
+
+def _degrees(und: DataFrame) -> DataFrame:
+    """(n, d): each node's degree in an undirected (id_a, id_b) pair set."""
+    return (und.select(F.col("id_a").alias("n"))
+            .union(und.select(F.col("id_b").alias("n")))
+            .groupBy("n").agg(F.count("*").alias("d")))
 
 
 def reciprocal_link_stats(edges: DataFrame) -> DataFrame:
@@ -409,14 +432,13 @@ def reciprocal_link_stats(edges: DataFrame) -> DataFrame:
     produced them. Everything is JVM-side; works on any equi-joinable id
     type.
     """
-    e = (edges.filter(F.col("src_host") != F.col("dst_host"))
-         .select(F.col("src_host").alias("s"), F.col("dst_host").alias("t"))
-         .distinct())
-    recip = e.join(e.select(F.col("t").alias("s"), F.col("s").alias("t")),
-                   ["s", "t"], "left_semi")
-    n_out = e.groupBy(F.col("s").alias("node")).agg(
+    e = directed_edge_set(edges)
+    recip = e.join(e.select(F.col("dst_host").alias("src_host"),
+                            F.col("src_host").alias("dst_host")),
+                   ["src_host", "dst_host"], "left_semi")
+    n_out = e.groupBy(F.col("src_host").alias("node")).agg(
         F.count("*").alias("n_out"))
-    n_rec = recip.groupBy(F.col("s").alias("node")).agg(
+    n_rec = recip.groupBy(F.col("src_host").alias("node")).agg(
         F.count("*").alias("n_recip"))
     return (n_out.join(n_rec, "node", "left")
             .select("node", "n_out",
@@ -428,13 +450,12 @@ def reciprocal_link_stats(edges: DataFrame) -> DataFrame:
                                "AS BIGINT)")))
 
 
-def triangle_counts(edges: DataFrame, src: str = "src",
-                    dst: str = "dst") -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """Per-node triangle participation counts over the UNDIRECTED graph
-    induced by a directed edge set — the classic link-community /
-    spam-cluster density signal (link farms form near-cliques, so hosts
-    with triangle counts far above their degree's expectation are the
-    follow-up to a high reciprocal-link rate).
+    induced by a directed (src_host, dst_host) edge list — the classic
+    link-community / spam-cluster density signal (link farms form
+    near-cliques, so hosts with triangle counts far above their degree's
+    expectation are the follow-up to a high reciprocal-link rate).
 
     Exact and deterministic: the triangle SET depends only on the edge
     set; counts are integers.
@@ -454,25 +475,21 @@ def triangle_counts(edges: DataFrame, src: str = "src",
     Returns (node, n_triangles BIGINT) for every node in >=1 triangle;
     ``node`` inherits the input id type.
     """
-    und = (edges.filter(F.col(src) != F.col(dst))
-           .select(F.least(src, dst).alias("a"),
-                   F.greatest(src, dst).alias("b"))
-           .distinct())
-    deg = (und.select(F.col("a").alias("n"))
-           .union(und.select(F.col("b").alias("n")))
-           .groupBy("n").agg(F.count("*").alias("d")))
+    und = undirected_edge_set(edges)
+    deg = _degrees(und)
     # orientation key: (degree, id) — a total order, ties broken by id
     withd = (und
-             .join(deg.select(F.col("n").alias("a"),
-                              F.col("d").alias("da")), "a")
-             .join(deg.select(F.col("n").alias("b"),
-                              F.col("d").alias("db")), "b"))
-    ka = F.struct(F.col("da").alias("d"), F.col("a").alias("i"))
-    kb = F.struct(F.col("db").alias("d"), F.col("b").alias("i"))
+             .join(deg.select(F.col("n").alias("id_a"),
+                              F.col("d").alias("da")), "id_a")
+             .join(deg.select(F.col("n").alias("id_b"),
+                              F.col("d").alias("db")), "id_b"))
+    a, b = F.col("id_a"), F.col("id_b")
+    ka = F.struct(F.col("da").alias("d"), a.alias("i"))
+    kb = F.struct(F.col("db").alias("d"), b.alias("i"))
     oriented = _truncate(
         withd.select(
-            F.when(ka < kb, F.col("a")).otherwise(F.col("b")).alias("u"),
-            F.when(ka < kb, F.col("b")).otherwise(F.col("a")).alias("v"),
+            F.when(ka < kb, a).otherwise(b).alias("u"),
+            F.when(ka < kb, b).otherwise(a).alias("v"),
             F.when(ka < kb, kb).otherwise(ka).alias("vk")),
         eager=True)
     # wedge (u -> v, u -> w) with v before w in orientation order, then
@@ -493,15 +510,15 @@ def triangle_counts(edges: DataFrame, src: str = "src",
         F.count("*").alias("n_triangles"))
 
 
-def kcore_nodes(edges: DataFrame, k: int = 3, max_peels: int = 20,
-                src: str = "src", dst: str = "dst") -> DataFrame:
-    """k-core of the UNDIRECTED graph induced by a directed edge set:
-    the maximal subgraph where every node keeps degree >= k after
-    everyone below the bar is (transitively) peeled away. The classic
-    graph-trust filter on a web host graph — a host's raw degree is
-    easily inflated by links to/from throwaway domains, but its k-core
-    membership requires k neighbors that THEMSELVES survive the same
-    bar, which link farms built from low-degree satellites fail.
+def kcore_nodes(edges: DataFrame, k: int = 3,
+                max_peels: int = 20) -> DataFrame:
+    """k-core of the UNDIRECTED graph induced by a directed (src_host,
+    dst_host) edge list: the maximal subgraph where every node keeps
+    degree >= k after everyone below the bar is (transitively) peeled
+    away. The classic graph-trust filter on a web host graph — a host's
+    raw degree is easily inflated by links to/from throwaway domains, but
+    its k-core membership requires k neighbors that THEMSELVES survive
+    the same bar, which link farms built from low-degree satellites fail.
 
     Exact and deterministic: the k-core is unique (independent of peel
     order), so any two engines agree; a fixed-unroll SQL oracle matches
@@ -519,15 +536,9 @@ def kcore_nodes(edges: DataFrame, k: int = 3, max_peels: int = 20,
     Returns (node, core_degree BIGINT): the surviving nodes with their
     degree INSIDE the k-core; empty when the whole graph peels away.
     """
-    e = _truncate(
-        edges.filter(F.col(src) != F.col(dst))
-        .select(F.least(src, dst).alias("a"),
-                F.greatest(src, dst).alias("b"))
-        .distinct(), eager=True)
+    e = _truncate(undirected_edge_set(edges), eager=True)
     for _ in range(max_peels):
-        deg = (e.select(F.col("a").alias("n"))
-               .union(e.select(F.col("b").alias("n")))
-               .groupBy("n").agg(F.count("*").alias("d")))
+        deg = _degrees(e)
         keep = deg.filter(F.col("d") >= k)
         # ONE action per peel (was deg.count() - keep.count(), two jobs
         # recomputing the degree aggregate each): at 100x round counts
@@ -541,8 +552,10 @@ def kcore_nodes(edges: DataFrame, k: int = 3, max_peels: int = 20,
                                F.col("d").cast("long")
                                .alias("core_degree"))
         e = _truncate(
-            e.join(keep.select(F.col("n").alias("a")), "a", "left_semi")
-            .join(keep.select(F.col("n").alias("b")), "b", "left_semi"),
+            e.join(keep.select(F.col("n").alias("id_a")), "id_a",
+                   "left_semi")
+            .join(keep.select(F.col("n").alias("id_b")), "id_b",
+                  "left_semi"),
             eager=True)
         if e.isEmpty():
             return keep.filter(F.lit(False)).select(

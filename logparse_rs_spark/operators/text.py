@@ -402,12 +402,17 @@ def lm_bigram_model(docs: DataFrame,
     un_counts = (doc_bg
                  .select(F.split(F.col("bigram"), " ").getItem(0).alias("w1"))
                  .groupBy("w1").agg(F.count("*").alias("un_n")))
-    # per-doc array_distinct BEFORE the explode: the distinct-count is
-    # unchanged, the exploded row volume drops to the per-doc distinct
-    # vocabulary (guide §2.3, aggregate before you shuffle)
-    vocab = (docs.select(F.explode(F.array_distinct("words")).alias("t"))
-             .agg(F.count_distinct("t")).first()[0])
-    return bg_counts, un_counts, int(vocab)
+    return bg_counts, un_counts, _vocab_size(docs)
+
+
+def _vocab_size(docs: DataFrame) -> int:
+    """The corpus vocabulary size V of the lm add-one smoothing: distinct
+    words over ``docs.words``. Per-doc array_distinct BEFORE the explode:
+    the distinct-count is unchanged, the exploded row volume drops to the
+    per-doc distinct vocabulary (guide §2.3, aggregate before you
+    shuffle)."""
+    return int(docs.select(F.explode(F.array_distinct("words")).alias("t"))
+               .agg(F.count_distinct("t")).first()[0])
 
 
 def lm_score(docs: DataFrame, model: tuple | None = None,
@@ -443,8 +448,7 @@ def lm_score(docs: DataFrame, model: tuple | None = None,
     if model is None:
         bg_n = F.count("*").over(Window.partitionBy("bigram"))
         un_n = F.count("*").over(Window.partitionBy(w1))
-        vocab = docs.select(F.explode(F.array_distinct("words")).alias("t")) \
-            .agg(F.count_distinct("t")).first()[0]
+        vocab = _vocab_size(docs)
         scored = doc_bg.select(
             F.col("doc_id"),
             F.log((bg_n + F.lit(1.0)) / (un_n + F.lit(float(vocab))))

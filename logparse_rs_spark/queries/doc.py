@@ -45,7 +45,7 @@ from logparse_rs_spark.operators.dedup import (BANDS, WS_CHARS, _banded,
                                                simhash_candidates,
                                                soft_dedup_weights,
                                                source_overlap, span_novelty,
-                                               winnow_fingerprints)
+                                               text_key, winnow_fingerprints)
 from logparse_rs_spark.operators.graph import dup_clusters, pagerank_integer
 from logparse_rs_spark.operators.sketch import heavy_hitters_exact
 from logparse_rs_spark.operators.text import (LENGTH_BANDS, STOPWORDS,
@@ -136,7 +136,7 @@ def doc_curation_stats(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     base = docs.select(
         "doc_id", "lang", "text",
-        F.xxhash64(normalized_text(F.col("text"))).alias("tk"))
+        text_key(F.col("text")).alias("tk"))
     q = quality_score(base, keep_cols=("lang", "text", "tk"))
     l = language_id(q, keep_cols=("lang", "text", "tk", "n_words",
                                   "alpha_ratio"))
@@ -225,7 +225,7 @@ def doc_curation_funnel(spark, sf_dir):
     base = d.select(
         "doc_id", "text",
         F.size(_words(F.col("text"))).alias("_nw"),
-        F.xxhash64(normalized_text(F.col("text"))).alias("_tk"),
+        text_key(F.col("text")).alias("_tk"),
         F.pmod(content_fingerprint(F.col("text")), F.lit(4)).alias("_fp"))
     gq = gopher_quality(base, keep_cols=("text", "_nw", "_tk", "_fp"))
     p1 = F.col("_nw").between(20, 200)

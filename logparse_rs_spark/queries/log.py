@@ -22,10 +22,12 @@ from logparse_rs_spark.operators.curate import (filter_blocked_hosts,
                                                 latest_by_key)
 from logparse_rs_spark.operators.dedup import WORD_SPLIT_CLASS as WSP
 from logparse_rs_spark.operators.enrich import enrich_with_lang
-from logparse_rs_spark.operators.graph import (hits_integer, kcore_nodes,
+from logparse_rs_spark.operators.graph import (directed_edge_set,
+                                               hits_integer, kcore_nodes,
                                                pagerank_integer,
                                                reciprocal_link_stats,
-                                               triangle_counts)
+                                               triangle_counts,
+                                               undirected_edge_set)
 from logparse_rs_spark.operators.links import (anchor_text_terms, host_edges,
                                                host_profile)
 from logparse_rs_spark.operators.parse import include_all_map, project_type
@@ -309,12 +311,7 @@ def log_host_pagerank(spark, sf_dir):
     # authority ranking over the REAL extracted link graph: distinct
     # undirected host edges (self-loops dropped) -> 3 rounds of exact
     # integer PageRank. Composes the links family with graph.py.
-    und = (_host_edges(spark, sf_dir)
-           .filter(F.col("src_host") != F.col("dst_host"))
-           .select(F.least("src_host", "dst_host").alias("id_a"),
-                   F.greatest("src_host", "dst_host").alias("id_b"))
-           .distinct())
-    pr = pagerank_integer(und)
+    pr = pagerank_integer(undirected_edge_set(_host_edges(spark, sf_dir)))
     return (pr.select(F.col("node").alias("host"),
                       F.col("pr").alias("pagerank"))
             .orderBy(F.desc("pagerank"), F.asc("host")).limit(20))
@@ -339,10 +336,8 @@ def log_host_hits(spark, sf_dir):
     # scale=1e6) — PageRank's classic companion link-quality signal.
     # Reuses the session-shared host-edges frame; per round the
     # |hosts|-sized score frames shuffle, never the pages.
-    e = (_host_edges(spark, sf_dir)
-         .filter(F.col("src_host") != F.col("dst_host"))
-         .select("src_host", "dst_host").distinct())
-    out = hits_integer(e, iterations=2, src="src_host", dst="dst_host")
+    out = hits_integer(directed_edge_set(_host_edges(spark, sf_dir)),
+                       iterations=2)
     return (out.select(F.col("node").alias("host"), "hub", "auth")
             .orderBy(F.desc("auth"), F.desc("hub"), F.asc("host"))
             .limit(20))
@@ -368,8 +363,7 @@ def log_host_triangles(spark, sf_dir):
     # celebrity-node-safe form; the triangle set is identical to the
     # naive enumeration the oracle uses). Follows up the reciprocal-
     # rate filter — link farms are near-cliques.
-    out = triangle_counts(_host_edges(spark, sf_dir),
-                          src="src_host", dst="dst_host")
+    out = triangle_counts(_host_edges(spark, sf_dir))
     return (out.select(F.col("node").alias("host"), "n_triangles")
             .orderBy(F.desc("n_triangles"), F.asc("host"))
             .limit(30))
@@ -438,7 +432,7 @@ def log_host_kcore(spark, sf_dir):
     # converges in degeneracy-depth rounds; the oracle unrolls more
     # peels than convergence needs (extra peels are no-ops).
     strong = _host_edges(spark, sf_dir).filter(F.col("n_links") >= 3)
-    return (kcore_nodes(strong, k=3, src="src_host", dst="dst_host")
+    return (kcore_nodes(strong, k=3)
             .select(F.col("node").alias("host"), "core_degree")
             .orderBy(F.desc("core_degree"), F.asc("host")))
 

@@ -122,11 +122,10 @@ def streaming_exact_dedup(docs_stream: DataFrame) -> DataFrame:
     applyInPandasWithState — see streaming_integrity_feed."""
     from pyspark.sql import functions as F
 
-    from ..operators.dedup import normalized_text
+    from ..operators.dedup import text_key
 
     keyed = docs_stream.select(
-        F.col("doc_id"),
-        F.xxhash64(normalized_text(F.col("text"))).alias("text_key"))
+        F.col("doc_id"), text_key(F.col("text")).alias("text_key"))
     return keyed.groupBy("text_key").agg(
         F.min("doc_id").alias("doc_id")).select("doc_id", "text_key")
 

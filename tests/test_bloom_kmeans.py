@@ -49,6 +49,19 @@ class TestBloomAntiJoin:
         out = bloom_anti_join(batch, corpus, "k").collect()
         assert sorted(r.k for r in out) == ["new", "new"]
 
+    def test_null_key_rows_survive_like_plain_anti_join(self, spark):
+        """A null batch key equals no corpus key, so the plain left_anti
+        keeps its row; the Bloom form must keep it too."""
+        batch = spark.createDataFrame([(1, "a"), (2, None), (3, "z")],
+                                      "doc_id long, k string")
+        corpus = _keys_df(spark, ["a", "b"])
+        got = sorted(r.doc_id for r in
+                     bloom_anti_join(batch, corpus, "k").collect())
+        want = sorted(r.doc_id for r in
+                      batch.join(corpus, "k", "left_anti").collect())
+        assert want == [2, 3]
+        assert got == want
+
     def test_bits_table_is_fixed_size_and_reusable(self, spark):
         """The persisted-bitmap increment path: bits built once, passed
         to bloom_anti_join; table is at most m_bits/63 words."""

@@ -47,6 +47,45 @@ class TestExactDedup:
         assert all(r["doc_id"] is not None for r in one)
 
 
+class TestExactDupKeyAgreement:
+    def test_same_survivors_across_operators(self, spark, tmp_path):
+        """exact_dedup, incremental_dedup, canonical_signatures and
+        streaming_exact_dedup group texts by the one exact-dup key: texts
+        that differ only in case or whitespace (\\x0B included) keep the
+        same min-id survivor under every operator, and the batch and
+        streaming forms emit the same key per group."""
+        from logparse_rs_spark.operators.dedup import (canonical_signatures,
+                                                       exact_dedup,
+                                                       incremental_dedup)
+        from logparse_rs_spark.streaming.stateful import \
+            streaming_exact_dedup
+        rows = [(4, "Hello World"), (2, "hello\x0Bworld"),
+                (7, "  HELLO \t\n world\x0B"), (3, "unique text"),
+                (9, "Unique\x0B\x0BTEXT"), (5, "something else")]
+        schema = "doc_id long, text string"
+        docs = spark.createDataFrame(rows, schema)
+        want = [2, 3, 5]
+        batch = {r.text_key: r.doc_id for r in exact_dedup(docs).collect()}
+        assert sorted(batch.values()) == want
+        empty = spark.createDataFrame([], schema)
+        assert sorted(r.doc_id for r in
+                      incremental_dedup(docs, empty).collect()) == want
+        assert sorted(r.doc_id for r in
+                      canonical_signatures(docs).collect()) == want
+        src = str(tmp_path / "docs_stream")
+        docs.coalesce(1).write.parquet(src)
+        q = (streaming_exact_dedup(spark.readStream.schema(schema)
+                                   .parquet(src))
+             .writeStream.outputMode("update").format("memory")
+             .queryName("exact_key_agreement")
+             .trigger(availableNow=True).start())
+        q.awaitTermination()
+        streamed = {r.text_key: r.doc_id for r in spark.sql(
+            "SELECT text_key, MIN(doc_id) AS doc_id "
+            "FROM exact_key_agreement GROUP BY text_key").collect()}
+        assert streamed == batch
+
+
 class TestMinHash:
     def test_identical_docs_always_pair(self, spark, docs):
         from logparse_rs_spark.operators.dedup import (

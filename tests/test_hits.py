@@ -36,7 +36,7 @@ class TestHitsInteger:
         edges = [(1, 10), (1, 11), (1, 12), (2, 10), (2, 11), (3, 12),
                  (10, 20), (11, 20)]
         df = spark.createDataFrame(
-            pd.DataFrame(edges, columns=["src", "dst"]))
+            pd.DataFrame(edges, columns=["src_host", "dst_host"]))
         got = {r["node"]: (r["hub"], r["auth"])
                for r in hits_integer(df, iterations=2).collect()}
         hub, auth = _hits_py(edges)
@@ -49,7 +49,7 @@ class TestHitsInteger:
         # spokes are identical max hubs with auth 0
         edges = [(i, 99) for i in range(1, 6)]
         df = spark.createDataFrame(
-            pd.DataFrame(edges, columns=["src", "dst"]))
+            pd.DataFrame(edges, columns=["src_host", "dst_host"]))
         got = {r["node"]: (r["hub"], r["auth"])
                for r in hits_integer(df, iterations=2).collect()}
         assert got[99] == (0, 10**6)
@@ -60,9 +60,9 @@ class TestHitsInteger:
         import numpy as np
         from logparse_rs_spark.operators.graph import hits_integer
         rng = np.random.RandomState(7)
-        e = pd.DataFrame({"src": rng.randint(0, 40, 150),
-                          "dst": rng.randint(0, 40, 150)})
-        e = e[e.src != e.dst].drop_duplicates()
+        e = pd.DataFrame({"src_host": rng.randint(0, 40, 150),
+                          "dst_host": rng.randint(0, 40, 150)})
+        e = e[e.src_host != e.dst_host].drop_duplicates()
         df = spark.createDataFrame(e)
         a = sorted(map(tuple, hits_integer(df).collect()))
         b = sorted(map(tuple, hits_integer(df.repartition(13)).collect()))
@@ -73,7 +73,7 @@ class TestHitsInteger:
     def test_rejects_zero_iterations(self, spark):
         from logparse_rs_spark.operators.graph import hits_integer
         df = spark.createDataFrame(
-            pd.DataFrame([(1, 2)], columns=["src", "dst"]))
+            pd.DataFrame([(1, 2)], columns=["src_host", "dst_host"]))
         with pytest.raises(ValueError):
             hits_integer(df, iterations=0)
 
@@ -110,7 +110,7 @@ class TestTriangleCounts:
         edges = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4),
                  (2, 1), (4, 3), (1, 2), (3, 3)]
         df = spark.createDataFrame(
-            pd.DataFrame(edges, columns=["src", "dst"]))
+            pd.DataFrame(edges, columns=["src_host", "dst_host"]))
         got = {r["node"]: r["n_triangles"]
                for r in triangle_counts(df).collect()}
         assert got == {1: 3, 2: 3, 3: 3, 4: 3}
@@ -120,9 +120,9 @@ class TestTriangleCounts:
         import numpy as np
         from logparse_rs_spark.operators.graph import triangle_counts
         rng = np.random.RandomState(11)
-        e = pd.DataFrame({"src": rng.randint(0, 25, 160),
-                          "dst": rng.randint(0, 25, 160)})
-        e = e[e.src != e.dst]
+        e = pd.DataFrame({"src_host": rng.randint(0, 25, 160),
+                          "dst_host": rng.randint(0, 25, 160)})
+        e = e[e.src_host != e.dst_host]
         und = {tuple(sorted(t)) for t in e.itertuples(index=False)}
         adj = {}
         for a, b in und:
@@ -145,7 +145,7 @@ class TestTriangleCounts:
         # a 4-cycle has no triangles
         df = spark.createDataFrame(
             pd.DataFrame([(1, 2), (2, 3), (3, 4), (4, 1)],
-                         columns=["src", "dst"]))
+                         columns=["src_host", "dst_host"]))
         assert triangle_counts(df).count() == 0
 
 
@@ -208,7 +208,7 @@ class TestKcoreNodes:
         # one node per round (a multi-round cascade)
         edges = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 6)]
         df = spark.createDataFrame(
-            pd.DataFrame(edges, columns=["src", "dst"]))
+            pd.DataFrame(edges, columns=["src_host", "dst_host"]))
         got = {r["node"]: r["core_degree"]
                for r in kcore_nodes(df, k=2).collect()}
         assert got == {1: 2, 2: 2, 3: 2}
@@ -216,16 +216,16 @@ class TestKcoreNodes:
     def test_whole_graph_peels_to_empty(self, spark):
         from logparse_rs_spark.operators.graph import kcore_nodes
         df = spark.createDataFrame(
-            pd.DataFrame([(1, 2), (2, 3)], columns=["src", "dst"]))
+            pd.DataFrame([(1, 2), (2, 3)], columns=["src_host", "dst_host"]))
         assert kcore_nodes(df, k=2).count() == 0
 
     def test_vs_python_and_partitioning(self, spark):
         import numpy as np
         from logparse_rs_spark.operators.graph import kcore_nodes
         rng = np.random.RandomState(13)
-        e = pd.DataFrame({"src": rng.randint(0, 30, 120),
-                          "dst": rng.randint(0, 30, 120)})
-        e = e[e.src != e.dst]
+        e = pd.DataFrame({"src_host": rng.randint(0, 30, 120),
+                          "dst_host": rng.randint(0, 30, 120)})
+        e = e[e.src_host != e.dst_host]
         df = spark.createDataFrame(e)
         want = sorted(_kcore_py(list(map(tuple,
                                          e.itertuples(index=False))),
@@ -243,6 +243,6 @@ class TestKcoreNodes:
         # visible; max_peels=1 must refuse rather than return wrong
         df = spark.createDataFrame(
             pd.DataFrame([(1, 2), (2, 3), (3, 4), (4, 5)],
-                         columns=["src", "dst"]))
+                         columns=["src_host", "dst_host"]))
         with pytest.raises(RuntimeError):
             kcore_nodes(df, k=2, max_peels=1)

@@ -263,7 +263,7 @@ class TestGraphWavePlans:
         from logparse_rs_spark.operators.graph import triangle_counts
         df = spark.createDataFrame(
             pd.DataFrame([(1, 2), (2, 3), (3, 1), (3, 4)],
-                         columns=["src", "dst"]))
+                         columns=["src_host", "dst_host"]))
         plan = plan_of(triangle_counts(df))
         assert "CartesianProduct" not in plan
         assert "ArrowEvalPython" not in plan
@@ -291,7 +291,7 @@ class TestGraphWavePlans:
         # Python stage at any point that survives into the final plan
         from logparse_rs_spark.operators.graph import hits_integer
         fin = plan_of(hits_integer(
-            df.withColumnRenamed("s", "src")
-            .withColumnRenamed("t", "dst"), iterations=1))
+            df.withColumnRenamed("s", "src_host")
+            .withColumnRenamed("t", "dst_host"), iterations=1))
         assert "CartesianProduct" not in fin
         assert "ArrowEvalPython" not in fin and "BatchEvalPython" not in fin

@@ -12,11 +12,13 @@ Scans, with ``ast`` only (nothing is imported or run):
   ``tools/``, ``perfbench/``) and from ``tests/``.
 
 A defaulted parameter is *single-valued* when every product call passes one
-value or leaves the default, and no test passes another value. A value
-passed as a parameter of an in-scope caller is *forwarded*: it counts the
-values of that parameter instead. Values compare as literals when they are
-literals and as source text otherwise, so ``k=K`` and ``k=5`` are two
-values even when ``K == 5``.
+value or leaves the default, and no test passes another value. It *varies in
+tests only* when every product call passes one value but a test passes
+another: the rule counts product callers, so the report lists these rows as
+information beside the single-valued ones. A value passed as a parameter of
+an in-scope caller is *forwarded*: it counts the values of that parameter
+instead. Values compare as literals when they are literals and as source
+text otherwise, so ``k=K`` and ``k=5`` are two values even when ``K == 5``.
 
 A value passed as a parameter of an out-of-scope function (``api.py``,
 a query) is a value of its own, settable by that function's callers.
@@ -27,7 +29,8 @@ callers only: their signatures mirror the reference implementation's
 Python API.
 
 Usage: python3 tools/option_census.py [root] [--all]
-Prints one markdown row per single-valued parameter and the totals;
+Prints one markdown row per single-valued parameter and per parameter that
+varies in tests only, and the totals;
 ``--all`` also lists every defaulted parameter with its values.
 """
 
@@ -46,6 +49,8 @@ PRODUCT = (PKG + "/**/*.py", "__spark_entry__.py", "jobs/*.py", "bench.py",
            "bench_extra.py", "tools/*.py", "perfbench/**/*.py")
 TESTS = ("tests/*.py",)
 FROZEN_CALLERS = ("perfbench/", "bench.py")
+SINGLE = "single-valued"
+TESTS_ONLY = "varies in tests only"
 
 
 def module_name(rel: str) -> str:
@@ -272,9 +277,9 @@ def census(root: str):
                 status = "frozen caller"
             elif key in opaque:
                 status = "called with **kwargs or by reference"
-            elif (len(prod) == 1 and test <= prod
-                  and (p in fn.defaults or is_literal(next(iter(prod))))):
-                status = "single-valued"
+            elif len(prod) == 1 and (p in fn.defaults
+                                     or is_literal(next(iter(prod)))):
+                status = SINGLE if test <= prod else TESTS_ONLY
             else:
                 status = "varies"
             rows.append((fn.mod, fn.name, p, sorted(prod), sorted(test),
@@ -293,13 +298,14 @@ def main():
           "| status |")
     print("|---|---|---|---|---|---|")
     for mod, fn, p, prod, test, status in rows:
-        if show_all or status == "single-valued":
+        if show_all or status in (SINGLE, TESTS_ONLY):
             print(f"| {mod.replace(PKG + '.', '')} | {fn} | {p} | "
                   f"{', '.join(prod)} | {', '.join(test)} | {status} |")
-    single = [r for r in rows if r[5] == "single-valued"]
+    single = [r for r in rows if r[5] == SINGLE]
     print(f"\nsingle-valued: {len(single)} parameters in "
-          f"{len({(r[0], r[1]) for r in single})} functions; parameters "
-          f"checked: {len(rows)}")
+          f"{len({(r[0], r[1]) for r in single})} functions; varies in "
+          f"tests only: {sum(r[5] == TESTS_ONLY for r in rows)}; "
+          f"parameters checked: {len(rows)}")
 
 
 if __name__ == "__main__":
